@@ -488,8 +488,7 @@ object BandIndex {
     * the live table location's parent IS the root.
     */
   private def leaseRootOf(spark: SparkSession, name: String): Option[String] =
-    (Seq(bandsTable(name), docsTable(name), toksTable(name))
-      .flatMap(t => Seq(t, t + "__compacting")))
+    Seq(bandsTable(name), docsTable(name), toksTable(name))
       .find(spark.catalog.tableExists)
       .map { t =>
         new org.apache.hadoop.fs.Path(
@@ -766,20 +765,12 @@ object BandIndex {
     val indexRoot = leaseRootOf(spark, name)
     indexRoot
       .foreach(assertNoMaintenance(spark, _, s"classify against band index '$name'"))
-    // layout guard: a missing _toks table means either a rewrite
-    // (compact/remove) crashed mid-swap — the remedy is to RESUME it,
-    // never to re-create (create's append mode would double every
-    // band/fp row in the surviving tables) — or the index predates the
-    // _toks split / a PfxCount change and needs a rebuild. Name the
-    // right remedy for the state found.
+    // layout guard: rewrites never take a live table away, so a
+    // missing _toks table means the index predates the _toks split (or
+    // a PfxCount change) and needs a rebuild
     require(spark.catalog.tableExists(toksTable(name)),
-      if (spark.catalog.tableExists(toksTable(name) + "__compacting"))
-        s"band index '$name': a compact/remove crashed mid-swap on " +
-        s"${toksTable(name)} — rerun BandIndex.compact (or the " +
-        "interrupted remove) to resume; do NOT re-create"
-      else
-        s"band index '$name' has no ${toksTable(name)} table — it predates " +
-        "the _toks layout (or PfxCount changed); rebuild it with BandIndex.create")
+      s"band index '$name' has no ${toksTable(name)} table — it predates " +
+      "the _toks layout (or PfxCount changed); rebuild it with BandIndex.create")
     // the index's pinned tunables, off its own directory
     val params = indexRoot.map(loadParams(spark, _)).getOrElse(LshParams())
     // batch tokenized once (three consumers below)
@@ -919,17 +910,12 @@ object BandIndex {
     * [[append]]/[[dedupBatch]] fail fast with
     * [[ConcurrentMaintenanceException]] while it is on file — an
     * append can no longer race a generation swap into a directory the
-    * swap then sweeps. Run it between streaming restarts. Per table:
-    * compacted data is written to a NEW generation directory as a
-    * temporary catalog table, the live table name is atomically
-    * re-pointed via DROP + RENAME (external tables keep their
-    * location through RENAME), then the old directory is deleted. A
-    * crash mid-compact never loses data: before the DROP the live
-    * table is untouched; between DROP and RENAME the compacted
-    * generation is already complete under the temp name, and a retry
-    * RESUMES by finishing the rename (then sweeps any orphaned older
-    * generation directories); after RENAME only the orphaned old
-    * directory remains, re-deleted on retry or harmless.
+    * swap then sweeps. Run it between streaming restarts. Per table
+    * ([[rewriteTable]]): compacted data is written to a NEW generation
+    * directory, the live table is re-pointed at it in place, then the
+    * old directory is deleted. The live table name never disappears,
+    * and a crash at any step leaves at most a stray temp table and an
+    * orphan directory, both cleared by the next rewrite.
     */
   def compact(spark: SparkSession, name: String, path: String,
               buckets: Int = 32,
@@ -993,16 +979,13 @@ object BandIndex {
     // no-op probe: `_bands` is rewritten LAST, so ids absent from it
     // mean every prior remove completed all three tables — reruns and
     // never-indexed takedown lists cost one semi-join, not three
-    // full-table rewrites. The shortcut is DISABLED while any table is
-    // mid-swap (__compacting): the rewrites below must run to resume.
-    // And before returning, sweep orphan generations of all three
-    // tables (a cheap directory listing): a prior remove that crashed
-    // between its final swap and its sweep left a superseded generation
-    // dir — still holding the erased docs' derived rows — that the
-    // documented rerun-recovery would otherwise never reclaim.
-    val midSwap = Seq(bandsTable(name), docsTable(name), toksTable(name))
-      .exists(t => spark.catalog.tableExists(t + "__compacting"))
-    if (!midSwap && spark.catalog.tableExists(bandsTable(name)) &&
+    // full-table rewrites. Before returning, sweep orphan generations
+    // of all three tables (a cheap directory listing): a prior remove
+    // that crashed between its final swap and its sweep left a
+    // superseded generation dir — still holding the erased docs'
+    // derived rows — that the documented rerun-recovery would
+    // otherwise never reclaim.
+    if (spark.catalog.tableExists(bandsTable(name)) &&
         spark.table(bandsTable(name))
           .join(ids, Seq("doc_id"), "left_semi").isEmpty) {
       // the sweep DELETES directories, so it is a commit like any swap:
@@ -1038,20 +1021,16 @@ object BandIndex {
   }
 
   /** Generation-swap rewrite of one table: write `transform(table)` to
-    * a fresh generation dir under a temp name, atomically re-point the
-    * live name, sweep superseded generations. Shared by [[compact]]
+    * a fresh generation dir under a temp name, re-point the live table
+    * at it, sweep superseded generations. Shared by [[compact]]
     * (identity transform) and [[remove]] (anti-join transform).
     *
-    * Crash windows, all healed by re-running ANY rewrite of the table:
-    * a death after the tmp write but before the DROP leaves an orphan
-    * generation dir the normal path's sweep deletes next time
-    * (DROP TABLE IF EXISTS removes only the external tmp's catalog
-    * entry, never its files); a death between DROP and RENAME leaves
-    * only the tmp table — the resume branch finishes the swap and then
-    * FALLS THROUGH to the normal rewrite, because the resumed
-    * generation carries the CRASHED run's transform, not this call's:
-    * returning early would let a pending [[remove]] report success
-    * while the ids' derived rows survive.
+    * The live name exists at every step, so a reader never finds it
+    * missing. A death before the re-point leaves the live table
+    * untouched plus a stray temp table and orphan generation dir; the
+    * next rewrite's DROP TABLE IF EXISTS (external: catalog entry only)
+    * and sweep clear both. A death after it leaves only the superseded
+    * generation dir, which the next sweep deletes.
     */
   private def rewriteTable(spark: SparkSession, table: String,
                            path: String,
@@ -1059,45 +1038,70 @@ object BandIndex {
                            transform: DataFrame => DataFrame,
                            fence: String): Unit = {
     val tmpTable = table + "__compacting"
-    if (!spark.catalog.tableExists(table)) {
-      require(spark.catalog.tableExists(tmpTable),
-        s"rewrite resume: neither `$table` nor `$tmpTable` exists")
-      verifyFence(spark, path, fence)
-      spark.sql(s"ALTER TABLE `$tmpTable` RENAME TO `$table`")
-      spark.catalog.refreshTable(table)
-      // no return: this call's transform still has to apply (below)
-    }
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
     // fresh generation dir: path/<table>__g<epoch-millis>_<uuid8> — the
     // random suffix (not a clock alone: nanoTime resets across reboots,
     // millis can repeat under clock skew) guarantees neither a crashed
-    // rewrite's leftovers nor the previous generation (which keeps its
-    // __g dir through RENAME) collide, so append-mode saveAsTable can
-    // never register over a directory holding stale parquet
+    // rewrite's leftovers nor the live generation collide, so
+    // append-mode saveAsTable can never register over a directory
+    // holding stale parquet
     val genDir = s"$path/${table}__g${System.currentTimeMillis()}_" +
       java.util.UUID.randomUUID().toString.take(8)
     write(transform(spark.table(table)), tmpTable, genDir)
     // commit point: the long rewrite above is where a TTL overrun
-    // happens — re-check the fence before the destructive swap
+    // happens — re-check the fence before the swap
     verifyFence(spark, path, fence)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmpTable` RENAME TO `$table`")
+    spark.sql(s"ALTER TABLE `$table` SET LOCATION '$genDir'")
+    repointPartitions(spark, table, tmpTable)
+    spark.sql(s"DROP TABLE `$tmpTable`")
     spark.catalog.refreshTable(table)
     sweepOrphanGenerations(spark, table, path)
   }
 
+  /** SET LOCATION moves a table, not its partitions: each catalog
+    * partition keeps pointing at the old generation, which the sweep
+    * then deletes — reads would return zero rows without an error. So
+    * re-point every partition of a partitioned table (`_toks`) to the
+    * temp table's copy of the same spec, and drop those the new
+    * generation lacks (a remove can only shrink the set, a compact
+    * keeps it).
+    */
+  private def repointPartitions(spark: SparkSession, table: String,
+                                tmpTable: String): Unit = {
+    val cat = spark.sessionState.catalog
+    val live = TableIdentifier(table)
+    if (cat.getTableMetadata(live).partitionColumnNames.isEmpty) return
+    val fresh = cat.listPartitions(TableIdentifier(tmpTable))
+      .map(p => p.spec -> p.storage.locationUri).toMap
+    val (kept, gone) =
+      cat.listPartitions(live).partition(p => fresh.contains(p.spec))
+    cat.alterPartitions(live, kept.map(p =>
+      p.copy(storage = p.storage.copy(locationUri = fresh(p.spec)))))
+    cat.dropPartitions(live, gone.map(_.spec), ignoreIfNotExists = true,
+      purge = false, retainData = true)
+  }
+
   /** Delete every superseded generation of `table` under `path` — the
     * `<table>__g*` dirs AND the create-time `path/<table>` dir — except
-    * the one the live table currently points at. Runs after every
+    * those the live table or any of its partitions currently points
+    * at (a rewrite that died between SET LOCATION and
+    * [[repointPartitions]] leaves `_toks` partitions reading the
+    * previous generation; deleting it would empty them). Runs after every
     * [[rewriteTable]] swap, so orphans from crashed runs (whose exact
     * names are unknowable at resume time) are reclaimed on the next
     * successful rewrite rather than leaking erased data forever.
     */
   private def sweepOrphanGenerations(spark: SparkSession, table: String,
                                      path: String): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(table)).location).toUri.getPath
+    val cat = spark.sessionState.catalog
+    val live = TableIdentifier(table)
+    val meta = cat.getTableMetadata(live)
+    val partGens =
+      if (meta.partitionColumnNames.isEmpty) Nil
+      else cat.listPartitions(live).map(p =>
+        new org.apache.hadoop.fs.Path(p.location).getParent)
+    val keep = (new org.apache.hadoop.fs.Path(meta.location) +: partGens)
+      .map(_.toUri.getPath).toSet
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
@@ -1105,7 +1109,7 @@ object BandIndex {
       val p = st.getPath
       if (st.isDirectory &&
           (p.getName == table || p.getName.startsWith(table + "__g")) &&
-          p.toUri.getPath != cur)
+          !keep.contains(p.toUri.getPath))
         fs.delete(p, true)
     }
   }

@@ -59,8 +59,8 @@ object ExplainAdvisor {
   /** Attribution-exemption table (VERDICT r13 item 8: self-contained
     * artifact): the registry join sites whose physical `numOutputRows`
     * metric is unattributable BY DESIGN, each with the verified
-    * mechanism (probed with `graft.tools.AdvisorProbe` +
-    * `graft.ExplainOne` at sf0.001). One source of truth shared by
+    * mechanism (probed with [[graft.AdvisorSweep]] +
+    * `graft.tools.PlanSnap` at sf0.001). One source of truth shared by
     * [[graft.PlanDump]] (the PLANS.md rendering) and
     * [[graft.AdvisorSweep]] (the machine-readable `exemptions` block
     * in ADVISOR_r*.json), so prose and artifact cannot drift. Each
@@ -72,7 +72,7 @@ object ExplainAdvisor {
     ("q12_anti_join_orphans", "c_custkey = o_custkey [LeftAnti]",
       "AQE empty-relation elision: every customer matches, the anti-join " +
         "output is empty, and the EXECUTED plan is literally `EmptyRelation` " +
-        "(verified via ExplainOne) — no physical join node exists to carry " +
+        "(verified via PlanSnap) — no physical join node exists to carry " +
         "a metric."),
     ("q45_minhash_lsh_neardup", "band_id = band_id [Inner]",
       "Hot-path band join of the skew-split pair generator: its input (hot " +

@@ -62,15 +62,6 @@ class BandIndexSoakSpec extends SparkSpec {
       if ((m.contains("FAILED_READ_FILE") || m.contains("FileNotFound") ||
            m.contains("File does not exist")) &&
           (m.contains("__g") || m.contains(name))) return true
-      // compaction swaps the live table via DROP + RENAME
-      // (BandIndex.swapCompacted): a reader that resolves the name
-      // inside that window — or a resume probe that reads the
-      // __compacting side just as the rename lands — sees
-      // TABLE_OR_VIEW_NOT_FOUND. Same designed concurrent-maintenance
-      // window as the FAILED_READ_FILE generation race above; the
-      // at-least-once replay re-classifies against the new generation.
-      if (m.contains("TABLE_OR_VIEW_NOT_FOUND") &&
-          (m.contains("__compacting") || m.contains(name))) return true
       c = c.getCause
     }
     false

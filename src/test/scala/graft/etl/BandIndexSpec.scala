@@ -1,6 +1,10 @@
 package graft.etl
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{DropTablePreEvent,
+  ExternalCatalogEvent, ExternalCatalogEventListener, RenameTablePreEvent}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -43,8 +47,7 @@ class BandIndexSpec extends SparkSpec {
       (10L, "alpha beta gamma delta"), // exact dup of 1
       (11L, bigDoc(change = true)),    // near dup of 2 (j = 199/201)
       (12L, "entirely fresh content")).toDF("doc_id", "text")
-    val flags = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val flags = classify(batch, name)
     assert(flags === Map(10L -> "exact", 11L -> "near", 12L -> "kept"))
   }
 
@@ -82,20 +85,13 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.create(spark, corpus, name, path, buckets = 4)
     val batch = Seq((10L, "alpha beta gamma"), (11L, "other stuff"))
       .toDF("doc_id", "text")
-    // static plan: AQE off so the shape is data-independent, broadcast
-    // off so the bucketed-join claim is actually exercised. The band
-    // join itself is asserted on the lazy candidates() frame —
+    // the band join itself is asserted on the lazy candidates() frame —
     // dedupBatch materializes the pairs eagerly (for the _toks prune
     // list), so the join never appears in the flags frame's plan.
-    val confs = Map("spark.sql.adaptive.enabled" -> "false",
-                    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
-    val (candPlan, flagsPlan) = try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      (BandIndex.candidates(spark, BandIndex.signatures(batch), name)
-         .queryExecution.executedPlan,
+    val (candPlan, flagsPlan) = withStaticPlan {
+      (candidatesPlan(batch, name),
        BandIndex.dedupBatch(spark, batch, name).queryExecution.executedPlan)
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
     // 1. no file scan outside the index directory: the corpus raw text
     //    is never re-read (the batch is an in-memory frame)
     val scans = (candPlan.collect { case s: FileSourceScanExec => s }
@@ -109,6 +105,29 @@ class BandIndexSpec extends SparkSpec {
     //    bucketed table: no ShuffleExchange anywhere in that subtree
     assertBandJoinExchangeFree(candPlan, name)
   }
+
+  private def flagsOf(flags: DataFrame): Map[Long, String] =
+    flags.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  private def classify(batch: DataFrame, name: String): Map[Long, String] =
+    flagsOf(BandIndex.dedupBatch(spark, batch, name))
+
+  /** Static plan: AQE off so the shape is data-independent, broadcast
+    * off so the bucketed-join claim is actually exercised.
+    */
+  private def withStaticPlan[T](body: => T): T = {
+    val confs = Map("spark.sql.adaptive.enabled" -> "false",
+                    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  private def candidatesPlan(batch: DataFrame, name: String) =
+    BandIndex.candidates(spark, BandIndex.signatures(batch), name)
+      .queryExecution.executedPlan
 
   /** The band join must read `_bands` exchange-free (bucketed layout). */
   private def assertBandJoinExchangeFree(
@@ -128,6 +147,26 @@ class BandIndexSpec extends SparkSpec {
       assert(shuffles.isEmpty,
         s"corpus band side shuffles despite bucketing:\n${indexSide.get}")
     }
+  }
+
+  /** `_toks` reads through its catalog partitions, which a table-level
+    * SET LOCATION does not move: after a rewrite every partition must
+    * sit under the live location, and the table must read exactly what
+    * that location holds (a stale partition reads 0 rows, no error).
+    */
+  private def assertToksFollowLiveLocation(name: String): Unit = {
+    val cat = spark.sessionState.catalog
+    val toks = TableIdentifier(BandIndex.toksTable(name))
+    val live = cat.getTableMetadata(toks).location
+    val parts = cat.listPartitions(toks)
+    assert(parts.nonEmpty)
+    parts.foreach { p =>
+      assert(p.location.getPath.startsWith(live.getPath + "/"),
+        s"partition ${p.location} not under live location $live")
+    }
+    val onDisk = spark.read.parquet(live.toString).count()
+    assert(onDisk > 0)
+    assert(spark.table(toks.table).count() === onDisk)
   }
 
   test("verify lookup reads a partition-pruned _toks slice") {
@@ -158,8 +197,7 @@ class BandIndexSpec extends SparkSpec {
     toksScans.foreach { s =>
       assert(s.partitionFilters.nonEmpty, s.toString.take(1500))
     }
-    assert(flags.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(11L -> "near"))
+    assert(flagsOf(flags) === Map(11L -> "near"))
   }
 
   test("compaction preserves classifications, layout, and shrinks files") {
@@ -181,17 +219,16 @@ class BandIndexSpec extends SparkSpec {
       (11L, bigDoc(true)),                 // near of 2
       (12L, "fresh content number 1"),     // exact of an appended doc
       (13L, "wholly new text")).toDF("doc_id", "text")
-    val before = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val before = classify(batch, name)
     val filesBefore =
       Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
           BandIndex.toksTable(name))
         .map(BandIndex.dataFileCount(spark, _)).sum
 
     BandIndex.compact(spark, name, path, buckets = 4)
+    assertToksFollowLiveLocation(name)
 
-    val after = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val after = classify(batch, name)
     assert(after === before)
     assert(before === Map(10L -> "exact", 11L -> "near",
                           12L -> "exact", 13L -> "kept"))
@@ -204,20 +241,11 @@ class BandIndexSpec extends SparkSpec {
 
     // bucketing survives the rewrite: the band join's index side still
     // arrives exchange-free (same assertion as the plan spec)
-    val confs = Map("spark.sql.adaptive.enabled" -> "false",
-                    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
-    val candPlan = try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      BandIndex.candidates(spark, BandIndex.signatures(batch), name)
-        .queryExecution.executedPlan
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-    assertBandJoinExchangeFree(candPlan, name)
+    assertBandJoinExchangeFree(withStaticPlan(candidatesPlan(batch, name)), name)
 
     // a second compaction must not collide with the first's generation
     BandIndex.compact(spark, name, path, buckets = 4)
-    val again = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val again = classify(batch, name)
     assert(again === before)
   }
 
@@ -236,42 +264,17 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.append(spark,
       Seq((2L, "post compact content")).toDF("doc_id", "text"),
       name, path, buckets = 4)
-    val flags = BandIndex.dedupBatch(spark,
-      Seq((10L, "post compact content"), (11L, "brand new words"))
-        .toDF("doc_id", "text"), name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val flags = classify(Seq((10L, "post compact content"),
+      (11L, "brand new words")).toDF("doc_id", "text"), name)
     assert(flags === Map(10L -> "exact", 11L -> "kept"))
   }
 
-  test("compact resumes after a crash between DROP and RENAME") {
-    val name = "bidx_crs"
-    dropTables(name)
-    val path = tmp()
-    BandIndex.create(spark,
-      Seq((1L, "alpha beta gamma delta"), (2L, bigDoc(false)))
-        .toDF("doc_id", "text"),
-      name, path, buckets = 4)
-    val batch = Seq((10L, "alpha beta gamma delta"), (11L, "novel words"))
-      .toDF("doc_id", "text")
-    val before = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // simulate the crash window: the live bands table is gone, the
-    // fully-written compacted generation sits under the temp name
-    spark.sql(s"ALTER TABLE `${BandIndex.bandsTable(name)}` " +
-      s"RENAME TO `${BandIndex.bandsTable(name)}__compacting`")
-    // the retry must finish the swap instead of failing on the missing
-    // live table, and classifications must be unchanged
-    BandIndex.compact(spark, name, path, buckets = 4)
-    val after = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(after === before)
-  }
-
   test("a crashed swap does not swallow a pending remove's transform") {
-    // crash window between DROP and RENAME (here on _bands), then a
-    // REMOVE arrives: the resume must finish the old swap AND still
-    // apply this call's anti-join — an early return would let the
-    // takedown report success while the erased doc's band rows survive
+    // the one crash window a rewrite has: death after writing the temp
+    // generation, before re-pointing the live table. The stray temp
+    // table (here on _bands) still holds doc 1's rows; a remove of
+    // doc 1 must clear it and its directory and still apply its own
+    // anti-join — without ever dropping or renaming a live table
     val name = "bidx_crm"
     dropTables(name)
     val path = tmp()
@@ -279,15 +282,32 @@ class BandIndexSpec extends SparkSpec {
       Seq((1L, "alpha beta gamma delta"), (2L, bigDoc(false)))
         .toDF("doc_id", "text"),
       name, path, buckets = 4)
-    spark.sql(s"ALTER TABLE `${BandIndex.bandsTable(name)}` " +
-      s"RENAME TO `${BandIndex.bandsTable(name)}__compacting`")
-    BandIndex.remove(spark, name, path, Seq(1L).toDF("doc_id"), buckets = 4)
-    assert(spark.table(BandIndex.bandsTable(name))
-      .filter(col("doc_id") === 1L).count() === 0)
-    val flags = BandIndex.dedupBatch(spark,
-      Seq((10L, "alpha beta gamma delta"), (11L, bigDoc(true)))
-        .toDF("doc_id", "text"), name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val bands = BandIndex.bandsTable(name)
+    val strayDir = new java.io.File(s"$path/${bands}__g0_crashed")
+    spark.table(bands).write.option("path", strayDir.toString)
+      .saveAsTable(bands + "__compacting")
+    // catalog events post synchronously: record every name a DROP or
+    // RENAME takes away during the remove
+    val takenAway = scala.collection.mutable.ArrayBuffer.empty[String]
+    val watch: ExternalCatalogEventListener = (e: ExternalCatalogEvent) =>
+      e match {
+        case DropTablePreEvent(_, t) => takenAway += t
+        case RenameTablePreEvent(_, t, _) => takenAway += t
+        case _ =>
+      }
+    val catalog = spark.sharedState.externalCatalog
+    catalog.addListener(watch)
+    try BandIndex.remove(spark, name, path, Seq(1L).toDF("doc_id"), buckets = 4)
+    finally catalog.removeListener(watch)
+    assert(takenAway.toSet ===
+      Set(BandIndex.bandsTable(name), BandIndex.docsTable(name),
+          BandIndex.toksTable(name)).map(_ + "__compacting"),
+      "a rewrite took a live table name away")
+    assert(!spark.catalog.tableExists(bands + "__compacting"))
+    assert(!strayDir.exists(), "the stray generation survived the rewrite")
+    assert(spark.table(bands).filter(col("doc_id") === 1L).count() === 0)
+    val flags = classify(Seq((10L, "alpha beta gamma delta"),
+      (11L, bigDoc(true))).toDF("doc_id", "text"), name)
     assert(flags === Map(10L -> "kept", 11L -> "near"))
   }
 
@@ -317,22 +337,19 @@ class BandIndexSpec extends SparkSpec {
       (10L, "alpha beta gamma delta"), // exact of 1 (to be erased)
       (11L, bigDoc(true))              // near of 2 (kept in the index)
     ).toDF("doc_id", "text")
-    assert(BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(10L -> "exact", 11L -> "near"))
+    assert(classify(batch, name) === Map(10L -> "exact", 11L -> "near"))
 
     BandIndex.remove(spark, name, path,
       Seq(1L).toDF("doc_id"), buckets = 4)
+    assertToksFollowLiveLocation(name)
 
     // the erased doc no longer suppresses its own text; the other doc
     // still does — and the operation is idempotent
-    val after = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val after = classify(batch, name)
     assert(after === Map(10L -> "kept", 11L -> "near"))
     BandIndex.remove(spark, name, path,
       Seq(1L).toDF("doc_id"), buckets = 4)
-    assert(BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === after)
+    assert(classify(batch, name) === after)
     // no derived row of the erased doc survives anywhere
     Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
         BandIndex.toksTable(name)).foreach { t =>
@@ -343,9 +360,7 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.append(spark,
       Seq((3L, "alpha beta gamma delta")).toDF("doc_id", "text"),
       name, path, buckets = 4)
-    assert(BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(10L -> "exact", 11L -> "near"))
+    assert(classify(batch, name) === Map(10L -> "exact", 11L -> "near"))
   }
 
   test("append and dedupBatch fail fast while a maintenance lease is held") {
@@ -499,9 +514,18 @@ class BandIndexSpec extends SparkSpec {
     orphan.mkdirs()
     java.nio.file.Files.write(orphan.toPath.resolve("part-0.parquet"),
       "stale".getBytes)
+    // and a _toks rewrite that died between SET LOCATION and the
+    // partition re-point: the table names an empty generation while
+    // its partitions still read the previous one, which must survive
+    val toks = BandIndex.toksTable(name)
+    val half = new java.io.File(s"$path/${toks}__g1_half")
+    half.mkdirs()
+    spark.sql(s"ALTER TABLE `$toks` SET LOCATION '$half'")
+    val toksRows = spark.table(toks).count()
     // rerun hits the no-op probe (false = nothing rewritten) AND sweeps
     assert(!BandIndex.remove(spark, name, path, Seq(1L).toDF("doc_id"), 4))
     assert(!orphan.exists(), "orphan generation survived the rerun")
+    assert(toksRows > 0 && spark.table(toks).count() === toksRows)
     assert(BandIndex.readLease(spark, path).isEmpty)
   }
 
@@ -523,9 +547,7 @@ class BandIndexSpec extends SparkSpec {
       name, path, buckets = 4, params = p95)
     assert(BandIndex.loadParams(spark, path) === p95)
     val batch = Seq((10L, doc50(true))).toDF("doc_id", "text")
-    assert(BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(10L -> "near"))
+    assert(classify(batch, name) === Map(10L -> "near"))
 
     // appends inherit the PINNED params (4 bands), so an appended
     // doc's near-dups still collide — and a re-create with different
@@ -533,9 +555,7 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.append(spark,
       Seq((2L, "totally different fresh content words")).toDF("doc_id", "text"),
       name, path, buckets = 4)
-    assert(BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(10L -> "near"))
+    assert(classify(batch, name) === Map(10L -> "near"))
     val ex = intercept[IllegalArgumentException] {
       BandIndex.create(spark,
         Seq((3L, "x")).toDF("doc_id", "text"), name, path, buckets = 4,
@@ -551,9 +571,7 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.create(spark,
       Seq((1L, doc50(false))).toDF("doc_id", "text"),
       name2, tmp(), buckets = 4)
-    assert(BandIndex.dedupBatch(spark, batch, name2)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      === Map(10L -> "kept"))
+    assert(classify(batch, name2) === Map(10L -> "kept"))
   }
 
   test("register rebuilds the catalog entries for an on-disk index, bucketing intact") {
@@ -575,29 +593,19 @@ class BandIndexSpec extends SparkSpec {
       (11L, bigDoc(true)),                  // near of 2
       (12L, "post compact appended words"), // exact of 3
       (13L, "wholly new text")).toDF("doc_id", "text")
-    val before = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val before = classify(batch, name)
 
     // simulate a fresh application: this catalog forgets the tables
     dropTables(name)
     BandIndex.register(spark, name, path, buckets = 4)
 
-    val after = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val after = classify(batch, name)
     assert(after === before)
     assert(before === Map(10L -> "exact", 11L -> "near",
                           12L -> "exact", 13L -> "kept"))
     // the re-registered bucketing still makes the band join
     // exchange-free — the whole point of re-stating CLUSTERED BY
-    val confs = Map("spark.sql.adaptive.enabled" -> "false",
-                    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.get(k)).toMap
-    val candPlan = try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      BandIndex.candidates(spark, BandIndex.signatures(batch), name)
-        .queryExecution.executedPlan
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-    assertBandJoinExchangeFree(candPlan, name)
+    assertBandJoinExchangeFree(withStaticPlan(candidatesPlan(batch, name)), name)
     // and appends keep landing through the re-registered catalog
     BandIndex.append(spark,
       Seq((4L, "post register append")).toDF("doc_id", "text"),
@@ -638,14 +646,12 @@ class BandIndexSpec extends SparkSpec {
       (10L, "alpha beta gamma delta"),
       (11L, bigDoc(true)),
       (12L, "entirely fresh content")).toDF("doc_id", "text")
-    val first = BandIndex.ingest(spark, batch, name, path, buckets = 4)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val first = flagsOf(BandIndex.ingest(spark, batch, name, path, buckets = 4))
     assert(first === Map(10L -> "exact", 11L -> "near", 12L -> "kept"))
     // the kept doc is now IN the index (appended, not rebuilt): a
     // replay of the same batch finds 12 as an exact dup of itself;
     // the near dup was dropped, so it still classifies near
-    val second = BandIndex.dedupBatch(spark, batch, name)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val second = classify(batch, name)
     assert(second === Map(10L -> "exact", 11L -> "near", 12L -> "exact"))
     // and the docs table grew by exactly the kept slice
     assert(spark.table(BandIndex.docsTable(name)).count() === 3)
