@@ -148,7 +148,7 @@ object CurationPipeline {
     val keyExpr = idCols.map(c => s"cast($c as string)").mkString(", '_', ")
     graft.operators.DistributedRank.withPrefixSum(
         selected.withColumn("key", expr(
-          s"cast(conv(substring(md5(concat('$seed', $keyExpr)), 1, 15), 16, 10) as bigint)")),
+          graft.functions.Md5Prefix.sql(s"concat('$seed', $keyExpr)"))),
         col("key") +: idCols.map(col), col("m"), "pack_cum")
       .withColumn("seq_id", expr(s"(pack_cum - m) div $block"))
       .withColumn("straddle", expr(s"(pack_cum - m) div $block != (pack_cum - 1) div $block"))

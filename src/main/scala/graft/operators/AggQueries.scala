@@ -641,8 +641,7 @@ object AggQueries {
       import s.implicits._
       val reg = orders(s, dir)
         .select($"o_orderpriority",
-          expr("cast(conv(substring(md5(cast(o_custkey as string)), 1, 15), 16, 10) as bigint)")
-            .as("h"))
+          expr(graft.functions.Md5Prefix.sql("cast(o_custkey as string)")).as("h"))
         .withColumn("bucket", pmod($"h", lit(512L)))
         .withColumn("v", expr("h div 512"))
         // v occupies 51 bits; rank = leading zeros + 1 = 52 − bit_length(v)

@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
   * 512-register arrays answer "how many users appear in both feeds"
   * with no join of the raw key sets.
   *
-  * Register math is the q63 discipline verbatim — 60-bit md5 hashes,
-  * integer 2^(52−ρ) occupancy terms, ONE final IEEE division per
-  * estimate — so both engines produce bit-identical doubles. The
-  * registered query (q151) reports the exact and estimated ledger
-  * side by side: the oracle certifies the estimator AND the data
-  * certifies the estimator's usefulness (the exact overlap sits next
-  * to it).
+  * Register math is the q63 discipline verbatim — 60-bit
+  * [[graft.functions.Md5Prefix]] keys, integer 2^(52−ρ) occupancy
+  * terms, ONE final IEEE division per estimate — so both engines
+  * produce bit-identical doubles. The registered query (q151) reports
+  * the exact and estimated ledger side by side: the oracle certifies
+  * the estimator AND the data certifies the estimator's usefulness
+  * (the exact overlap sits next to it).
   *
   * Scale shape: each sketch is one narrow map-side-combinable
   * aggregate to ≤ 512 rows; the union merge is a ≤ 512-row full-outer
@@ -37,9 +37,7 @@ object HllSetOps {
   private[operators] def regs(df: DataFrame, key: String): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    df.select(expr(
-        s"cast(conv(substring(md5(cast($key as string)), 1, 15), 16, 10) as bigint)")
-        .as("h"))
+    df.select(expr(graft.functions.Md5Prefix.sql(s"cast($key as string)")).as("h"))
       .withColumn("bucket", pmod($"h", lit(M.toLong)))
       .withColumn("v", expr(s"h div $M"))
       .withColumn("rho",

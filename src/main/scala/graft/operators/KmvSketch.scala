@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * so this audit is hash-exact across engines (the q212 minhash-audit
   * stance applied to cardinality).
   *
-  * Determinism: the hash is the engine-shared 60-bit md5 prefix
-  * (`conv(substring(md5(…),1,15),16,10)` ↔ DuckDB
-  * `('0x' || substr(md5(…),1,15))::BIGINT`); the k smallest distinct
+  * Determinism: the hash is the engine-shared 60-bit
+  * [[graft.functions.Md5Prefix]] key; the k smallest distinct
   * hashes, the exact NDV, the estimate and its signed error are all
   * single-valued functions of the input — no randomness, no ties to
   * break (distinct hashes are unique).
@@ -36,8 +35,7 @@ object KmvSketch {
     (s, dir) => {
       import s.implicits._
       val hashed = Tables.load(s, dir, "lineitem")
-        .select(expr("cast(conv(substring(md5(concat('kmv|', cast(l_partkey as string))), 1, 15), 16, 10) as bigint)")
-          .as("h"))
+        .select(expr(graft.functions.Md5Prefix.sql("concat('kmv|', cast(l_partkey as string))")).as("h"))
       val exact = hashed.agg(count_distinct($"h").as("exact_ndv"))
       val kmv = hashed.distinct().orderBy($"h").limit(K)
         .agg(count(lit(1)).as("kk"), max($"h").as("hk"))

@@ -92,7 +92,7 @@ object StatsAudits {
           expr("cast(cast(o_totalprice as decimal(18,2)) * 100 as bigint)").as("cents"))
         .select($"o_orderkey", $"cents", explode(expr(s"sequence(0, ${B - 1})")).as("b"))
         .withColumn("u", expr(
-          "cast(conv(substring(md5(concat(cast(o_orderkey as string), '#', cast(b as string))), 1, 5), 16, 10) as bigint)"))
+          graft.functions.Md5Prefix.sql("concat(cast(o_orderkey as string), '#', cast(b as string))", 5)))
         .withColumn("k", expr(poisCaseSql("u")))
       drawn.groupBy($"b")
         .agg(sum($"k").as("n_b"), sum($"k" * $"cents").as("sum_cents"))

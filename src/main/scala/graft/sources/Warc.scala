@@ -161,8 +161,7 @@ object Warc {
     */
   private def docShape(df: DataFrame): DataFrame =
     df.select(
-      expr("cast(conv(substring(md5(record_id), 1, 15), 16, 10) as bigint)")
-        .as("doc_id"),
+      expr(graft.functions.Md5Prefix.sql("record_id")).as("doc_id"),
       col("text"),
       coalesce(parse_url(col("target_uri"), lit("HOST")), lit("unknown"))
         .as("source"),

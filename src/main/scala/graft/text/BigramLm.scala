@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * profile looks fine — before they compete for budget.
   *
   * Determinism is the q116 contract: bigram positions hash to
-  * md5-prefix longs ([[TextQueries.bigramPosArr]] — the ONE definition,
+  * [[graft.functions.Md5Prefix]] longs ([[TextQueries.bigramPosArr]],
   * shared with q116's oracle-verified query), and every per-position
   * surprisal is the exact long (c(w1·)+V)·10⁶ div (c(w1w2)+1) — a
   * score threshold is reproducible bit-for-bit across runs and

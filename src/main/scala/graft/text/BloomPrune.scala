@@ -132,7 +132,7 @@ object BloomPrune {
     def shingleRows = docsDf
       .withColumn("bucket",
         pmod(expr(
-          "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+          graft.functions.Md5Prefix.sql("cast(doc_id as string)")),
           lit(buckets)))
       .select($"doc_id", $"source", ($"bucket" === 0L).as("is_bench"),
         explode(array_distinct(expr(shingleExpr(n)))).as("sh"))

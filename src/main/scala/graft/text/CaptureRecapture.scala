@@ -33,8 +33,7 @@ object CaptureRecapture {
     (s, dir) => {
       import s.implicits._
       val d = graft.Barrier(Tables.load(s, dir, "documents")
-        .select(expr("cast(conv(substring(md5(coalesce(text, '')), 1, 15)," +
-          " 16, 10) as bigint)").as("h"),
+        .select(expr(graft.functions.Md5Prefix.sql("coalesce(text, '')")).as("h"),
           ($"source".rlike("^src[0-9]$")).as("cap1"))
         .groupBy($"h")
         .agg(max($"cap1").as("in1"), max(!$"cap1").as("in2")))

@@ -21,14 +21,12 @@ object Cms {
   val DefaultD = 4
   val DefaultW = 1024
 
-  /** The d salted bucket hashes of token column `t`: 60-bit md5
-    * prefixes mod w (the corpus-wide salt pattern of
-    * [[TextQueries.minhashCols]]) — deterministic and reproducible by
-    * the DuckDB oracle.
+  /** The d salted bucket hashes of token column `t`: salted
+    * [[graft.functions.Md5Prefix]] keys mod w.
     */
   def bucketHashes(d: Int, w: Int): Seq[Column] =
     (1 to d).map(r => expr(
-      s"cast(conv(substring(md5(concat('$r|', t)), 1, 15), 16, 10) as bigint) % $w"))
+      graft.functions.Md5Prefix.sql(s"concat('$r|', t)") + s" % $w"))
 
   /** Sketch cells (r0, b, c) from a pre-aggregated (t, cnt) vocab
     * frame — at most d·w rows out; the aggregate combines map-side.

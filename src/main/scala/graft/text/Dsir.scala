@@ -35,8 +35,7 @@ object Dsir {
                     buckets: Int = 1024): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val featOf = expr(
-      s"cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) % $buckets")
+    val featOf = expr(graft.functions.Md5Prefix.sql("t") + s" % $buckets")
     // pool side: one explode, compressed immediately; barriered for its
     // two consumers (raw bucket model + per-doc scoring)
     val docTok = graft.Barrier(docs

@@ -37,21 +37,18 @@ object KneserNey {
     "q243_kneser_ney",
     (s, dir) => {
       import s.implicits._
-      // tokens hash to 60-bit md5-prefix longs BEFORE the first shuffle
-      // (guide §2.3 "shuffle keys, not payloads" — the q51/q96/q116
-      // gramHash discipline): every aggregate and join downstream
-      // (docbg, model, ctx, cont, sq, the scoring join) keys on longs
-      // instead of token strings. One md5 per token (the array hashes
-      // once; both bigram roles read the hashed array), collisions
-      // ~2⁻⁶⁰ merge two types' counts identically on both engines (the
-      // oracle hashes the same prefix — ShingleHashSpec pins the
-      // conv/md5 semantics against a JDK reference).
+      // tokens hash to Md5Prefix longs BEFORE the first shuffle
+      // ("shuffle keys, not payloads"): every aggregate and join
+      // downstream (docbg, model, ctx, cont, sq, the scoring join) keys
+      // on longs instead of token strings. One md5 per token (both
+      // bigram roles read the hashed array); collisions ~2⁻⁶⁰ merge two
+      // types' counts identically on both engines.
       val tok = Tables.load(s, dir, "documents")
         .select($"doc_id", $"source",
           split(coalesce($"text", lit("")), " ").as("a"))
         .filter(size($"a") >= 2)
       val pos = tok.select($"doc_id", $"source", expr(
-          "transform(a, t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))")
+          s"transform(a, t -> ${graft.functions.Md5Prefix.sql("t")})")
           .as("ha"))
         .select($"doc_id", $"source",
           explode(expr(

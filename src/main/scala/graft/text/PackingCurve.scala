@@ -40,9 +40,7 @@ object PackingCurve {
       val d = Tables.load(s, dir, "documents").select(
         $"doc_id",
         size(split(coalesce($"text", lit("")), " ")).cast("long").as("nt"),
-        expr(
-          "cast(conv(substring(md5(concat('pack42_', cast(doc_id as string))), 1, 15), 16, 10) as bigint)"
-        ).as("key"))
+        expr(graft.functions.Md5Prefix.sql("concat('pack42_', cast(doc_id as string))")).as("key"))
       val c = graft.Barrier(graft.operators.DistributedRank
         .withPrefixSum(d, Seq($"key", $"doc_id"), $"nt", "cum"))
       val ls = Ls.toDF("context_len")

@@ -53,9 +53,8 @@ object SketchAudit {
       val sig = grams
         .select($"source", $"gh".cast("string").as("ghs"),
           explode(expr(s"sequence(0, ${Perms - 1})")).as("p"))
-        .select($"source", $"p", expr(
-          "cast(conv(substring(md5(concat(cast(p as string), ':', ghs))," +
-            " 1, 15), 16, 10) as bigint)").as("h"))
+        .select($"source", $"p",
+          expr(graft.functions.Md5Prefix.sql("concat(cast(p as string), ':', ghs)")).as("h"))
         .groupBy($"source", $"p")
         .agg(min($"h").as("mh"))
       val est = sig.as("a").join(sig.as("b"),

@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Q, Tables}
+import graft.functions.Md5Prefix
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -565,12 +566,7 @@ object TextQueries {
       val arrs = docsDf
         .select($"doc_id", split($"text", " ").as("tk"))
         .select($"doc_id", array_distinct(expr(
-          """CASE WHEN size(tk) >= 3
-            |  THEN transform(sequence(1, size(tk) - 2),
-            |    i -> cast(conv(substring(md5(concat_ws(' ', element_at(tk, i),
-            |           element_at(tk, i + 1), element_at(tk, i + 2))), 1, 15),
-            |         16, 10) as bigint))
-            |  ELSE array() END""".stripMargin)).as("shs"))
+          s"CASE WHEN size(tk) >= 3 THEN $trigramHashSql ELSE array() END")).as("shs"))
         .corpusBarrier
       // The shingle inverted index is the same shape as an LSH band
       // frame (bucket value = shingle); reuse the skew-split pair
@@ -687,7 +683,7 @@ object TextQueries {
       docs(s, dir)
         .withColumn("bucket",
           pmod(expr(
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+            Md5Prefix.sql("cast(doc_id as string)")),
             lit(100L)))
         .withColumn("split",
           when($"bucket" < 80, "train").when($"bucket" < 90, "val")
@@ -825,7 +821,7 @@ object TextQueries {
       docs(s, dir)
         .withColumn("bucket",
           pmod(expr(
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+            Md5Prefix.sql("cast(doc_id as string)")),
             lit(1000L)))
         .withColumn("kept", ($"bucket" < threshold).cast("long"))
         .groupBy($"source")
@@ -1053,7 +1049,7 @@ object TextQueries {
       val binned = docs(s, dir)
         .withColumn("bucket",
           pmod(expr(
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+            Md5Prefix.sql("cast(doc_id as string)")),
             lit(100L)))
         .filter($"bucket" < 80 || $"bucket" >= 90) // train vs test only
         .withColumn("split", when($"bucket" < 80, "train").otherwise("test"))
@@ -1136,7 +1132,7 @@ object TextQueries {
       def shingleRows = docs(s, dir)
         .withColumn("bucket",
           pmod(expr(
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+            Md5Prefix.sql("cast(doc_id as string)")),
             lit(50L)))
         .select($"doc_id", $"source", ($"bucket" === 0L).as("is_bench"),
           explode(array_distinct(expr(
@@ -1210,9 +1206,8 @@ object TextQueries {
     (s, dir) => {
       import s.implicits._
       docs(s, dir)
-        .select($"doc_id", expr(
-          "cast(conv(substring(md5(concat('ord42_', cast(doc_id as string))), 1, 15), 16, 10) as bigint)"
-        ).as("key"))
+        .select($"doc_id",
+          expr(Md5Prefix.sql("concat('ord42_', cast(doc_id as string))")).as("key"))
         .withColumn("shard", pmod($"key", lit(16L)))
         .groupBy($"shard")
         .agg(
@@ -1315,9 +1310,7 @@ object TextQueries {
       val d = docs(s, dir).select(
         $"doc_id",
         size(split(coalesce($"text", lit("")), " ")).cast("long").as("nt"),
-        expr(
-          "cast(conv(substring(md5(concat('pack42_', cast(doc_id as string))), 1, 15), 16, 10) as bigint)"
-        ).as("key"))
+        expr(Md5Prefix.sql("concat('pack42_', cast(doc_id as string))")).as("key"))
       val packed = graft.operators.DistributedRank
         .withPrefixSum(d, Seq($"key", $"doc_id"), $"nt", "cum")
         .withColumn("seq_id", expr(s"(cum - nt) div $B"))
@@ -1394,7 +1387,7 @@ object TextQueries {
       val base = docs(s, dir)
         .withColumn("bucket",
           pmod(expr(
-            "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)"),
+            Md5Prefix.sql("cast(doc_id as string)")),
             lit(100L)))
         // coalesce: a NULL text means an empty token set in BOTH engines
         // (DuckDB's UNNEST(NULL) would silently drop the doc from the
@@ -2065,7 +2058,7 @@ object TextQueries {
           Seq("doc_id"), "left_outer")
         .select($"doc_id", coalesce($"lab", $"doc_id").as("lab"))
       def sp(c: String) = when(expr(
-        s"cast(conv(substring(md5(concat('sp98_', cast($c as string))), 1, 15), 16, 10) as bigint) % 10 < 8"),
+        Md5Prefix.sql(s"concat('sp98_', cast($c as string))") + " % 10 < 8"),
         "train").otherwise("test")
       val assign = labs
         .withColumn("cl_split", sp("lab"))
@@ -2129,17 +2122,23 @@ object TextQueries {
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     doc = "training: leakage-proof split by near-dup cluster (crossing edges 0 vs doc-hash leak)")
 
-  /** 60-bit gram-hash array off a tokenized column `tk`: one md5-prefix
-    * long per 8-token window (grams hash to longs BEFORE any shuffle;
-    * deterministic cross-engine, collisions ~2⁻⁶⁰). The single
-    * definition of the gram key shared by q96/q97/q101/q102 and their
-    * specs — prefix width / separator / window size change in ONE place
-    * (the oracles state the equivalent SQL).
+  /** Gram-hash array off a tokenized column `tk`: one [[Md5Prefix]] key
+    * per 8-token window (grams hash to longs BEFORE any shuffle;
+    * collisions ~2⁻⁶⁰). The single definition of the gram window shared
+    * by q96/q97/q101/q102 and their specs (the oracles state the
+    * equivalent SQL).
     */
   private[graft] val gramHashSql =
-    """transform(sequence(1, size(tk) - 7),
-      |  i -> cast(conv(substring(md5(
-      |         concat_ws(' ', slice(tk, i, 8))), 1, 15), 16, 10) as bigint))""".stripMargin
+    s"transform(sequence(1, size(tk) - 7), i -> ${Md5Prefix.sql("concat_ws(' ', slice(tk, i, 8))")})"
+
+  /** Trigram-shingle hash array off `tk` (size ≥ 3): the q51 spine
+    * ([[ngramJaccardPairsOf]]) and q122's containment sets. element_at,
+    * not slice: O(1) per access.
+    */
+  private[graft] val trigramHashSql = {
+    val gram = "concat_ws(' ', element_at(tk, i), element_at(tk, i + 1), element_at(tk, i + 2))"
+    s"transform(sequence(1, size(tk) - 2), i -> ${Md5Prefix.sql(gram)})"
+  }
 
   private[graft] val gramHashArr = expr(gramHashSql)
 
@@ -2503,7 +2502,7 @@ object TextQueries {
           ($"fl" + when($"rk" <= $"d", 1L).otherwise(0L)).as("quota"))
       val ranked = graft.operators.DistributedRank.withRowNumberPerKey(
         docs(s, dir).select($"doc_id", $"source").withColumn("h", expr(
-          "cast(conv(substring(md5(concat('s103_', cast(doc_id as string))), 1, 15), 16, 10) as bigint)")),
+          Md5Prefix.sql("concat('s103_', cast(doc_id as string))"))),
         Seq("source"), Seq($"h", $"doc_id"))
       val sel = ranked.join(broadcast(quota.select($"source", $"quota")),
           Seq("source"))
@@ -2699,7 +2698,7 @@ object TextQueries {
         .select($"doc_id", $"source",
           explode(split(coalesce($"text", lit("")), " ")).as("t"))
         .select($"doc_id", $"source", expr(
-          "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint) % 1024").as("f"))
+          Md5Prefix.sql("t") + " % 1024").as("f"))
         .groupBy($"doc_id", $"source", $"f")
         .agg(count(lit(1)).as("c"))
         .crossJoin(broadcast(tgt))
@@ -3244,9 +3243,7 @@ object TextQueries {
           count_if($"n_tokens_after" < $"n_tokens_before").as("docs_trimmed"),
           sum($"n_tokens_before").as("tokens_before"),
           sum($"n_tokens_after").as("tokens_after"),
-          sum(expr(
-            "cast(conv(substring(md5(text_trimmed), 1, 15), 16, 10) as bigint)" +
-              " % 1000000000")).as("content_checksum"))
+          sum(expr(Md5Prefix.sql("text_trimmed") + " % 1000000000")).as("content_checksum"))
         .orderBy($"source")
     },
     Some("""WITH tok AS (
@@ -3302,10 +3299,10 @@ object TextQueries {
     * so the spec certifies the SAME definition on constructed frames.
     */
   private[graft] val bigramPosArr = expr(
-    """transform(sequence(1, size(tk) - 1),
-      |  i -> named_struct(
-      |    'w1', cast(conv(substring(md5(element_at(tk, i)), 1, 15), 16, 10) as bigint),
-      |    'bg', cast(conv(substring(md5(concat_ws(' ', slice(tk, i, 2))), 1, 15), 16, 10) as bigint)))""".stripMargin)
+    s"""transform(sequence(1, size(tk) - 1),
+       |  i -> named_struct(
+       |    'w1', ${Md5Prefix.sql("element_at(tk, i)")},
+       |    'bg', ${Md5Prefix.sql("concat_ws(' ', slice(tk, i, 2))")}))""".stripMargin)
 
   /** q116 — bigram-LM perplexity filter (the CCNet/LLaMA gate, Wenzek
     * et al. 2020: score every document under a language model trained
@@ -3805,13 +3802,11 @@ object TextQueries {
       val chunks = base
         .select($"doc_id", $"source",
           posexplode(expr(
-            """transform(
+            s"""transform(
               |  transform(sequence(0, size(cuts)),
               |    k -> struct(if(k = 0, 1, cuts[k - 1] + 1) as st,
               |                if(k = size(cuts), n, cuts[k]) as en)),
-              |  c -> cast(conv(substring(md5(concat_ws(' ',
-              |         slice(tk, c.st, c.en - c.st + 1))), 1, 15), 16, 10)
-              |         as bigint))""".stripMargin))
+              |  c -> ${Md5Prefix.sql("concat_ws(' ', slice(tk, c.st, c.en - c.st + 1))")})""".stripMargin))
             .as(Seq("chunk_idx", "chash")))
       val first = chunks.groupBy($"chash")
         .agg(min(struct($"doc_id", $"chunk_idx", $"source")).as("w"))
@@ -3900,12 +3895,7 @@ object TextQueries {
         .filter(size($"tk") >= 3)
         .corpusBarrier // shingling slices tk per position (q45/q51 lesson)
       val arrs = toks
-        .select($"doc_id", array_sort(array_distinct(expr(
-          """transform(sequence(1, size(tk) - 2),
-            |  i -> cast(conv(substring(md5(concat_ws(' ',
-            |         element_at(tk, i), element_at(tk, i + 1),
-            |         element_at(tk, i + 2))), 1, 15), 16, 10) as bigint))"""
-            .stripMargin))).as("hs"))
+        .select($"doc_id", array_sort(array_distinct(expr(trigramHashSql))).as("hs"))
         .withColumn("na", size($"hs").cast("long"))
         // barrier: four consumers (prefix probe, index explode, both
         // verify attaches) — and the sort itself must not re-run
@@ -3990,7 +3980,7 @@ object TextQueries {
         .withColumn("n", size($"ta").cast("long"))
         .corpusBarrier // ta feeds 9 md5 passes (8 minhash + th)
       val sig = smp.select(Seq($"doc_id", $"n",
-          expr("transform(ta, t -> cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))")
+          expr(s"transform(ta, t -> ${Md5Prefix.sql("t")})")
             .as("th")) ++ minhashCols(p): _*)
       val bandCols = (1 to p.bands).map(b =>
         concat(p.bandMembers(b).map(i => col(s"m$i")): _*).as(s"b$b"))

@@ -35,7 +35,7 @@ object WeightedSample {
     * frame with `doc_id` and a positive integer `w`.
     */
   private[text] def withCost(df: DataFrame): DataFrame = {
-    val h = "cast(conv(substring(md5(cast(doc_id as string)), 1, 10), 16, 10) as bigint) + 1"
+    val h = graft.functions.Md5Prefix.sql("cast(doc_id as string)", 10) + " + 1"
     df.withColumn("cost_q",
       expr(s"(41943040L - ${TextQueries.lqSql(s"($h)")}) * 1048576L div w"))
   }

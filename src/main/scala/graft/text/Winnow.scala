@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * This implementation keeps the fingerprint SET per document (the
   * dedup/audit use), so plain window-min suffices; the paper's
   * rightmost-min tiebreak only matters for positional fingerprints.
-  * Grams are the shared 60-bit md5-prefix longs
+  * Grams are [[graft.functions.Md5Prefix]] longs
   * ([[TextQueries.gramHashArr]] — k=8), so selection happens on longs,
   * never gram text.
   *
