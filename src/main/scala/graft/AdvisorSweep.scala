@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry [[operators.ExplainAdvisor]] sweep (VERDICT r10 item
   * 5): run the advisor over EVERY registered query and write one JSON
   * artifact with, per query, the executed plan's exchange count +
@@ -53,20 +51,8 @@ object AdvisorSweep {
     // pins must be generated under the EXACT spec session shape so the
     // gate compares like with like; the artifact sweep uses the bench
     // shape instead
-    val (master, parts) =
-      if (pinsMode) ("local[4]", "8")
-      else {
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-        (s"local[$cpus]", cpus)
-      }
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("advisor-sweep").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark =
+      if (pinsMode) LocalSession(LocalSession.PinShape: _*) else LocalSession()
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     if (pinsMode) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: headline queries on SPARK_GRAFT_SF_DIR, one JSON line
   * on stdout. Timings are per-query wall seconds of a full execution
   * (result .count() materializes the whole plan). A JVM/codegen warmup
@@ -27,17 +25,8 @@ object Bench {
     val selected = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(headline)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val loadStart = readLoadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val qs = SparkEntry.queries
     // Warmup: JIT + codegen + parquet footer caches. Each selected query

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorAdded, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Multi-executor correctness harness (VERDICT r9 item 1): every
   * number so far ran single-JVM `local[32]`, where shuffles are
@@ -35,7 +34,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.ClusterCheck <sfDir> <out.json> <q1,q2,…>
   * Env: SPARK_GRAFT_MASTER (default local-cluster[2,8,8192]),
-  *      SPARK_GRAFT_CPUS (shuffle partitions, default 32),
+  *      SPARK_GRAFT_CPUS (shuffle partitions, default: all cores),
   *      SPARK_GRAFT_KILL (seconds into each query to kill; off if
   *      unset), SPARK_GRAFT_BARRIER (cut strategy override),
   *      SPARK_GRAFT_CKPT_DIR (checkpoint dir for RELIABLE mode).
@@ -59,45 +58,43 @@ object ClusterCheck {
         } catch { case _: Exception => None }
       }.sorted
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outPath, namesCsv) = args
-    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      "local-cluster[2,8,8192]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val killDelaySec = sys.env.get("SPARK_GRAFT_KILL").map(_.toDouble)
-    val barrier = sys.env.getOrElse("SPARK_GRAFT_BARRIER", "")
-
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  /** The multi-process session confs, shared with
+    * [[streaming.StreamKillCheck]]: `SPARK_GRAFT_MASTER` (else
+    * `defaultMaster`), the executors' classpath and the retry knobs.
+    */
+  private[graft] def clusterConf(defaultMaster: String): Seq[(String, String)] =
+    Seq(
+      "spark.master" -> sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster),
       // the worker-launched executor JVMs need the library's classes;
       // same box, so the compiled classes dir ships as a classpath
       // entry (spark-submit users get this from --jars instead)
-      .config("spark.executor.extraClassPath",
+      "spark.executor.extraClassPath" ->
         sys.env.getOrElse("SPARK_GRAFT_EXEC_CLASSPATH",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath))
+          new java.io.File("target/scala-2.13/classes").getAbsolutePath),
       // kill-mode: a dead executor must come back (standalone
       // relaunch) and its lost shuffle output must re-map — defaults,
       // stated explicitly because the kill gate depends on them
-      .config("spark.task.maxFailures", "4")
-      .config("spark.stage.maxConsecutiveAttempts", "8")
-    val withBarrier =
-      if (barrier.nonEmpty) {
-        val b2 = b.config(Barrier.ConfKey, barrier)
+      "spark.task.maxFailures" -> "4",
+      "spark.stage.maxConsecutiveAttempts" -> "8")
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outPath, namesCsv) = args
+    val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val killDelaySec = sys.env.get("SPARK_GRAFT_KILL").map(_.toDouble)
+    val barrier = sys.env.getOrElse("SPARK_GRAFT_BARRIER", "")
+
+    val barrierConf =
+      if (barrier.isEmpty) Nil
+      else (Barrier.ConfKey -> barrier) +: (
         if (barrier.equalsIgnoreCase("RELIABLE_CHECKPOINT"))
-          b2.config(Barrier.CheckpointDirKey,
+          Seq(Barrier.CheckpointDirKey ->
             sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
               java.nio.file.Files.createTempDirectory("graft-ckpt")
                 .toString))
-        else b2
-      } else b
-    val spark = withBarrier.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        else Nil)
+    val spark =
+      LocalSession(clusterConf("local-cluster[2,8,8192]") ++ barrierConf: _*)
+    val master = spark.sparkContext.master
 
     val removed = new java.util.concurrent.atomic.AtomicInteger(0)
     val added = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.PrintWriter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Dev-only: dump annotated final physical plans for the headline
@@ -612,13 +611,10 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("plandump").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed local[8] shape, not the box's cores: PLANS.md stays
+    // comparable across rounds
+    val spark = LocalSession(
+      "spark.master" -> "local[8]", "spark.sql.shuffle.partitions" -> "8")
     val dir = "/root/testdata/sf0.001"
     val out = new PrintWriter("PLANS.md", "UTF-8")
     out.println("# Final physical plans (sf0.001, AQE-finalized)\n")

@@ -47,14 +47,7 @@ object ScaleGen {
     val (srcDir, destDir, factorS) = (args(0), args(1), args(2))
     val zipfOrders = args.length > 3 && args(3) == "zipf"
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     run(spark, srcDir, destDir, factor, zipfOrders)
     spark.stop()
   }
@@ -62,7 +55,7 @@ object ScaleGen {
   /** The generator body, session-injected so specs can drive it. */
   def run(spark: SparkSession, srcDir: String, destDir: String,
           factor: Int, zipfOrders: Boolean = false): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val parallelism = spark.sparkContext.defaultParallelism
     val docs = Tables.load(spark, srcDir, "documents")
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val copies = (0 until factor).map { i =>
@@ -74,7 +67,7 @@ object ScaleGen {
         col("lang"), col("source"), col("n_chars"))
     }
     copies.reduce(_ unionByName _)
-      .repartition(cpus.toInt)
+      .repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/documents.parquet")
 
     val cust = Tables.load(spark, srcDir, "customer")
@@ -100,7 +93,7 @@ object ScaleGen {
       cust.select((col("c_custkey") + lit(i * maxCust)).as("c_custkey"),
         concat(lit(s"c${i}_"), col("c_name")).as("c_name"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/customer.parquet")
 
     // zipf mode only redraws FKs; key namespaces and every other
@@ -128,7 +121,7 @@ object ScaleGen {
          else col("o_custkey") + lit(i * maxCust)).as("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
         col("o_orderpriority"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/orders.parquet")
 
     // zipf mode also re-draws l_partkey (VERDICT r9 item 4 names BOTH
@@ -150,7 +143,7 @@ object ScaleGen {
         col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),
         col("l_discount"), col("l_tax"), col("l_returnflag"),
         col("l_linestatus"), col("l_shipdate"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/lineitem.parquet")
 
     // Dimension tables, so a scaled dir serves the FULL registry
@@ -165,14 +158,14 @@ object ScaleGen {
       part.select((col("p_partkey") + lit(i * maxPart)).as("p_partkey"),
         concat(lit(s"c${i}_"), col("p_name")).as("p_name"),
         col("p_brand"), col("p_type"), col("p_size"), col("p_retailprice"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/part.parquet")
 
     (0 until factor).map { i =>
       supp.select((col("s_suppkey") + lit(i * maxSupp)).as("s_suppkey"),
         concat(lit(s"c${i}_"), col("s_name")).as("s_name"),
         col("s_nationkey"), col("s_acctbal"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/supplier.parquet")
 
     // region/nation are FIXED-SIZE dims at every real scale factor
@@ -213,7 +206,7 @@ object ScaleGen {
         }
       emb.select((col("vec_id") + lit(i * maxVec)).as("vec_id"),
         vec.as("embedding"), col("label"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/embeddings.parquet")
 
     // Events: per-copy user/event namespaces, SHARED timestamps — the
@@ -233,7 +226,7 @@ object ScaleGen {
         unix_micros(col("ts")).as("ts"),
         (col("user_id") + lit(i * maxUser)).as("user_id"),
         col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(parallelism)
       .write.mode("overwrite").parquet(s"$destDir/events.parquet")
   }
 }

@@ -32,26 +32,9 @@ import org.apache.spark.sql.functions._
   *    not its own configuration.
   *
   * Usage: runMain graft.SkewCheck <uniformSfDir> <zipfSfDir> <out.json>
+  * Env: SPARK_GRAFT_CPUS (local cores, default: all cores).
   */
 object SkewCheck {
-
-  private def session(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    // enough reduce partitions that the uniform residual mass cannot
-    // drown the head key: at sf1, 1.5M orders / 128 ≈ 12k-row median
-    // vs 12k + 87k head — the ≥3× head-vs-median ratio a 100 TB power
-    // law shows against the 256 MiB default threshold
-    .config("spark.sql.shuffle.partitions", "128")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "3.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "256k")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128k")
-    .getOrCreate()
 
   /** The orders⋈customer revenue rollup, sort-merge-forced. */
   private def smjQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -98,8 +81,16 @@ object SkewCheck {
 
   def main(args: Array[String]): Unit = {
     val Array(uniformDir, zipfDir, outPath) = args
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      // enough reduce partitions that the uniform residual mass cannot
+      // drown the head key: at sf1, 1.5M orders / 128 ≈ 12k-row median
+      // vs 12k + 87k head — the ≥3× head-vs-median ratio a 100 TB power
+      // law shows against the 256 MiB default threshold
+      "spark.sql.shuffle.partitions" -> "128",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "3.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128k")
 
     val (zr, zh, zFired, zPlan) = runSmj(spark, zipfDir)
     val (ur, uh, uFired, uPlan) = runSmj(spark, uniformDir)

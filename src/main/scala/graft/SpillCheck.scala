@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spill-correctness harness (VERDICT r9 item 1): every 100 TB claim
@@ -31,6 +30,7 @@ import org.apache.spark.sql.functions._
   * Results land in SCALING.md §spill.
   *
   * Usage: runMain graft.SpillCheck <sfDir> <out.json> <q1,q2,…>
+  * Env: SPARK_GRAFT_CPUS (local cores, default: all cores).
   */
 object SpillCheck {
 
@@ -38,39 +38,31 @@ object SpillCheck {
     val Array(sfDir, outPath, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val mode = sys.env.getOrElse("SPARK_GRAFT_SPILL", "off")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // map-typed output columns participate in the content hash via
-      // ContentHash.canonical (entry-sorted) — NOT the legacy
-      // allowHashOnMapType flag, whose hash depends on entry order
-      // that Spark does not canonicalize (ADVICE r9)
-    val spark = (if (mode == "force") {
-      // Starve the operators into their spill paths, observably.
-      // These are the committed knobs of the recorded sf1 run
-      // (SCALING.md §spill): 0.2/65536 at -Xmx4g spills GBs on the
-      // sort/join-heavy family with results hash-identical; the
-      // tighter variant tried (fraction 0.15, thresholds 16384,
-      // objectHashAggregate fallback 512) crosses the cliff from
-      // spill to OOM at 32 threads × 4 GiB — per-task execution
-      // memory drops below one in-flight aggregation buffer, which
-      // no spill threshold can save. That boundary is the measured
-      // answer to "how starved can an executor be": spill absorbs
-      // pressure until ~25 MB/task of pool, then sizing, not
-      // spilling, is the fix.
-      b.config("spark.memory.fraction", "0.2")
-        .config("spark.shuffle.spill.numElementsForceSpillThreshold", "65536")
-        .config("spark.sql.windowExec.buffer.spill.threshold", "65536")
-        .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "65536")
-        .config("spark.sql.cartesianProductExec.buffer.spill.threshold", "65536")
-        .config("spark.sql.sessionWindow.buffer.spill.threshold", "65536")
-    } else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // map-typed output columns participate in the content hash via
+    // ContentHash.canonical (entry-sorted) — NOT the legacy
+    // allowHashOnMapType flag, whose hash depends on entry order
+    // that Spark does not canonicalize (ADVICE r9).
+    //
+    // force mode starves the operators into their spill paths,
+    // observably. These are the committed knobs of the recorded sf1 run
+    // (SCALING.md §spill): 0.2/65536 at -Xmx4g spills GBs on the
+    // sort/join-heavy family with results hash-identical; the
+    // tighter variant tried (fraction 0.15, thresholds 16384,
+    // objectHashAggregate fallback 512) crosses the cliff from
+    // spill to OOM at 32 threads × 4 GiB — per-task execution
+    // memory drops below one in-flight aggregation buffer, which
+    // no spill threshold can save. That boundary is the measured
+    // answer to "how starved can an executor be": spill absorbs
+    // pressure until ~25 MB/task of pool, then sizing, not
+    // spilling, is the fix.
+    val forceSpill = Seq(
+      "spark.memory.fraction" -> "0.2",
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "65536",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "65536",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "65536",
+      "spark.sql.cartesianProductExec.buffer.spill.threshold" -> "65536",
+      "spark.sql.sessionWindow.buffer.spill.threshold" -> "65536")
+    val spark = LocalSession((if (mode == "force") forceSpill else Nil): _*)
 
     val memSpilled = new java.util.concurrent.atomic.AtomicLong(0)
     val diskSpilled = new java.util.concurrent.atomic.AtomicLong(0)

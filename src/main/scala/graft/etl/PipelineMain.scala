@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point mirroring the reference's `main()` orchestrator
   * (healthcare-data-pipeline-main.py:673-705): run the full E1 pipeline
   * — generate → transform → load → analyze → report — against a local
@@ -11,14 +9,7 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-pipeline")
     val nPatients = args.lift(1).map(_.toLong).getOrElse(1000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val r = Pipeline.run(spark, outDir, nPatients)
     println(s"[pipeline] patients=${r.patients} encounters=${r.encounters} " +
       s"labs=${r.labs} quality=${r.quality.overall} report=${r.reportPath}")

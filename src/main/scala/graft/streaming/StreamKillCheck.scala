@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.{ClusterCheck, ContentHash}
+import graft.{ClusterCheck, ContentHash, LocalSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Executor-loss survival for STREAMING state (the axis ClusterCheck
@@ -32,7 +32,7 @@ import org.apache.spark.sql.streaming.Trigger
   * Usage: runMain graft.streaming.StreamKillCheck <sfDir> <out.json>
   *          [nBatches=40]
   * Env: SPARK_GRAFT_MASTER (default local-cluster[2,6,10240]),
-  *      SPARK_GRAFT_CPUS (shuffle partitions, default 24),
+  *      SPARK_GRAFT_CPUS (shuffle partitions, default: all cores),
   *      SPARK_GRAFT_KILL (seconds into each killed run; default 10).
   */
 object StreamKillCheck {
@@ -47,24 +47,11 @@ object StreamKillCheck {
     val sfDir = args(0)
     val outPath = args(1)
     val nBatches = if (args.length > 2) args(2).toInt else 40
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      "local-cluster[2,6,10240]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "24")
     val killAtSec = sys.env.getOrElse("SPARK_GRAFT_KILL", "10").toDouble
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_CLASSPATH",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath))
-      .config("spark.task.maxFailures", "4")
-      .config("spark.stage.maxConsecutiveAttempts", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      ClusterCheck.clusterConf("local-cluster[2,6,10240]"): _*)
+    val master = spark.sparkContext.master
 
     val removed = new java.util.concurrent.atomic.AtomicInteger(0)
     val failedTasks = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI runner for the Structured Streaming surveillance job: consumes
   * the events parquet directory as a file-source stream and writes
   * watermark-finalized hourly windows to parquet. Usage:
@@ -15,14 +13,7 @@ object StreamMain {
     val srcDir = args.headOption.getOrElse("/tmp/graft-stream-src")
     val outDir = args.lift(1).getOrElse("/tmp/graft-stream-out")
     val ckDir = args.lift(2).getOrElse("/tmp/graft-stream-ck")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val q = EventStreamJob.runHourlyAgg(spark, srcDir, outDir, ckDir)
     q.awaitTermination()
     println(s"[stream] hourly aggregation drained to $outDir")

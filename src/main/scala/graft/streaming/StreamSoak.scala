@@ -131,14 +131,7 @@ object StreamSoak {
     val sfDir = args(0)
     val outPath = args(1)
     val nBatches = if (args.length > 2) args(2).toInt else 120
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val curves = runAll(spark, sfDir, nBatches)
     import graft.JsonOut.jstr

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.io.PrintWriter
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: capture `.explain("formatted")` for a set of registry
@@ -22,14 +21,10 @@ object PlanSnap {
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("plansnap").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed local[8] shape, not the box's cores: plan receipts stay
+    // comparable across rounds
+    val spark = graft.LocalSession(
+      "spark.master" -> "local[8]", "spark.sql.shuffle.partitions" -> "8")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.count() // finalize AQE so the dump shows the executed plan

@@ -11,8 +11,9 @@ package graft
   * improvement (reported so the pins get regenerated, not a failure).
   * Counts come from [[operators.ExplainAdvisor.exchangeStats]] — the
   * same helper that generates the pins — under the same session shape
-  * (SparkSpec: local[4], 8 shuffle partitions), so generator and gate
-  * cannot drift. Regenerate after a DELIBERATE plan change:
+  * (one definition, [[LocalSession.PinShape]]: local[4], 8 shuffle
+  * partitions, read by both SparkSpec and `AdvisorSweep --pins`), so
+  * generator and gate cannot drift. Regenerate after a DELIBERATE plan change:
   * `sbt "runMain graft.AdvisorSweep /root/testdata/sf0.001 --pins tools/exchange_pins.tsv"`
   */
 class ExchangePinSpec extends SparkSpec {

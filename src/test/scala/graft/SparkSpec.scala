@@ -4,21 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM: Spark startup
-  * dominates suite time otherwise. UTC + small shuffle partitions to
-  * match the verified-query conventions (SURVEY.md §7.3).
+  * dominates suite time otherwise. The exchange-pin shape
+  * ([[LocalSession.PinShape]]: local[4], 8 shuffle partitions), so
+  * `ExchangePinSpec` compares against pins generated the same way.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(LocalSession.PinShape: _*)
 
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
