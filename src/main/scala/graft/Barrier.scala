@@ -191,7 +191,7 @@ object Barrier {
         registry.computeIfAbsent(spark,
           _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
           .add(p)
-        // LAZY by default, and that is a MEASURED choice, not an
+        // LAZY, and that is a MEASURED choice, not an
         // omission: a lazily-persisted barrier with several
         // broadcast-subquery consumers does get recomputed
         // concurrently (Spark submits all broadcast-exchange jobs up
@@ -202,18 +202,12 @@ object Barrier {
         // at 1.07× SLOWER overall (worse on 3 of 4; only q154 at
         // 0.92×): serializing the materialization before the first
         // consumer costs more than the overlapped duplicate work it
-        // avoids at local thread counts. The knob stays for corpora
-        // where the duplicated subtree is pricier than a scheduling
-        // round-trip (e.g. wide scans on a real cluster).
-        if (spark.conf.get(EagerKey, "false").toBoolean) { p.count(); () }
+        // avoids at local thread counts. Corpora where the duplicated
+        // subtree is pricier than a scheduling round-trip (e.g. wide
+        // scans on a real cluster) would need their own A/B first.
         p
     }
   }
-
-  /** Whether [[apply]] materializes the persisted barrier eagerly
-    * (default false — see the measured A/B at the count() site).
-    */
-  val EagerKey = "spark.graft.barrierEager"
 
   /** Lineage CUT for iterative algorithms (HITS, PageRank, label
     * propagation, BPE training): the per-round result MUST be

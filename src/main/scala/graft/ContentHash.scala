@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Order-independent content hash of a DataFrame, shared by the
-  * spill/cluster correctness harnesses ([[SpillCheck]], ClusterCheck).
+  * scale-correctness harnesses ([[ClusterCheck]], SkewCheck,
+  * streaming.StreamKillCheck).
   *
   * SUM of per-row xxhash64 over the row struct is commutative, so a
   * partitioning/ordering difference cannot flip it while any VALUE

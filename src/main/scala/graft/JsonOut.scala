@@ -1,8 +1,8 @@
 package graft
 
-/** Shared JSON string emission for the artifact-writing harness mains
-  * (SpillCheck, ClusterCheck, SkewCheck, StreamSoak, StreamKillCheck)
-  * — each had grown its own two-replace copy, which left control
+/** Shared JSON string emission for the artifact-writing mains
+  * (ClusterCheck, SkewCheck, StreamSoak, StreamKillCheck, and Verify's
+  * oracle_sql.json) — each had grown its own two-replace copy, which left control
   * characters (a newline inside an exception message) and
   * locale-dependent number formatting (`f"$x%.1f"` renders "12,3" on
   * comma-decimal JVMs) able to corrupt an artifact. One helper, fixed
@@ -34,4 +34,11 @@ object JsonOut {
     */
   def jnum(v: Double, digits: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Write `json` plus a newline to `path` (UTF-8) and echo it to stdout. */
+  def writeArtifact(path: String, json: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(json)
+  }
 }

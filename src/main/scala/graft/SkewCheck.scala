@@ -108,9 +108,7 @@ object SkewCheck {
          |"broadcast_reference_on_zipf":{"rows":$br,"hash":${jstr(bh)}},
          |"skew_split_semantics_identical":${zr == br && zh == bh}}"""
         .stripMargin.replace("\n", "")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    JsonOut.writeArtifact(outPath, json)
     require(ok, "skew gate failed — see " + outPath)
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.{ClusterCheck, ContentHash, LocalSession}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
+import graft.{ClusterCheck, ContentHash, JsonOut, LocalSession, RunCounters}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -34,6 +33,10 @@ import org.apache.spark.sql.streaming.Trigger
   * Env: SPARK_GRAFT_MASTER (default local-cluster[2,6,10240]),
   *      SPARK_GRAFT_CPUS (shuffle partitions, default: all cores),
   *      SPARK_GRAFT_KILL (seconds into each killed run; default 10).
+  *      A `local-cluster` master started outside spark-submit (e.g.
+  *      from sbt) also needs Spark's own SPARK_SCALA_VERSION=2.13, or
+  *      every executor launch fails with "Cannot find any build
+  *      directories".
   */
 object StreamKillCheck {
 
@@ -52,27 +55,8 @@ object StreamKillCheck {
     val spark = LocalSession(
       ClusterCheck.clusterConf("local-cluster[2,6,10240]"): _*)
     val master = spark.sparkContext.master
-
-    val removed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val failedTasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit = {
-        removed.incrementAndGet(); ()
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.reason != org.apache.spark.Success) {
-          failedTasks.incrementAndGet(); ()
-        }
-    })
-
-    def awaitExecutors(n: Int): Unit = {
-      val deadline = System.currentTimeMillis() + 120000
-      while (ClusterCheck.executorPids().size < n &&
-             System.currentTimeMillis() < deadline) Thread.sleep(500)
-      require(ClusterCheck.executorPids().size >= n,
-        s"cluster did not (re)launch $n executors")
-    }
-    if (master.startsWith("local-cluster")) awaitExecutors(2)
+    val counters = RunCounters.attach(spark.sparkContext)
+    ClusterCheck.awaitExecutors(master)
 
     // one staged drop sequence shared by every run: identical file
     // order (sequential writes) => identical micro-batch boundaries
@@ -81,54 +65,32 @@ object StreamKillCheck {
 
     def runOnce(op: String, kill: Boolean)
                (build: DataFrame => org.apache.spark.sql.Dataset[_]): RunStats = {
-      if (master.startsWith("local-cluster")) awaitExecutors(2)
-      removed.set(0); failedTasks.set(0)
+      ClusterCheck.awaitExecutors(master)
+      counters.settle()
+      counters.reset()
       val out = java.nio.file.Files
         .createTempDirectory(s"graft-skc-out-$op").toString
       val ckpt = java.nio.file.Files
         .createTempDirectory(s"graft-skc-ckpt-$op").toString
       val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      if (kill) {
-        val t = new Thread(() => {
-          Thread.sleep((killAtSec * 1000).toLong)
-          if (!done.get()) {
-            ClusterCheck.executorPids().headOption.foreach { pid =>
-              new ProcessBuilder("kill", "-9", pid.toString)
-                .start().waitFor()
-              ()
-            }
-          }
-        }, s"graft-stream-killer-$op")
-        t.setDaemon(true); t.start()
-      }
+      val killer =
+        if (kill) Some(ClusterCheck.killOneExecutorAfter(killAtSec, done, s"stream-$op"))
+        else None
       // per-batch state-store rows (the StreamSoak observable): the
       // KILLED run's curve proves state not only recovers
       // content-correct but keeps PLATEAUING after the executor loss —
       // a recovery that reloaded state into an unbounded shape would
       // pass the hash gate and still die at hour N on a cluster
-      val points = scala.collection.mutable.ArrayBuffer
-        .empty[StreamSoak.BatchPoint]
       val qname = s"skc_$op" + (if (kill) "_kill" else "_ref")
-      val slistener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-          val p = e.progress
-          if (p.name == qname) points.synchronized {
-            points += StreamSoak.BatchPoint(p.batchId, p.numInputRows,
-              p.stateOperators.map(_.numRowsTotal).sum,
-              Option(p.eventTime.get("watermark")).getOrElse(""))
-            ()
-          }
-        }
+      val recorder = new StreamSoak.BatchRecorder(spark, qname)
+      def settled(): Unit = {
+        done.set(true)
+        killer.foreach(_.awaitLanded(counters))
+        counters.settle(); ()
       }
-      spark.streams.addListener(slistener)
       val t0 = System.nanoTime()
       try {
-        val q = build(EventStreamJob.readEventStream(spark, glob))
+        recorder.await(build(EventStreamJob.readEventStream(spark, glob))
           .toDF()
           .writeStream
           .queryName(qname)
@@ -137,45 +99,20 @@ object StreamKillCheck {
           .option("path", out)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        done.set(true)
-        // the listener bus is async: a removal event can post seconds
-        // after awaitTermination under load — a fixed sleep under-counts
-        // and spuriously fails the kill-landed gate. Poll until the
-        // expected removal arrives (bounded), instead.
-        if (kill) {
-          val deadline = System.currentTimeMillis() + 15000
-          while (removed.get() < 1 &&
-                 System.currentTimeMillis() < deadline) Thread.sleep(200)
-        } else Thread.sleep(500)
-        // The soak curve reads `points`, fed by the SAME async listener
-        // bus: progress events for the last batch(es) can land after
-        // awaitTermination, truncating the plateau window on gated
-        // (>=100-batch) runs (ADVICE r11). `q.lastProgress` is updated
-        // synchronously by the query handle, so poll (bounded) until the
-        // listener has caught up to that batchId.
-        val lastBatch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-        if (lastBatch >= 0) {
-          val pDeadline = System.currentTimeMillis() + 10000
-          def maxSeen() = points.synchronized {
-            if (points.isEmpty) -1L else points.map(_.batchId).max
-          }
-          while (maxSeen() < lastBatch &&
-                 System.currentTimeMillis() < pDeadline) Thread.sleep(100)
-        }
+          .start())
+        settled()
         val sink = spark.read.parquet(out)
         val (n, h) = ContentHash.rowsAndHash(sink)
         RunStats(n, h, (System.nanoTime() - t0) / 1e9,
-          removed.get, failedTasks.get, "", out,
-          StreamSoak.curveOf(op, points.toSeq))
+          counters.executorsRemoved.get, counters.failedTasks.get, "", out,
+          StreamSoak.curveOf(op, recorder.points))
       } catch {
         case e: Throwable =>
-          done.set(true)
+          settled()
           RunStats(-1, "null", (System.nanoTime() - t0) / 1e9,
-            removed.get, failedTasks.get, e.toString.take(300), out,
-            StreamSoak.curveOf(op, points.toSeq))
-      } finally spark.streams.removeListener(slistener)
+            counters.executorsRemoved.get, counters.failedTasks.get,
+            e.toString.take(300), out, StreamSoak.curveOf(op, recorder.points))
+      } finally recorder.close()
     }
 
     // exactly-once key sets per operator, asserted on the KILLED sink
@@ -204,7 +141,7 @@ object StreamKillCheck {
       op -> (ref, killed, hashMatch, dupKeys)
     }
 
-    import graft.JsonOut.{jnum, jstr}
+    import JsonOut.{jnum, jstr}
     // The plateau criterion is quartile-windowed (StreamSoak): with
     // fewer than ~100 batches the windows are too short to separate
     // "horizon still filling" from "unbounded growth", so short runs
@@ -238,9 +175,7 @@ object StreamKillCheck {
         ",\"n_batches\":" + nBatches +
         ",\"sf\":" + jstr(sfDir) + ",\"ops\":{", ",",
       "},\"all_ok\":" + allOk + "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(json)
+    JsonOut.writeArtifact(outPath, json)
     require(allOk, "stream kill check failed — see artifact")
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import scala.collection.mutable.ArrayBuffer
 
 /** Sustained-replay state soak (VERDICT r9 item 5): the bounded-state
@@ -76,44 +76,74 @@ object StreamSoak {
       q4MaxState = maxIn(3 * n / 4, n))
   }
 
+  /** Records the per-batch progress (input rows, state-store rows,
+    * watermark) of the ONE streaming query named `name`; shared with
+    * [[StreamKillCheck]]. Registered on construction, so create it
+    * before starting the query; [[close]] unregisters it.
+    */
+  final class BatchRecorder(spark: SparkSession, name: String)
+      extends StreamingQueryListener {
+    private val pts = ArrayBuffer.empty[BatchPoint]
+    spark.streams.addListener(this)
+
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      if (p.name == name) pts.synchronized {
+        pts += BatchPoint(p.batchId, p.numInputRows,
+          p.stateOperators.map(_.numRowsTotal).sum,
+          Option(p.eventTime.get("watermark")).getOrElse(""))
+        ()
+      }
+    }
+
+    def points: Seq[BatchPoint] = pts.synchronized(pts.toSeq)
+
+    /** Await `q`'s termination (rethrowing its failure), then drain.
+      * Progress events reach the listener over the async bus and the
+      * last batches' can land after awaitTermination, truncating the
+      * curve (ADVICE r11). `q.lastProgress` is updated synchronously by
+      * the query handle, so poll (bounded) until the listener has
+      * caught up to that batchId — also after a failed run, whose
+      * partial curve still goes into the artifact.
+      */
+    def await(q: StreamingQuery): Unit =
+      try q.awaitTermination()
+      finally {
+        val last = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+        def maxSeen = pts.synchronized(
+          if (pts.isEmpty) -1L else pts.map(_.batchId).max)
+        graft.RunCounters.await(10000)(maxSeen >= last)
+      }
+
+    def close(): Unit = spark.streams.removeListener(this)
+  }
+
   /** Replay `srcGlob` through `build`, one file per micro-batch,
     * recording each batch's aggregate state rows.
     */
   def soakOne(spark: SparkSession, srcGlob: String, op: String)
              (build: org.apache.spark.sql.DataFrame =>
                      org.apache.spark.sql.Dataset[_]): SoakCurve = {
-    val points = ArrayBuffer.empty[BatchPoint]
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val state = p.stateOperators.map(_.numRowsTotal).sum
-        val wm = Option(p.eventTime.get("watermark")).getOrElse("")
-        points.synchronized {
-          points += BatchPoint(p.batchId, p.numInputRows, state, wm)
-          ()
-        }
-      }
-    }
-    spark.streams.addListener(listener)
+    val name = s"soak_$op"
+    val recorder = new BatchRecorder(spark, name)
     try {
       val ckpt = java.nio.file.Files
         .createTempDirectory(s"graft-soak-ckpt-$op").toString
-      val q = build(EventStreamJob.readEventStream(spark, srcGlob))
+      recorder.await(build(EventStreamJob.readEventStream(spark, srcGlob))
         .writeStream
-        .queryName(s"soak_$op")
+        .queryName(name)
         .outputMode("append")
         .format("noop") // state behavior is the observable, not the sink
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.streams.removeListener(listener)
-    curveOf(op, points.toSeq)
+        .start())
+    } finally recorder.close()
+    curveOf(op, recorder.points)
   }
 
   /** The three stateful operators under soak. */
@@ -147,8 +177,7 @@ object StreamSoak {
           .mkString(",") + "]}"
     }.mkString("{\"sf\":" + jstr(sfDir) +
       ",\"n_batches\":" + nBatches + ",\"ops\":{", ",", "}}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    graft.JsonOut.writeArtifact(outPath, json)
     println(curves.map(c => s"${c.op}: plateaued=${c.plateaued} " +
       s"final=${c.finalState} q2max=${c.q2MaxState} q4max=${c.q4MaxState}")
       .mkString("\n"))
