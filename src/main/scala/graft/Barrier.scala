@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization barrier for multi-consumed corpus-scale
@@ -16,29 +17,23 @@ import org.apache.spark.storage.StorageLevel
   *     aggregate + join probe); without a barrier each consumer
   *     recomputes the whole upstream plan.
   *
-  * The STRATEGY is a session conf, because the right answer is
-  * corpus-dependent at 100 TB: `spark.graft.barrierStorage` =
-  *  - a [[StorageLevel]] name (`MEMORY_AND_DISK` default, `DISK_ONLY`,
-  *    `MEMORY_ONLY`, …) → `persist(level)`; spills per level;
-  *  - `LOCAL_CHECKPOINT` → eager localCheckpoint: blocks are freed by
-  *    the ContextCleaner when the frame is collected (no
-  *    session-lifetime CacheManager entry), at the availability cost
-  *    documented in [[operators.DistributedRank.withPrefixSum]];
-  *  - `RELIABLE_CHECKPOINT` → eager `df.checkpoint()` to the
-  *    fault-tolerant directory named by `spark.graft.checkpointDir`
-  *    (HDFS/S3 on a cluster). localCheckpoint blocks live on executor
-  *    local disks — one lost executor invalidates them and the lineage
-  *    was CUT, so a multi-hour 100 TB iterative job (HITS, PageRank,
-  *    label propagation) restarts from zero; a reliable checkpoint
-  *    survives executor loss at the cost of one distributed write +
-  *    read per barrier. Checkpoint files are reclaimed by the
-  *    ContextCleaner only when
+  * Two modes, chosen by the deployment, not by a strategy option:
+  *  - `spark.graft.checkpointDir` UNSET (the default): [[apply]] is a
+  *    lazy `persist(MEMORY_AND_DISK)`, [[cut]] a lazy
+  *    `localCheckpoint(eager = false)`, [[freeze]] an eager
+  *    localCheckpoint. Blocks live on the executors.
+  *  - `spark.graft.checkpointDir` SET (a fault-tolerant path every
+  *    executor can reach: HDFS/S3 on a cluster): [[apply]] and [[cut]]
+  *    write an eager `df.checkpoint()` there. localCheckpoint blocks
+  *    live on executor local disks — one lost executor invalidates
+  *    them and the lineage was CUT, so a multi-hour 100 TB iterative
+  *    job (HITS, PageRank, label propagation) restarts from zero; a
+  *    reliable checkpoint survives executor loss at the cost of one
+  *    distributed write + read per barrier. [[release]] deletes the
+  *    files (the ContextCleaner reclaims them only when
   *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`;
-  *    otherwise clean the directory per job (document of record:
-  *    SPARK-8582's eager-checkpoint semantics);
-  *  - `NONE` → no barrier: identical results, upstream recomputed per
-  *    consumer (including the CollapseProject inlining cost) — the
-  *    right trade when the intermediate is wider than the recompute.
+  *    SPARK-8582 documents the eager-checkpoint semantics). [[freeze]]
+  *    stays a localCheckpoint: its frames are per-query scratch.
   *
   * Persisted barriers are REGISTERED per session; a driver that runs
   * many queries in one session ([[Verify]], [[Bench]]) calls
@@ -50,7 +45,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Barrier {
 
-  val ConfKey = "spark.graft.barrierStorage"
+  /** Deployment path of the fault-tolerant checkpoint store; setting it
+    * selects the checkpoint-dir mode described above.
+    */
   val CheckpointDirKey = "spark.graft.checkpointDir"
 
   /** Reliable checkpoints a [[CutChain]] keeps live (current round +
@@ -68,64 +65,36 @@ object Barrier {
     */
   val CutCheckpointsKept = 2
 
-  // WEAK keys: a session that was released (empty queue, no DataFrame
-  // value referencing it) must be collectable — a strong-keyed map
-  // would pin every per-job/per-batch SparkSession for the JVM
-  // lifetime in multi-session drivers. While a queue still holds
-  // frames, those frames reference their session and keep the entry
-  // live, which is exactly right. The synchronizedMap wrapper makes
-  // computeIfAbsent/get atomic (Java's SynchronizedMap overrides the
-  // default methods).
-  private val registry: java.util.Map[
-      org.apache.spark.sql.SparkSession, java.util.Queue[DataFrame]] =
+  // What release() does for a session: unpersist a barrier frame or a
+  // registered RDD, delete a checkpoint dir. WEAK keys: a session that
+  // was released (empty queue, no DataFrame value referencing it) must
+  // be collectable — a strong-keyed map would pin every
+  // per-job/per-batch SparkSession for the JVM lifetime in
+  // multi-session drivers. An action gets the session as its argument
+  // so that it captures no session itself; one that holds a frame
+  // keeps the entry live through the frame, which is exactly right.
+  // The synchronizedMap wrapper makes computeIfAbsent/get atomic
+  // (Java's SynchronizedMap overrides the default methods).
+  private val pending: java.util.Map[SparkSession, java.util.Queue[SparkSession => Unit]] =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[
-        org.apache.spark.sql.SparkSession, java.util.Queue[DataFrame]]())
+      new java.util.WeakHashMap[SparkSession, java.util.Queue[SparkSession => Unit]]())
 
-  // Every reliable-checkpoint path (`…/rdd-N` dir) this object creates
-  // — via apply(), cut(), or a CutChain — queues here for deletion at
-  // release() (the between-queries point where the caller asserts no
-  // frame is re-consumed). Same weak-key rationale as `registry`.
-  private val ckptPaths: java.util.Map[
-      org.apache.spark.sql.SparkSession, java.util.Queue[String]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[
-        org.apache.spark.sql.SparkSession, java.util.Queue[String]]())
-
-  // Raw-RDD persists (the messageRounds edge RDD) follow the same
-  // release-between-queries contract as DataFrame barriers; without
-  // this track they linger until nondeterministic ContextCleaner GC
-  // in multi-query drivers (ADVICE r11).
-  private val rddRegistry: java.util.Map[
-      org.apache.spark.sql.SparkSession, java.util.Queue[
-        org.apache.spark.rdd.RDD[_]]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[
-        org.apache.spark.sql.SparkSession, java.util.Queue[
-          org.apache.spark.rdd.RDD[_]]]())
+  private def onRelease(spark: SparkSession)(action: SparkSession => Unit): Unit = {
+    pending.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentLinkedQueue[SparkSession => Unit]())
+      .add(action)
+    ()
+  }
 
   /** Register a persisted raw RDD for unpersist at the next
     * [[release]] — for iterative cores that drop below the DataFrame
     * layer (e.g. [[graph.GraphQueries.messageRounds]]'s co-partitioned
     * edge RDD) but must still honor the deterministic
-    * release-between-queries contract.
+    * release-between-queries contract; without it the RDD lingers until
+    * nondeterministic ContextCleaner GC in multi-query drivers.
     */
-  def registerRdd(spark: org.apache.spark.sql.SparkSession,
-                  rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    rddRegistry.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.rdd.RDD[_]]())
-      .add(rdd)
-    ()
-  }
-
-  private def registerCkpt(
-      spark: org.apache.spark.sql.SparkSession, p: String): Unit = {
-    ckptPaths.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[String]())
-      .add(p)
-    ()
-  }
+  def registerRdd(spark: SparkSession, rdd: RDD[_]): Unit =
+    onRelease(spark)(_ => rdd.unpersist(blocking = false))
 
   /** Register every persisted RDD reachable in `df`'s physical DAG —
     * the (lazily) local-checkpointed block holder — for unpersist at
@@ -143,7 +112,7 @@ object Barrier {
     */
   private def registerPersistedLeaves(df: DataFrame): Unit = {
     val spark = df.sparkSession
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+    def walk(r: RDD[_]): Unit =
       if (r.getStorageLevel != StorageLevel.NONE) registerRdd(spark, r)
       else r.dependencies.foreach(d => walk(d.rdd))
     walk(df.queryExecution.toRdd)
@@ -154,7 +123,7 @@ object Barrier {
     * the node with a checkpoint file. Public RDD API only.
     */
   private def checkpointPathOf(df: DataFrame): Option[String] = {
-    def walk(r: org.apache.spark.rdd.RDD[_]): Option[String] =
+    def walk(r: RDD[_]): Option[String] =
       r.getCheckpointFile.orElse(r.dependencies.iterator
         .map(d => walk(d.rdd)).collectFirst { case Some(p) => p })
     walk(df.queryExecution.toRdd)
@@ -164,8 +133,7 @@ object Barrier {
     * path (works for hdfs://, s3a://, file:// alike); a failed delete
     * must never fail the job that has already moved past the round.
     */
-  private def deleteCheckpoint(
-      spark: org.apache.spark.sql.SparkSession, p: String): Unit =
+  private def deleteCheckpoint(spark: SparkSession, p: String): Unit =
     try {
       val path = new org.apache.hadoop.fs.Path(p)
       path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -173,24 +141,16 @@ object Barrier {
       ()
     } catch { case _: java.io.IOException => () }
 
-  /** Barrier `df` per the session's configured strategy. */
-  def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.get(ConfKey, "MEMORY_AND_DISK").trim.toUpperCase match {
-      case "NONE" => df
-      case "LOCAL_CHECKPOINT" =>
-        val out = df.localCheckpoint()
-        registerPersistedLeaves(out)
-        out
-      case "RELIABLE_CHECKPOINT" =>
-        val cp = reliableCheckpoint(df)
-        checkpointPathOf(cp).foreach(registerCkpt(spark, _))
-        cp
-      case level =>
-        val p = df.persist(StorageLevel.fromString(level))
-        registry.computeIfAbsent(spark,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-          .add(p)
+  private def checkpointDir(spark: SparkSession): Option[String] =
+    spark.conf.getOption(CheckpointDirKey)
+
+  /** Barrier `df` in the session's mode. */
+  def apply(df: DataFrame): DataFrame =
+    checkpointDir(df.sparkSession) match {
+      case Some(dir) => reliableCheckpoint(df, dir)
+      case None =>
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+        onRelease(df.sparkSession)(_ => p.unpersist(blocking = false))
         // LAZY, and that is a MEASURED choice, not an
         // omission: a lazily-persisted barrier with several
         // broadcast-subquery consumers does get recomputed
@@ -207,7 +167,6 @@ object Barrier {
         // scans on a real cluster) would need their own A/B first.
         p
     }
-  }
 
   /** Lineage CUT for iterative algorithms (HITS, PageRank, label
     * propagation, BPE training): the per-round result MUST be
@@ -215,23 +174,21 @@ object Barrier {
     * the full round-deep tree for Catalyst/AQE to re-analyze per
     * action and planning cost compounds quadratically across rounds
     * (q182 measured 103 s uncut / 21 s cached / 2.9 s checkpointed at
-    * sf0.1), and `NONE` would recompute every previous round per
-    * consumer. So unlike [[apply]], `cut` ALWAYS checkpoints; the only
-    * strategy question is WHERE the frozen blocks live:
-    * `RELIABLE_CHECKPOINT` → fault-tolerant `df.checkpoint()` (a
-    * multi-hour run survives executor loss), anything else → LAZY
-    * `localCheckpoint(eager = false)`: the logical plan is cut
-    * immediately (a LogicalRDD that also carries the physical
-    * partitioning/ordering), but block materialization rides the
-    * first consuming action instead of a dedicated count-style job
-    * per round. Measured round 9 on the iterative family at sf0.1
-    * (min-of-5): q182 6.2→5.1 s, q230 4.1→3.4 s, q207 4.9→4.2 s from
-    * the eagerness change alone — the per-round materialization job
-    * was pure scheduling overhead, every block gets written anyway by
-    * the next round's action. The full strategy matrix for the
-    * record: cache-without-cut measured q182 at 25.2 s (Catalyst/AQE
-    * re-analysis of round-deep plans — the original disease), eager
-    * localCheckpoint 6.2 s, lazy 5.1 s.
+    * sf0.1). So `cut` ALWAYS checkpoints; the mode only decides WHERE
+    * the frozen blocks live: with `spark.graft.checkpointDir` set →
+    * fault-tolerant `df.checkpoint()` (a multi-hour run survives
+    * executor loss), unset → LAZY `localCheckpoint(eager = false)`:
+    * the logical plan is cut immediately (a LogicalRDD that also
+    * carries the physical partitioning/ordering), but block
+    * materialization rides the first consuming action instead of a
+    * dedicated count-style job per round. Measured round 9 on the
+    * iterative family at sf0.1 (min-of-5): q182 6.2→5.1 s, q230
+    * 4.1→3.4 s, q207 4.9→4.2 s from the eagerness change alone — the
+    * per-round materialization job was pure scheduling overhead, every
+    * block gets written anyway by the next round's action. The full
+    * matrix for the record: cache-without-cut measured q182 at 25.2 s
+    * (Catalyst/AQE re-analysis of round-deep plans — the original
+    * disease), eager localCheckpoint 6.2 s, lazy 5.1 s.
     *
     * LAZY means callers that mutate the cut frame's SOURCE after
     * cutting (index generation swaps, in-place overwrites) must
@@ -241,20 +198,16 @@ object Barrier {
     * this reason.
     */
   def cut(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ConfKey, "MEMORY_AND_DISK")
-        .trim.toUpperCase match {
-      case "RELIABLE_CHECKPOINT" =>
-        val cp = reliableCheckpoint(df)
-        // NO cut-time rotation here: a query may hold several
-        // interleaved cut sequences whose older rounds are still
-        // consumed later (BFS unions every round's frontier; label
-        // propagation pins node/edge cuts across rounds) — deleting
-        // "the previous cut" globally is wrong. Files queue for
-        // deletion at release(); a single-frame iteration that wants
-        // bounded in-flight growth opts into [[chain]].
-        checkpointPathOf(cp).foreach(registerCkpt(df.sparkSession, _))
-        cp
-      case _ =>
+    checkpointDir(df.sparkSession) match {
+      // NO cut-time rotation here: a query may hold several
+      // interleaved cut sequences whose older rounds are still
+      // consumed later (BFS unions every round's frontier; label
+      // propagation pins node/edge cuts across rounds) — deleting
+      // "the previous cut" globally is wrong. Files queue for
+      // deletion at release(); a single-frame iteration that wants
+      // bounded in-flight growth opts into [[chain]].
+      case Some(dir) => reliableCheckpoint(df, dir)
+      case None =>
         // lazy cut + deterministic release (r13): register the
         // checkpoint-marked internal RDD so multi-query drivers drop
         // its blocks between queries instead of waiting on GC
@@ -282,26 +235,25 @@ object Barrier {
   }
 
   /** Per-round checkpoint rotation for ONE iterative frame sequence
-    * (the GraphX PeriodicCheckpointer pattern): under
-    * `RELIABLE_CHECKPOINT`, `chain().cut(round)` each round keeps the
-    * newest [[CutCheckpointsKept]] rounds' files and deletes older
-    * ones EAGERLY, so a thousand-round 100 TB job holds O(1)
+    * (the GraphX PeriodicCheckpointer pattern): with
+    * `spark.graft.checkpointDir` set, `chain().cut(round)` each round
+    * keeps the newest [[CutCheckpointsKept]] rounds' files and deletes
+    * older ones EAGERLY, so a thousand-round 100 TB job holds O(1)
     * checkpoint storage instead of O(rounds)-until-release. Safe ONLY
     * when the iteration reads at most `CutCheckpointsKept − 1` rounds
     * back within this chain (every converted algorithm here reads one
     * back) and nothing else references older rounds of THIS frame; an
     * algorithm that accumulates rounds (BFS's visited union) must use
-    * plain [[cut]]. Under every other strategy `chain().cut` ≡
-    * [[cut]]. Rotated paths are also release()-registered — the
-    * double delete is an idempotent no-op.
+    * plain [[cut]]. Unset, `chain().cut` ≡ [[cut]]. Rotated paths are
+    * also release()-registered — the double delete is an idempotent
+    * no-op.
     */
   final class CutChain private[Barrier] () {
     private val live = new java.util.ArrayDeque[String]
     def cut(df: DataFrame): DataFrame = {
       val spark = df.sparkSession
       val out = Barrier.cut(df)
-      if (spark.conf.get(ConfKey, "MEMORY_AND_DISK")
-            .trim.toUpperCase == "RELIABLE_CHECKPOINT") {
+      if (checkpointDir(spark).isDefined) {
         checkpointPathOf(out).foreach { p =>
           live.synchronized {
             live.addLast(p)
@@ -316,54 +268,35 @@ object Barrier {
 
   def chain(): CutChain = new CutChain
 
-  /** Eager fault-tolerant checkpoint; wires the SparkContext
-    * checkpoint dir from `spark.graft.checkpointDir` on first use.
-    * Fails loudly when neither is set — silently falling back to
-    * localCheckpoint would hand a cluster job the exact availability
-    * hazard the caller opted out of.
+  /** Eager fault-tolerant checkpoint, its `rdd-N` dir queued for
+    * deletion at [[release]]; wires the SparkContext checkpoint dir to
+    * `dir` on first use (a dir the SparkContext already has wins).
     */
-  private def reliableCheckpoint(df: DataFrame): DataFrame = {
+  private def reliableCheckpoint(df: DataFrame, dir: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      val dir = df.sparkSession.conf.getOption(CheckpointDirKey).getOrElse(
-        throw new IllegalStateException(
-          s"$ConfKey=RELIABLE_CHECKPOINT requires $CheckpointDirKey " +
-            "(a fault-tolerant path every executor can reach, e.g. " +
-            "hdfs://…/checkpoints or s3://…/checkpoints)"))
-      sc.setCheckpointDir(dir)
-    }
-    df.checkpoint()
+    if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+    val cp = df.checkpoint()
+    checkpointPathOf(cp).foreach(p => onRelease(df.sparkSession)(deleteCheckpoint(_, p)))
+    cp
   }
 
-  /** Unpersist every barrier registered in `spark` since the last
-    * release — for multi-query drivers, between queries (after the
-    * previous query's frames are fully consumed).
+  /** Run every release action registered in `spark` since the last
+    * release: unpersist its barriers and delete its checkpoint files.
+    * For multi-query drivers, between queries (after the previous
+    * query's frames are fully consumed: none is re-consumed, so every
+    * checkpoint this object wrote for the session can go).
     */
-  def release(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // drain in place, never registry.remove: a concurrent apply() that
+  def release(spark: SparkSession): Unit = {
+    // drain in place, never pending.remove: a concurrent apply() that
     // already fetched this queue must not end up adding to an orphaned
     // one no future release can reach (its barrier would stay pinned
     // for the session's lifetime). An entry racing past the drain just
     // waits for the next release. The empty queue object per session
     // is a bounded, trivial residue.
-    val q = registry.get(spark)
+    val q = pending.get(spark)
     if (q != null) {
-      var df = q.poll()
-      while (df != null) { df.unpersist(blocking = false); df = q.poll() }
-    }
-    val rq = rddRegistry.get(spark)
-    if (rq != null) {
-      var r = rq.poll()
-      while (r != null) { r.unpersist(blocking = false); r = rq.poll() }
-    }
-    // reliable-checkpoint files follow the same contract: between
-    // queries no frame is re-consumed, so every checkpoint this object
-    // wrote for the session (apply barriers, cuts, chain survivors)
-    // can go.
-    val cq = ckptPaths.get(spark)
-    if (cq != null) {
-      var p = cq.poll()
-      while (p != null) { deleteCheckpoint(spark, p); p = cq.poll() }
+      var action = q.poll()
+      while (action != null) { action(spark); action = q.poll() }
     }
   }
 }

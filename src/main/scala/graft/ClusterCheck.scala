@@ -25,14 +25,16 @@ import java.util.concurrent.atomic.AtomicBoolean
   *    `executors_removed`/`tasks_failed` PROVE the kill landed
   *    mid-query (a kill that fired after completion shows 0 and
   *    proves nothing — lower the delay).
-  *  - reliable: `SPARK_GRAFT_BARRIER=RELIABLE_CHECKPOINT` — the
-  *    iterative family's cuts go through fault-tolerant
-  *    `df.checkpoint()` ([[Barrier]]'s documented executor-loss
-  *    promise) instead of lazy localCheckpoint, and must survive the
-  *    same kill with identical hashes. (Lazy localCheckpoint blocks
-  *    live on the killed executor and their lineage is CUT — an
-  *    executor loss there is unrecoverable by design; reliable
-  *    checkpoints are the documented fix, this mode measures it.)
+  *  - reliable: `SPARK_GRAFT_CKPT_DIR=<dir>` — sets
+  *    `spark.graft.checkpointDir`, so the iterative family's cuts go
+  *    through fault-tolerant `df.checkpoint()` ([[Barrier]]'s
+  *    documented executor-loss promise) instead of lazy
+  *    localCheckpoint, and must survive the same kill with identical
+  *    hashes. (Lazy localCheckpoint blocks live on the killed executor
+  *    and their lineage is CUT — an executor loss there is
+  *    unrecoverable by design; reliable checkpoints are the documented
+  *    fix, this mode measures it.) The artifact's `barrier` field reads
+  *    `RELIABLE_CHECKPOINT` in this mode, empty otherwise.
   *  - spill: `SPARK_GRAFT_SPILL=force` — the same queries under a
   *    memory regime that makes the spill paths actually execute
   *    ([[forceSpill]]; ideally in a small-heap JVM, e.g. -Xmx4g).
@@ -46,8 +48,8 @@ import java.util.concurrent.atomic.AtomicBoolean
   * Env: SPARK_GRAFT_MASTER (default local-cluster[2,8,8192]),
   *      SPARK_GRAFT_CPUS (shuffle partitions, default: all cores),
   *      SPARK_GRAFT_KILL (seconds into each query to kill; off if
-  *      unset), SPARK_GRAFT_BARRIER (cut strategy override),
-  *      SPARK_GRAFT_CKPT_DIR (checkpoint dir for RELIABLE mode),
+  *      unset), SPARK_GRAFT_CKPT_DIR (fault-tolerant checkpoint dir;
+  *      reliable mode if set),
   *      SPARK_GRAFT_SPILL (`force` for the spill regime; off if unset).
   *      A `local-cluster` master started outside spark-submit (e.g.
   *      from sbt) also needs Spark's own SPARK_SCALA_VERSION=2.13, or
@@ -74,13 +76,17 @@ object ClusterCheck {
       }.sorted
 
   /** On a `local-cluster[N,…]` master, wait (bounded) until N
-    * executor JVMs are up: at start, and between runs while the
-    * standalone master relaunches a killed one.
+    * executors have registered with the driver: at start, and between
+    * runs while the standalone master relaunches a killed one. The
+    * status tracker is fed from the listener bus, so their
+    * `ExecutorAdded` events are posted before a following
+    * [[RunCounters.settle]]'s marker and fall before its reset.
     */
-  private[graft] def awaitExecutors(master: String): Unit =
-    if (master.startsWith("local-cluster[")) {
-      val n = master.stripPrefix("local-cluster[").takeWhile(_ != ',').trim.toInt
-      require(RunCounters.await(120000)(executorPids().size >= n),
+  private[graft] def awaitExecutors(sc: org.apache.spark.SparkContext): Unit =
+    if (sc.master.startsWith("local-cluster[")) {
+      val n = sc.master.stripPrefix("local-cluster[").takeWhile(_ != ',').trim.toInt
+      // the executor list includes the driver
+      require(RunCounters.await(120000)(sc.statusTracker.getExecutorInfos.length >= n + 1),
         s"cluster did not (re)launch $n executors")
     }
 
@@ -168,24 +174,16 @@ object ClusterCheck {
     val Array(sfDir, outPath, namesCsv) = args
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val killDelaySec = sys.env.get("SPARK_GRAFT_KILL").map(_.toDouble)
-    val barrier = sys.env.getOrElse("SPARK_GRAFT_BARRIER", "")
+    val ckptDir = sys.env.get("SPARK_GRAFT_CKPT_DIR")
     val spill = sys.env.getOrElse("SPARK_GRAFT_SPILL", "off")
 
-    val barrierConf =
-      if (barrier.isEmpty) Nil
-      else (Barrier.ConfKey -> barrier) +: (
-        if (barrier.equalsIgnoreCase("RELIABLE_CHECKPOINT"))
-          Seq(Barrier.CheckpointDirKey ->
-            sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR",
-              java.nio.file.Files.createTempDirectory("graft-ckpt")
-                .toString))
-        else Nil)
     val spark = LocalSession(clusterConf("local-cluster[2,8,8192]") ++
-      barrierConf ++ (if (spill == "force") forceSpill else Nil): _*)
+      ckptDir.map(Barrier.CheckpointDirKey -> _) ++
+      (if (spill == "force") forceSpill else Nil): _*)
     val master = spark.sparkContext.master
     val counters = RunCounters.attach(spark.sparkContext)
 
-    awaitExecutors(master) // before timing anything
+    awaitExecutors(spark.sparkContext) // before timing anything
 
     val qs = SparkEntry.queries
     val out = names.map { name =>
@@ -230,7 +228,7 @@ object ClusterCheck {
         jstr(k) + ":" + jstr(v)
       }.mkString(",") + "}"
     }.mkString("{\"master\":" + jstr(master) +
-      ",\"barrier\":" + jstr(barrier) +
+      ",\"barrier\":" + jstr(if (ckptDir.isDefined) "RELIABLE_CHECKPOINT" else "") +
       ",\"kill_delay_sec\":" + jstr(killDelaySec.map(_.toString)
         .getOrElse("off")) +
       ",\"spill\":" + jstr(spill) +

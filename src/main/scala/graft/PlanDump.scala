@@ -170,7 +170,7 @@ object PlanDump {
     "q146_seasonal_anomaly" ->
       "Seasonal anomaly: one map-side day projection + one (type, day) count aggregate; span is a 1-row broadcast; baseline join is |types*7| rows; deviation flags and ppm ratios are in-row integer cross-products; worst-day election is max(struct).",
     "q184_hierarchy_rollup" ->
-      "Recursive traversal as bounded join iteration: one equi-join per level against the Barrier'd parent-edge table, Barrier.cut per round (constant plan depth, RELIABLE_CHECKPOINT-capable); the closure is |V|*depth rows — what WITH RECURSIVE materializes — and the rollup is one map-side-combinable aggregate + TakeOrdered(20).",
+      "Recursive traversal as bounded join iteration: one equi-join per level against the Barrier'd parent-edge table, Barrier.cut per round (constant plan depth, fault-tolerant with spark.graft.checkpointDir set); the closure is |V|*depth rows — what WITH RECURSIVE materializes — and the rollup is one map-side-combinable aggregate + TakeOrdered(20).",
     "q185_hop_neighborhood" ->
       "Bounded BFS: w>=2 edge list behind a Barrier; each hop = frontier equi-join + distinct + anti-join vs visited, cut per round; seed is a 1-row argmax broadcast; rings report via a 4-row left join so empty hops cannot vanish.",
     "q186_quality_terciles" ->

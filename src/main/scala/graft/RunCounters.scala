@@ -7,7 +7,8 @@ import org.apache.spark.scheduler._
 
 /** The one run-counters listener of the check and probe mains
   * ([[JobProfile]], [[ClusterCheck]], [[streaming.StreamKillCheck]]):
-  * per [[reset]] window it counts jobs (id, wall, description),
+  * per [[reset]] window it counts jobs (id, wall, description: SQL
+  * execution id and plan operator),
   * completed stages, ended task attempts and the failed ones,
   * executors added and removed, and memory/disk bytes spilled.
   *
@@ -27,15 +28,7 @@ final class RunCounters(sc: SparkContext) extends SparkListener {
   val memSpilled, diskSpilled = new AtomicLong(0)
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
-    val props = Option(js.properties)
-    val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-      .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
-      .getOrElse("")
-    // stage names + task counts attribute the job to a plan step
-    // (shuffle write site) far better than the empty callSite
-    val st = js.stageInfos.map(si => s"${si.name.takeWhile(_ != ' ')}(${si.numTasks})")
-      .mkString(",")
-    open.put(js.jobId, (System.nanoTime(), s"$desc [$st]"))
+    open.put(js.jobId, (System.nanoTime(), RunCounters.describe(js.properties)))
     ()
   }
   override def onJobEnd(je: SparkListenerJobEnd): Unit =
@@ -87,6 +80,23 @@ final class RunCounters(sc: SparkContext) extends SparkListener {
 }
 
 object RunCounters {
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A job's description from its local properties: the job
+    * description if one was set, the SQL execution id and the name of
+    * the plan operator whose RDD scope submitted it, e.g.
+    * `exec 1 BroadcastExchange`. Stage names do not attribute a job:
+    * on Spark 4.1 they read `$anonfun$withThreadLocalCaptured$2 at
+    * CompletableFuture.java:…` for nearly every stage.
+    */
+  private def describe(props: java.util.Properties): String = {
+    def prop(k: String) = Option(props).flatMap(p => Option(p.getProperty(k)))
+    (prop("spark.job.description") ++
+      prop("spark.sql.execution.id").map(id => s"exec $id") ++
+      prop("spark.rdd.scope").map(s => json.readTree(s).path("name").asText())
+        .filter(_.nonEmpty)).mkString(" ")
+  }
 
   /** A [[RunCounters]] registered on `sc`'s listener bus. */
   def attach(sc: SparkContext): RunCounters = {

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * expansion, not unbounded transitive closure: each hop is one
   * equi-join frontier⋈edges + distinct + an anti-join against the
   * visited set, with [[graft.Barrier.cut]] per hop (the round's
-  * iteration discipline — bounded plans, RELIABLE_CHECKPOINT-capable).
+  * iteration discipline — bounded plans, fault-tolerant with
+  * `spark.graft.checkpointDir` set).
   * The frontier never exceeds the vertex set; the anti-join keeps the
   * expansion monotone so hop = true min-distance.
   *

@@ -262,8 +262,8 @@ object GraphQueries {
     // (backbone-pruned, q230) and rounds are many.
     val verts = ew.select($"src").distinct()
     val r0 = verts.select($"src".as("p"), lit(Scale / nv).as("r"))
-    // single-frame chain ⇒ rotated cuts: under RELIABLE_CHECKPOINT
-    // only the newest two rounds' checkpoint files stay on disk
+    // single-frame chain ⇒ rotated cuts: with spark.graft.checkpointDir
+    // set only the newest two rounds' checkpoint files stay on disk
     val rounds = graft.Barrier.chain()
     var r = r0
     var round = 1

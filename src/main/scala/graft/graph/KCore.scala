@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * aggregate + one anti/semi-join wave, and the frame PER ROUND
   * never exceeds the edge list. Both the survivor set and the edge
   * frame are lineage-CUT per round ([[graft.Barrier.cut]] —
-  * localCheckpoint, or a fault-tolerant checkpoint under
-  * `spark.graft.barrierStorage=RELIABLE_CHECKPOINT`), the q182
+  * localCheckpoint, or a fault-tolerant checkpoint with
+  * `spark.graft.checkpointDir` set), the q182
   * discipline that keeps Catalyst's re-analysis cost flat in the
   * round count.
   */

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * (node, anc, hop) starts at (node, node, 0) and each round joins the
   * parent-edge table once to climb one level, with [[graft.Barrier.cut]]
   * per round (this round's iteration discipline: the lineage is
-  * truncated, so Catalyst re-analysis cannot compound, and under
-  * RELIABLE_CHECKPOINT a deep-hierarchy run survives executor loss).
+  * truncated, so Catalyst re-analysis cannot compound, and with
+  * `spark.graft.checkpointDir` set a deep-hierarchy run survives
+  * executor loss).
   * The accumulated closure is |V| × depth rows — the same size WITH
   * RECURSIVE materializes — and every round is one equi-join +
   * filter, AQE-skew-splittable. Linear rounds (not pointer doubling)

@@ -56,7 +56,7 @@ object StreamKillCheck {
       ClusterCheck.clusterConf("local-cluster[2,6,10240]"): _*)
     val master = spark.sparkContext.master
     val counters = RunCounters.attach(spark.sparkContext)
-    ClusterCheck.awaitExecutors(master)
+    ClusterCheck.awaitExecutors(spark.sparkContext)
 
     // one staged drop sequence shared by every run: identical file
     // order (sequential writes) => identical micro-batch boundaries
@@ -65,7 +65,7 @@ object StreamKillCheck {
 
     def runOnce(op: String, kill: Boolean)
                (build: DataFrame => org.apache.spark.sql.Dataset[_]): RunStats = {
-      ClusterCheck.awaitExecutors(master)
+      ClusterCheck.awaitExecutors(spark.sparkContext)
       counters.settle()
       counters.reset()
       val out = java.nio.file.Files

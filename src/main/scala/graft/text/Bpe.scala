@@ -96,9 +96,10 @@ object Bpe {
     val s = vocab.sparkSession
     import s.implicits._
     // Barrier.cut per round (not raw localCheckpoint): the k-round
-    // merge loop must truncate lineage each round, and under
-    // RELIABLE_CHECKPOINT the vocab-dict state survives executor loss
-    // (it is tiny — |vocab| rows — so the reliable write is cheap).
+    // merge loop must truncate lineage each round, and with
+    // spark.graft.checkpointDir set the vocab-dict state survives
+    // executor loss (it is tiny — |vocab| rows — so the reliable
+    // write is cheap).
     var v = graft.Barrier.cut(
       vocab.select($"w", charSyms($"w").as("syms"), $"c"))
     val steps = scala.collection.mutable.ArrayBuffer[Step]()

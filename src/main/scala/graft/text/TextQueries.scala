@@ -21,9 +21,9 @@ object TextQueries {
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
 
   /** Corpus-scale materialization barriers (tokenized arrays, gram
-    * rows, edge lists) route through [[graft.Barrier]], so the storage
-    * strategy is the session's `spark.graft.barrierStorage` choice
-    * instead of a hard-coded MEMORY_AND_DISK cache. Small aggregated
+    * rows, edge lists) route through [[graft.Barrier]], so they are
+    * released between queries and become fault-tolerant checkpoints
+    * with `spark.graft.checkpointDir` set. Small aggregated
     * frames (bucket lists, fingerprint groups) keep plain `.cache()` —
     * they are bounded by group counts, not corpus size.
     */
@@ -935,8 +935,8 @@ object TextQueries {
     val s = edges.sparkSession
     import s.implicits._
     // graft.Barrier.cut for every per-round materialization below:
-    // localCheckpoint by default, an HDFS/S3 checkpoint under
-    // RELIABLE_CHECKPOINT so an hour-long propagation survives
+    // localCheckpoint by default, an HDFS/S3 checkpoint with
+    // spark.graft.checkpointDir set so an hour-long propagation survives
     // executor loss (the blocks ARE the algorithm state — lineage was
     // deliberately cut, so losing them means restarting from zero).
     val nodes = graft.Barrier.cut(edges

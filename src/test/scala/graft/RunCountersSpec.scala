@@ -52,4 +52,17 @@ class RunCountersSpec extends SparkSpec {
       assert(c.jobs.size == 1)
     }
   }
+
+  test("a DataFrame aggregate's jobs are described by SQL execution and plan operator") {
+    import org.apache.spark.sql.functions.col
+    withCounters { c =>
+      spark.range(1000).groupBy(col("id") % 7).count().collect()
+      assert(c.settle())
+      val descs = c.jobs.map(_._3)
+      // the shuffle-map job is the Exchange's; the result job reads `collect`
+      assert(descs.forall(_.matches("""exec \d+ \w+""")), descs)
+      assert(descs.exists(_.endsWith(" Exchange")), descs)
+      assert(!descs.exists(_.startsWith("$anonfun$")), descs)
+    }
+  }
 }
