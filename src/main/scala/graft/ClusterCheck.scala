@@ -187,7 +187,6 @@ object ClusterCheck {
 
     val qs = SparkEntry.queries
     val out = names.map { name =>
-      Barrier.release(spark)
       spark.catalog.clearCache()
       counters.settle()
       counters.reset()
@@ -209,7 +208,7 @@ object ClusterCheck {
           case e: Throwable =>
             Map("rows" -> "-1", "hash" -> "null", "wall_sec" -> "-1",
               "err" -> e.toString.take(300))
-        }
+        } finally Barrier.release(spark) // spark.stop() keeps checkpoint files
       done.set(true)
       val killedPid = killer.map(_.awaitLanded(counters)).getOrElse(0)
       counters.settle()

@@ -2,153 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry and its oracle map (SURVEY.md §7).
   *
   * Every implemented operator from SURVEY.md §2 (plus the training-data
   * extensions) is registered here as a named query with, where
-  * SQL-expressible, a DuckDB oracle equivalent. Registries live in the
-  * per-domain modules:
-  *   - operators.CoreQueries   q01–q16, q56, q75, q77  filters/predicates/joins (§2.2-2.3)
-  *   - operators.AggQueries    q17–q30, q57–q65, q70–q71, q76  aggregates/windows/set ops (§2.4-2.7)
-  *   - operators.Search        q79–q80  E2 parameterized query builders
-  *   - functions.ScalarQueries q31–q35, q67, q81  scalar fns, UDAF, Fernet (§2.8-2.9, S3)
-  *   - streaming.EventQueries  q36–q39, q54, q73–q74, q93, q130  event windows/sessions (§2.10)
-  *   - text.TextQueries        q40–q46, q51, q55, q61, q66, q68–q69, q72, q78, q83–q86, q88–q91, q94–q125  text/dedup/sampling/packing/curation/filtering/sketches
-  *   - text.Bpe                q109 companion trainer + q127  applied BPE + q162  fertility audit
-  *   - text.BloomPrune         q129  Bloom-pruned decontamination + the pipeline gate
-  *   - text.HybridSearch       q139  reciprocal-rank fusion of BM25 + TF-IDF rankings
-  *   - similarity.VectorQueries q47–q49, q52, q106, q108, q126, q131  embedding similarity + ANN + semantic dedup + quantization
-  *   - multimodal.MultimodalQueries q50, q53, q87, q128, q133  binary-column plumbing + real JDK image/audio codecs
-  *   - security.SecurityQueries q82, q132  access audit (F12) + k-anonymity
-  *   - graph.GraphQueries      q137–q138  PageRank + A-Priori pair mining over the co-purchase graph
-  *   - graph.Triangles         q152  degree-ordered triangle census + clustering coefficients
-  *   - operators.Survival      q153  Kaplan-Meier censoring-aware time-to-event curve
-  *   - graph.AssocRules        q154  confidence/lift rule generation over frequent pairs
-  *   - operators.NameSimilarity q155  native Jaro-Winkler namespace confusability audit
-  *   - operators.BenfordAudit  q156  Benford first-digit conformance audit
-  *   - operators.ColumnEntropy q157  per-column entropy/cardinality/mode profile
-  *   - operators.RobustOutliers q158  MAD modified-z robust outlier scan
-  *   - operators.ExpSmoothing  q159  dyadic-kernel EWMA revenue smoothing
-  *   - streaming.MarkovTransitions q160  directly-follows transition matrix
-  *   - text.ZipfTail           q161  Hill tail-exponent vocabulary datasheet stat
-  *   - operators.StatsAudits   q163–q164, q180  MI + Poisson bootstrap + chi-square
-  *   - operators.CubeAgg       q165  CUBE all-margins aggregate
-  *   - graph.Assortativity     q166  Newman degree assortativity
-  *   - operators.Gini          q167, q169  Gini concentration + Lorenz deciles
-  *   - operators.ControlChart  q168  monthly return-rate p-chart (SPC)
-  *   - operators.Spearman      q170  volume-vs-value rank agreement
-  *   - text.PackingCurve       q171–q172  context-length packing ledger + cluster-size distribution
-  *   - streaming.Burstiness    q173  Goh-Barabasi inter-arrival burstiness
-  *   - operators.AbcRfm        q174–q175  ABC/Pareto classes + RFM quintile segments
-  *   - operators.Autocorr      q176  daily-series lag autocorrelation
-  *   - text.Heaps              q177  Heaps-law vocabulary growth curve
-  *   - operators.FdMining      q178  functional-dependency violation audit
-  *   - multimodal.ImageDedup   q179  banded dHash image near-dup (spec-verified)
-  *   - text.Homoglyph          q181  mixed-script homoglyph audit
-  *   - graph.Hits              q182  HITS hubs/authorities (bipartite purchase graph)
-  *   - operators.LeadTime      q183  order-to-ship SLA type-1 percentiles
-  *   - operators.Hierarchy     q184  iterative ancestor-closure traversal + subtree rollups
-  *   - graph.Bfs               q185  bounded BFS hop rings over the strong co-purchase graph
-  *   - text.QualityBuckets     q186  CCNet-style per-source head/middle/tail terciles
-  *   - operators.CubeAgg       q187  explicit GROUPING SETS margins (with q165)
-  *   - similarity.Pq           q188  product-quantization ANN (ADC scan + exact rerank)
-  *   - security.SecurityQueries q189  t-closeness ordinal-EMD audit (with q82, q132)
-  *   - operators.RollingDistinct q190  exact trailing-7-day distinct actives
-  *   - operators.Cusum         q191  CUSUM changepoint (exact scaled integers)
-  *   - streaming.Attribution   q192  last-touch revenue attribution (window as-of)
-  *   - operators.WeightedMedian q193  exact type-1 weighted median
-  *   - similarity.Ivfpq        q194  IVF-PQ composed ANN (cells × codes × rerank)
-  *   - similarity.GridDbscan   q195  grid-density clustering with noise ledger
-  *   - similarity.KnnAudit     q196  kNN majority-vote label-agreement audit
-  *   - security.DpSensitivity  q197  DP L1-sensitivity noise calibration
-  *   - similarity.Medoids      q198  exact PAM medoid election per cluster
-  *   - operators.StatTests     q199–q202  OLS trend, Mann-Whitney U, KS two-sample, ANOVA F
-  *   - text.NaiveBayes         q203  add-one multinomial NB lang classifier (confusion matrix)
-  *   - similarity.DimQa        q204  embedding dimension-correlation QA
-  *   - operators.KendallTau    q205  exact contingency-table Kendall tau-b
-  *   - operators.Hbos          q206  histogram-based multivariate anomaly top-20
-  *   - graph.KCore             q207  fixed-round k-core peel ladder
-  *   - operators.LeadLag       q208  revenue-vs-events lead-lag cross-correlation
-  *   - operators.TheilSen      q209  Theil-Sen robust daily-revenue trend
-  *   - operators.RobustMean    q210  exact trimmed/winsorized segment means
-  *   - streaming.MarkovAttribution q211  Markov removal-effect channel attribution
-  *   - text.SketchAudit        q212  minhash signature accuracy vs exact Jaccard
-  *   - text.FightinWords       q213  log-odds-with-prior distinguishing tokens
-  *   - operators.Conformal     q214  split-conformal interval coverage audit
-  *   - operators.EbShrinkage   q215  empirical-Bayes shrunk rate leaderboard
-  *   - graph.LinkPrediction    q216  common-neighbor Jaccard link prediction
-  *   - operators.MantelHaenszel q217  CMH stratified pooled odds ratio
-  *   - streaming.SequenceMining q218  3-event sequence patterns by lift
-  *   - operators.Jonckheere    q219  ordered-alternative trend test
-  *   - operators.AbcXyz        q220  ABC-XYZ inventory matrix
-  *   - operators.Elasticity    q221  log-log discount elasticity of demand
-  *   - operators.LogRank       q222  two-group log-rank survival test
-  *   - operators.HodgesLehmann q223  pseudo-median of Walsh averages
-  *   - text.CaptureRecapture   q224  Chapman corpus-size estimate vs truth
-  *   - text.GTest              q225  Dunning G-test collocations
-  *   - operators.GkLambda      q226  Goodman-Kruskal dependency strength
-  *   - operators.QqShift       q227  per-decile QQ distribution shift
-  *   - operators.DesignEffect  q228  Kish stratification design effect
-  *   - operators.KFoldOls      q229  k-fold out-of-fold slope stability
-  *   - graph.Ppr               q230  personalized PageRank from the busiest part
-  *   - streaming.LittlesLaw    q231  Little's law concurrency audit
-  *   - operators.HoltTrend     q232  Holt linear-trend smoothing + forecast
-  *   - text.Kappa              q233  Cohen's kappa filter agreement
-  *   - operators.Isotonic      q234  isotonic (PAVA) monotone demand fit
-  *   - operators.DurbinWatson  q235  residual serial-correlation test
-  *   - operators.Backtest      q236  seasonal-naive forecast backtest
-  *   - operators.Friedman      q237  Friedman blocked rank test
-  *   - operators.RunsTest      q238  Wald-Wolfowitz residual runs test
-  *   - operators.CooksDistance q239  Cook's distance influence top-10
-  *   - graph.TradeFlows        q240  directed trade-flow reciprocity
-  *   - operators.BradleyTerry  q241  pairwise-win strength ranking
-  *   - operators.ZoneMap       q242  min/max pruning layout audit
-  *   - text.KneserNey          q243  Kneser-Ney bigram LM gate
-  *   - operators.MannKendall   q244  monotone-trend significance test
-  *   - operators.BinarySeg     q245  mean-shift changepoint election
-  *   - operators.Survival      q246  Nelson-Aalen cumulative hazard
-  *   - operators.SkewAdvisor   q247  join-skew salt-factor planning
-  *   - operators.CompactionPlan q248 NFD small-file compaction plan
-  *   - streaming.EntropyRate   q249  Markov entropy-rate predictability
-  *   - operators.McNemar       q250  paired year-over-year activity test
-  *   - operators.PriceIndex    q251  Laspeyres/Paasche/Fisher indexes
-  *   - graph.Modularity        q252  region-partition trade modularity
-  *   - operators.GainsLift     q253  decile gains/lift targeting table
-  *   - operators.HistogramEstimate q254 CBO selectivity-error audit
-  *   - operators.SimpsonParadox q255 pooled-vs-stratified slope reversals
-  *   - operators.HoltWinters   q256  additive seasonal smoothing m=12
-  *   - operators.Croston       q257  intermittent-demand SBA forecast
-  *   - text.LexicalStats       q258/q259 Yule's K + Flesch readability
-  *   - operators.EncodingAdvisor q260 RLE/dict encoding advisor
-  *   - similarity.CentroidShift q261 label-centroid cosine matrix
-  *   - similarity.VectorIndexQueries q262 ANN served from the persisted IVF index
-  *   - etl.LineageQueries      q263  curation lineage ledger audit (etl/Lineage)
-  *   - operators.MlEval        q264/q265 exact ROC AUC + Brier Murphy decomposition
-  *   - operators.Cuped         q266  CUPED pre-period variance reduction
-  *   - operators.WelchT        q267  Welch unequal-variance t-test
-  *   - operators.KruskalWallis q268  tie-corrected k-group rank test
-  *   - operators.Normality     q269  Jarque-Bera skew/kurtosis normality audit
-  *   - text.FleissKappa        q270  multi-rater curation-gate agreement
-  *   - operators.CochranArmitage q271 dose-response trend of return rate
-  *   - operators.Newsvendor    q272  critical-fractile safety stock
-  *   - operators.Decompose     q273  classical additive seasonal decomposition
-  *   - operators.LjungBox      q274  7-lag portmanteau whiteness test
-  *   - operators.KmvSketch     q275  k-minimum-values NDV sketch audit
-  *   - operators.ThetaForecast q276  M3-winning theta-method forecast
-  *   - operators.Rmst          q277  restricted mean survival time (KM area)
-  *   - operators.DemandClass   q278  Syntetos-Boylan forecastability quadrants
-  *   - operators.Clv           q279  Gupta-Lehmann geometric-retention CLV
-  *   - operators.AndersonDarling q280 k-sample A2kN tail-weighted ECDF test
-  *   - operators.BreslowDay    q281  odds-ratio homogeneity around CMH psi
-  *   - operators.Greenwood     q282  KM survival with Greenwood 95% bands
-  *   - operators.StlStrength   q283  trend/seasonal strength features
-  *   - operators.JoinEstimate  q140  CMS inner-product join-size estimation
-  *   - operators.DataLayout    q141  Morton z-order layout + z-cell profile
-  *   - operators.Skyline       q143  grid-pruned Pareto frontier
-  *   - similarity.Mmr          q144  MMR diversified retrieval
-  *   - operators.GoldenRecord  q145  MDM golden-record consolidation
-  *   - streaming.Seasonal      q146  day-of-week seasonal anomaly baseline
-  *   - operators.SkewAudit     q147  join-key skew diagnostics
+  * SQL-expressible, a DuckDB oracle equivalent; [[registry]] lists the
+  * per-domain modules that contribute them.
   */
 object SparkEntry {
 

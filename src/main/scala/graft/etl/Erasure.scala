@@ -29,9 +29,9 @@ import org.apache.spark.sql.functions._
   * The manifest rewrite is FILE-granular (the manifest is flat
   * parquet, no partition column): `_metadata.file_path` + a semi-join
   * find the files holding erased rows — everything else is untouched,
-  * byte-for-byte — and a staged two-phase commit (stage survivors →
-  * persist the delete plan → delete affected, move staged in) makes a
-  * crash at any point resumable by rerunning. Sequence RE-numbering is
+  * byte-for-byte — and the survivors of those files replace them
+  * through [[FileCommit]], so a crash at any point is healed by the
+  * next erase. Sequence RE-numbering is
   * explicitly out of scope: erased docs leave holes in the packed
   * seq_id space, and a neighbor's `straddle` flag still describes the
   * layout at pack time — re-pack (rerun the pipeline's pack stage) when
@@ -81,54 +81,27 @@ object Erasure {
       .filter(col("ingest_batch").isin(hit.keys.toSeq: _*))
       .join(ids, Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    val surviving = survivors.select(col("ingest_batch")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(corpusDir)
-    // fully-emptied partitions never appear in the dynamic overwrite:
-    // delete their directories, or the erased files would live on
-    val root = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (hit.keySet -- surviving).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"ingest_batch=$b"), true)
-    }
+    FileCommit.overwritePartitions(survivors, corpusDir, "ingest_batch", hit.keys)
     erased
   }
-
-  private val StagingName = "_erase_staging"
-  private val PlanName = "_delete_plan"
 
   /** Remove `docIds` rows from a flat-parquet manifest (the
     * [[CurationPipeline]] output, or any unpartitioned parquet store of
     * per-doc metadata). Only the FILES containing erased rows are
     * rewritten; every other file is untouched on disk. Returns the
-    * number of rows erased.
-    *
-    * Crash safety is a staged commit under `<dir>/_erase_staging`:
-    *   1. survivors of the affected files are written to the staging
-    *      dir (overwrite mode — a rerun of a crash here restarts clean);
-    *   2. the affected-file list is persisted as the delete plan — the
-    *      COMMIT POINT;
-    *   3. commit: delete planned files, move staged part files into the
-    *      manifest, drop the staging dir.
-    * Every entry point first resumes a planned-but-uncommitted erase
-    * (plan present → re-run commit, each step idempotent) or discards
-    * an unplanned one (no plan → nothing was deleted yet).
+    * number of rows erased. The survivors of the affected files are
+    * staged and swapped in by [[FileCommit]] (the affected-file list is
+    * the commit marker); an erase a crash interrupted is healed first.
     */
   def eraseFromManifest(spark: SparkSession, manifestDir: String,
                         docIds: DataFrame): Long = {
     val root = new org.apache.hadoop.fs.Path(manifestDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return 0L
-    resumeManifestCommit(spark, manifestDir)
+    FileCommit.resume(spark, manifestDir)
     // a fully-erased manifest has no data files left — nothing to do
     // (and no schema to infer a read from)
-    if (!fs.listStatus(root).exists { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".")
-    }) return 0L
+    if (FileCommit.dataFiles(fs, root).isEmpty) return 0L
 
     val ids = docIds.select("doc_id").distinct().localCheckpoint()
     val mf = spark.read.parquet(manifestDir)
@@ -139,56 +112,14 @@ object Erasure {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (hit.isEmpty) return 0L
 
-    val staging = new org.apache.hadoop.fs.Path(root, StagingName)
     mf.filter(col("__f").isin(hit.keys.toSeq: _*))
       .join(ids, Seq("doc_id"), "left_anti")
       .drop("__f")
-      .write.mode("overwrite").parquet(staging.toString)
-    // the plan write is the commit point: rows before it, files after
-    val plan = new org.apache.hadoop.fs.Path(staging, PlanName)
-    val out = fs.create(plan, true)
-    try out.write(hit.keys.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    commitManifestErase(fs, root)
+      .write.parquet(FileCommit.gen(manifestDir))
+    FileCommit.land(spark, manifestDir, hit.keys.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f))))
+    FileCommit.redo(spark, manifestDir)
     hit.values.sum
-  }
-
-  /** Finish (plan on file) or discard (no plan — nothing deleted yet)
-    * a staged manifest erase left by a crashed run.
-    */
-  private def resumeManifestCommit(spark: SparkSession,
-                                   manifestDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(root, StagingName)
-    if (!fs.exists(staging)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(staging, PlanName)))
-      commitManifestErase(fs, root)
-    else fs.delete(staging, true)
-  }
-
-  /** The idempotent commit: delete planned files (absent = already
-    * done), move staged data files in (absent = already moved; staged
-    * part names carry job UUIDs so they cannot collide with live
-    * files), drop the staging dir last.
-    */
-  private def commitManifestErase(fs: org.apache.hadoop.fs.FileSystem,
-                                  root: org.apache.hadoop.fs.Path): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(root, StagingName)
-    val plan = new org.apache.hadoop.fs.Path(staging, PlanName)
-    val in = fs.open(plan)
-    val doomed =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    doomed.filter(_.nonEmpty).foreach { f =>
-      fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-    }
-    fs.listStatus(staging).foreach { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith("."))
-        fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root, n))
-    }
-    fs.delete(staging, true)
   }
 
   /** Full takedown: erase from the corpus sink, the curation manifest

@@ -162,46 +162,18 @@ object Lineage {
   // compact() folds each over-pressure bucket back to one file,
   // under the SAME maintenance-lease protocol as the BandIndex
   // generation swaps (shared lease file, fencing token verified at
-  // the commit point, stale-crash takeover semantics).
-  //
-  // Commit protocol — file-level, loss-proof, resumable:
-  //   1. rewrite the pressed buckets into `<dir>/.gen/doc_bucket=N/`
-  //      (dot-dirs are invisible to the parquet reader), verify the
-  //      row count matches the snapshot it was derived from;
-  //   2. fence-check, then atomically land `<dir>/.compact_commit` —
-  //      the list of superseded old files (the ONLY files the
-  //      protocol is ever allowed to delete);
-  //   3. move each .gen file into its live bucket as
-  //      `compacted-<name>`, delete the listed old files, clear the
-  //      marker, then the .gen dir.
-  // Crash walk: before the marker → .gen is a stale snapshot and the
-  // next compact discards it (rows at risk: zero — nothing live was
-  // touched). After the marker → redoCommit() finishes the moves and
-  // deletes idempotently on the next call (a re-crashed redo re-runs;
-  // moved files are skipped via target-exists, deletes are
-  // best-effort-idempotent). The only anomalous window is DURING a
-  // commit, where a reader could double-count a bucket — compaction
-  // is offline maintenance exactly like BandIndex.compact, and the
-  // lease keeps writers out; readers during maintenance are outside
-  // the contract.
+  // the commit point, stale-crash takeover semantics), committing
+  // through [[FileCommit]]: the pressed buckets are rewritten into
+  // `.gen`, the row count is verified against the snapshot they were
+  // derived from, and the marker lists exactly that snapshot.
   // ---------------------------------------------------------------
-
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
-      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
 
   /** Fold every bucket holding more than `maxFilesPerBucket` data
     * files down to one file, content-identical (it is a pure file
     * consolidation — the ledger's rows carry their own (round, stage)
     * ordering, so row order inside a file is free). Returns true when
-    * a commit ran, false for the no-op probe. Lease-enforced; crash-
-    * resumable (see the protocol walk above).
+    * a commit ran, false for the no-op probe. Lease-enforced; a crashed
+    * run is healed by the next one ([[FileCommit.resume]]).
     */
   def compact(spark: SparkSession, lineageDir: String,
               maxFilesPerBucket: Int = 8,
@@ -220,21 +192,13 @@ object Lineage {
                                      afterListing: () => Unit = () => ())
       : Boolean = {
     val root = new org.apache.hadoop.fs.Path(lineageDir)
-    val fs = fsOf(spark, root)
-    val genRoot = new org.apache.hadoop.fs.Path(lineageDir, ".gen")
-    val marker = new org.apache.hadoop.fs.Path(lineageDir, ".compact_commit")
-    // heal first: a marker means a prior commit crashed mid-flight —
-    // its .gen rows are the LIVE copy of the deleted old files, so the
-    // only legal move is forward. A markerless .gen is a stale
-    // snapshot (its lease may have lapsed and appends landed since):
-    // discard, never promote.
-    if (fs.exists(marker)) redoCommit(spark, lineageDir)
-    else if (fs.exists(genRoot)) fs.delete(genRoot, true)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    FileCommit.resume(spark, lineageDir)
 
     val pressed = (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("doc_bucket="))
-      .map(st => st.getPath -> dataFiles(fs, st.getPath))
-      .filter(_._2.size > maxFilesPerBucket)
+      .map(st => FileCommit.dataFiles(fs, st.getPath))
+      .filter(_.size > maxFilesPerBucket)
     if (pressed.isEmpty) return false
     afterListing()
 
@@ -250,67 +214,25 @@ object Lineage {
     // later listing, could not see it). Pinning files makes
     // delete-list == rewrite-source by construction; a late append's
     // files are simply left live, untouched, for the next compaction.
-    val snapshot = pressed.flatMap(_._2)
+    val snapshot = pressed.flatten
+    val gen = FileCommit.gen(lineageDir)
     val src = spark.read.option("basePath", lineageDir)
       .parquet(snapshot.map(_.toString): _*)
     src.repartition(col("doc_bucket"))
       .write.mode("overwrite").partitionBy("doc_bucket")
-      .parquet(genRoot.toString)
+      .parquet(gen)
     val oldN = src.count() // same file-index snapshot the write used
     // no basePath here: .gen is the explicit root (user-given roots
     // are exempt from the hidden-path filter; its doc_bucket=N
     // children partition-discover normally)
-    val genN = spark.read.parquet(genRoot.toString).count()
+    val genN = spark.read.parquet(gen).count()
     require(genN == oldN,
       s"lineage compact verify failed: $genN compacted rows vs $oldN " +
         s"source rows at $lineageDir — aborting before the commit point")
 
-    // commit point: fence, then atomically land the delete list
     BandIndex.verifyFence(spark, lineageDir, fence)
-    val tmpMarker = new org.apache.hadoop.fs.Path(
-      lineageDir, ".compact_commit.tmp")
-    val outS = fs.create(tmpMarker, true)
-    try outS.write(snapshot.map(_.toString)
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally outS.close()
-    require(fs.rename(tmpMarker, marker),
-      s"could not land commit marker $marker")
-    redoCommit(spark, lineageDir)
+    FileCommit.land(spark, lineageDir, snapshot)
+    FileCommit.redo(spark, lineageDir)
     true
-  }
-
-  /** Finish (or re-finish) a marked commit: move remaining .gen files
-    * into their live buckets, delete exactly the marker-listed old
-    * files, clear marker then .gen. Idempotent at every step.
-    */
-  private[etl] def redoCommit(spark: SparkSession, lineageDir: String): Unit = {
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(lineageDir))
-    val genRoot = new org.apache.hadoop.fs.Path(lineageDir, ".gen")
-    val marker = new org.apache.hadoop.fs.Path(lineageDir, ".compact_commit")
-    if (!fs.exists(marker)) return
-    if (fs.exists(genRoot)) {
-      fs.listStatus(genRoot)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("doc_bucket="))
-        .foreach { bdir =>
-          val live = new org.apache.hadoop.fs.Path(lineageDir, bdir.getPath.getName)
-          if (!fs.exists(live)) fs.mkdirs(live)
-          dataFiles(fs, bdir.getPath).foreach { f =>
-            val tgt = new org.apache.hadoop.fs.Path(live, "compacted-" + f.getName)
-            if (!fs.rename(f, tgt))
-              require(fs.exists(tgt), // already moved by a crashed redo
-                s"lineage compact commit: cannot move $f to $tgt")
-          }
-        }
-    }
-    val in = fs.open(marker)
-    val listed =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toList
-      finally in.close()
-    listed.foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), false))
-    fs.delete(marker, false)
-    fs.delete(genRoot, true)
-    ()
   }
 }

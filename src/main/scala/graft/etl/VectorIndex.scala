@@ -34,15 +34,16 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
   *     PERSISTED centroids (cell ids stay stable — an append must
   *     never move existing vectors), anti-join on vec_id against the
   *     touched cells only, append the survivors. Re-running a
-  *     completed batch appends zero rows. (Mid-write crash fencing —
-  *     beacons, leases, generation swaps — is [[BandIndex]]'s
-  *     machinery; this index accepts the simpler contract that append
-  *     batches are serialized by the caller, documented here.)
+  *     completed batch appends zero rows. Appends are fenced from
+  *     maintenance the [[BandIndex.append]] way: one fails fast while
+  *     a maintenance lease is on file ([[BandIndex.assertNoMaintenance]])
+  *     and holds an append beacon across its write
+  *     ([[BandIndex.withAppendBeacon]]), which maintenance waits out.
   *   - '''remove''' (takedown): the [[Erasure]] pattern — a semi-join
-  *     finds the affected cells, ONLY those partitions are rewritten
-  *     via dynamic partition overwrite, and a fully-emptied cell's
-  *     directory is deleted explicitly (dynamic overwrite only
-  *     replaces partitions present in the written data). Idempotent.
+  *     finds the affected cells and ONLY those partitions are
+  *     rewritten ([[FileCommit.overwritePartitions]]). Idempotent.
+  *   - '''retrain''': both stores are regenerated from the index's
+  *     content and swapped in through [[FileCommit]].
   *
   * Centroids are caller-supplied `(cid, vector)` pairs:
   * [[graft.similarity.KMeans.train]] is the production trainer
@@ -151,16 +152,14 @@ object VectorIndex {
   def append(spark: SparkSession, path: String, batch: DataFrame): Long = {
     import spark.implicits._
     // Round-10 fix (found building the tri-store soak): append had NO
-    // maintenance guard while retrain's commit RETIRES the whole live
-    // postings directory — an append racing the swap writes files
-    // that leave with `.old`, silent loss (and unlike Lineage's
-    // file-listed delete, the swap removes everything, so "left live
-    // for the next compaction" does not apply). Two-part close, the
-    // exact BandIndex.append protocol: fail fast while a lease is on
-    // file, and hold an APPEND BEACON across the write — acquireLease
-    // waits for in-flight beacons to drain before maintenance reads
-    // or moves anything, so a write that slipped past the guard
-    // finishes before the swap starts.
+    // maintenance guard while retrain's commit deletes every live
+    // postings file it listed — an append racing that listing would
+    // land a file under the OLD centroids' cells, never retrained.
+    // Two-part close, the exact BandIndex.append protocol: fail fast
+    // while a lease is on file, and hold an APPEND BEACON across the
+    // write — acquireLease waits for in-flight beacons to drain before
+    // maintenance reads or lists anything, so a write that slipped
+    // past the guard finishes before the retrain starts.
     BandIndex.assertNoMaintenance(spark, path, "append vectors")
     BandIndex.withAppendBeacon(spark, path) {
     val assigned =
@@ -185,40 +184,27 @@ object VectorIndex {
     * [[recallAudit]] measures the need for (VERDICT r9 item 6).
     * Append/remove cycles drift the stored distribution away from the
     * build-time centroids; cells go unbalanced and recall@k from the
-    * index decays. A retrain must be ATOMIC across the two stores —
-    * new centroids over old postings mis-prune every search — so the
-    * swap runs under the [[BandIndex]] maintenance lease with the
-    * [[Lineage.compact]] marker protocol:
-    *
-    *  1. read+freeze the corpus from the live postings, train
-    *     ([[graft.similarity.KMeans]], bit-deterministic), write the
-    *     full new generation under `<path>/.gen/{centroids,postings}`,
-    *     verify the row count round-trips;
-    *  2. fence-check, land the `.retrain_commit` marker atomically;
-    *  3. per store: live → `.old`, `.gen` → live; then sweep `.old`,
-    *     the marker, `.gen`.
-    *
-    * Crash walk: before the marker → `.gen` is a stale snapshot, the
-    * next retrain discards it, live index untouched. After the marker
-    * → [[resumeRetrain]] (called at the top of every retrain, or
-    * directly) rolls the swap FORWARD — never backward, because the
-    * marker asserts the generation was complete and verified. Mid-
-    * swap rename windows leave a store under `.old`/`.gen` only;
-    * resume re-runs each rename idempotently (skip when the target
-    * already exists and the source is gone). Offline maintenance:
-    * appends/searches during the swap are outside the contract, the
-    * lease keeps writer APIs out.
+    * index decays. A retrain must replace BOTH stores in one commit —
+    * new centroids over old postings mis-prune every search — so it
+    * runs under the [[BandIndex]] maintenance lease: train
+    * ([[graft.similarity.KMeans]], bit-deterministic) on the frozen
+    * live postings, write `.gen/{centroids,postings}`, verify the row
+    * count round-trips, fence-check, and commit through [[FileCommit]]
+    * with every live data file of both stores as the superseded list.
+    * A crash is rolled forward by the next retrain or by
+    * [[resumeRetrain]].
     */
   def retrain(spark: SparkSession, path: String, k: Int, iters: Int,
               leaseTtlMs: Long = BandIndex.DefaultLeaseTtlMs): Unit =
     BandIndex.withLease(spark, path, "vector_retrain", leaseTtlMs) { fence =>
+      FileCommit.resume(spark, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def p(s: String) = new org.apache.hadoop.fs.Path(s)
-      val marker = p(s"$path/.retrain_commit")
-      if (fs.exists(marker)) resumeRetrainUnderLease(spark, path)
-      fs.delete(p(s"$path/.gen"), true)
-      // freeze the corpus BEFORE any writes: the swap replaces the
+      // listed under the lease, append beacons drained: the whole live
+      // generation, which the commit supersedes
+      val live = Seq(centroidsDir(path), postingsDir(path))
+        .flatMap(d => FileCommit.dataFiles(fs, new org.apache.hadoop.fs.Path(d)))
+      // freeze the corpus BEFORE any writes: the commit deletes the
       // very files this frame reads
       val emb = spark.read.parquet(postingsDir(path))
         .select(col("vec_id"), col("label"), col("embedding"))
@@ -227,67 +213,32 @@ object VectorIndex {
       val cents = graft.similarity.KMeans.train(emb, k, iters)
         .map(c => (c.cid, c.cvec))
       val centsDf = spark.createDataFrame(cents).toDF("cid", "cvec")
-      centsDf.coalesce(1).write.parquet(s"$path/.gen/centroids")
+      val gen = FileCommit.gen(path)
+      centsDf.coalesce(1).write.parquet(s"$gen/centroids")
       assignCells(emb, centsDf)
-        .write.partitionBy("cell").parquet(s"$path/.gen/postings")
-      val genN = spark.read.parquet(s"$path/.gen/postings").count()
+        .write.partitionBy("cell").parquet(s"$gen/postings")
+      val genN = spark.read.parquet(s"$gen/postings").count()
       require(genN == n,
         s"retrain verify failed at $path: $genN generation rows vs $n " +
           "live rows — aborting before the commit point")
       BandIndex.verifyFence(spark, path, fence)
-      val tmp = p(s"$path/.retrain_commit.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"k=$k iters=$iters n=$n\n".getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, marker), s"could not land marker $marker")
-      resumeRetrainUnderLease(spark, path)
+      FileCommit.land(spark, path, live)
+      FileCommit.redo(spark, path)
     }
 
-  /** Roll a marked retrain swap forward (idempotent, re-crash-safe).
-    * Public so an operator can heal an index whose retrain died after
-    * the commit marker without immediately running a new training
-    * pass. ADVICE r9: the heal itself runs UNDER the maintenance
-    * lease — a crashed retrain leaves its lease on file, so this
-    * acquisition goes through the stale-takeover path (and throws
-    * while the original holder is still live, which is exactly right:
-    * two processes renaming the same store dirs would interleave).
-    * On success the lease is released, unblocking writer APIs — the
-    * behavior the heal doc promises.
+  /** Roll a crashed retrain's commit forward (idempotent, re-crash-
+    * safe) without running a new training pass. ADVICE r9: the heal
+    * runs UNDER the maintenance lease — a crashed retrain leaves its
+    * lease on file, so this acquisition goes through the stale-takeover
+    * path (and throws while the original holder is still live: two
+    * processes moving the same files would interleave). On success the
+    * lease is released, unblocking writer APIs.
     */
   def resumeRetrain(spark: SparkSession, path: String,
                     leaseTtlMs: Long = BandIndex.DefaultLeaseTtlMs): Unit =
     BandIndex.withLease(spark, path, "vector_retrain", leaseTtlMs) { _ =>
-      resumeRetrainUnderLease(spark, path)
+      FileCommit.resume(spark, path)
     }
-
-  private[etl] def resumeRetrainUnderLease(spark: SparkSession,
-                                           path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val marker = p(s"$path/.retrain_commit")
-    if (!fs.exists(marker)) return
-    Seq("centroids", "postings").foreach { store =>
-      val live = p(s"$path/$store")
-      val gen = p(s"$path/.gen/$store")
-      val old = p(s"$path/.old/$store")
-      if (fs.exists(gen)) {
-        if (fs.exists(live)) {
-          fs.mkdirs(p(s"$path/.old"))
-          fs.delete(old, true) // a re-crashed attempt's leftover
-          require(fs.rename(live, old) || !fs.exists(live),
-            s"retrain swap: cannot retire $live")
-        }
-        require(fs.rename(gen, live),
-          s"retrain swap: cannot promote $gen")
-      } else require(fs.exists(live),
-        s"retrain resume: neither $gen nor $live exists")
-    }
-    fs.delete(p(s"$path/.old"), true)
-    fs.delete(marker, false)
-    fs.delete(p(s"$path/.gen"), true)
-    ()
-  }
 
   /** Measured recall@k of [[search]] against an exact brute-force
     * pass over the SAME postings content, per probe — the index-aging
@@ -322,8 +273,7 @@ object VectorIndex {
   }
 
   /** Takedown: erase `vecIds` from the postings, rewriting ONLY the
-    * cells that contain them ([[Erasure]]'s dynamic-partition-
-    * overwrite pattern, emptied-cell directories deleted explicitly).
+    * cells that contain them ([[FileCommit.overwritePartitions]]).
     * Returns rows erased; idempotent (a rerun finds nothing).
     */
   def remove(spark: SparkSession, path: String, vecIds: Seq[Long]): Long =
@@ -352,15 +302,7 @@ object VectorIndex {
     val survivors = prunedPostings(spark, path, hitCells.keys.toSeq)
       .filter(!$"vec_id".isin(ids: _*))
       .localCheckpoint()
-    val surviving = survivors.select($"cell").distinct().as[Int].collect().toSet
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(postingsDir(path))
-    val root = new org.apache.hadoop.fs.Path(postingsDir(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (hitCells.keySet -- surviving).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"cell=$c"), true)
-    }
+    FileCommit.overwritePartitions(survivors, postingsDir(path), "cell", hitCells.keys)
     hitCells.values.sum
   }
 }

@@ -113,15 +113,16 @@ class ErasureSpec extends SparkSpec {
       assert(after.get(f).contains(h), s"untouched file $f changed")
     }
     // no staging residue, and a rerun is a free no-op
-    assert(!new java.io.File(s"$mdir/_erase_staging").exists())
+    assert(!new java.io.File(s"$mdir/.gen").exists())
+    assert(!new java.io.File(s"$mdir/.commit").exists())
     assert(Erasure.eraseFromManifest(spark, mdir, Seq(2L).toDF("doc_id")) === 0)
   }
 
   test("a planned-but-uncommitted manifest erase is resumed before the next one") {
-    // the crash window AFTER the delete plan is on file: survivors are
-    // staged, nothing is deleted yet. Any later erase must first finish
-    // that commit (delete planned files, move staged in) or rows erased
-    // by the crashed run would resurrect.
+    // the crash window AFTER the commit marker landed: survivors are
+    // staged, nothing is moved or deleted yet. Any later erase must
+    // first finish that commit (move staged in, delete listed files)
+    // or rows erased by the crashed run would resurrect.
     val root = java.nio.file.Files.createTempDirectory("graft-mfres")
     val mdir = root.resolve("manifest").toString
     Seq((1L, "web", 10L), (2L, "books", 20L))
@@ -133,19 +134,17 @@ class ErasureSpec extends SparkSpec {
     val f12 = dataFiles(mdir).keys.find { f =>
       spark.read.parquet(s"$mdir/$f").filter($"doc_id" === 2L).count() > 0
     }.get
-    // hand-craft the crashed state: survivors of the doc-2 file staged,
-    // plan naming that file, no deletes done
-    val staging = s"$mdir/_erase_staging"
+    // the crashed state: survivors of the doc-2 file staged, the
+    // marker naming that file landed, no moves or deletes done
     Seq((1L, "web", 10L)).toDF("doc_id", "source", "n_tokens")
-      .coalesce(1).write.mode("overwrite").parquet(staging)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$staging/_delete_plan"),
-      s"$mdir/$f12".getBytes("UTF-8"))
+      .coalesce(1).write.parquet(FileCommit.gen(mdir))
+    FileCommit.land(spark, mdir, Seq(new org.apache.hadoop.fs.Path(s"$mdir/$f12")))
 
     // an unrelated erase resumes the crashed commit first, then runs
     assert(Erasure.eraseFromManifest(spark, mdir, Seq(3L).toDF("doc_id")) === 1)
     assert(spark.read.parquet(mdir).select($"doc_id").as[Long].collect().toSet
       === Set(1L))
-    assert(!new java.io.File(staging).exists())
+    assert(!new java.io.File(s"$mdir/.gen").exists())
+    assert(!new java.io.File(s"$mdir/.commit").exists())
   }
 }

@@ -52,7 +52,7 @@ class LineageCompactionSpec extends SparkSpec {
       === beforeExplain)
     // protocol scratch is gone and the lease is released
     assert(!new java.io.File(s"$ldir/.gen").exists())
-    assert(!new java.io.File(s"$ldir/.compact_commit").exists())
+    assert(!new java.io.File(s"$ldir/.commit").exists())
     assert(BandIndex.readLease(spark, ldir).isEmpty)
     // idempotent second pass: nothing is pressed anymore
     assert(!Lineage.compact(spark, ldir, maxFilesPerBucket = 2))
@@ -123,19 +123,17 @@ class LineageCompactionSpec extends SparkSpec {
     seedLedger(ldir, 5)
     val before = ids(ldir)
 
-    // construct the exact post-marker crash state by hand: a complete
-    // .gen for bucket 5 plus a marker listing that bucket's old files
-    // — i.e. a death at the first instruction of redoCommit.
+    // the exact post-marker crash state: a complete .gen for bucket 5
+    // plus a landed marker listing that bucket's old files — i.e. a
+    // death at the first instruction of FileCommit.redo.
     val bucketDir = new java.io.File(s"$ldir/doc_bucket=5")
     val oldFiles = bucketDir.listFiles().filter(f => f.isFile &&
       !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.getAbsolutePath).toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f.getAbsolutePath)).toSeq
     spark.read.option("basePath", ldir).parquet(bucketDir.toString)
       .repartition(col("doc_bucket"))
-      .write.partitionBy("doc_bucket").parquet(s"$ldir/.gen")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$ldir/.compact_commit"),
-      oldFiles.mkString("", "\n", "\n").getBytes("UTF-8"))
+      .write.partitionBy("doc_bucket").parquet(FileCommit.gen(ldir))
+    FileCommit.land(spark, ldir, oldFiles)
 
     // next compact heals forward (marker present → redo, not discard),
     // then proceeds with its own no-op probe
@@ -143,7 +141,7 @@ class LineageCompactionSpec extends SparkSpec {
     assert(ids(ldir) === before, "healed ledger must be content-identical")
     assert(fileCount(ldir, 5L) === 1, "healed bucket is the compacted file")
     assert(!new java.io.File(s"$ldir/.gen").exists())
-    assert(!new java.io.File(s"$ldir/.compact_commit").exists())
+    assert(!new java.io.File(s"$ldir/.commit").exists())
   }
 
   test("a crash BEFORE the marker discards the stale .gen snapshot") {
@@ -155,7 +153,7 @@ class LineageCompactionSpec extends SparkSpec {
     // snapshot would LOSE that append; the protocol must discard it.
     spark.read.option("basePath", ldir).parquet(s"$ldir/doc_bucket=5")
       .repartition(col("doc_bucket"))
-      .write.partitionBy("doc_bucket").parquet(s"$ldir/.gen")
+      .write.partitionBy("doc_bucket").parquet(FileCommit.gen(ldir))
     Lineage.record(spark, ldir,
       Seq((5L, "s1")).toDF("doc_id", "source"),
       "select", "selected", lit("late append"), 8L)

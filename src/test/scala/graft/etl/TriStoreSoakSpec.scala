@@ -244,8 +244,7 @@ class TriStoreSoakSpec extends SparkSpec {
     Seq(idx, ldir, vdir).foreach { p =>
       assert(BandIndex.readLease(spark, p).isEmpty, s"lease left at $p")
     }
-    Seq(s"$ldir/.gen", s"$ldir/.compact_commit",
-        s"$vdir/.gen", s"$vdir/.old", s"$vdir/.retrain_commit")
+    Seq(s"$ldir/.gen", s"$ldir/.commit", s"$vdir/.gen", s"$vdir/.commit")
       .foreach(p => assert(!new java.io.File(p).exists(), s"scratch left: $p"))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * against a brute-force pass over the same postings; append cycles
   * with a drifted distribution degrade cell balance under the
   * build-time centroids, and [[VectorIndex.retrain]] swaps a fresh
-  * generation in through the marker protocol — after which the audit
+  * generation in through [[FileCommit]] — after which the audit
   * must not be worse, and the index must still serve exactly.
   */
 class VectorIndexAgingSpec extends SparkSpec {
@@ -40,6 +40,22 @@ class VectorIndexAgingSpec extends SparkSpec {
       .agg(avg($"recall")).head().getDouble(0)
     assert(r >= 0.0 && r <= 1.0)
     r
+  }
+
+  /** A retrain that died right after landing its commit: both stores
+    * regenerated under `.gen`, every live data file listed as doomed.
+    */
+  private def stageCrashedRetrain(path: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = Seq("centroids", "postings").flatMap(s =>
+      FileCommit.dataFiles(fs, new org.apache.hadoop.fs.Path(s"$path/$s")))
+    val gen = FileCommit.gen(path)
+    spark.read.parquet(s"$path/centroids").coalesce(1)
+      .write.parquet(s"$gen/centroids")
+    spark.read.parquet(s"$path/postings")
+      .write.partitionBy("cell").parquet(s"$gen/postings")
+    FileCommit.land(spark, path, live)
   }
 
   test("recall audit is 1.0 when nprobe covers every cell") {
@@ -80,8 +96,7 @@ class VectorIndexAgingSpec extends SparkSpec {
     assert(retrained >= aged,
       f"retrain worsened recall: aged=$aged%.3f retrained=$retrained%.3f")
     assert(!new java.io.File(s"$path/.gen").exists())
-    assert(!new java.io.File(s"$path/.old").exists())
-    assert(!new java.io.File(s"$path/.retrain_commit").exists())
+    assert(!new java.io.File(s"$path/.commit").exists())
     assert(BandIndex.readLease(spark, path).isEmpty)
 
     // content round-trip: the swap must not lose or invent vectors
@@ -100,24 +115,17 @@ class VectorIndexAgingSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("vaging-crash").toString + "/idx"
     VectorIndex.build(spark, emb, path, seeds)
-    // hand-build the post-marker crash state: a complete verified
-    // generation under .gen plus the marker — death at the first
-    // instruction of the swap
-    val cents = spark.read.parquet(s"$path/centroids")
-    cents.coalesce(1).write.parquet(s"$path/.gen/centroids")
-    spark.read.parquet(s"$path/postings")
-      .write.partitionBy("cell").parquet(s"$path/.gen/postings")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/.retrain_commit"),
-      "k=4 iters=4 n=500\n".getBytes("UTF-8"))
+    // the post-marker crash state: a complete verified generation
+    // under .gen plus the landed marker — death at the first
+    // instruction of the commit's redo
+    stageCrashedRetrain(path)
 
     VectorIndex.resumeRetrain(spark, path)
 
     assert(spark.read.parquet(s"$path/postings").count() === 500L)
     assert(spark.read.parquet(s"$path/centroids").count() === seeds.size.toLong)
     assert(!new java.io.File(s"$path/.gen").exists())
-    assert(!new java.io.File(s"$path/.old").exists())
-    assert(!new java.io.File(s"$path/.retrain_commit").exists())
+    assert(!new java.io.File(s"$path/.commit").exists())
     // resume is idempotent when there is nothing to resume
     VectorIndex.resumeRetrain(spark, path)
     // and the index still serves exactly after the healed swap
@@ -136,16 +144,10 @@ class VectorIndexAgingSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("vaging-lease").toString + "/idx"
     VectorIndex.build(spark, emb, path, seeds)
-    spark.read.parquet(s"$path/centroids").coalesce(1)
-      .write.parquet(s"$path/.gen/centroids")
-    spark.read.parquet(s"$path/postings")
-      .write.partitionBy("cell").parquet(s"$path/.gen/postings")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/.retrain_commit"),
-      "k=4 iters=4 n=500\n".getBytes("UTF-8"))
+    stageCrashedRetrain(path)
 
-    // a LIVE holder's lease blocks the heal (two processes renaming
-    // the same store dirs would interleave)
+    // a LIVE holder's lease blocks the heal (two processes moving the
+    // same files would interleave)
     val live = BandIndex.acquireLease(spark, path, "vector_retrain", 60000L)
     intercept[BandIndex.ConcurrentMaintenanceException] {
       VectorIndex.resumeRetrain(spark, path)
@@ -159,7 +161,7 @@ class VectorIndexAgingSpec extends SparkSpec {
     VectorIndex.resumeRetrain(spark, path)
     assert(BandIndex.readLease(spark, path).isEmpty,
       "heal must release the lease it took over")
-    assert(!new java.io.File(s"$path/.retrain_commit").exists())
+    assert(!new java.io.File(s"$path/.commit").exists())
     assert(spark.read.parquet(s"$path/postings").count() === 500L)
     // writer APIs are genuinely unblocked: an append goes through
     VectorIndex.append(spark, path,
