@@ -233,6 +233,13 @@ object ClusterCheck {
       ",\"spill\":" + jstr(spill) +
       ",\"sf\":" + jstr(sfDir) + ",\"queries\":{", ",", "}}")
     JsonOut.writeArtifact(outPath, json)
+    // the per-application dir setCheckpointDir made: release deleted
+    // the rdd-* dirs under it, not the dir itself
+    spark.sparkContext.getCheckpointDir.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p) && fs.listStatus(p).isEmpty) fs.delete(p, false)
+    }
     spark.stop()
   }
 }

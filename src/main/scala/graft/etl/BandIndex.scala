@@ -11,25 +11,28 @@ import org.apache.spark.sql.functions._
   * self-contained expression; a production pipeline must not).
   *
   * Lifecycle:
-  *  - [[create]]: tokenize the corpus ONCE; write three tables —
-  *    `<name>_bands` (doc_id, n, band_val) bucketed by `band_val` for
-  *    the near layer's candidate join, `<name>_toks` (pfx, doc_id, th)
-  *    PARTITIONED by `pfx` = hash-prefix(doc_id) for the verify
-  *    lookup, `<name>_docs` (doc_id, n, fp) bucketed by `fp` for the
-  *    exact layer.
-  *  - [[dedupBatch]]: classify an incoming batch (exact / near / kept)
+  *  - [[declare]]: the three tables, once — `<name>_bands` (doc_id, n,
+  *    band_val) bucketed by `band_val` for the near layer's candidate
+  *    join, `<name>_toks` (pfx, doc_id, th) PARTITIONED by `pfx` =
+  *    hash-prefix(doc_id) for the verify lookup, `<name>_docs` (doc_id,
+  *    n, fp) bucketed by `fp` for the exact layer. Every write is an
+  *    insert into a declared table.
+  *  - [[create]]: declare, then tokenize the corpus ONCE and append it.
+  *  - [[classify]]: classify an incoming batch (exact / near / kept)
   *    reading ONLY the index — corpus text is never re-read, corpus
-  *    tokens never recomputed.
-  *  - [[append]]: add the kept batch's signatures to all three tables —
-  *    the index is appended to, never rebuilt.
+  *    tokens never recomputed — into one materialized frame that also
+  *    carries the batch's signatures ([[dedupBatch]] is its flags).
+  *  - [[appendSignatures]]: add the kept rows' signatures to all three
+  *    tables — the index is appended to, never rebuilt, and the batch
+  *    is never tokenized twice ([[append]] is the raw-docs form).
   *  - [[compact]] / [[compactIfNeeded]]: rewrite a table's accumulated
   *    per-append small files into one fresh layout-preserving
   *    generation (offline maintenance — the lease below keeps readers
   *    and appenders out while it runs).
   *
   * MAINTENANCE LEASE: compact/remove (and [[graft.etl.Erasure.erase]])
-  * hold `<path>/_maintenance_lease` for their duration; [[append]] and
-  * [[dedupBatch]] throw [[ConcurrentMaintenanceException]] while it is
+  * hold `<path>/_maintenance_lease` for their duration; appends and
+  * [[classify]] throw [[ConcurrentMaintenanceException]] while it is
   * on file, so an append can never write into a generation directory a
   * concurrent swap is about to sweep. A crashed holder's lease goes
   * stale after its TTL and the next maintenance run takes it over
@@ -40,9 +43,11 @@ import org.apache.spark.sql.functions._
   *    derived data (token hashes, fingerprint, band keys) is gone and
   *    a re-crawl of it classifies as kept again.
   *
-  * Per-batch COST, precisely (an earlier revision of this doc
-  * overclaimed): every Exchange is batch-sized — the exact semi-join
-  * (on fp) and the band join (on band_val) find the corpus side
+  * Per-batch COST, precisely: one tokenization of the batch feeds the
+  * classification, the kept-slice sink and the append (the kept rows
+  * are appended with their signature columns, never re-tokenized).
+  * Every Exchange is batch-sized — the exact fingerprint join (on fp)
+  * and the band join (on band_val) find the corpus side
   * pre-partitioned on disk, so only batch-side rows ever shuffle. Scan
   * I/O is batch-bounded on the bands/docs side only up to columnar
   * projection (the fp and band_val columns of the whole corpus are
@@ -51,7 +56,7 @@ import org.apache.spark.sql.functions._
   * colliding old docs would scan the corpus-sized wide column every
   * batch. Hence `_toks`: the wide `th` column lives in its own table,
   * directory-partitioned by `pfx = pmod(xxhash64(doc_id), PfxCount)`,
-  * and [[dedupBatch]] computes the candidate pairs first, collects the
+  * and [[classify]] computes the candidate pairs first, collects the
   * DISTINCT PREFIXES the colliding old docs fall in (≤ [[PfxCount]]
   * longs — bounded, unlike collecting ids), and reads `_toks` with a
   * literal `pfx IN (...)` filter → partition-pruned scan. A small
@@ -61,8 +66,10 @@ import org.apache.spark.sql.functions._
   * PRUNING literal, not a plan-choice probe (the q45 `hasHot` lesson
   * forbids probes that pick between plan branches; here the collected
   * values are load-bearing data in the only plan there is) — the cost
-  * is that [[dedupBatch]] materializes the candidate pairs eagerly,
-  * which every caller did anyway before consuming the flags.
+  * is one extra evaluation of the batch-sized band join: the collect
+  * runs it once, and the one localCheckpoint that materializes the
+  * classification runs it again (a batch with no candidate pairs skips
+  * the verify altogether).
   *
   * Band ids are folded INTO the 64-bit band hash (`xxhash64(bandNo,
   * …)`) so one long is the entire join key; hash collisions only merge
@@ -73,15 +80,14 @@ import org.apache.spark.sql.functions._
   * is bit-identical to q45/q88 at the defaults, so the classifications
   * agree with the verified queries.
   *
-  * Tables are written via `saveAsTable` with an explicit `path`:
-  * external data, catalog-tracked bucketing. On a fresh session,
-  * re-register with `CREATE TABLE <name>_bands USING parquet ...
-  * CLUSTERED BY (band_val) INTO <n> BUCKETS LOCATION ...` — the
-  * layout on disk is plain bucketed (resp. pfx-partitioned) parquet.
+  * Tables are external (declared with a `LOCATION`), with
+  * catalog-tracked bucketing; the layout on disk is plain bucketed
+  * (resp. pfx-partitioned) parquet, and [[register]] re-declares it in
+  * a fresh session.
   *
   * LAYOUT VERSIONING: an index created before the `_toks` split (token
   * arrays then lived inside `_docs`) cannot be read or appended by this
-  * code — [[dedupBatch]] detects the missing `_toks` table and names
+  * code — [[classify]] detects the missing `_toks` table and names
   * the remedy (rebuild via [[create]] from the corpus). The same
   * applies to a [[PfxCount]] change.
   */
@@ -94,7 +100,7 @@ object BandIndex {
     * of (numHashes, bands), so appends and classifies MUST use the
     * creation-time values — loading them from the index itself makes
     * drift impossible (a caller cannot pass mismatched params to
-    * [[append]]/[[dedupBatch]]; there is nothing to pass). Changing
+    * appends or [[classify]]; there is nothing to pass). Changing
     * params means rebuilding the index, same as a [[PfxCount]] change.
     * A params file absent (index predating it) reads as the historical
     * defaults — exactly what such an index was built with.
@@ -440,7 +446,7 @@ object BandIndex {
   }
 
   /** Fail fast when a maintenance lease is on file — the guard
-    * [[append]] and [[dedupBatch]] run so an append can never race a
+    * appends and [[classify]] run so an append can never race a
     * generation swap into a directory the swap then sweeps (silent
     * data loss), and a classify can never read a half-removed index.
     * A STALE lease still blocks: the crashed op may have left tables
@@ -483,7 +489,7 @@ object BandIndex {
   }
 
   /** Root directory the lease lives under, derived from the catalog for
-    * callers that don't carry `path` ([[dedupBatch]]): every generation
+    * callers that don't carry `path` ([[classify]]): every generation
     * dir `<path>/<table>[__g*]` is a direct child of the index root, so
     * the live table location's parent IS the root.
     */
@@ -512,10 +518,12 @@ object BandIndex {
   private def pfxOf(c: org.apache.spark.sql.Column) =
     pmod(xxhash64(c), lit(PfxCount.toLong))
 
-  /** Per-doc signature rows off (doc_id, text): distinct token array →
-    * count, order-invariant fingerprint, 64-bit token hashes, k salted
-    * min-hashes per [[LshParams]]. NULL text coalesces to the
-    * one-empty-token array (the q88 cross-engine convention).
+  /** Per-doc signature columns appended to (doc_id, text [, …]):
+    * distinct token array → count `n`, order-invariant fingerprint
+    * `fp`, 64-bit token hashes `th`, k salted min-hashes `m1..mk` per
+    * [[LshParams]]. The input's own columns ride along, so a classified
+    * batch can be sunk and appended from one frame. NULL text coalesces
+    * to the one-empty-token array (the q88 cross-engine convention).
     */
   private[etl] def signatures(docs: DataFrame,
                               params: LshParams = LshParams()): DataFrame = {
@@ -524,12 +532,11 @@ object BandIndex {
     // expression lives in minhashCols and is shared, never re-typed
     val mins = graft.text.TextQueries.minhashCols(params)
     docs
-      .select(col("doc_id"),
-        array_distinct(split(coalesce(col("text"), lit("")), " ")).as("ta"))
-      .withColumn("n", size(col("ta")).cast("long"))
-      .withColumn("fp", md5(concat_ws(" ", array_sort(col("ta"))).cast("binary")))
-      .withColumn("th", transform(col("ta"), t => xxhash64(t)))
-      .select(Seq(col("doc_id"), col("n"), col("fp"), col("th")) ++ mins: _*)
+      .withColumn("ta", array_distinct(split(coalesce(col("text"), lit("")), " ")))
+      .select((docs.columns.map(col) ++ Seq(
+        size(col("ta")).cast("long").as("n"),
+        md5(concat_ws(" ", array_sort(col("ta"))).cast("binary")).as("fp"),
+        transform(col("ta"), t => xxhash64(t)).as("th")) ++ mins): _*)
   }
 
   /** Signature rows → band rows (doc_id, n, band_val); the band number
@@ -548,56 +555,126 @@ object BandIndex {
   /** Filesystem evidence that an index already lives at `path`: the
     * params file (written by every post-params create) or any table /
     * generation directory (pre-params indexes). Complements the
-    * session-catalog check in [[create]] — a fresh session has an
-    * empty catalog but the disk state is what maintenance sweeps.
+    * session-catalog check in [[declare]] — a fresh session has an
+    * empty catalog but the disk state is what the params pin guards.
     */
   private def indexOnDisk(spark: SparkSession, path: String,
-                          name: String): Boolean = {
+                          name: String): Boolean =
+    fsOf(spark, hadoopPath(path)).exists(
+      new org.apache.hadoop.fs.Path(path, ParamsFileName)) ||
+    Seq(docsTable(name), bandsTable(name), toksTable(name))
+      .exists(generations(spark, path, _).nonEmpty)
+
+  /** `table`'s generation directories under the index root `path`:
+    * the create-time `<table>` and every `<table>__g*`.
+    */
+  private def generations(spark: SparkSession, path: String,
+                          table: String): Seq[org.apache.hadoop.fs.Path] = {
     val root = hadoopPath(path)
     val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return false
-    if (fs.exists(new org.apache.hadoop.fs.Path(path, ParamsFileName)))
-      return true
-    val prefixes = Seq(docsTable(name), bandsTable(name), toksTable(name))
-    fs.listStatus(root).exists { st =>
-      st.isDirectory && prefixes.exists(t =>
-        st.getPath.getName == t || st.getPath.getName.startsWith(t + "__g"))
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isDirectory && (n == table || n.startsWith(table + "__g"))
+    }.map(_.getPath)
+  }
+
+  /** Declare the index's three tables in this session's catalog: pin
+    * (or re-check) the LSH params on disk, then one `CREATE TABLE IF
+    * NOT EXISTS` per table at its live directory, with the bucketing /
+    * partitioning DDL that makes the band join exchange-free. Every
+    * write after this is an insert into the declared table, so writes
+    * follow the CATALOG location (after a [[compact]], a generation
+    * directory). The live directory is the one `<table>` or
+    * `<table>__g*` on disk (`<path>/<table>` for a new index); more than
+    * one means a rewrite crashed before its sweep, and declare refuses
+    * rather than guess which one the crashed session's catalog pointed
+    * at and silently resurrect removed rows.
+    */
+  def declare(spark: SparkSession, name: String, path: String,
+              buckets: Int = 32, params: LshParams = LshParams()): Unit = {
+    val tables = Seq(bandsTable(name), docsTable(name), toksTable(name))
+    writeParamsIfAbsent(spark, path, params,
+      tables.exists(spark.catalog.tableExists) || indexOnDisk(spark, path, name))
+    def liveDir(table: String): String = {
+      val cands = generations(spark, path, table).map(_.toString)
+      require(cands.size <= 1,
+        s"ambiguous generations for `$table` under $path " +
+        s"(${cands.mkString(", ")}): a rewrite crashed before its sweep — " +
+        "resume it from the session that ran it (or consult the durable " +
+        "metastore for the live location); declare will not guess")
+      cands.headOption.getOrElse {
+        // an empty table must read as empty, not as a missing path
+        fsOf(spark, hadoopPath(path)).mkdirs(hadoopPath(s"$path/$table"))
+        s"$path/$table"
+      }
     }
+    def declareTable(table: String, cols: String, layout: String): Boolean =
+      !spark.catalog.tableExists(table) && {
+        spark.sql(s"""CREATE TABLE IF NOT EXISTS `$table` ($cols) USING parquet
+                     |$layout LOCATION '${liveDir(table)}'""".stripMargin)
+        true
+      }
+    declareTable(bandsTable(name), "doc_id BIGINT, n BIGINT, band_val BIGINT",
+      s"CLUSTERED BY (band_val) SORTED BY (band_val) INTO $buckets BUCKETS")
+    declareTable(docsTable(name), "doc_id BIGINT, n BIGINT, fp STRING",
+      s"CLUSTERED BY (fp) SORTED BY (fp) INTO $buckets BUCKETS")
+    // partitioned external table over existing data: discover the pfx=… dirs
+    if (declareTable(toksTable(name), "doc_id BIGINT, th ARRAY<BIGINT>, pfx BIGINT",
+          "PARTITIONED BY (pfx)"))
+      spark.sql(s"MSCK REPAIR TABLE `${toksTable(name)}`")
   }
 
-  /** The explicit `path` is passed ONLY when the table does not exist
-    * yet (first create): once registered, appends must follow the
-    * CATALOG location — after a [[compact]] the table points at a
-    * fresh generation directory, and re-passing the original path
-    * would make Spark reject the write with a location mismatch
-    * (every post-compaction append would fail).
+  /** Append `df` to the declared `table` (columns matched by name; the
+    * table's bucketing applies). `_toks` goes through one task per
+    * prefix, so one append adds at most [[PfxCount]] files there, not
+    * tasks×prefixes.
     */
-  private def writeBucketed(df: DataFrame, table: String, dir: String,
-                            buckets: Int, bucketCol: String): Unit = {
-    val w = df.write
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .format("parquet")
-      .mode("append")
-    (if (df.sparkSession.catalog.tableExists(table)) w
-     else w.option("path", dir)).saveAsTable(table)
+  private def insert(df: DataFrame, table: String): Unit = {
+    val meta = df.sparkSession.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table))
+    val rows = df.select(meta.schema.fieldNames.toIndexedSeq.map(col): _*)
+    (if (meta.partitionColumnNames.isEmpty) rows
+     else rows.repartition(meta.partitionColumnNames.map(col): _*))
+      .write.insertInto(table)
   }
 
-  /** `_toks` writer: repartition by pfx first so one append adds at
-    * most [[PfxCount]] files (one task owns each prefix), not
-    * tasks×prefixes. Same existing-table path rule as [[writeBucketed]].
+  /** Build the index from a corpus of (doc_id, text [, …]): [[declare]]
+    * the tables, then [[append]] the corpus — the ONE time corpus text
+    * is tokenized. On an existing index this is an append, with the
+    * same maintenance fence.
     */
-  private def writeToks(df: DataFrame, table: String, dir: String): Unit = {
-    val w = df.repartition(col("pfx"))
-      .write
-      .partitionBy("pfx")
-      .format("parquet")
-      .mode("append")
-    (if (df.sparkSession.catalog.tableExists(table)) w
-     else w.option("path", dir)).saveAsTable(table)
+  def create(spark: SparkSession, corpus: DataFrame, name: String,
+             path: String, buckets: Int = 32,
+             params: LshParams = LshParams()): Unit = {
+    // a rerun during maintenance fails fast before declaring anything
+    // against a disk that is mid-swap
+    assertNoMaintenance(spark, path, s"append (create) to band index '$name'")
+    declare(spark, name, path, buckets, params)
+    // one tokenization feeding all three tables; localCheckpoint blocks
+    // are executor-local, so an executor loss fails the job (rerun it)
+    appendSignatures(spark,
+      signatures(corpus.select("doc_id", "text"), params).localCheckpoint(),
+      params, name, path)
   }
 
-  /** Build the index from a corpus of (doc_id, text [, …]) — the ONE
-    * time corpus text is tokenized.
+  /** Append docs (doc_id, text [, …]) to the index, declaring its
+    * tables in this session first if needed; params come from the
+    * index, never the caller, so drift is impossible.
+    */
+  def append(spark: SparkSession, docs: DataFrame, name: String,
+             path: String, buckets: Int = 32): Unit =
+    create(spark, docs, name, path, buckets, loadParams(spark, path))
+
+  /** Append rows that already carry their signature columns (doc_id, n,
+    * fp, th, m1..mk per `params` — [[signatures]] output, or the kept
+    * rows of a [[classify]] frame) to all three tables: no second
+    * tokenization, no params read. Per-bucket files accumulate until
+    * [[compact]]; bucketed reads union them, partitioning intact.
+    *
+    * FENCE: the lease is checked under a beacon posted for the writes
+    * (beacon first: a maintenance op taking the lease in between either
+    * sees our beacon and waits, or its lease makes the check throw).
     *
     * Write ORDER is a crash-safety invariant: bands, then token
     * arrays, then fingerprints LAST. The three appends are not atomic;
@@ -612,156 +689,59 @@ object BandIndex {
     * replayed doc as an exact dup of itself, the kept slice comes back
     * empty, and bands/toks are never backfilled — the near-dup layer
     * goes permanently blind to that doc.
-    */
-  def create(spark: SparkSession, corpus: DataFrame, name: String,
-             path: String, buckets: Int = 32,
-             params: LshParams = LshParams()): Unit = {
-    // create on an EXISTING index is an append (saveAsTable append
-    // mode) and gets the FULL append fence — maintenance check AND a
-    // beacon posted for the duration of the table writes (beacon
-    // before check: if a maintenance op takes the lease in between,
-    // either its beacon scan sees ours and waits, or its lease landed
-    // first and the check throws — no interleaving lets both proceed).
-    // Without this, a bootstrap-script rerun during a compact would
-    // write into a generation directory the swap then sweeps.
-    // Existence is judged by catalog OR FILESYSTEM: the hazard lives
-    // on disk, and a rerun from a fresh session (empty in-memory
-    // catalog) must still fence against a maintenance op running in
-    // the long-lived app that does have the tables registered.
-    val tablesExist = Seq(docsTable(name), bandsTable(name), toksTable(name))
-      .exists(spark.catalog.tableExists) || indexOnDisk(spark, path, name)
-    def body(): Unit = {
-      // pin (or re-check) the LSH tunables before any signature lands
-      writeParamsIfAbsent(spark, path, params, tablesExist)
-      // localCheckpoint: one tokenization feeding all tables, released
-      // by the ContextCleaner (not a session-lifetime cache entry).
-      // Caveat: localCheckpoint blocks are executor-local and
-      // non-replicated — an executor loss between here and the last
-      // write fails the job (rerun it) instead of recomputing lineage.
-      val sigs = signatures(corpus, params).localCheckpoint()
-      writeBucketed(bandRows(sigs, params), bandsTable(name),
-        s"$path/${bandsTable(name)}", buckets, "band_val")
-      writeToks(sigs.select(pfxOf(col("doc_id")).as("pfx"),
-          col("doc_id"), col("th")),
-        toksTable(name), s"$path/${toksTable(name)}")
-      writeBucketed(sigs.select("doc_id", "n", "fp"),
-        docsTable(name), s"$path/${docsTable(name)}", buckets, "fp")
-    }
-    if (tablesExist)
-      withAppendBeacon(spark, path) {
-        assertNoMaintenance(spark, path, s"append (create) to band index '$name'")
-        body()
-      }
-    else body()
-  }
-
-  /** Append docs (normally the kept slice of a batch) to the index.
-    * `saveAsTable(mode=append)` with the identical bucket spec adds new
-    * per-bucket files; bucketed reads union them, partitioning intact.
     *
-    * The explicit refresh matters when `docs` belongs to a DIFFERENT
-    * session than the one reading the index (foreachBatch hands frames
-    * bound to the streaming clone session): the insert command only
-    * invalidates the writing session's relation cache, so without the
-    * refresh `spark`'s next [[dedupBatch]] would classify against a
-    * stale file listing and silently re-admit duplicates.
+    * The closing refresh matters when `sigs` belongs to another session
+    * than `spark` (foreachBatch's streaming clone): the insert only
+    * invalidates the writing session's relation cache, and a stale
+    * listing would silently re-admit duplicates.
     */
-  def append(spark: SparkSession, docs: DataFrame, name: String,
-             path: String, buckets: Int = 32): Unit = {
-    // the maintenance fence (beacon + lease check) lives in create's
-    // append mode — one implementation for both entry points; params
-    // come from the index, never the caller, so drift is impossible
-    create(spark, docs, name, path, buckets, loadParams(spark, path))
+  private[graft] def appendSignatures(spark: SparkSession, sigs: DataFrame,
+                                      params: LshParams, name: String,
+                                      path: String): Unit = {
+    withAppendBeacon(spark, path) {
+      assertNoMaintenance(spark, path, s"append to band index '$name'")
+      insert(bandRows(sigs, params), bandsTable(name))
+      insert(sigs.select(pfxOf(col("doc_id")).as("pfx"), col("doc_id"), col("th")),
+        toksTable(name))
+      insert(sigs.select("doc_id", "n", "fp"), docsTable(name))
+    }
     Seq(docsTable(name), bandsTable(name), toksTable(name))
       .foreach(spark.catalog.refreshTable)
   }
 
-  /** Re-register an on-disk index in THIS session's catalog — the
-    * fresh-session path the class doc describes, as a coded API
-    * instead of hand-written SQL: a new application (its own
-    * in-memory/derby catalog) points the three table names at the
-    * index's current data directories with the bucketing/partitioning
-    * DDL that makes the band join exchange-free again.
-    *
-    * The live generation per table is discovered from disk: after any
-    * CLEAN create/compact/remove exactly one directory exists per
-    * table (`<path>/<table>` or one `<table>__g*` — superseded
-    * generations are swept at swap time). MORE than one candidate
-    * means a rewrite crashed before its sweep and this catalog cannot
-    * know which generation the crashed session's catalog pointed at —
-    * register refuses with the remedy (finish the interrupted rewrite
-    * from the session that ran it, or consult the durable metastore)
-    * rather than guessing and silently resurrecting removed rows. A
-    * production deployment with a persistent metastore never needs
-    * this call; it exists for catalog-per-app topologies.
+  /** Re-register an on-disk index in THIS session's catalog, for
+    * catalog-per-app topologies: drop whatever the three names point
+    * at and [[declare]] them over the index's live directories. A
+    * deployment with a persistent metastore never needs this call.
     */
   def register(spark: SparkSession, name: String, path: String,
                buckets: Int = 32): Unit = {
-    val root = hadoopPath(path)
-    val fs = fsOf(spark, root)
-    def liveDir(table: String): String = {
-      val cands = fs.listStatus(root).toSeq.filter { st =>
-        st.isDirectory && (st.getPath.getName == table ||
-          st.getPath.getName.startsWith(table + "__g"))
-      }.map(_.getPath.toString)
-      require(cands.nonEmpty, s"no data directory for `$table` under $path")
-      require(cands.size == 1,
-        s"ambiguous generations for `$table` under $path " +
-        s"(${cands.mkString(", ")}): a rewrite crashed before its sweep — " +
-        "resume it from the session that ran it (or consult the durable " +
-        "metastore for the live location); register will not guess")
-      cands.head
-    }
-    def recreate(table: String, ddl: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      spark.sql(ddl)
-    }
-    recreate(bandsTable(name),
-      s"""CREATE TABLE `${bandsTable(name)}`
-         |(doc_id BIGINT, n BIGINT, band_val BIGINT) USING parquet
-         |CLUSTERED BY (band_val) SORTED BY (band_val) INTO $buckets BUCKETS
-         |LOCATION '${liveDir(bandsTable(name))}'""".stripMargin)
-    recreate(docsTable(name),
-      s"""CREATE TABLE `${docsTable(name)}`
-         |(doc_id BIGINT, n BIGINT, fp STRING) USING parquet
-         |CLUSTERED BY (fp) SORTED BY (fp) INTO $buckets BUCKETS
-         |LOCATION '${liveDir(docsTable(name))}'""".stripMargin)
-    recreate(toksTable(name),
-      s"""CREATE TABLE `${toksTable(name)}`
-         |(doc_id BIGINT, th ARRAY<BIGINT>, pfx BIGINT) USING parquet
-         |PARTITIONED BY (pfx)
-         |LOCATION '${liveDir(toksTable(name))}'""".stripMargin)
-    // partitioned external table: discover the pfx=… directories
-    spark.sql(s"MSCK REPAIR TABLE `${toksTable(name)}`")
+    require(indexOnDisk(spark, path, name), s"no band index '$name' under $path")
+    Seq(bandsTable(name), docsTable(name), toksTable(name))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    declare(spark, name, path, buckets, loadParams(spark, path))
   }
 
   /** Classify a batch of (doc_id, text [, …]) against the persisted
-    * index: returns (doc_id, flag) with flag ∈ exact | near | kept.
-    * Reads only the index tables — never corpus text. NOT fully lazy:
-    * the candidate pairs materialize inside this call to derive the
-    * `_toks` partition-prune list (class doc).
+    * index: ONE batch-sized frame, materialized by a single
+    * localCheckpoint, holding the batch's own columns, their signature
+    * columns (see [[signatures]]) and `flag` ∈ exact | near | kept —
+    * returned with the index's pinned params, so the kept rows append
+    * through [[appendSignatures]] with no second tokenization. Reads
+    * only the index tables — never corpus text.
     */
-  def dedupBatch(spark: SparkSession, batch: DataFrame, name: String): DataFrame = {
-    // maintenance guard: classifying against an index mid-generation-swap
-    // (or mid-remove) would silently mis-flag; the lease root is derived
-    // from the catalog since this entry point carries no path (resolved
-    // ONCE — it also locates the pinned params below).
-    //
-    // The guard is CHECK-TIME only — a classify already past it when
-    // maintenance acquires the lease races the generation sweep, and
-    // the round-9 soak (`BandIndexSoakSpec`) demonstrated the outcome:
-    // a LOUD FAILED_READ_FILE abort on the swept generation's files,
-    // which the at-least-once replay heals by re-classifying against
-    // the new generation. The window cannot be closed with an append
-    // beacon because the returned frame reads the live tables lazily
-    // at the CALLER's consumption point. It is semantically safe:
-    // compact swaps identical content (no skew possible, only the
-    // loud abort), and a remove-concurrent classify that reads a
-    // mixed view converges to POST-remove semantics — the exact layer
-    // is one table, and a near-candidate whose band row survived but
-    // whose token row is gone (or vice versa) fails verification and
-    // flags `kept`, which is the correct answer once the remove
-    // lands.
+  def classify(spark: SparkSession, batch: DataFrame,
+               name: String): (DataFrame, LshParams) = {
+    // maintenance guard: classifying against an index mid-swap (or
+    // mid-remove) would silently mis-flag; the lease root comes from
+    // the catalog (this entry point carries no path) and also locates
+    // the pinned params. CHECK-TIME only: a classify already past it
+    // races the generation sweep into a LOUD FAILED_READ_FILE abort
+    // (`BandIndexSoakSpec`) that the at-least-once replay heals. That
+    // is semantically safe — compact swaps identical content, and a
+    // classify concurrent with a remove converges to post-remove
+    // semantics (a near candidate whose band or token row is gone
+    // fails verification and flags `kept`).
     val indexRoot = leaseRootOf(spark, name)
     indexRoot
       .foreach(assertNoMaintenance(spark, _, s"classify against band index '$name'"))
@@ -773,17 +753,30 @@ object BandIndex {
       "the _toks layout (or PfxCount changed); rebuild it with BandIndex.create")
     // the index's pinned tunables, off its own directory
     val params = indexRoot.map(loadParams(spark, _)).getOrElse(LshParams())
-    // batch tokenized once (three consumers below)
-    val sigs = signatures(batch, params).localCheckpoint()
-    val fps = spark.table(docsTable(name))
-    // exact layer: fingerprint semi-join — corpus side pre-bucketed on fp
-    val exact = sigs.join(fps.select("fp"), Seq("fp"), "left_semi")
-      .select("doc_id")
-    val survivors = sigs.join(exact, Seq("doc_id"), "left_anti")
-    // near layer: compact band keys vs the pre-bucketed band index.
-    // localCheckpoint: the pairs feed both the prefix collection and
-    // the verify join — one band-join execution, one frozen layout.
-    val cand = candidates(spark, survivors, name, params).localCheckpoint()
+    (classification(spark, signatures(batch, params), name, params)
+      .localCheckpoint(), params)
+  }
+
+  /** The per-doc flags of [[classify]]: (doc_id, flag). */
+  def dedupBatch(spark: SparkSession, batch: DataFrame, name: String): DataFrame =
+    classify(spark, batch, name)._1.select("doc_id", "flag")
+
+  /** The LAZY classification frame behind [[classify]] — `sigs` plus
+    * `flag`. Factored out, like [[candidates]], so plan specs can
+    * assert its shape ([[classify]] materializes it at once). NOT fully
+    * lazy: the `_toks` partition-prune list is collected here (class
+    * doc).
+    */
+  private[etl] def classification(spark: SparkSession, sigs: DataFrame,
+                                  name: String, params: LshParams): DataFrame = {
+    // exact layer: one fingerprint join — `_docs` is bucketed on fp, so
+    // its distinct fp side arrives exchange-free
+    val flagged = sigs.join(
+      spark.table(docsTable(name)).select("fp").distinct().withColumn("ex", lit(1)),
+      Seq("fp"), "left_outer")
+    // near layer: compact band keys of the non-exact docs vs the
+    // pre-bucketed band index
+    val cand = candidates(spark, flagged.filter(col("ex").isNull), name, params)
     // bounded driver round-trip: ≤ PfxCount longs, the literal
     // partition-prune list for the wide token-array table
     val pfxs = cand.select(pfxOf(col("old_id")).as("pfx")).distinct()
@@ -802,20 +795,17 @@ object BandIndex {
         .filter(col("isz") * 1.0 / (col("ni") + col("no") - col("isz"))
           >= params.threshold)
         .select("doc_id").distinct()
-    sigs.select("doc_id")
-      .join(exact.withColumn("ex", lit(1)), Seq("doc_id"), "left_outer")
+    flagged
       .join(near.withColumn("nr", lit(1)), Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("ex").isNotNull, "exact")
-          .when(col("nr").isNotNull, "near")
-          .otherwise("kept").as("flag"))
+      .withColumn("flag", when(col("ex").isNotNull, "exact")
+        .when(col("nr").isNotNull, "near")
+        .otherwise("kept"))
+      .select((sigs.columns.map(col) :+ col("flag")): _*)
   }
 
   /** The LAZY candidate-pair frame of the near layer — the band join
     * against the bucketed `_bands` table. Factored out so plan specs
-    * can assert its shape (dedupBatch materializes it immediately via
-    * localCheckpoint, so the join never appears in the returned
-    * frame's plan).
+    * can assert its shape.
     */
   private[etl] def candidates(spark: SparkSession, sigs: DataFrame,
                               name: String,
@@ -829,28 +819,24 @@ object BandIndex {
               col("i.n").as("ni"), col("o.n").as("no"))
       .distinct()
 
-  /** The kept slice of a batch, per [[dedupBatch]] flags — shared by
-    * [[ingest]] and streaming callers that sink the kept docs
-    * elsewhere before appending (one definition, consumers can't
-    * drift).
-    */
+  /** The kept slice of a batch per its `(doc_id, flag)` frame — for
+    * [[MediaBandIndex]], whose classify returns flags only. */
   def keptOf(batch: DataFrame, flags: DataFrame): DataFrame =
     batch.join(flags.filter(col("flag") === "kept").select("doc_id"),
       Seq("doc_id"), "left_semi")
 
-  /** One full incremental step: classify the batch, append the kept
-    * docs to the index, return the per-doc flags. Callers that also
-    * persist the kept slice to another sink should write that sink
-    * BETWEEN [[dedupBatch]] and [[append]] (see
-    * [[graft.streaming.CorpusIngestJob]]) so a replayed batch
-    * re-derives the same kept set instead of finding itself already
-    * indexed.
+  /** One full incremental step: classify the batch, append its kept
+    * rows, return the per-doc flags. A caller that also sinks the kept
+    * rows writes that sink BETWEEN the two (see
+    * [[graft.streaming.CorpusIngestJob.ingestBatch]]), so a replay
+    * re-derives the same kept set instead of finding itself indexed.
     */
   def ingest(spark: SparkSession, batch: DataFrame, name: String,
-             path: String, buckets: Int = 32): DataFrame = {
-    val flags = dedupBatch(spark, batch, name).localCheckpoint()
-    append(spark, keptOf(batch, flags), name, path, buckets)
-    flags
+             path: String): DataFrame = {
+    val (classified, params) = classify(spark, batch, name)
+    appendSignatures(spark, classified.filter(col("flag") === "kept"),
+      params, name, path)
+    classified.select("doc_id", "flag")
   }
 
   /** Count the data files currently backing `table` (hidden/_SUCCESS
@@ -907,7 +893,7 @@ object BandIndex {
     *
     * OFFLINE maintenance, ENFORCED by the maintenance lease: this op
     * takes `<path>/_maintenance_lease` for its duration, and
-    * [[append]]/[[dedupBatch]] fail fast with
+    * appends and [[classify]] fail fast with
     * [[ConcurrentMaintenanceException]] while it is on file — an
     * append can no longer race a generation swap into a directory the
     * swap then sweeps. Run it between streaming restarts. Per table
@@ -931,11 +917,8 @@ object BandIndex {
   private[etl] def compactUnderLease(spark: SparkSession, name: String,
                                      path: String, buckets: Int,
                                      fence: String): Unit = {
-    rewriteTable(spark, bandsTable(name), path,
-      writeBucketed(_, _, _, buckets, "band_val"), identity, fence)
-    rewriteTable(spark, toksTable(name), path, writeToks, identity, fence)
-    rewriteTable(spark, docsTable(name), path,
-      writeBucketed(_, _, _, buckets, "fp"), identity, fence)
+    Seq(bandsTable(name), toksTable(name), docsTable(name))
+      .foreach(rewriteTable(spark, _, path, buckets, identity, fence))
   }
 
   /** Erase documents from the index — the takedown / right-to-be-
@@ -999,11 +982,8 @@ object BandIndex {
     }
     def drop(df: DataFrame): DataFrame =
       df.join(ids, Seq("doc_id"), "left_anti")
-    rewriteTable(spark, toksTable(name), path, writeToks, drop, fence)
-    rewriteTable(spark, docsTable(name), path,
-      writeBucketed(_, _, _, buckets, "fp"), drop, fence)
-    rewriteTable(spark, bandsTable(name), path,
-      writeBucketed(_, _, _, buckets, "band_val"), drop, fence)
+    Seq(toksTable(name), docsTable(name), bandsTable(name))
+      .foreach(rewriteTable(spark, _, path, buckets, drop, fence))
     true
   }
 
@@ -1021,9 +1001,14 @@ object BandIndex {
   }
 
   /** Generation-swap rewrite of one table: write `transform(table)` to
-    * a fresh generation dir under a temp name, re-point the live table
-    * at it, sweep superseded generations. Shared by [[compact]]
-    * (identity transform) and [[remove]] (anti-join transform).
+    * a fresh generation dir under a temp name (declared `LIKE` the live
+    * table, so bucketing and partitioning carry over), re-point the
+    * live table at it, sweep superseded generations. Shared by
+    * [[compact]] (identity transform) and [[remove]] (anti-join
+    * transform). A bucketed table's rows are repartitioned by the
+    * bucket column into `buckets` partitions first — Spark's bucket id
+    * is that hash partitioning's partition id, so each bucket gets
+    * exactly one file (a coalesce merges whole partitions).
     *
     * The live name exists at every step, so a reader never finds it
     * missing. A death before the re-point leaves the live table
@@ -1033,8 +1018,7 @@ object BandIndex {
     * generation dir, which the next sweep deletes.
     */
   private def rewriteTable(spark: SparkSession, table: String,
-                           path: String,
-                           write: (DataFrame, String, String) => Unit,
+                           path: String, buckets: Int,
                            transform: DataFrame => DataFrame,
                            fence: String): Unit = {
     val tmpTable = table + "__compacting"
@@ -1042,12 +1026,24 @@ object BandIndex {
     // fresh generation dir: path/<table>__g<epoch-millis>_<uuid8> — the
     // random suffix (not a clock alone: nanoTime resets across reboots,
     // millis can repeat under clock skew) guarantees neither a crashed
-    // rewrite's leftovers nor the live generation collide, so
-    // append-mode saveAsTable can never register over a directory
-    // holding stale parquet
+    // rewrite's leftovers nor the live generation collide, so the temp
+    // table can never be declared over a directory holding stale parquet
     val genDir = s"$path/${table}__g${System.currentTimeMillis()}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    write(transform(spark.table(table)), tmpTable, genDir)
+    spark.sql(s"CREATE TABLE `$tmpTable` LIKE `$table` LOCATION '$genDir'")
+    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+    insert(meta.bucketSpec.fold(transform(spark.table(table))) { b =>
+      // the bucketed table's FILES, not the table: over a bucketed scan
+      // the planner drops this repartition as already satisfied, then
+      // disables the bucketed scan because nothing needs it — and every
+      // read task writes its own file per bucket again. The coalesce
+      // keeps whole buckets together while capping the write tasks at
+      // one per core: `buckets` near-empty write tasks cost more CPU
+      // than the whole rewrite otherwise does
+      transform(spark.read.schema(meta.schema).parquet(meta.location.toString))
+        .repartition(buckets, col(b.bucketColumnNames.head))
+        .coalesce(math.min(buckets, spark.sparkContext.defaultParallelism))
+    }, tmpTable)
     // commit point: the long rewrite above is where a TTL overrun
     // happens — re-check the fence before the swap
     verifyFence(spark, path, fence)
@@ -1102,15 +1098,7 @@ object BandIndex {
         new org.apache.hadoop.fs.Path(p.location).getParent)
     val keep = (new org.apache.hadoop.fs.Path(meta.location) +: partGens)
       .map(_.toUri.getPath).toSet
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      val p = st.getPath
-      if (st.isDirectory &&
-          (p.getName == table || p.getName.startsWith(table + "__g")) &&
-          !keep.contains(p.toUri.getPath))
-        fs.delete(p, true)
-    }
+    generations(spark, path, table).filterNot(p => keep(p.toUri.getPath))
+      .foreach(p => fsOf(spark, p).delete(p, true))
   }
 }

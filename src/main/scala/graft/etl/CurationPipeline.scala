@@ -185,7 +185,8 @@ object CurationPipeline {
 
   /** Run the full stage. `srcDir` is the crawl drop directory (parquet
     * files in the `documents` schema); the band index at
-    * `indexName`/`indexPath` is created empty if absent, so a
+    * `indexName`/`indexPath` is declared if absent
+    * ([[BandIndex.declare]]: its three tables, no rows), so a
     * from-scratch corpus needs no seeding step — with `lshParams` as
     * its pinned tunables (see [[graft.text.LshParams]]'s S-curve
     * notes; a pre-existing index re-checks them against its on-disk
@@ -313,11 +314,7 @@ object CurationPipeline {
           lineageRound: Long = 0L)
       : CurationReport = {
     import spark.implicits._
-    if (!spark.catalog.tableExists(BandIndex.docsTable(indexName)))
-      BandIndex.create(spark,
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.Tables.schemas("documents")),
-        indexName, indexPath, buckets, lshParams)
+    BandIndex.declare(spark, indexName, indexPath, buckets, lshParams)
 
     val corpusDir = s"$workDir/corpus"
     val ckptDir = s"$workDir/ckpt"

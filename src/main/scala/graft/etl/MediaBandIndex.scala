@@ -108,7 +108,7 @@ object MediaBandIndex {
   /** Append the kept slice of a batch; refreshes this session's
     * relation cache so the next [[dedupBatch]] sees the new files even
     * when the write ran in a streaming clone session (the
-    * [[BandIndex.append]] rationale).
+    * [[BandIndex.appendSignatures]] rationale).
     */
   def append(spark: SparkSession, media: DataFrame, name: String,
              path: String, buckets: Int = 16): Unit = {

@@ -90,8 +90,9 @@ object ExplainAdvisor {
         "double-count, the name tier sees 3 candidates and refuses."),
     ("q88_incremental_dedup",
       "band_id/old_id/doc_id Inner, doc_id LeftAnti/LeftOuter, fp LeftSemi (6 sites)",
-      "The batch-vs-corpus joins execute inside `BandIndex.dedupBatch`'s " +
-        "own store actions (separate QueryExecutions over the persisted " +
+      "The batch-vs-corpus joins execute inside `BandIndex.classify`'s " +
+        "own store actions (its prefix collect and its one " +
+        "localCheckpoint: separate QueryExecutions over the persisted " +
         "bucketed tables); the advised frame holds the logical sites but " +
         "their metrics live in other executions' physical plans, and the " +
         "duplicated fp/doc_id name sets are ambiguous besides. Store-side " +

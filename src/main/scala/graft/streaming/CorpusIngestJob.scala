@@ -8,11 +8,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming corpus ingestion — the crawl-pipeline front door: document
   * batches arrive as files in a directory, every micro-batch is deduped
-  * against the persisted [[BandIndex]] (exact fingerprint semi-join +
+  * against the persisted [[BandIndex]] (exact fingerprint join +
   * MinHash near-dup, both reading the bucketed index tables only), and
   * the kept slice is appended to BOTH the curated corpus sink and the
-  * index — history is never re-read and never re-tokenized, so
-  * per-batch cost stays batch-sized forever.
+  * index from one classified frame — history is never re-read, nothing
+  * is tokenized twice, so per-batch cost stays batch-sized forever.
   *
   * `foreachBatch`, not a streaming sink: the per-batch work is
   * multi-output (classify → sink corpus → append index) built from
@@ -25,17 +25,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * partitioned by the micro-batch id and written with dynamic
   * partition OVERWRITE — a replayed batch rewrites its own partition
   * instead of appending duplicates — and it is written BEFORE the
-  * index append. Walking the crash windows: (a) die before the sink
-  * write → clean replay; (b) die between sink write and index append →
-  * the replay re-derives the same kept set (those docs are not yet in
-  * the index), overwrites the same partition with identical rows, and
-  * retries the append; (c) die after the append but before the
+  * index append ([[ingestBatch]]). Walking the crash windows: (a) die
+  * before the sink write → clean replay; (b) die between sink write and
+  * index append → the replay re-classifies against the same index, so
+  * the same kept set overwrites the same partition with identical rows,
+  * and the append is retried; (c) die after the append but before the
   * checkpoint commit → the replay classifies the batch's kept docs as
   * duplicates of themselves, the kept slice is empty, and an empty
   * dynamic overwrite touches no partitions — the earlier sink write
   * survives. No window loses a doc or double-lands one.
-  * [[BandIndex.create]]'s bands-before-fingerprints write order makes
-  * the append itself replay-safe the same way.
+  * [[BandIndex.appendSignatures]]' bands-before-fingerprints write
+  * order makes the append itself replay-safe the same way.
   *
   * Intra-batch duplicates are upstream's job (the batch-level q40/q45
   * operators) — this job's contract is batch-vs-history.
@@ -90,10 +90,32 @@ object CorpusIngestJob {
     files.foreach(fs.delete(_, false))
   }
 
+  /** One micro-batch of [[run]]: drain takedowns, classify the batch
+    * once, sink its kept rows, THEN append their signatures to the
+    * index — the replay-safe order of the class doc.
+    */
+  def ingestBatch(ss: SparkSession, batch: DataFrame, batchId: Long,
+                  indexName: String, indexPath: String, outDir: String,
+                  buckets: Int, takedownDir: Option[String]): Unit = {
+    // takedowns drain FIRST, before this batch classifies: an
+    // erased doc's re-crawl in this very batch is kept (forgotten)
+    takedownDir.foreach(
+      drainTakedowns(ss, _, outDir, indexName, indexPath, buckets))
+    val (classified, params) = BandIndex.classify(ss, batch, indexName)
+    val kept = classified.filter(col("flag") === "kept")
+    kept.select(batch.columns.map(col): _*)
+      .withColumn("ingest_batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ingest_batch")
+      .parquet(outDir)
+    BandIndex.appendSignatures(ss, kept, params, indexName, indexPath)
+  }
+
   /** Run until all available files are processed (Trigger.AvailableNow).
-    * The band index at `indexName`/`indexPath` must exist
-    * ([[BandIndex.create]] on the seed corpus — or on an empty frame for
-    * a from-scratch corpus). `maxFilesPerTrigger` sizes the micro-batch:
+    * The band index at `indexName`/`indexPath` must be declared
+    * ([[BandIndex.create]] on a seed corpus, [[BandIndex.declare]] for
+    * none). `maxFilesPerTrigger` sizes the micro-batch:
     * larger batches amortize the per-batch dedup round and cut the
     * per-append small-file count in the index (each append adds up to
     * 3×buckets + [[BandIndex.PfxCount]] files across the three tables)
@@ -119,24 +141,8 @@ object CorpusIngestJob {
         // are bound to the streaming clone, and reads + writes + cache
         // invalidation must all go through ONE session or batch N+1
         // classifies against batch N's stale file listing
-        val ss = batch.sparkSession
-        // takedowns drain FIRST, before this batch classifies: an
-        // erased doc's re-crawl in this very batch is kept (forgotten)
-        takedownDir.foreach(
-          drainTakedowns(ss, _, outDir, indexName, indexPath, buckets))
-        val flags = BandIndex.dedupBatch(ss, batch, indexName).localCheckpoint()
-        // sink FIRST, idempotently (per-batch partition, dynamic
-        // overwrite), THEN append to the index — see the replay-safety
-        // walk in the class doc
-        BandIndex.keptOf(batch, flags)
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(outDir)
-        BandIndex.append(ss, BandIndex.keptOf(batch, flags),
-          indexName, indexPath, buckets)
-        ()
+        ingestBatch(batch.sparkSession, batch, batchId, indexName,
+          indexPath, outDir, buckets, takedownDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

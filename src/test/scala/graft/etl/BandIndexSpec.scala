@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.catalog.{DropTablePreEvent,
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 /** [[BandIndex]] — the persisted incremental-dedup index: build once,
@@ -85,12 +86,11 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.create(spark, corpus, name, path, buckets = 4)
     val batch = Seq((10L, "alpha beta gamma"), (11L, "other stuff"))
       .toDF("doc_id", "text")
-    // the band join itself is asserted on the lazy candidates() frame —
-    // dedupBatch materializes the pairs eagerly (for the _toks prune
-    // list), so the join never appears in the flags frame's plan.
+    // asserted on the lazy candidates() and classification() frames —
+    // classify materializes the classification at once, so its joins
+    // never appear in the returned frame's plan.
     val (candPlan, flagsPlan) = withStaticPlan {
-      (candidatesPlan(batch, name),
-       BandIndex.dedupBatch(spark, batch, name).queryExecution.executedPlan)
+      (candidatesPlan(batch, name), classificationPlan(batch, name))
     }
     // 1. no file scan outside the index directory: the corpus raw text
     //    is never re-read (the batch is an in-memory frame)
@@ -129,6 +129,10 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.candidates(spark, BandIndex.signatures(batch), name)
       .queryExecution.executedPlan
 
+  private def classificationPlan(batch: DataFrame, name: String) =
+    BandIndex.classification(spark, BandIndex.signatures(batch), name,
+      graft.text.LshParams()).queryExecution.executedPlan
+
   /** The band join must read `_bands` exchange-free (bucketed layout). */
   private def assertBandJoinExchangeFree(
       plan: org.apache.spark.sql.execution.SparkPlan, name: String): Unit = {
@@ -148,6 +152,23 @@ class BandIndexSpec extends SparkSpec {
         s"corpus band side shuffles despite bucketing:\n${indexSide.get}")
     }
   }
+
+  /** Data files of the index's tables per slot: (table, bucket id) for
+    * the bucketed tables, (table, pfx directory) for `_toks`.
+    */
+  private def dataFilesPerSlot(name: String): Map[(String, String), Int] =
+    Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
+        BandIndex.toksTable(name)).flatMap { t =>
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(t)).location)
+      val it = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(loc, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .map(p => (t, BucketingUtils.getBucketId(p.getName)
+          .fold(p.getParent.getName)(_.toString)))
+        .toSeq
+    }.groupBy(identity).map { case (k, v) => k -> v.size }
 
   /** `_toks` reads through its catalog partitions, which a table-level
     * SET LOCATION does not move: after a rewrite every partition must
@@ -179,11 +200,10 @@ class BandIndexSpec extends SparkSpec {
     // AQE off: collect() on an adaptive plan stops at stage
     // boundaries and would miss the scan
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    val (flags, plan) = try {
+    val plan = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val f = BandIndex.dedupBatch(spark, batch, name)
       // executedPlan is lazy — force it INSIDE the conf window
-      (f, f.queryExecution.executedPlan)
+      classificationPlan(batch, name)
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     val toksScans = plan.collect {
       case s: FileSourceScanExec
@@ -197,7 +217,7 @@ class BandIndexSpec extends SparkSpec {
     toksScans.foreach { s =>
       assert(s.partitionFilters.nonEmpty, s.toString.take(1500))
     }
-    assert(flagsOf(flags) === Map(11L -> "near"))
+    assert(classify(batch, name) === Map(11L -> "near"))
   }
 
   test("compaction preserves classifications, layout, and shrinks files") {
@@ -207,12 +227,14 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.create(spark,
       Seq((1L, "alpha beta gamma delta"), (2L, bigDoc(false)))
         .toDF("doc_id", "text"),
-      name, path, buckets = 4)
-    // several appends → several file generations per bucket
+      name, path, buckets = 8)
+    // several appends → several file generations per bucket; 8 buckets
+    // over the session's 4 cores, so the rewrite's write tasks each
+    // take several whole buckets
     (0 until 3).foreach { i =>
       BandIndex.append(spark,
         Seq((100L + i, s"fresh content number $i")).toDF("doc_id", "text"),
-        name, path, buckets = 4)
+        name, path, buckets = 8)
     }
     val batch = Seq(
       (10L, "alpha beta gamma delta"),     // exact of 1
@@ -220,31 +242,27 @@ class BandIndexSpec extends SparkSpec {
       (12L, "fresh content number 1"),     // exact of an appended doc
       (13L, "wholly new text")).toDF("doc_id", "text")
     val before = classify(batch, name)
-    val filesBefore =
-      Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
-          BandIndex.toksTable(name))
-        .map(BandIndex.dataFileCount(spark, _)).sum
+    val filesBefore = dataFilesPerSlot(name).values.sum
 
-    BandIndex.compact(spark, name, path, buckets = 4)
+    BandIndex.compact(spark, name, path, buckets = 8)
     assertToksFollowLiveLocation(name)
 
     val after = classify(batch, name)
     assert(after === before)
     assert(before === Map(10L -> "exact", 11L -> "near",
                           12L -> "exact", 13L -> "kept"))
-    val filesAfter =
-      Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
-          BandIndex.toksTable(name))
-        .map(BandIndex.dataFileCount(spark, _)).sum
-    assert(filesAfter < filesBefore,
-      s"compaction did not shrink files: $filesBefore -> $filesAfter")
+    // one data file per bucket and per pfx, as compaction promises
+    val perSlot = dataFilesPerSlot(name)
+    assert(perSlot.values.forall(_ == 1), perSlot)
+    assert(perSlot.values.sum < filesBefore,
+      s"compaction did not shrink files: $filesBefore -> ${perSlot.values.sum}")
 
     // bucketing survives the rewrite: the band join's index side still
     // arrives exchange-free (same assertion as the plan spec)
     assertBandJoinExchangeFree(withStaticPlan(candidatesPlan(batch, name)), name)
 
     // a second compaction must not collide with the first's generation
-    BandIndex.compact(spark, name, path, buckets = 4)
+    BandIndex.compact(spark, name, path, buckets = 8)
     val again = classify(batch, name)
     assert(again === before)
   }
@@ -646,7 +664,7 @@ class BandIndexSpec extends SparkSpec {
       (10L, "alpha beta gamma delta"),
       (11L, bigDoc(true)),
       (12L, "entirely fresh content")).toDF("doc_id", "text")
-    val first = flagsOf(BandIndex.ingest(spark, batch, name, path, buckets = 4))
+    val first = flagsOf(BandIndex.ingest(spark, batch, name, path))
     assert(first === Map(10L -> "exact", 11L -> "near", 12L -> "kept"))
     // the kept doc is now IN the index (appended, not rebuilt): a
     // replay of the same batch finds 12 as an exact dup of itself;

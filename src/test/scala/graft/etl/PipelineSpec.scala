@@ -93,7 +93,7 @@ class PipelineSpec extends SparkSpec {
       root.resolve("idxref").toString, buckets = 4)
     val keptRef = Seq(batchA, batchB).map { b =>
       val flags = BandIndex.ingest(spark, b, name + "_ref",
-        root.resolve("idxref").toString, buckets = 4)
+        root.resolve("idxref").toString)
       BandIndex.keptOf(b, flags)
     }.reduce(_ unionByName _)
     val expected = CurationPipeline.packSequences(
@@ -378,7 +378,7 @@ class PipelineSpec extends SparkSpec {
     // classifies as a duplicate, not fresh content
     val flags = BandIndex.ingest(spark,
       docsDf(30L -> "spam spam spam spam spam spam spam spam spam spam"),
-      name, root.resolve("idx").toString, buckets = 4)
+      name, root.resolve("idx").toString)
     assert(BandIndex.keptOf(docsDf(
       30L -> "spam spam spam spam spam spam spam spam spam spam"), flags)
       .count() === 0L)

@@ -14,6 +14,9 @@ import org.apache.spark.sql.DataFrame
 class CorpusIngestSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs one steady-state micro-batch may run (see its test). */
+  private val MaxJobs = 18
+
   private def docsDf(rows: (Long, String)*): DataFrame =
     rows.toSeq.toDF("doc_id", "text")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
@@ -163,45 +166,89 @@ class CorpusIngestSpec extends SparkSpec {
   }
 
   test("crash-window replay: sink-then-append sequence is idempotent") {
-    import org.apache.spark.sql.functions.lit
     val name = "cidx_replay"
-    Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name))
+    Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
+        BandIndex.toksTable(name))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val root = java.nio.file.Files.createTempDirectory("graft-replay")
     val (indexPath, outDir) = (root.resolve("idx").toString, root.resolve("out").toString)
     BandIndex.create(spark, docsDf(1L -> "alpha beta gamma"), name, indexPath, buckets = 4)
     val batch = docsDf(10L -> "alpha beta gamma", 11L -> "kept fresh words")
 
-    // the exact per-batch sequence CorpusIngestJob runs, step by step
-    def sinkWrite(): Unit = BandIndex
-      .keptOf(batch, BandIndex.dedupBatch(spark, batch, name))
-      .withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(outDir)
-    def indexAppend(): Unit = BandIndex.append(spark,
-      BandIndex.keptOf(batch, BandIndex.dedupBatch(spark, batch, name)),
-      name, indexPath, buckets = 4)
+    // the job's own per-batch step
+    def step(idx: String): Unit = CorpusIngestJob.ingestBatch(spark, batch,
+      0L, name, idx, outDir, buckets = 4, takedownDir = None)
     def sinkIds() = spark.read.parquet(outDir)
       .select($"doc_id").as[Long].collect().sorted.toSeq
+    def indexed() = {
+      spark.catalog.refreshTable(BandIndex.docsTable(name))
+      spark.table(BandIndex.docsTable(name)).count()
+    }
 
     // window (b): crash AFTER the sink write, BEFORE the index append —
-    // replay reruns both steps; the partition overwrite must not
-    // duplicate and the append must still land
-    sinkWrite()
-    sinkWrite() // replay of the sink step
-    indexAppend()
+    // an index path under a regular file cannot take the append
+    // beacon, so the step dies exactly there. The replay reruns the
+    // step; the partition overwrite must not duplicate and the append
+    // must still land
+    val notADir = java.nio.file.Files.createFile(root.resolve("not-a-dir"))
+    intercept[java.io.IOException](step(s"$notADir/idx"))
     assert(sinkIds() === Seq(11L))
-    assert(spark.table(BandIndex.docsTable(name)).count() === 2)
+    assert(indexed() === 1)
+    step(indexPath)
+    assert(sinkIds() === Seq(11L))
+    assert(indexed() === 2)
 
     // window (c): crash AFTER the append, BEFORE the checkpoint commit —
     // a full replay now classifies doc 11 as a dup of itself, the kept
     // slice is empty, the empty dynamic overwrite leaves the sink
     // partition alone, and the index is unchanged
-    sinkWrite()
-    indexAppend()
+    step(indexPath)
     assert(sinkIds() === Seq(11L))
-    spark.catalog.refreshTable(BandIndex.docsTable(name))
-    assert(spark.table(BandIndex.docsTable(name)).count() === 2)
+    assert(indexed() === 2)
+  }
+
+  test("a steady-state micro-batch runs a pinned number of Spark jobs") {
+    val name = "cidx_jobs"
+    Seq(BandIndex.docsTable(name), BandIndex.bandsTable(name),
+        BandIndex.toksTable(name))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val root = java.nio.file.Files.createTempDirectory("graft-jobs")
+    val (srcDir, indexPath, outDir) = (root.resolve("src").toString,
+      root.resolve("idx").toString, root.resolve("out").toString)
+    // 200 tokens; `change` swaps one → Jaccard 199/201, a near dup
+    def bigDoc(change: Boolean): String = (0 until 200).map(i =>
+      if (change && i == 7) "changed" else s"tok$i").mkString(" ")
+    // a micro-batch as the file source hands it over: a parquet scan
+    def crawlFile(tag: String, rows: (Long, String)*): DataFrame = {
+      docsDf(rows: _*).coalesce(1).write.parquet(s"$srcDir/$tag")
+      spark.read.parquet(s"$srcDir/$tag")
+    }
+    def step(batch: DataFrame, batchId: Long): Unit =
+      CorpusIngestJob.ingestBatch(spark, batch, batchId, name, indexPath,
+        outDir, buckets = 4, takedownDir = None)
+    BandIndex.create(spark,
+      docsDf(1L -> "alpha beta gamma delta", 2L -> bigDoc(false)),
+      name, indexPath, buckets = 4)
+    step(crawlFile("a", 3L -> "warm up words"), 0L)
+
+    val batch = crawlFile("b",
+      10L -> "alpha beta gamma delta", // exact dup of 1
+      11L -> bigDoc(true),             // near dup of 2
+      12L -> "entirely fresh content") // kept
+    val counters = graft.RunCounters.attach(spark.sparkContext)
+    val jobs = try {
+      assert(counters.settle())
+      counters.reset()
+      step(batch, 1L)
+      assert(counters.settle())
+      counters.jobs
+    } finally spark.sparkContext.removeSparkListener(counters)
+    assert(spark.read.parquet(outDir).select($"doc_id").as[Long].collect()
+      .toSet === Set(3L, 12L))
+    // classify's prefix collect (4 jobs) and its one localCheckpoint
+    // (9), the sink write and the three index inserts (5): 18, down
+    // from 26 when the step re-read, re-joined and re-tokenized the
+    // batch
+    assert(jobs.size <= MaxJobs, jobs.map(_._3).mkString("\n"))
   }
 }
