@@ -7,12 +7,17 @@ import org.apache.spark.sql.functions._
   * equivalent ANSI SQL the driver runs under DuckDB as the correctness
   * oracle. Column names MUST match between the two (the driver's compare
   * sorts columns by name before hashing).
+  *
+  * `doc` is the query's one note, and it has no default: first what the
+  * query covers (its SURVEY §2 ids or family), then how it scales (the
+  * plan mechanism that keeps it bounded). `graft.Probe plans` prints it
+  * above each plan in PLANS.md, and `QueryNotesSpec` keeps the two equal.
   */
 final case class Q(
     name: String,
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String = "",
+    doc: String,
     // The semantically-identical REFERENCE formulation a bounded
     // oracle was derived from (VERDICT r9 item 2): where `oracle` had
     // to be rewritten for tractability at large SF (vectorized dot

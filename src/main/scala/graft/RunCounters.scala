@@ -6,7 +6,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 
 /** The one run-counters listener of the check and probe mains
-  * ([[JobProfile]], [[ClusterCheck]], [[streaming.StreamKillCheck]]):
+  * ([[Probe]] `jobs`, [[ClusterCheck]], [[streaming.StreamKillCheck]]):
   * per [[reset]] window it counts jobs (id, wall, description: SQL
   * execution id and plan operator),
   * completed stages, ended task attempts and the failed ones,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only (like [[PlanDump]]): materialize an N× scale-up of a
+/** Dev-only (like [[Probe]]): materialize an N× scale-up of a
   * testdata `documents` table for empirical scaling runs.
   *
   * Each copy gets disjoint doc_ids AND a per-copy token namespace

@@ -65,13 +65,12 @@ object SkewCheck {
     */
   private def runSmj(spark: SparkSession, dir: String)
       : (Long, String, Boolean, String) = {
-    val df = smjQuery(spark, dir)
     // execute THIS frame to finalize ITS adaptive plan (a derived
     // hash-agg frame would finalize a different AdaptiveSparkPlan);
     // skew splits are stamped `skew=true` on the SortMergeJoin
-    df.collect()
+    val plan = operators.ExplainAdvisor.executed(smjQuery(spark, dir))
+      .executedPlan.toString
     val (rows, hash) = ContentHash.rowsAndHash(smjQuery(spark, dir))
-    val plan = df.queryExecution.executedPlan.toString
     val fired = plan.contains("skew=true")
     val excerpt = plan.linesIterator
       .filter(l => l.contains("SortMergeJoin") || l.contains("AQEShuffleRead"))

@@ -146,7 +146,8 @@ object LineageQueries {
       |  SELECT 'select', 'over_budget', source, COUNT(*)
       |  FROM cum, b WHERE cum > budget GROUP BY source)
       |ORDER BY stage, verdict, source""".stripMargin),
-    doc = "etl: curation lineage ledger — three SQL-mirrorable decision stages written through the Lineage API, audited from the bucket-partitioned ledger (full lifecycle incl. erasure receipts in LineageSpec)")
+    doc = "etl: curation lineage ledger — three SQL-mirrorable decision stages written through the Lineage API, audited from the bucket-partitioned ledger (full lifecycle incl. erasure receipts in LineageSpec). " +
+      "Lineage ledger: fingerprint dedup shuffles a 16-byte md5 key; m/q token stats computed ABOVE the cache in the fingerprint projection (codegen CSE shares one split()) so the cached frame is ids+longs with the text column dropped — no downstream re-tokenize (r13); rules gate is per-row codegen; selection is ONE DistributedRank prefix-sum pass; all four stages' decisions land in ONE batched append (recordBatch) over two cached frames — one write job, rows clustered by bucket so each append is one file per bucket, not tasks×buckets; audit aggregates the bucket-partitioned ledger map-side; per-doc explain() is a partition-pruned single-bucket read.")
 
   val all: Seq[Q] = Seq(q263)
 }

@@ -44,7 +44,8 @@ object ScalarQueries {
       |FROM orders
       |WHERE o_orderkey < 500
       |ORDER BY o_orderkey""".stripMargin),
-    doc = "F1+F2+F4: date add/diff/extract with fixed anchor")
+    doc = "F1+F2+F4: date add/diff/extract with fixed anchor. " +
+      "Pure per-row date codegen against a fixed anchor; key filter pushed to the scan; zero shuffles.")
 
   /** q32 — timestamp minute arithmetic (F3; TIMESTAMPDIFF(MINUTE,...)
     * healthcare-sql-analytics.sql:680-683). Lead time order→ship in
@@ -75,7 +76,8 @@ object ScalarQueries {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin),
-    doc = "F3: minute-granularity timestamp diffs")
+    doc = "F3: minute-granularity timestamp diffs. " +
+      "Natural-key lineitem-orders join, then integer-exact minute diffs aggregated map-side — one join shuffle total.")
 
   /** q33 — string compose/format + regex (F8/F9; CONCAT report text
     * healthcare-sql-analytics.sql:681-682; regex masking patterns
@@ -104,7 +106,8 @@ object ScalarQueries {
       |FROM customer
       |WHERE c_custkey < 80
       |ORDER BY c_custkey""".stripMargin),
-    doc = "F8+F9: concat/case/substr + replace-all regex")
+    doc = "F8+F9: concat/case/substr + replace-all regex. " +
+      "concat/format/regexp are whole-stage-codegen per-row ops; key filter in PushedFilters; no shuffle.")
 
   /** q34 — symmetric-encryption round-trip (F11; Fernet encrypt/decrypt
     * of clinical notes healthcare-data-pipeline-main.py:44-50,626-642).
@@ -130,7 +133,8 @@ object ScalarQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "F11: AES encrypt/decrypt round-trip invariant")
+    doc = "F11: AES encrypt/decrypt round-trip invariant. " +
+      "aes_encrypt/decrypt are codegen'd builtins running where the data lives; the roundtrip invariant is verified distributed (no key or plaintext movement).")
 
   // --- q35: deterministic synthetic patient generator (S3) -------------
 
@@ -168,7 +172,8 @@ object ScalarQueries {
       |       ROUND(-2000.0 * (ln(${uSql("patient_id", 3)}) + ln(${uSql("patient_id", 4)})), 2) AS total_charges
       |FROM (SELECT UNNEST(generate_series(1, 1000)) AS patient_id)
       |ORDER BY patient_id""".stripMargin),
-    doc = "S3: deterministic hash-based synthetic generator (partition-independent)")
+    doc = "S3: deterministic hash-based synthetic generator (partition-independent). " +
+      "spark.range is evenly partitioned and every synthetic value is a pure function of the row id — embarrassingly parallel, no RNG state, no shuffle before the report aggregate.")
 
   /** q67 — the one-pass typed-Aggregator data-quality profile
     * ([[QualityAggregator]]; §2.9 UDAF surface). Two jobs total: a
@@ -218,7 +223,8 @@ object ScalarQueries {
       |SELECT n_rows, completeness, validity,
       |       (completeness + validity) / 2.0 AS overall_quality
       |FROM m""".stripMargin),
-    doc = "A13/§2.9: one-pass typed Aggregator quality profile (UDAF surface)")
+    doc = "A13/§2.9: one-pass typed Aggregator quality profile (UDAF surface). " +
+      "Custom typed Aggregator computes every quality metric in ONE pass with combinable partial buffers — the UDAF twin of q26's composed built-ins.")
 
   /** q81 — F11 completed to token-exact framing: every customer name
     * encrypts to a spec-shaped [[Fernet]] token (version byte, embedded
@@ -250,7 +256,8 @@ object ScalarQueries {
       |FROM customer
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "F11: spec-exact Fernet token framing round-trip invariant")
+    doc = "F11: spec-exact Fernet token framing round-trip invariant. " +
+      "Token-exact Fernet with a keyed-PRF IV — per-row codegen, deterministic tokens, roundtrip verified distributed; no key material leaves the executors.")
 
   val all: Seq[Q] = Seq(q31, q32, q33, q34, q35, q67, q81)
 }

@@ -103,7 +103,8 @@ object AssocRules {
       |       CAST(ROW_NUMBER() OVER (
       |         ORDER BY conf_ppm DESC, lift_ppm DESC, ante, cons) AS INT) AS pos
       |FROM top ORDER BY pos""".stripMargin),
-    doc = "graph: A-Priori rule generation — confidence/lift in integer ppm over frequent co-purchase pairs")
+    doc = "graph: A-Priori rule generation — confidence/lift in integer ppm over frequent co-purchase pairs. " +
+      "Rules derive from the frequent-pair frame (support-floored before any join); ONE barriered singleton-support frame feeds the A-Priori threshold, the prune and both rule-join denominators (r11 — it was aggregated twice); threshold + basket count are driver literals; the support joins are AdvisedBroadcast-planned; confidence/lift are integer-ppm divisions; top-15 via TakeOrdered.")
 
   val all: Seq[Q] = Seq(q154)
 }

@@ -114,7 +114,8 @@ object Assortativity {
       |         (SQRT(CAST(n * sxx - sx * sx AS DOUBLE)) *
       |          SQRT(CAST(n * syy - sy * sy AS DOUBLE))) AS assortativity
       |FROM m""".stripMargin),
-    doc = "graph: Newman degree assortativity of the backbone — exact-integer moments, one IEEE expression")
+    doc = "graph: Newman degree assortativity of the backbone — exact-integer moments, one IEEE expression. " +
+      "Backbone edges built once behind a Barrier; degrees from one union-aggregate; the assortativity moments accumulate in exact integers over the edge frame — one pass each.")
 
   val all: Seq[Q] = Seq(q166)
 }

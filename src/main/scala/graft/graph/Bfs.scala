@@ -84,7 +84,8 @@ object Bfs {
     // the whole edge-pipeline plan per reference — OOM/timeout at sf1
     // where each stage run once takes seconds (q152's disease).
     Some(Q.materializeCtes(refOracle)),
-    doc = "graph: bounded BFS min-hop rings from the strongest co-purchase hub (per-hop frontier joins, Barrier.cut per round)",
+    doc = "graph: bounded BFS min-hop rings from the strongest co-purchase hub (per-hop frontier joins, Barrier.cut per round). " +
+      "Bounded BFS: w>=2 edge list behind a Barrier; each hop = frontier equi-join + distinct + anti-join vs visited, cut per round; seed is a 1-row argmax broadcast; rings report via a 4-row left join so empty hops cannot vanish.",
     oracleReference = Some(refOracle))
 
   private lazy val refOracle =

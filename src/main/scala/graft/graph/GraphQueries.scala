@@ -112,7 +112,7 @@ object GraphQueries {
     * this). The K fixed rounds run on RDDs
     * (the GraphX/Pregel layer, public Spark's own answer for bounded
     * iterative graph algorithms) because the DataFrame form pays
-    * Catalyst + AQE analysis per round per cut: JobProfile measured
+    * Catalyst + AQE analysis per round per cut: `Probe jobs` measured
     * q230's 8 rounds at ~0.2 s of DRIVER PLANNING each (wall 5.1 s vs
     * 3.2 s of actual job time) — scheduling constants that grow with
     * rounds, not data. Here the edge RDD is hash-partitioned once;
@@ -397,7 +397,8 @@ object GraphQueries {
       |SELECT p AS p_partkey, r AS pagerank,
       |       CAST(ROW_NUMBER() OVER (ORDER BY r DESC, p) AS INT) AS pos
       |FROM top ORDER BY pos""".stripMargin),
-    doc = "graph: integer-exact damped PageRank (3 power iterations) over the part co-purchase graph")
+    doc = "graph: integer-exact damped PageRank (3 power iterations) over the part co-purchase graph. " +
+      "Integer PageRank: per-order pair explosion collapses immediately to weighted distinct edges (iteration cost |E|, not pair instances); the out-weight-folded edge list sits behind a Barrier reused by all 3 power iterations; each iteration = ONE src-keyed shuffle join + one map-side-combinable dst aggregate; vertex count rides a 1-row broadcast; final top-20 is TakeOrdered with post-limit rank.")
 
   /** q138 — frequent co-purchase pairs with A-Priori pruning: only
     * parts whose singleton support exceeds the corpus average survive
@@ -427,7 +428,8 @@ object GraphQueries {
       |FROM fb a JOIN fb b ON a.o = b.o AND a.p < b.p
       |GROUP BY 1, 2
       |ORDER BY support DESC, p1, p2 LIMIT 20""".stripMargin),
-    doc = "graph: A-Priori-pruned frequent co-purchase pairs (market-basket mining)")
+    doc = "graph: A-Priori-pruned frequent co-purchase pairs (market-basket mining). " +
+      "Pairs generated per basket from the deduped item list (bounded by basket size squared), counted map-side; top-20 via TakeOrdered on the pair frame.")
 
   val all: Seq[Q] = Seq(q137, q138)
 }

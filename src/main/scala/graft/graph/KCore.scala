@@ -160,7 +160,8 @@ object KCore {
       sb ++= "\nORDER BY round"
       sb.toString
     },
-    doc = s"graph: fixed-$Rounds-round k-core (k=$CoreK) peel ladder on the co-purchase graph — per-round removed/remaining counts, lineage-cut per round")
+    doc = s"graph: fixed-$Rounds-round k-core (k=$CoreK) peel ladder on the co-purchase graph — per-round removed/remaining counts, lineage-cut per round. " +
+      "k-core ladder: co-purchase edges build once behind a Barrier; each of 6 FIXED peel rounds is one degree aggregate + semi-join wave, survivor and edge frames lineage-cut per round (q182 discipline) — wall cost is round-count overhead, corpus touched once.")
 
   val all: Seq[Q] = Seq(q207)
 }

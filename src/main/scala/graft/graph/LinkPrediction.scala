@@ -117,7 +117,8 @@ object LinkPrediction {
       |FROM cand c
       |JOIN degc da ON da.node = c.a JOIN degc db ON db.node = c.b
       |ORDER BY jaccard DESC, part_a, part_b LIMIT $TopK""".stripMargin),
-    doc = s"graph: hub-free common-neighbor Jaccard link prediction — top-$TopK non-adjacent co-purchase part pairs via a center-degree-capped wedge join (bounded under power-law degree skew)")
+    doc = s"graph: hub-free common-neighbor Jaccard link prediction — top-$TopK non-adjacent co-purchase part pairs via a center-degree-capped wedge join (bounded under power-law degree skew). " +
+      "Link prediction: wedge self-join on the shared endpoint with CENTERS degree-capped at 8x average (the super-node cut — raw sum deg^2 is scale-killed under power-law skew, caught by the sf1-zipf gate; capped stream <= cap*|E|), map-side (a,b,cn) compression, anti-join vs the FULL edge list, vertex-bounded degree broadcast — per-pair neighbor SETS never materialize.")
 
   val all: Seq[Q] = Seq(q216)
 }

@@ -125,7 +125,8 @@ object Modularity {
       |  FROM perreg)
       |SELECT reg, e_cents, d_cents, m_cents, contribution, modularity
       |FROM perreg, gq ORDER BY reg""".stripMargin),
-    doc = "graph: Newman modularity of the region partition on the undirected nation trade graph — exact-cent edge masses, per-region contributions, ordered-fold global Q")
+    doc = "graph: Newman modularity of the region partition on the undirected nation trade graph — exact-cent edge masses, per-region contributions, ordered-fold global Q. " +
+      "Modularity: q240's flow collapse (two broadcast dim hops + the natural-key orders join) to the <=25x24 pair frame behind a Barrier; symmetrize/degree/internal masses and the 5-row report are constant-size epilogue.")
 
   val all: Seq[Q] = Seq(q252)
 }

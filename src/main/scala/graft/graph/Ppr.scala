@@ -113,7 +113,8 @@ object Ppr {
         |FROM p$K ORDER BY p DESC, node LIMIT 10""".stripMargin
       sb.toString
     },
-    doc = s"graph: personalized PageRank (RWR, alpha=0.15, $K integer-ppb rounds) from the busiest part — the item-to-item proximity ranking, top-10")
+    doc = s"graph: personalized PageRank (RWR, alpha=0.15, $K integer-ppb rounds) from the busiest part — the item-to-item proximity ranking, top-10. " +
+      "PPR (r11): the backbone edge frame (w>=2, window out-weights) builds once declaratively, then the 8 walk rounds run on the co-partitioned RDD loop (messageRounds) — one narrow join + one reduceByKey per round, zero per-round Catalyst/AQE planning, jobs 21 -> 5; integer-ppb mass bounded by 1e9, multiplyExact for loud overflow; top-10 TakeOrdered. The plan below shows only the declarative shell around the LogicalRDD.")
 
   val all: Seq[Q] = Seq(q230)
 }

@@ -95,7 +95,8 @@ object TradeFlows {
       |FROM outa FULL OUTER JOIN ina USING (nk)
       |JOIN nation ON n_nationkey = nk
       |ORDER BY n_name""".stripMargin),
-    doc = "graph: weighted dyad reciprocity + net position per nation over the directed supplier->customer revenue-flow graph — exact-cent edge weights, 25-row report")
+    doc = "graph: weighted dyad reciprocity + net position per nation over the directed supplier->customer revenue-flow graph — exact-cent edge weights, 25-row report. " +
+      "Reciprocity: one corpus pass — two broadcast dim hops + the natural-key lineitem-orders equi-join — collapses map-side to the <=25x24 pair frame behind a Barrier; dyad mins and the 25-row report are epilogue.")
 
   val all: Seq[Q] = Seq(q240)
 }

@@ -126,7 +126,8 @@ object Triangles {
     // spill/timeout at sf1. Q.materializeCtes is mechanical; the
     // unpinned original rides oracleReference for the equivalence gate.
     Some(Q.materializeCtes(refOracle)),
-    doc = "graph: degree-ordered triangle census + local clustering coefficients over the co-purchase backbone",
+    doc = "graph: degree-ordered triangle census + local clustering coefficients over the co-purchase backbone. " +
+      "Degree-ordered orientation before wedge generation: hub vertices sit on the HIGH end of their edges and emit zero wedges, bounding the wedge join at O(m^1.5) under any skew; backbone (w>=2) + oriented edges each built once behind a Barrier, and the oriented frame is cached PRE-HASHED by src (r11) so the wedge self-join reads both sides co-partitioned — one edge exchange instead of two.",
     oracleReference = Some(refOracle))
 
   private lazy val refOracle =

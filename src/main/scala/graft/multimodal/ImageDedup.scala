@@ -246,7 +246,8 @@ object ImageDedup {
       |       CAST(COALESCE(l.n_twin_pairs, 0) AS BIGINT) AS n_twin_pairs
       |FROM persrc s LEFT JOIN ledger l USING (source)
       |ORDER BY s.source""".stripMargin),
-    doc = "multimodal: banded dHash image near-dup (LSH stance on pixels) — oracle replays pixels→grid→bits→band-join→Hamming in SQL from the closed-form texture")
+    doc = "multimodal: banded dHash image near-dup (LSH stance on pixels) — oracle replays pixels→grid→bits→band-join→Hamming in SQL from the closed-form texture. " +
+      "Render+decode+dHash fuse into one mapPartitions stage; the band join shuffles (band, 16-bit chunk, doc_id) triples only — pixels never shuffle; verify is a 64-bit XOR popcount.")
 
   val all: Seq[Q] = Seq(q179)
 }

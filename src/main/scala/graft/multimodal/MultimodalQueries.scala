@@ -95,7 +95,8 @@ object MultimodalQueries {
       |FROM documents
       |GROUP BY source
       |ORDER BY source""".stripMargin),
-    doc = "multimodal: binary payload → mapPartitions decode (stub) → features")
+    doc = "multimodal: binary payload → mapPartitions decode (stub) → features. " +
+      "Binary payload decode + feature extraction run map-side in a typed mapPartitions (the mapInPandas batch shape); only per-source stats shuffle.")
 
   /** Typed output of the REAL image decode path ([[imageFeatures]]).
     * For undecodable/opaque payloads (`decoded` = false) the stub
@@ -279,7 +280,8 @@ object MultimodalQueries {
       |       CAST(SUM(p.rl) AS BIGINT) AS total_resized_luma
       |FROM imgs i JOIN per p USING (doc_id)
       |GROUP BY i.source ORDER BY i.source""".stripMargin),
-    doc = "multimodal: real JDK imageio decode round-trip (synthetic PNGs → width/height/luma stats), oracle-checked closed form (lossless PNG ⇒ decoded pixels = rendered gradient)")
+    doc = "multimodal: real JDK imageio decode round-trip (synthetic PNGs → width/height/luma stats), oracle-checked closed form (lossless PNG ⇒ decoded pixels = rendered gradient). " +
+      "Bounded media sample rendered + decoded map-side with JDK ImageIO inside one mapPartitions stage; the only exchange is the final per-source aggregate — pixels never shuffle.")
 
   /** One sampled frame of a media payload. */
   final case class Frame(
@@ -356,7 +358,8 @@ object MultimodalQueries {
       |       CAST(SUM(resized_sum) AS BIGINT) AS total_resized
       |FROM frames
       |GROUP BY source ORDER BY source""".stripMargin),
-    doc = "multimodal: frame sampling + resize stub via typed flatMap generator")
+    doc = "multimodal: frame sampling + resize stub via typed flatMap generator. " +
+      "Frame sampling is one typed mapPartitions generator — iterator-to-iterator with codegen'd serialization, no driver involvement.")
 
   /** One embedded payload: 8 integer feature dims (a quantized
     * embedding — integer so both engines agree bit-for-bit).
@@ -432,7 +435,8 @@ object MultimodalQueries {
       |FROM documents
       |GROUP BY source
       |ORDER BY source""".stripMargin),
-    doc = "multimodal: batched encoder inference (grouped mapPartitions, 32-record batches)")
+    doc = "multimodal: batched encoder inference (grouped mapPartitions, 32-record batches). " +
+      "Batched embedding 'inference' via grouped mapPartitions — iterator-to-iterator, batch-shaped buffers, no driver round-trip; ASCII-scoped for engine parity.")
 
   /** Typed output of the REAL audio decode path ([[audioFeatures]]).
     * Stub fallback mirrors [[ImageFeatures]]: undecodable payloads get
@@ -594,7 +598,8 @@ object MultimodalQueries {
       |       CAST(SUM(sum_abs) AS BIGINT) AS total_abs,
       |       CAST(MAX(peak) AS BIGINT) AS max_peak
       |FROM per GROUP BY source ORDER BY source""".stripMargin),
-    doc = "multimodal: real JDK audio decode roundtrip (synthetic PCM16 WAV → exact sample stats), oracle-checked closed form")
+    doc = "multimodal: real JDK audio decode roundtrip (synthetic PCM16 WAV → exact sample stats), oracle-checked closed form. " +
+      "Audio roundtrip: WAV synth + JDK decode fuse into one mapPartitions stage over the bounded 200-doc sample (no shuffle between synth and decode); the only Exchange is the final per-source aggregate.")
 
   val all: Seq[Q] = Seq(q50, q53, q87, q128, q133)
 }

@@ -97,7 +97,8 @@ object AbcXyz {
       |       CAST(CAST(SUM(rev) AS HUGEINT) AS DOUBLE)
       |         / CAST((SELECT trev FROM tot) AS DOUBLE) AS rev_share
       |FROM classed GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "ops: ABC-XYZ 3x3 inventory matrix — integer cross-multiplied CV^2 and cumulative-revenue class tests, part-bounded rank window")
+    doc = "ops: ABC-XYZ 3x3 inventory matrix — integer cross-multiplied CV^2 and cumulative-revenue class tests, part-bounded rank window. " +
+      "ABC-XYZ: (part, month) then part rollup, both map-side combinable; CV^2 and revenue-class tests are integer cross-multiplications (no division/sqrt); one part-bounded rank window; 9-row report.")
 
   val all: Seq[Q] = Seq(q220)
 }

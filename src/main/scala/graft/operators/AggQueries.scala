@@ -43,7 +43,8 @@ object AggQueries {
       |FROM orders
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin),
-    doc = "A1+A2: count, count distinct")
+    doc = "A1+A2: count, count distinct. " +
+      "Exact COUNT(DISTINCT) plans Spark's Expand + two-phase aggregate; the documented 100 TB swap is the HLL sketch (q63) when 2% error is acceptable.")
 
   /** q18 — conditional aggregation (A5; SUM(CASE WHEN ...) readmission/
     * mortality counters healthcare-sql-analytics.sql:283-302,564-571).
@@ -69,7 +70,8 @@ object AggQueries {
       |FROM lineitem
       |GROUP BY l_linestatus
       |ORDER BY l_linestatus""".stripMargin),
-    doc = "A5: SUM(CASE WHEN), count_if")
+    doc = "A5: SUM(CASE WHEN), count_if. " +
+      "All SUM(CASE WHEN) counters fuse into ONE map-side-combinable aggregate — N metrics cost one scan, not N.")
 
   /** q19 — multi-key GROUP BY + HAVING statistical floor (A6;
     * HAVING COUNT(*) >= 30 significance floors
@@ -92,7 +94,8 @@ object AggQueries {
       |GROUP BY o_orderpriority, o_orderstatus
       |HAVING COUNT(*) >= 30
       |ORDER BY o_orderpriority, o_orderstatus""".stripMargin),
-    doc = "A6: GROUP BY multi-key + HAVING floor")
+    doc = "A6: GROUP BY multi-key + HAVING floor. " +
+      "HAVING is a post-aggregation filter on the already-|groups|-sized frame — zero extra corpus work.")
 
   /** q20 — time-bucketed aggregation (A7/F2; daily/monthly metrics via
     * date_trunc healthcare-api-main.py:301-320; DATE_FORMAT '%Y-%m'
@@ -118,7 +121,8 @@ object AggQueries {
       |FROM orders
       |GROUP BY 1
       |ORDER BY month""".stripMargin),
-    doc = "A7+F2: date_trunc-style monthly buckets")
+    doc = "A7+F2: date_trunc-style monthly buckets. " +
+      "date_format bucketing is per-row codegen; the group frame is calendar-bounded (|months| rows) so the shuffle stays tiny at any corpus size.")
 
   /** q21 — exact interpolated percentiles (A8; IQR bounds
     * healthcare-data-pipeline-main.py:247-250, PERCENTILE_CONT(0.5/0.9)
@@ -150,7 +154,8 @@ object AggQueries {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin),
-    doc = "A8: exact interpolated percentiles")
+    doc = "A8: exact interpolated percentiles. " +
+      "Exact per-group percentiles (sort-based aggregate) for the oracle; the documented 100 TB swap is percentile_approx — exact type-1 requires a per-group sort.")
 
   /** q22 — aggregate-of-aggregate (A9; CTE per-patient aggregates →
     * outer GROUP BY diagnosis README.md:100-122,
@@ -186,7 +191,8 @@ object AggQueries {
       |FROM per_patient
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "A9: two-level aggregate (per-patient → per-segment)")
+    doc = "A9: two-level aggregate (per-patient → per-segment). " +
+      "Aggregate-of-aggregate: the second groupBy consumes the one-row-per-customer first aggregate (already shuffled on its key) — the big table is scanned once.")
 
   /** q23 — distribution with percentage-of-total (A10; gender/race %
     * distributions healthcare-api-main.py:527-542 — the reference loops
@@ -208,7 +214,8 @@ object AggQueries {
       |       n * 100.0 / SUM(n) OVER () AS pct
       |FROM counts
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "A10: % distribution via window over aggregate")
+    doc = "A10: % distribution via window over aggregate. " +
+      "Percent-of-total via a window over the |segments|-row aggregate — the corpus contributes one map-side-combined pass; no second scan for the denominator.")
 
   /** q24 — z-score anomaly scan (A11; |x−μ| > 2.5σ
     * healthcare-data-pipeline-main.py:264-265,319-338). μ and σ are
@@ -248,7 +255,8 @@ object AggQueries {
       |FROM orders, s2
       |WHERE ABS(o_totalprice - mu) > 2.5 * sigma
       |ORDER BY o_orderkey""".stripMargin),
-    doc = "A11: z-score outliers from exact decimal moments")
+    doc = "A11: z-score outliers from exact decimal moments. " +
+      "Moments computed in ONE aggregate and broadcast back as a 1-row crossJoin — no driver collect; decimal moments keep the z threshold engine-exact.")
 
   /** q25 — correlation matrix (A12; pairwise Pearson r of 3 metrics,
     * |r|>0.7 insight healthcare-data-pipeline-main.py:350-360).
@@ -267,7 +275,8 @@ object AggQueries {
       |       ROUND(corr(l_quantity, l_discount), 4) AS qty_discount_r,
       |       ROUND(corr(l_extendedprice, l_discount), 4) AS price_discount_r
       |FROM lineitem""".stripMargin),
-    doc = "A12: pairwise Pearson correlation")
+    doc = "A12: pairwise Pearson correlation. " +
+      "All pairwise corr moments accumulate in one map-side-combinable aggregate pass; output is a single row.")
 
   /** q26 — data-quality score (A13; completeness = non-null/total cells,
     * validity = in-IQR numeric cells, overall = mean
@@ -330,7 +339,8 @@ object AggQueries {
       |       ((disc_filled + tax_filled + qty_filled) * 1.0 / (n_rows * 3)
       |        + qty_valid * 1.0 / n_rows) / 2.0 AS overall_quality
       |FROM valid""".stripMargin),
-    doc = "A13: completeness/validity quality score, one pass")
+    doc = "A13: completeness/validity quality score, one pass. " +
+      "Completeness/outlier/freshness metrics in a single aggregate row (no collect); IQR bounds computed inline; q67 is the one-pass UDAF twin.")
 
   /** q27 — top-N by metric (A14; nlargest(5, readmission_count)
     * healthcare-data-pipeline-main.py:344-348). Spark plans
@@ -353,7 +363,8 @@ object AggQueries {
       |GROUP BY o_custkey
       |ORDER BY total_spend DESC, o_custkey
       |LIMIT 5""".stripMargin),
-    doc = "A14: top-N (TakeOrderedAndProject)")
+    doc = "A14: top-N (TakeOrderedAndProject). " +
+      "Global ORDER BY + LIMIT plans TakeOrderedAndProject — per-partition bounded heaps merged on the driver, no global sort.")
 
   /** q28 — rate/ratio aggregates with NULLIF guard (A15;
     * readmission_rate = SUM(flag)*100.0/COUNT(*) README.md:117,
@@ -385,7 +396,8 @@ object AggQueries {
       |FROM orders LEFT JOIN abn ON o_orderkey = l_orderkey
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin),
-    doc = "A15: ratio aggregates, NULLIF divide guard")
+    doc = "A15: ratio aggregates, NULLIF divide guard. " +
+      "Abnormal orderkeys distinct-projected to the bare key before the join; rates are NULLIF-guarded exact-decimal divisions.")
 
   /** q29 — partitioned analytic stats + outlier tagging (W1;
     * AVG/STDDEV OVER (PARTITION BY category) then CASE tag
@@ -434,7 +446,8 @@ object AggQueries {
       |FROM tagged
       |GROUP BY p_type
       |ORDER BY p_type""".stripMargin),
-    doc = "W1: window partition stats + outlier tag")
+    doc = "W1: window partition stats + outlier tag. " +
+      "Per-type window moments via the closed decimal formula — one shuffle on p_type; the stddev threshold is bit-identical across engines.")
 
   /** q30 — UNION ALL quality-check stack (U1; per-table QC rows
     * healthcare-data-pipeline-main.py:436-450,
@@ -462,7 +475,8 @@ object AggQueries {
       |UNION ALL
       |SELECT 'lineitem', COUNT(*), COUNT(DISTINCT l_orderkey) FROM lineitem
       |ORDER BY table_name""".stripMargin),
-    doc = "U1: UNION ALL per-table QC rows")
+    doc = "U1: UNION ALL per-table QC rows. " +
+      "Per-table QC summaries are 1-row aggregates unionByName'd — three scans, three 1-row frames, no cross-table shuffle.")
 
   /** q57 — sliding window frame (W-extension; SURVEY.md §2.5 notes the
     * rebuild exposes rowsBetween frames beyond the reference's unbounded
@@ -501,7 +515,8 @@ object AggQueries {
       |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderdate
       |             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
       |ORDER BY o_orderpriority, o_orderdate""".stripMargin),
-    doc = "window frame: 7-row rolling sum/avg (decimal-exact under the frame)")
+    doc = "window frame: 7-row rolling sum/avg (decimal-exact under the frame). " +
+      "Daily pre-aggregate FIRST (calendar-bounded frame), then the rolling frame runs over <=|days| rows per priority; decimal keeps frame sums associative.")
 
   /** q58 — ROLLUP with GROUPING flags (OLAP subtotal surface the
     * reference's UNION-ALL QC rows approximate by hand,
@@ -534,7 +549,8 @@ object AggQueries {
       |      FROM orders)
       |GROUP BY ROLLUP(yr, o_orderpriority)
       |ORDER BY g_year, g_priority, o_year, priority""".stripMargin),
-    doc = "ROLLUP subtotals + GROUPING flags (sentinel-coalesced keys)")
+    doc = "ROLLUP subtotals + GROUPING flags (sentinel-coalesced keys). " +
+      "ROLLUP plans one Expand + aggregate — the whole subtotal grid in a single pass; sentinel-coalesced keys sort identically in both engines.")
 
   /** q59 — LAG gap analysis: days between a customer's consecutive
     * encounters (the inter-visit interval behind the reference's
@@ -575,7 +591,8 @@ object AggQueries {
       |FROM gaps JOIN customer ON o_custkey = c_custkey
       |WHERE gap_days IS NOT NULL
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
-    doc = "LAG inter-event gaps per customer, aggregated by segment")
+    doc = "LAG inter-event gaps per customer, aggregated by segment. " +
+      "Per-customer lag window — one shuffle on custkey with total order (date, key) so date ties are deterministic.")
 
   /** q62 — NTILE quartiles over per-customer spend. The global ranking
     * runs on the AGGREGATED frame (one row per customer), but a global
@@ -616,7 +633,8 @@ object AggQueries {
       |       CAST(MAX(spend_dec) AS DOUBLE) AS max_spend,
       |       CAST(SUM(spend_dec) AS DOUBLE) / COUNT(*) AS avg_spend
       |FROM q GROUP BY quartile ORDER BY quartile""".stripMargin),
-    doc = "NTILE spend quartiles (ranking on the aggregated frame)")
+    doc = "NTILE spend quartiles (ranking on the aggregated frame). " +
+      "Ranking runs on the per-customer AGGREGATE (not raw orders) with an exact-decimal sort key; documented 100 TB swap: approxQuantile cut-points joined back instead of a global window.")
 
   /** q63 — HyperLogLog distinct-count sketch, built from first
     * principles so BOTH engines compute the identical estimate (their
@@ -685,7 +703,8 @@ object AggQueries {
       |  SELECT o_orderpriority, COUNT(DISTINCT o_custkey) AS exact_distinct
       |  FROM orders GROUP BY 1) x USING (o_orderpriority)
       |ORDER BY o_orderpriority""".stripMargin),
-    doc = "HLL sketch (m=512) from integer-exact register math; oracle-identical")
+    doc = "HLL sketch (m=512) from integer-exact register math; oracle-identical. " +
+      "One narrow map-side-combinable aggregate replaces the COUNT(DISTINCT) expand+double-shuffle.")
 
   /** q64 — PIVOT (long → wide): order counts per priority × status. The
     * value list is EXPLICIT — `pivot(col)` without values runs a
@@ -713,7 +732,8 @@ object AggQueries {
       |       COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
       |       COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p
       |FROM orders GROUP BY 1 ORDER BY o_orderpriority""".stripMargin),
-    doc = "PIVOT long→wide (explicit value list; NULL cells coalesced)")
+    doc = "PIVOT long→wide (explicit value list; NULL cells coalesced). " +
+      "pivot with an explicit value list compiles to CASE-aggregates in ONE pass — no per-status scans; NULL cells coalesced to 0 for cross-engine parity.")
 
   /** q65 — UNPIVOT (wide → long): lineitem's four numeric measures to
     * (metric, value) rows, then per-metric stats — the melt shape every
@@ -744,7 +764,8 @@ object AggQueries {
       |       ${Q.oSum("value")} AS total,
       |       MIN(value) AS min_value, MAX(value) AS max_value
       |FROM long GROUP BY metric ORDER BY metric""".stripMargin),
-    doc = "UNPIVOT wide→long (native melt, one table pass) + per-metric stats")
+    doc = "UNPIVOT wide→long (native melt, one table pass) + per-metric stats. " +
+      "Native unpivot is a single-scan Expand — 4 metric rows per input row with no join or union of scans.")
 
   /** q70 — INTERSECT / EXCEPT (§2.7 extension — the reference has only
     * UNION ALL; cohort retention/churn is the natural set-op use).
@@ -773,7 +794,8 @@ object AggQueries {
       |    EXCEPT SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)) AS n_churned,
       |  (SELECT COUNT(*) FROM (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
       |    EXCEPT SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995)) AS n_acquired""".stripMargin),
-    doc = "INTERSECT/EXCEPT cohort retention + churn (set semantics)")
+    doc = "INTERSECT/EXCEPT cohort retention + churn (set semantics). " +
+      "INTERSECT/EXCEPT are set-semantic sugar over left-semi/anti joins on distincts — same shuffle cost as the explicit form, chosen for plan clarity.")
 
   /** q71 — bounded top-k per group via the custom
     * [[graft.functions.TopKAggregator]] (A14/W2 at scale): partial
@@ -806,7 +828,8 @@ object AggQueries {
       |SELECT o_orderpriority, rank, o_orderkey, o_totalprice
       |FROM r WHERE rank <= 3
       |ORDER BY o_orderpriority, rank""".stripMargin),
-    doc = "custom bounded top-k aggregate ≡ window row_number ≤ k (oracle-proven)")
+    doc = "custom bounded top-k aggregate ≡ window row_number ≤ k (oracle-proven). " +
+      "Custom bounded top-k aggregate: partial buffers ≤ k rows, ObjectHashAggregate, no per-group full sort.")
 
   /** q74 — cohort retention: customers grouped by first-order month,
     * retention measured as distinct actives at +1/+2/+3 months. Month
@@ -851,7 +874,8 @@ object AggQueries {
       |       COUNT(DISTINCT CASE WHEN m = 1 THEN o_custkey END) * 100.0
       |         / COUNT(DISTINCT o_custkey) AS retention_m1_pct
       |FROM c GROUP BY cohort ORDER BY cohort""".stripMargin),
-    doc = "cohort retention by first-order month (+1/+2/+3 active rates)")
+    doc = "cohort retention by first-order month (+1/+2/+3 active rates). " +
+      "Two shuffles total: per-customer first-order aggregate, then the cohort rollup; the join back rides the aggregate's own key (co-partitioned).")
 
   /** q92 — histogram-sketch quantiles (the q63-HLL treatment applied to
     * percentiles): p50/p95 of l_extendedprice per return flag from a
@@ -916,7 +940,8 @@ object AggQueries {
       |       CAST(MIN(CASE WHEN cum * 100 >= 95 * n
       |                     THEN loc + bin * span // 1024 END) AS BIGINT) AS p95_cents
       |FROM cum GROUP BY flag ORDER BY flag""".stripMargin),
-    doc = "A8 scale path: 1024-bin integer histogram quantiles (bounded aggregate, no raw-value shuffle)")
+    doc = "A8 scale path: 1024-bin integer histogram quantiles (bounded aggregate, no raw-value shuffle). " +
+      "Sketch quantiles: one scan into a bounded (flag, bin) map-side-combinable aggregate; cumulative window runs on ≤1024 rows per group — no raw-value shuffle (q21 is the exact baseline).")
 
   val all: Seq[Q] = Seq(q17, q18, q19, q20, q21, q22, q23, q24, q25, q26,
     q27, q28, q29, q30, q57, q58, q59, q62, q63, q64, q65, q70, q71, q74, q92)

@@ -99,7 +99,8 @@ object AndersonDarling {
       |  FROM terms)
       |SELECT n, n_terms, ssum / CAST(n AS DOUBLE) AS a2_kn
       |FROM folded""".stripMargin),
-    doc = "stats: k-sample Anderson-Darling A2kN of quantity across order priorities — exact cumulative cores on the (group, value-domain) grid, tail-weighted ordered fold")
+    doc = "stats: k-sample Anderson-Darling A2kN of quantity across order priorities — exact cumulative cores on the (group, value-domain) grid, tail-weighted ordered fold. " +
+      "One key join + ONE (group, value) aggregate to the <=250-row grid; cumulative windows per group over the 50-value domain; exact decimal cores, <=250-term ordered fold — the corpus never sorts.")
 
   val all: Seq[Q] = Seq(q280)
 }

@@ -148,7 +148,8 @@ object AsofJoin {
       |       COUNT(gap_us) * 1000000 // COUNT(*) AS match_rate_ppm,
       |       CAST(COALESCE(SUM(gap_us), 0) AS BIGINT) AS matched_gap_sum_us
       |FROM m""".stripMargin),
-    doc = "as-of join with staleness tolerance (merge_asof tolerance semantics; gap ledger)")
+    doc = "as-of join with staleness tolerance (merge_asof tolerance semantics; gap ledger). " +
+      "As-of with staleness bound: union + running-last per-user window (linear, no range cross product); 'latest then null-if-stale' applied post-match; gap-sum insensitive to same-instant ties.")
 
   val all: Seq[graft.Q] = Seq(q150)
 }

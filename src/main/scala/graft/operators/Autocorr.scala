@@ -80,7 +80,8 @@ object Autocorr {
       |$arms
       |) ORDER BY lag""".stripMargin
     },
-    doc = "timeseries: daily-order autocorrelation at lags 1/7/30 on a complete calendar grid — exact moments, one IEEE r")
+    doc = "timeseries: daily-order autocorrelation at lags 1/7/30 on a complete calendar grid — exact moments, one IEEE r. " +
+      "Corpus touched by exactly one day aggregate; the complete calendar grid (sequence + zero-fill) and all lag windows run on the calendar-bounded frame.")
 
   val all: Seq[Q] = Seq(q176)
 }

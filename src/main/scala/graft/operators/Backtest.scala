@@ -90,7 +90,8 @@ object Backtest {
       |       CAST(sae * nd AS DOUBLE) / CAST(sad * n_forecasts AS DOUBLE) AS mase,
       |       100e0 * ssm / CAST(n_forecasts AS DOUBLE) AS smape_pct
       |FROM fagg, scale""".stripMargin),
-    doc = "forecast-eval: rolling-origin seasonal-naive (lag-7) backtest of daily revenue — exact-integer MASE/WAPE/MAE plus ordered-fold sMAPE")
+    doc = "forecast-eval: rolling-origin seasonal-naive (lag-7) backtest of daily revenue — exact-integer MASE/WAPE/MAE plus ordered-fold sMAPE. " +
+      "Backtest: daily cells behind a Barrier reused by the lag-7 self-equi-join AND the naive-scale lag window; integer metric sums are map-side-combinable, sMAPE is one ordered fold; 1 row out.")
 
   val all: Seq[Q] = Seq(q236)
 }

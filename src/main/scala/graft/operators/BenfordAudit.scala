@@ -61,7 +61,8 @@ object BenfordAudit {
       |       ${benfordCaseSql("digit")} AS benford_ppm,
       |       ABS((n * 1000000) // t.total - ${benfordCaseSql("digit")}) AS dev_ppm
       |FROM digits, t ORDER BY digit""".stripMargin),
-    doc = "audit: Benford first-digit conformance of monetary amounts, integer-ppm exact")
+    doc = "audit: Benford first-digit conformance of monetary amounts, integer-ppm exact. " +
+      "First digit extracted per-row from exact decimal cents; the digit histogram is a 9-row map-side-combined aggregate; conformance stats are epilogue on 9 rows.")
 
   val all: Seq[Q] = Seq(q156)
 }

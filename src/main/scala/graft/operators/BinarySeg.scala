@@ -85,7 +85,8 @@ object BinarySeg {
       |         - CAST(st AS DOUBLE) / CAST(t AS DOUBLE) AS shift_cents,
       |       score AS between_ss
       |FROM scored ORDER BY score DESC, x LIMIT 1""".stripMargin),
-    doc = "stats: binary-segmentation changepoint for a daily-revenue mean shift — exact integer prefix sums, mirrored IEEE between-SS score, earliest-split tie-break")
+    doc = "stats: binary-segmentation changepoint for a daily-revenue mean shift — exact integer prefix sums, mirrored IEEE between-SS score, earliest-split tie-break. " +
+      "BinSeg: daily cells behind a Barrier; INTEGER prefix-sum window (segment-tree-safe, unlike doubles) + per-row IEEE score on the span-days frame; argmax via TakeOrdered(1).")
 
   val all: Seq[Q] = Seq(q245)
 }

@@ -150,7 +150,8 @@ object BradleyTerry {
         |ORDER BY rank""".stripMargin
       sb.toString
     },
-    doc = s"stats: Bradley-Terry segment strengths from monthly pairwise revenue wins ($K MM rounds, ordered-fold reductions) — preference ranking on a ratio scale")
+    doc = s"stats: Bradley-Terry segment strengths from monthly pairwise revenue wins ($K MM rounds, ordered-fold reductions) — preference ranking on a ratio scale. " +
+      "Bradley-Terry: corpus-sized work is ONE aggregate to |months|x5 cells; the pairwise record is a within-block self-join on that bounded frame, and the 8 MM rounds are driver-side IEEE folds over the provably <=k(k-1)-row pair table, replicating the plan's ordered j/seg-ascending reductions exactly.")
 
   val all: Seq[Q] = Seq(q241)
 }

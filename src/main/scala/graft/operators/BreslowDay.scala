@@ -113,7 +113,8 @@ object BreslowDay {
       |         list_reduce(list(term ORDER BY seg), (x, y) -> x + y) AS x2
       |  FROM scored)
       |SELECT k, k - 1 AS df, or_mh, x2 AS x2_breslow_day FROM folded""".stripMargin),
-    doc = "stats: Breslow-Day homogeneity of per-segment odds ratios around the CMH pooled psi — quadratic-root fitted cells, harmonic-mean variance, ordered stratum fold")
+    doc = "stats: Breslow-Day homogeneity of per-segment odds ratios around the CMH pooled psi — quadratic-root fitted cells, harmonic-mean variance, ordered stratum fold. " +
+      "q217's shape exactly: broadcast dim join, one conditional aggregate to the 5-stratum frame; quadratic-root fitted cells and the X2 fold are constant-size double work on 5 rows.")
 
   val all: Seq[Q] = Seq(q281)
 }

@@ -91,7 +91,8 @@ object Clv {
       |       mm AS margin_cents_per_year, r AS retention,
       |       mm * r / NULLIF(1e0 + CAST($DiscountPct AS DOUBLE) / 100e0 - r, 0e0) AS clv_cents
       |FROM parts ORDER BY c_mktsegment""".stripMargin),
-    doc = "economics: Gupta-Lehmann geometric-retention CLV per segment — exact (customer,year) activity grid, pooled YoY retention semi-join, m*r/(1+d-r) closed form at d=10%")
+    doc = "economics: Gupta-Lehmann geometric-retention CLV per segment — exact (customer,year) activity grid, pooled YoY retention semi-join, m*r/(1+d-r) closed form at d=10%. " +
+      "Orders collapse map-side to the (customer, year) grid — the only corpus-sized aggregate; the year-shift retention semi-join runs at grid (dimension) scale; 5-row segment epilogue.")
 
   val all: Seq[Q] = Seq(q279)
 }

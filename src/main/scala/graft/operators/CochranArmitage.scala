@@ -75,7 +75,8 @@ object CochranArmitage {
       |             / CAST(n AS DOUBLE)), 0e0) AS z_ca
       |  FROM core)
       |SELECT k, n, pos, z_ca, z_ca * z_ca AS chi2_trend FROM z""".stripMargin),
-    doc = "stats: Cochran-Armitage dose-response trend of return rate across the discount ladder — exact integer numerator/variance cores cleared of 1/N, one sqrt epilogue")
+    doc = "stats: Cochran-Armitage dose-response trend of return rate across the discount ladder — exact integer numerator/variance cores cleared of 1/N, one sqrt epilogue. " +
+      "ONE map-side-combinable aggregate compresses the scan to the 11-level dose frame; numerator/variance cores cleared of 1/N stay exact decimals; constant-size epilogue with one sqrt.")
 
   val all: Seq[Q] = Seq(q271)
 }

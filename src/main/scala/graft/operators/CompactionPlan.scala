@@ -87,7 +87,8 @@ object CompactionPlan {
       |       100e0 * CAST(t.n_files - f.bins AS DOUBLE)
       |         / CAST(t.n_files AS DOUBLE) AS files_saved_pct
       |FROM tot t, fin f""".stripMargin),
-    doc = "engine: next-fit-decreasing compaction plan over the orderkey-range file ledger — exact integer fold (recursive-CTE oracle), bins/fill/savings report")
+    doc = "engine: next-fit-decreasing compaction plan over the orderkey-range file ledger — exact integer fold (recursive-CTE oracle), bins/fill/savings report. " +
+      "Compaction: corpus collapses map-side to the (fid, sz) file ledger; the NFD fold is one ordered `aggregate` over that metadata-sized array (exact integer bin state); 1 row out.")
 
   val all: Seq[Q] = Seq(q248)
 }

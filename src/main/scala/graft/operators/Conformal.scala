@@ -94,7 +94,8 @@ object Conformal {
       |                       THEN 1 END) AS DOUBLE) / COUNT(*) AS coverage
       |FROM tst t JOIN model m USING (seg) JOIN qhat q USING (seg)
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = s"stats: split-conformal $CovPct% interval calibration per segment — scaled-integer residual ranks, measured held-out coverage")
+    doc = s"stats: split-conformal $CovPct% interval calibration per segment — scaled-integer residual ranks, measured held-out coverage. " +
+      "Conformal: residuals ride exact scaled integers |n*y - S| so rank selection and coverage are integer-only; the rank pass is one per-segment window over the calibration half (q21 exactness-baseline stance); the test pass is map-side against a 5-row broadcast.")
 
   val all: Seq[Q] = Seq(q214)
 }

@@ -99,7 +99,8 @@ object Constraints {
       |  FROM lineitem WHERE NOT EXISTS (
       |    SELECT 1 FROM orders WHERE o_orderkey = l_orderkey))
       |ORDER BY check_name""".stripMargin),
-    doc = "quality: declarative constraint suite (uniqueness, FK orphans, domains, nulls) — one aggregate pass per table")
+    doc = "quality: declarative constraint suite (uniqueness, FK orphans, domains, nulls) — one aggregate pass per table. " +
+      "Each constraint check is a 1-row violation-count aggregate (referential checks are anti-joins projected to bare keys); the suite unions |checks| single-row frames.")
 
   val all: Seq[Q] = Seq(q148)
 }

@@ -57,7 +57,8 @@ object ControlChart {
       |           (1.0 - CAST(tr AS DOUBLE) / CAST(tn AS DOUBLE)) /
       |           CAST(n AS DOUBLE)) AS out_of_control
       |FROM m, c ORDER BY month""".stripMargin),
-    doc = "SPC: monthly return-rate p-chart with per-month 3-sigma binomial limits")
+    doc = "SPC: monthly return-rate p-chart with per-month 3-sigma binomial limits. " +
+      "Monthly (n, returns) cells collapse map-side (calendar-bounded); control limits are per-row IEEE epilogue on the month frame.")
 
   val all: Seq[Q] = Seq(q168)
 }

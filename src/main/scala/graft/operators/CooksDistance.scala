@@ -128,7 +128,8 @@ object CooksDistance {
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY cook_d DESC, x) AS INT) AS pos,
       |       x AS day_index, e AS residual_cents, h AS leverage, cook_d
       |FROM scored ORDER BY cook_d DESC, x LIMIT 10""".stripMargin),
-    doc = "stats: Cook's distance top-10 influential days for the daily-revenue OLS trend — exact-moment leverage, ordered-fold SSE, mirrored IEEE influence scores")
+    doc = "stats: Cook's distance top-10 influential days for the daily-revenue OLS trend — exact-moment leverage, ordered-fold SSE, mirrored IEEE influence scores. " +
+      "Cook's D: daily cells behind a Barrier reused by moments, residuals, and the ordered-fold SSE; per-day influence is pure map arithmetic on broadcast 1-row stats; top-10 via TakeOrdered.")
 
   val all: Seq[Q] = Seq(q239)
 }

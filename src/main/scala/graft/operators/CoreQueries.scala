@@ -75,7 +75,8 @@ object CoreQueries {
       |GROUP BY o_orderpriority
       |HAVING COUNT(*) >= 30
       |ORDER BY readmission_rate DESC, o_orderpriority""".stripMargin),
-    doc = "J2+A5+A6+A9+A15+W3: window-based readmission (1 shuffle, no self-join)")
+    doc = "J2+A5+A6+A9+A15+W3: window-based readmission (1 shuffle, no self-join). " +
+      "One shuffle (patient key) + window; no self-join pair explosion. HAVING floor applied post-agg.")
 
   /** q02 — star join with broadcast dims (J1;
     * healthcare-sql-analytics.sql:185-189 fact⋈dim⋈dim⋈dim).
@@ -125,7 +126,8 @@ object CoreQueries {
       |  AND o_orderdate <  TIMESTAMP '1998-01-01'
       |GROUP BY r_name, n_name
       |ORDER BY r_name, n_name""".stripMargin),
-    doc = "J1: star join, broadcast dims, pushed-down date filter")
+    doc = "J1: star join, broadcast dims, pushed-down date filter. " +
+      "All three dims BroadcastHashJoin; the only Exchange is lineitem⋈orders. Date filter in PushedFilters; lineitem scan pruned to 3 columns.")
 
   /** q03 — equality + range + boolean-composite filters (P2/P3/P8;
     * healthcare-api-main.py:248-259,310-314). Predicates land in
@@ -152,7 +154,8 @@ object CoreQueries {
       |  AND o_orderdate >= TIMESTAMP '1997-01-01'
       |  AND o_orderdate <  TIMESTAMP '1997-07-01'
       |ORDER BY o_orderkey""".stripMargin),
-    doc = "P2+P3+P8: pushed-down eq/range/AND predicates")
+    doc = "P2+P3+P8: pushed-down eq/range/AND predicates. " +
+      "All four predicates (eq, between, two date bounds) land in parquet PushedFilters; scan pruned to the 4 referenced columns; the count is a map-side-combinable aggregate — one narrow shuffle.")
 
   /** q04 — IN-list filter (P4; healthcare-api-main.py:262-265, abnormal
     * flags IN ('H','HH','L','LL') healthcare-sql-analytics.sql:223).
@@ -173,7 +176,8 @@ object CoreQueries {
       |WHERE l_returnflag IN ('R','A') AND l_linenumber IN (1,2,3)
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin),
-    doc = "P4: IN-list predicates")
+    doc = "P4: IN-list predicates. " +
+      "IN-lists push to the scan as In() filters; low-cardinality flag groupBy is map-side combined — linear scan, one tiny shuffle.")
 
   /** q05 — LIKE prefix/contains predicates (P5; ICD-10 prefix matching
     * healthcare-sql-analytics.sql:220,245,374-384).
@@ -194,7 +198,8 @@ object CoreQueries {
       |WHERE p_type LIKE 'S%' OR p_name LIKE '%widget%'
       |GROUP BY p_type
       |ORDER BY p_type""".stripMargin),
-    doc = "P5: LIKE prefix + contains")
+    doc = "P5: LIKE prefix + contains. " +
+      "Prefix LIKE pushes as StringStartsWith; the %infix% pattern evaluates inside the scan stage's codegen filter; per-type aggregate map-side combined.")
 
   /** q06 — NULL predicates + NULLIF/COALESCE (P6/F7;
     * healthcare-sql-analytics.sql:452,764-768 null-counting QC;
@@ -223,7 +228,8 @@ object CoreQueries {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin),
-    doc = "P6+F7: IS NULL counting, nullif/coalesce")
+    doc = "P6+F7: IS NULL counting, nullif/coalesce. " +
+      "nullif + every conditional NULL counter fuse into ONE map-side-combinable aggregate pass — no per-check scans.")
 
   /** q07 — searched CASE WHEN bucketing (P7; age-group/risk-tier CASE
     * ladders healthcare-sql-analytics.sql:151-155,544-554).
@@ -251,7 +257,8 @@ object CoreQueries {
       |FROM orders
       |GROUP BY 1
       |ORDER BY charge_tier""".stripMargin),
-    doc = "P7: searched CASE bucketing")
+    doc = "P7: searched CASE bucketing. " +
+      "CASE ladder is a codegen'd projection feeding a map-side-combined bucket aggregate — one pass, shuffle carries |buckets| rows per partition.")
 
   /** q08 — dict/map recode with Unknown default (P9; gender recode
     * healthcare-data-pipeline-main.py:221-223 `map + fillna('Unknown')`).
@@ -279,7 +286,8 @@ object CoreQueries {
       |FROM customer
       |GROUP BY 1
       |ORDER BY segment_label""".stripMargin),
-    doc = "P9: map recode + Unknown default")
+    doc = "P9: map recode + Unknown default. " +
+      "Map-literal recode is a typedLit lookup inside whole-stage codegen (no join, no broadcast); coalesce supplies the default; one aggregate pass.")
 
   /** q09 — PII masking projection (P10/F9/F10;
     * healthcare-data-pipeline-main.py:182-197: MRN→SHA-256, others →
@@ -305,7 +313,8 @@ object CoreQueries {
       |FROM customer
       |WHERE c_custkey < 100
       |ORDER BY c_custkey""".stripMargin),
-    doc = "P10+F10: SHA-256 PII hash, NULL-preserving mask")
+    doc = "P10+F10: SHA-256 PII hash, NULL-preserving mask. " +
+      "sha2 + conditional masking are per-row codegen expressions; the key filter is in PushedFilters; no shuffle before the tiny output sort.")
 
   /** q10 — left outer join with pre-join ON-clause filter (J3;
     * healthcare-data-pipeline-main.py:283-285: encounters LEFT JOIN
@@ -340,7 +349,8 @@ object CoreQueries {
       |FROM orders LEFT JOIN abnormal ON o_orderkey = l_orderkey
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin),
-    doc = "J3: left join, ON-clause filter applied pre-join")
+    doc = "J3: left join, ON-clause filter applied pre-join. " +
+      "Abnormal side pre-aggregated to ONE row per orderkey before the left join — no row explosion; AQE broadcasts the shrunken build side when small.")
 
   /** q11 — semi-join / EXISTS (J4; patients with ≥1 diabetes encounter
     * healthcare-sql-analytics.sql:618-624). left_semi: no right columns,
@@ -363,7 +373,8 @@ object CoreQueries {
       |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "J4: left_semi join ≡ EXISTS")
+    doc = "J4: left_semi join ≡ EXISTS. " +
+      "EXISTS compiles to LEFT SEMI: short-circuits on first match, never duplicates probe rows; the urgent filter is applied (and pushed) before the join.")
 
   /** q12 — anti-join / NOT EXISTS (J5; audit access with no
     * relationship healthcare-sql-analytics.sql:749-754).
@@ -385,7 +396,8 @@ object CoreQueries {
       |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin),
-    doc = "J5: left_anti join ≡ NOT EXISTS")
+    doc = "J5: left_anti join ≡ NOT EXISTS. " +
+      "NOT EXISTS compiles to LEFT ANTI; the orders side is projected to the join key alone before shuffling — narrowest possible build input.")
 
   /** q13 — decorrelated scalar-subquery joins (J6; per-row correlated
     * aggregates healthcare-sql-analytics.sql:173-184,400-416 — the
@@ -417,7 +429,8 @@ object CoreQueries {
       |       COALESCE(total_charges, 0.0) AS total_charges
       |FROM customer LEFT JOIN per_cust ON c_custkey = o_custkey
       |ORDER BY c_custkey""".stripMargin),
-    doc = "J6: correlated scalar subqueries decorrelated to pre-agg + join")
+    doc = "J6: correlated scalar subqueries decorrelated to pre-agg + join. " +
+      "Correlated scalar subquery decorrelated by construction: one per-key pre-aggregate + one equi-join — linear, shuffle-bounded, no per-row re-execution.")
 
   /** q14 — latest-per-key (W2/J6; most recent A1C
     * healthcare-sql-analytics.sql:592-598 `ORDER BY date DESC LIMIT 1`
@@ -444,7 +457,8 @@ object CoreQueries {
       |        ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders)
       |WHERE rn = 1
       |ORDER BY o_custkey""".stripMargin),
-    doc = "W2: latest-per-key via row_number window")
+    doc = "W2: latest-per-key via row_number window. " +
+      "Latest-per-key via row_number over a per-key window: ONE shuffle on the key with a total order (date, key) tiebreak — no max+join-back double pass.")
 
   /** q15 — theta/inequality condition via min-aggregate (J7; "blood
     * culture before first antibiotic" healthcare-sql-analytics.sql:241-256
@@ -480,7 +494,8 @@ object CoreQueries {
       |FROM orders JOIN first_ship ON o_orderkey = l_orderkey
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin),
-    doc = "J7: inequality condition via min-agg + join + filter")
+    doc = "J7: inequality condition via min-agg + join + filter. " +
+      "Theta condition rewritten MIN-per-key + equi-join + post-filter — Catalyst never sees an inequality-only join, so no BroadcastNestedLoop.")
 
   /** q16 — benchmark join, agg-to-agg (J8; provider metrics ⋈ specialty
     * benchmarks healthcare-sql-analytics.sql:362-363). Both sides are
@@ -527,7 +542,8 @@ object CoreQueries {
       |       revenue / nation_avg_rev AS vs_benchmark
       |FROM per_supplier JOIN benchmark ON per_supplier.n_name = benchmark.n_name
       |ORDER BY per_supplier.n_name, s_name""".stripMargin),
-    doc = "J8: agg-to-agg benchmark join")
+    doc = "J8: agg-to-agg benchmark join. " +
+      "Agg-to-agg benchmark join: both sides collapse to group-level frames BEFORE joining — the join touches |groups| rows however large the corpus.")
 
   /** q56 — AS-OF JOIN: for each purchase event, the latest click by the
     * same user at-or-before the purchase (last-touch attribution; the
@@ -574,7 +590,8 @@ object CoreQueries {
       |FROM purchases p ASOF LEFT JOIN clicks c
       |  ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts
       |ORDER BY p.purchase_id""".stripMargin),
-    doc = "as-of join (union + running-last window; no pair explosion)")
+    doc = "as-of join (union + running-last window; no pair explosion). " +
+      "Union + running-last window: linear as-of, no range cross product.")
 
   /** q60 — salted skew join ([[SkewJoin]]): lineitem ⋈ supplier on
     * suppkey, the big side's rows deterministically split 8 ways so a
@@ -602,7 +619,8 @@ object CoreQueries {
       |       ${Q.oSum("l_extendedprice")} AS revenue
       |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
       |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
-    doc = "salted skew join (8-way deterministic salt; ≡ plain join)")
+    doc = "salted skew join (8-way deterministic salt; ≡ plain join). " +
+      "Join key extended with deterministic __salt; hot supplier keys spread 8 ways.")
 
   /** q75 — fuzzy record linkage (the patient-matching problem at the
     * heart of healthcare MDM; the reference hashes MRNs but never
@@ -636,7 +654,8 @@ object CoreQueries {
       |       CAST(COUNT(CASE WHEN d <= 1 THEN 1 END) AS BIGINT) AS n_matches,
       |       CAST(SUM(d) AS DOUBLE) / COUNT(*) AS avg_distance
       |FROM p""".stripMargin),
-    doc = "fuzzy record linkage: prefix-blocked candidates + Levenshtein verify")
+    doc = "fuzzy record linkage: prefix-blocked candidates + Levenshtein verify. " +
+      "Blocking key bounds pair generation (<=100 names/block); the Jaro-Winkler kernel is a codegen'd Catalyst expression — no UDF boundary in the pair loop.")
 
   val all: Seq[Q] = Seq(q01, q02, q03, q04, q05, q06, q07, q08,
     q09, q10, q11, q12, q13, q14, q15, q16, q56, q60, q75)

@@ -102,7 +102,8 @@ object Croston {
       |       rec.z / rec.p AS croston_cu_per_month,
       |       0.75e0 * (rec.z / rec.p) AS sba_cu_per_month
       |FROM rec, meta WHERE rec.rn = meta.n_events""".stripMargin),
-    doc = "timeseries: Croston + Syntetos-Boylan intermittent-demand forecast for the slow-mover part slice (partkey = 1 mod 997) — two-state ordered fold over demand events, exact gap integers")
+    doc = "timeseries: Croston + Syntetos-Boylan intermittent-demand forecast for the slow-mover part slice (partkey = 1 mod 997) — two-state ordered fold over demand events, exact gap integers. " +
+      "Croston: the mod-997 filtered scan collapses map-side to <=|months| demand cells; exact gaps precompute before the two-state fold; 1 row out.")
 
   val all: Seq[Q] = Seq(q257)
 }

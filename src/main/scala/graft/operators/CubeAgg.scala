@@ -44,7 +44,8 @@ object CubeAgg {
       |FROM lineitem
       |GROUP BY CUBE (l_returnflag, l_linestatus)
       |ORDER BY gid, returnflag, linestatus""".stripMargin),
-    doc = "OLAP: CUBE all-margins aggregate with engine-matched grouping ids (completes ROLLUP/PIVOT/UNPIVOT)")
+    doc = "OLAP: CUBE all-margins aggregate with engine-matched grouping ids (completes ROLLUP/PIVOT/UNPIVOT). " +
+      "CUBE plans one Expand + aggregate — all 2^k margins in a single pass; grouping_id disambiguates sentinel rows across engines.")
 
   /** q187 — explicit GROUPING SETS: the general form CUBE/ROLLUP are
     * shorthands of, for when the report wants a HAND-PICKED margin
@@ -82,7 +83,8 @@ object CubeAgg {
       |GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority),
       |                        (c_mktsegment), (o_orderpriority), ())
       |ORDER BY gid, segment, priority""".stripMargin),
-    doc = "OLAP: explicit GROUPING SETS margins over a star join (the general form behind CUBE/ROLLUP)")
+    doc = "OLAP: explicit GROUPING SETS margins over a star join (the general form behind CUBE/ROLLUP). " +
+      "Explicit GROUPING SETS: customer dim broadcasts; Spark's Expand feeds all four declared sets from ONE pass over the join output — no per-margin rescans; output is |sets' domains| rows.")
 
   val all: Seq[Q] = Seq(q165, q187)
 }

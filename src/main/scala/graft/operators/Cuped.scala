@@ -109,7 +109,8 @@ object Cuped {
       |         * (1e0 - num * num / NULLIF(denx * deny, 0e0)) AS var_adj,
       |       num * num / NULLIF(denx * deny, 0e0) AS var_reduction
       |FROM parts ORDER BY c_mktsegment""".stripMargin),
-    doc = "experimentation: CUPED pre-period variance reduction per segment — theta = cov/var from exact decimal moments, variance shrinks by exactly rho^2, NULLIF-guarded degenerate covariates")
+    doc = "experimentation: CUPED pre-period variance reduction per segment — theta = cov/var from exact decimal moments, variance shrinks by exactly rho^2, NULLIF-guarded degenerate covariates. " +
+      "Orders collapse map-side to per-(customer, year) cents on the natural key; customer dim broadcast; five decimal moment sums per segment then a 5-row closed-form epilogue — no corpus window, degenerate covariates NULLIF.")
 
   val all: Seq[Q] = Seq(q266)
 }

@@ -81,7 +81,8 @@ object Cusum {
       |       CAST(p AS DOUBLE) / CAST(i * 100 AS DOUBLE) AS mean_before,
       |       CAST(t - p AS DOUBLE) / CAST((nd - i) * 100 AS DOUBLE) AS mean_after
       |FROM cp""".stripMargin),
-    doc = "timeseries: CUSUM changepoint (argmax |n·S_i| in exact scaled cents-longs) + before/after level means")
+    doc = "timeseries: CUSUM changepoint (argmax |n·S_i| in exact scaled cents-longs) + before/after level means. " +
+      "CUSUM changepoint: corpus -> |days| rows in one map-side-combinable cents aggregate; prefix sum, scaled-integer argmax and split means all run on the tiny daily frame (single-partition window over |days|, never the corpus).")
 
   val all: Seq[Q] = Seq(q191)
 }

@@ -133,7 +133,8 @@ object DataLayout {
       |FROM z GROUP BY zcell
       |ORDER BY n_rows DESC, zcell LIMIT 10""".stripMargin
     },
-    doc = "layout: Morton z-cell profile of lineitem with per-tile bounding boxes (codegen'd bit interleave)")
+    doc = "layout: Morton z-cell profile of lineitem with per-tile bounding boxes (codegen'd bit interleave). " +
+      "Z-order cells: key-range stats are a 1-row broadcast; range normalization + 32-term bit interleave is one codegen'd map expression; ONE map-side-combinable aggregate to <= 4096 tiles; TakeOrdered(10).")
 
   val all: Seq[Q] = Seq(q141)
 }

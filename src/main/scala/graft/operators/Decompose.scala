@@ -93,7 +93,8 @@ object Decompose {
       |       sd - msum / CAST(k AS DOUBLE) AS seasonal_index_cents
       |FROM sm CROSS JOIN tot
       |ORDER BY mon""".stripMargin),
-    doc = "timeseries: classical additive seasonal decomposition of monthly revenue — x24-scaled exact centered MA-12 trend, exact-long detrend, zero-sum month indices via ordered 12-term fold")
+    doc = "timeseries: classical additive seasonal decomposition of monthly revenue — x24-scaled exact centered MA-12 trend, exact-long detrend, zero-sum month indices via ordered 12-term fold. " +
+      "Corpus collapses to the |months| frame in ONE aggregate; MA-12/lag/lead windows run on that calendar-bounded frame (~84 rows, a century is 1200); detrend stays exact x24-scaled longs; 12-term normalization folds in month order.")
 
   val all: Seq[Q] = Seq(q273)
 }

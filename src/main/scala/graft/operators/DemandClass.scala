@@ -79,7 +79,8 @@ object DemandClass {
       |            WHEN (CAST(nd AS HUGEINT) * szz - sz * sz) * 100 <= 49 * sz * sz
       |            THEN 'intermittent' ELSE 'lumpy' END AS quadrant
       |FROM agg ORDER BY p_brand""".stripMargin),
-    doc = "inventory: Syntetos-Boylan-Croston forecastability quadrants (ADI 1.32 x CV^2 0.49) per brand — exact integer cutoff cross-multiplications, one (brand,day) aggregate")
+    doc = "inventory: Syntetos-Boylan-Croston forecastability quadrants (ADI 1.32 x CV^2 0.49) per brand — exact integer cutoff cross-multiplications, one (brand,day) aggregate. " +
+      "Part dim broadcast; ONE (brand, day) map-side-combinable aggregate; all ADI/CV2 classification algebra on the 25-row brand frame with integer cross-multiplied cutoffs — no window, no corpus sort.")
 
   val all: Seq[Q] = Seq(q278)
 }

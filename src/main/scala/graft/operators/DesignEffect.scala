@@ -88,7 +88,8 @@ object DesignEffect {
       |       var_total - var_within AS var_between,
       |       var_within / var_total AS deff
       |FROM parts""".stripMargin),
-    doc = "stats: Kish design effect of segment stratification for mean order value — within/between variance split from exact moments, ordered left-fold")
+    doc = "stats: Kish design effect of segment stratification for mean order value — within/between variance split from exact moments, ordered left-fold. " +
+      "Design effect: one broadcast dim join + per-stratum moment aggregate; within-variance cross-group sum via ordered left-fold on the 5-row frame; mirrored IEEE ratios.")
 
   val all: Seq[Q] = Seq(q228)
 }

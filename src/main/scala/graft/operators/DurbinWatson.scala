@@ -109,7 +109,8 @@ object DurbinWatson {
       |SELECT n_days, slope AS slope_cents_per_day, intercept AS intercept_cents,
       |       nm / den AS dw, 1e0 - (nm / den) / 2e0 AS rho_lag1
       |FROM f2""".stripMargin),
-    doc = "stats: Durbin-Watson serial-correlation test on daily-revenue OLS residuals — exact-moment fit, ordered left-fold residual sums, implied lag-1 rho")
+    doc = "stats: Durbin-Watson serial-correlation test on daily-revenue OLS residuals — exact-moment fit, ordered left-fold residual sums, implied lag-1 rho. " +
+      "DW: corpus collapses map-side to calendar-bounded daily cells behind a Barrier; q199's exact-moment fit broadcasts back; the lag window + two ordered left-folds run on the span-days frame; 1 row out.")
 
   val all: Seq[Q] = Seq(q235)
 }

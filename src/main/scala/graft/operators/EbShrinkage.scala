@@ -77,7 +77,8 @@ object EbShrinkage {
       |       CAST(raw_rank AS INT) AS raw_rank,
       |       CAST(shrunk_rank AS INT) AS shrunk_rank
       |FROM ranked WHERE shrunk_rank <= 10 ORDER BY shrunk_rank""".stripMargin),
-    doc = "stats: empirical-Bayes shrunk return-rate leaderboard (beta-binomial shrinkage toward the corpus rate, integer ppm, rank-inversion report)")
+    doc = "stats: empirical-Bayes shrunk return-rate leaderboard (beta-binomial shrinkage toward the corpus rate, integer ppm, rank-inversion report). " +
+      "EB shrinkage: one map-side per-part aggregate; global prior is a 1-row broadcast; both rank windows run on the PART-bounded frame; integer-ppm rates (a*N products ride decimal -- N^2 > int64 at scale).")
 
   val all: Seq[Q] = Seq(q215)
 }

@@ -82,7 +82,8 @@ object Elasticity {
       |SELECT k, num / denx AS elasticity,
       |       num * num / (denx * deny) AS r2
       |FROM parts""".stripMargin),
-    doc = "economics: discount elasticity of demand — log2-log2 OLS of mean quantity on price retention over the 11-level discount ladder (quantized-log2, exact moments)")
+    doc = "economics: discount elasticity of demand — log2-log2 OLS of mean quantity on price retention over the 11-level discount ladder (quantized-log2, exact moments). " +
+      "Elasticity: one map-side aggregate onto the 11-row discount frame; both logs ride the quantized-log2 ladder; the OLS epilogue is a 1-row select of exact decimal moments.")
 
   val all: Seq[Q] = Seq(q221)
 }

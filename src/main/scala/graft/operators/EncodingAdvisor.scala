@@ -99,7 +99,8 @@ object EncodingAdvisor {
       |       CAST(n_runs AS DOUBLE) / CAST(n_rows AS DOUBLE) AS run_ratio,
       |       CAST(n_runs AS DOUBLE) / CAST(ndv AS DOUBLE) AS sort_gain_x
       |FROM runs ORDER BY column_name""".stripMargin),
-    doc = "engine: RLE + dictionary encoding advisor for four lineitem columns — chunk-local exact run counts at the current layout, exact NDV/dict bits, sort-gain signal")
+    doc = "engine: RLE + dictionary encoding advisor for four lineitem columns — chunk-local exact run counts at the current layout, exact NDV/dict bits, sort-gain signal. " +
+      "Both candidate layouts collapse map-side to chunk-granularity (fid, runs, distinct) stats; RLE/dict advice is epilogue on the metadata-sized frame — at 100 TB a stats-pass-then-metadata query.")
 
   val all: Seq[Q] = Seq(q260)
 }

@@ -75,7 +75,8 @@ object ExpSmoothing {
       |FROM sm WHERE rn <= 15
       |ORDER BY o_orderpriority, day""".stripMargin
     },
-    doc = "timeseries: 16-tap dyadic EWMA (alpha=1/2) of daily revenue — exact-integer recency smoothing")
+    doc = "timeseries: 16-tap dyadic EWMA (alpha=1/2) of daily revenue — exact-integer recency smoothing. " +
+      "Daily pre-aggregate first (calendar-bounded); the EWMA fold runs as a dyadic-kernel expression over the <=|days| frame per group — corpus contributes one map-side pass.")
 
   val all: Seq[Q] = Seq(q159)
 }

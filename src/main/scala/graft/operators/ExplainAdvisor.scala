@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, BinaryComparison, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias, Filter => LFilter, Join => LJoin}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -60,8 +60,8 @@ object ExplainAdvisor {
     * artifact): the registry join sites whose physical `numOutputRows`
     * metric is unattributable BY DESIGN, each with the verified
     * mechanism (probed with [[graft.AdvisorSweep]] +
-    * `graft.tools.PlanSnap` at sf0.001). One source of truth shared by
-    * [[graft.PlanDump]] (the PLANS.md rendering) and
+    * `graft.Probe plans` at sf0.001). One source of truth shared by
+    * [[graft.Probe]] (the PLANS.md rendering) and
     * [[graft.AdvisorSweep]] (the machine-readable `exemptions` block
     * in ADVISOR_r*.json), so prose and artifact cannot drift. Each
     * refusal is deliberate — the alternatives would fabricate a
@@ -72,7 +72,7 @@ object ExplainAdvisor {
     ("q12_anti_join_orphans", "c_custkey = o_custkey [LeftAnti]",
       "AQE empty-relation elision: every customer matches, the anti-join " +
         "output is empty, and the EXECUTED plan is literally `EmptyRelation` " +
-        "(verified via PlanSnap) — no physical join node exists to carry " +
+        "(verified via `Probe plans`) — no physical join node exists to carry " +
         "a metric."),
     ("q45_minhash_lsh_neardup", "band_id = band_id [Inner]",
       "Hot-path band join of the skew-split pair generator: its input (hot " +
@@ -203,6 +203,17 @@ object ExplainAdvisor {
 
   // ---- cheap plan stats (no sketches) --------------------------------
 
+  /** Execute `df`'s OWN plan and return its QueryExecution, whose
+    * `executedPlan` is then AQE-final (`isFinalPlan=true`) and carries
+    * this run's metrics. collect() runs this QueryExecution; count(),
+    * foreach and rdd build a separate one, which would leave the plan
+    * read afterwards tentative and its metrics empty.
+    */
+  def executed(df: DataFrame): QueryExecution = {
+    df.collect()
+    df.queryExecution
+  }
+
   /** Execute `query` and return (shuffle-exchange count, shuffle
     * records written) from the AQE-finalized physical plan — the
     * advisor's "shuffle context" row without the sketch passes.
@@ -214,9 +225,7 @@ object ExplainAdvisor {
   def exchangeStats(spark: SparkSession, dir: String,
                     query: (SparkSession, String) => DataFrame)
       : (Int, Long) = {
-    val df = query(spark, dir)
-    df.collect()
-    val physical = flatten(df.queryExecution.executedPlan)
+    val physical = flatten(executed(query(spark, dir)).executedPlan)
     val shuffles = physical.collect { case s: ShuffleExchangeExec => s }
     val records = shuffles
       .flatMap(_.metrics.get("shuffleRecordsWritten").map(_.value)).sum
@@ -227,13 +236,9 @@ object ExplainAdvisor {
 
   def advise(spark: SparkSession, dir: String,
              query: (SparkSession, String) => DataFrame): Seq[Advice] = {
-    val df = query(spark, dir)
-    // collect() executes THIS QueryExecution's plan (foreach/rdd paths
-    // build a separate deserializing QueryExecution whose metrics the
-    // plan read below would never see)
-    df.collect()
-    val optimized = df.queryExecution.optimizedPlan
-    val physical = flatten(df.queryExecution.executedPlan)
+    val qe = executed(query(spark, dir))
+    val optimized = qe.optimizedPlan
+    val physical = flatten(qe.executedPlan)
 
     // identity-dedup (ADVICE r12): the flattened plan can surface the
     // same physical node object more than once (reuse wrappers, AQE

@@ -74,7 +74,8 @@ object FdMining {
          |    FROM (SELECT $a AS av, $b AS bv, COUNT(*) AS n FROM $t GROUP BY 1, 2)
          |    GROUP BY av))""".stripMargin
     }.mkString("", "\nUNION ALL\n", "\nORDER BY candidate")),
-    doc = "profile: functional-dependency audit — exact violation ledgers per candidate, dictionary-bounded aggregates")
+    doc = "profile: functional-dependency audit — exact violation ledgers per candidate, dictionary-bounded aggregates. " +
+      "Each FD candidate audits via one (a -> count distinct b) groupBy on its own column pair; violation ledgers union to a |candidates|-row report. Exchange count (15, flagged by the r11 sweep) is the candidate count times a 3-stage dictionary cascade — each exchange carries a value dictionary (|pairs| then |A|), never corpus rows; candidates span 4 different tables, so only the two orders arms could even share a scan.")
 
   val all: Seq[Q] = Seq(q178)
 }

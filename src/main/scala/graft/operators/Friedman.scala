@@ -92,7 +92,8 @@ object Friedman {
       |       CAST(r2_sum AS DOUBLE) / CAST(2 * n_blocks AS DOUBLE) AS mean_rank,
       |       chi.friedman_chi2, CAST($K - 1 AS BIGINT) AS df
       |FROM segsum, chi ORDER BY 1""".stripMargin),
-    doc = s"stats: Friedman rank test of segment effects on monthly revenue ($K segments ranked within month blocks) — exact 2x-rank integers, one mirrored IEEE chi-square")
+    doc = s"stats: Friedman rank test of segment effects on monthly revenue ($K segments ranked within month blocks) — exact 2x-rank integers, one mirrored IEEE chi-square. " +
+      "Friedman: broadcast dim join + map-side aggregate to |months|x5 cells; rank windows run per month block on 5-row frames; chi-square is a 1-row epilogue broadcast back to the 5-row report.")
 
   val all: Seq[Q] = Seq(q237)
 }

@@ -95,7 +95,8 @@ object GainsLift {
       |       (CAST(cum_pos AS DOUBLE) / CAST(tot_pos AS DOUBLE))
       |         / (CAST(cum_cust AS DOUBLE) / CAST(tot_cust AS DOUBLE)) AS cum_lift
       |FROM cum ORDER BY decile""".stripMargin),
-    doc = "mlops: cumulative gains/lift table — customers deciled by 1995-96 order frequency against the 1997-reorder outcome; exact decile counts, IEEE capture/lift ratios")
+    doc = "mlops: cumulative gains/lift table — customers deciled by 1995-96 order frequency against the 1997-reorder outcome; exact decile counts, IEEE capture/lift ratios. " +
+      "GainsLift: orders collapse map-side to per-customer (score, outcome); the NTILE sort runs on that dimension-sized frame only (DistributedRank is the 100 TB swap); decile/cumulative arithmetic on 10 rows.")
 
   val all: Seq[Q] = Seq(q253)
 }

@@ -53,7 +53,8 @@ object Gini {
       |SELECT n, s AS total_cents, r AS rank_weighted_cents,
       |       CAST(2 * r - (n + 1) * s AS DOUBLE) / CAST(n * s AS DOUBLE) AS gini
       |FROM m""".stripMargin),
-    doc = "stats: Gini revenue concentration — DistributedRank global ranking, exact-integer core, one IEEE expression")
+    doc = "stats: Gini revenue concentration — DistributedRank global ranking, exact-integer core, one IEEE expression. " +
+      "Per-customer cents aggregate, then Gini via the rank-weighted sum identity over a DistributedRank-ranked frame — no quadratic pair sum.")
 
   /** q169 — the Lorenz decile ledger behind q167's one number: revenue
     * share and cumulative share per ascending-revenue customer decile
@@ -111,7 +112,8 @@ object Gini {
       |       CAST(SUM((CAST(cents AS HUGEINT) * 1000000) // tot) OVER (ORDER BY decile
       |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_share_ppm
       |FROM dec ORDER BY decile""".stripMargin),
-    doc = "stats: Lorenz decile ledger — exact integer decile cuts over the DistributedRank ordering")
+    doc = "stats: Lorenz decile ledger — exact integer decile cuts over the DistributedRank ordering. " +
+      "Decile assignment by exact integer rank arithmetic on the per-customer aggregate; cumulative shares ride a 10-row window in integer ppm.")
 
   val all: Seq[Q] = Seq(q167, q169)
 }

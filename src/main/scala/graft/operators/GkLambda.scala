@@ -101,7 +101,8 @@ object GkLambda {
          |${Cols.map { case (a, b) => one(a, b) }.mkString("\nUNION ALL\n")}
          |ORDER BY from_col, to_col""".stripMargin
     },
-    doc = "profile: Goodman-Kruskal lambda dependency strength over six directed column pairs (priority/status/month) — exact contingency integers, one IEEE division each")
+    doc = "profile: Goodman-Kruskal lambda dependency strength over six directed column pairs (priority/status/month) — exact contingency integers, one IEEE division each. " +
+      "GK lambda (r12 fusion — the sweep's 36-exchange outlier): ONE map-side-combined 3-column contingency aggregate (domain-product-bounded, <=180 cells at any corpus size); all six directed lambdas are exact integer folds of that bounded frame on the driver (the q137-nv driver-literal discipline); one IEEE division per direction.")
 
   val all: Seq[Q] = Seq(q226)
 }

@@ -89,7 +89,8 @@ object GoldenRecord {
     //  3. every CTE MATERIALIZED (DuckDB's default inlining
     //     re-planned sym per round).
     Some(boundedOracle),
-    doc = "MDM: golden-record consolidation — blocked fuzzy match, transitive-closure clusters, struct-max survivor election",
+    doc = "MDM: golden-record consolidation — blocked fuzzy match, transitive-closure clusters, struct-max survivor election. " +
+      "Golden record: within-block candidate self-join (bounded blocks) + Levenshtein filter; componentLabels' log-round propagate+shortcut over (node, lab) pairs; survivor election is ONE struct-max aggregate per cluster — no per-cluster window.",
     oracleReference = Some("""WITH RECURSIVE c AS (
       |  SELECT c_custkey, c_name, c_acctbal, substr(c_name, 1, 16) AS blk
       |  FROM customer),

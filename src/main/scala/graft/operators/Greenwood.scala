@@ -127,7 +127,8 @@ object Greenwood {
       |       s_t - 1.96e0 * COALESCE(s_t * sqrt(gsum), 0e0) AS ci_lo,
       |       s_t + 1.96e0 * COALESCE(s_t * sqrt(gsum), 0e0) AS ci_hi
       |FROM folded ORDER BY horizon_days""".stripMargin),
-    doc = "survival: KM retention with Greenwood variance and plain 95% bands at 30/60/90/180/365 days — single-state ordered folds (product + sum) over the exact event ledger")
+    doc = "survival: KM retention with Greenwood variance and plain 95% bands at 30/60/90/180/365 days — single-state ordered folds (product + sum) over the exact event ledger. " +
+      "Cohort collapses to the calendar-bounded event ledger; the 5-horizon broadcast grid joins that bounded frame; KM product and Greenwood sum are SINGLE-STATE ordered folds (list_reduce-safe); 5 rows out.")
 
   val all: Seq[Q] = Seq(q282)
 }

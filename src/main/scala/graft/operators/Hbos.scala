@@ -81,7 +81,8 @@ object Hbos {
       |JOIN h_pb USING (pb) JOIN h_pri USING (pri)
       |JOIN h_st USING (st) JOIN h_mo USING (mo)
       |ORDER BY hbos_q DESC, o_orderkey LIMIT 20""".stripMargin),
-    doc = "stats: HBOS multivariate anomaly top-20 over four domain-bounded histograms (quantized inverse-density surprisal, broadcast-only scoring)")
+    doc = "stats: HBOS multivariate anomaly top-20 over four domain-bounded histograms (quantized inverse-density surprisal, broadcast-only scoring). " +
+      "HBOS: four domain-bounded histograms (<=20+5+3+12 rows) broadcast back onto the scan — scoring is join-free per row; top-20 via TakeOrdered per-partition heaps, no global sort.")
 
   val all: Seq[Q] = Seq(q206)
 }

@@ -106,7 +106,8 @@ object Hierarchy {
       |  GROUP BY 1)
       |SELECT p_ancestor, n_desc, height, subtree_value
       |FROM agg ORDER BY subtree_value DESC, p_ancestor LIMIT 20""".stripMargin),
-    doc = "hierarchy: iterative ancestor-closure traversal (per-round Barrier.cut) + subtree rollups, vs a WITH RECURSIVE oracle")
+    doc = "hierarchy: iterative ancestor-closure traversal (per-round Barrier.cut) + subtree rollups, vs a WITH RECURSIVE oracle. " +
+      "Recursive traversal as bounded join iteration: one equi-join per level against the Barrier'd parent-edge table, Barrier.cut per round (constant plan depth, fault-tolerant with spark.graft.checkpointDir set); the closure is |V|*depth rows — what WITH RECURSIVE materializes — and the rollup is one map-side-combinable aggregate + TakeOrdered(20).")
 
   val all: Seq[Q] = Seq(q184)
 }

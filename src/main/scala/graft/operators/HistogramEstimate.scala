@@ -103,7 +103,8 @@ object HistogramEstimate {
       |         / CAST(a.total_rows AS DOUBLE) AS err_pct_of_table
       |FROM est e JOIN act a USING (t_dollars)
       |ORDER BY t_dollars""".stripMargin),
-    doc = "engine: equi-depth histogram (20 buckets) selectivity estimates for eight order-value range predicates, audited against exact counts — the CBO stats-error measurement")
+    doc = "engine: equi-depth histogram (20 buckets) selectivity estimates for eight order-value range predicates, audited against exact counts — the CBO stats-error measurement. " +
+      "HistSel: one pass to per-order cents behind a Barrier with two consumers (histogram + exact probe counts); the NTILE sort is the audit's deliberate exactness cost; estimates run on the 20-row stats frame x 8 probes.")
 
   val all: Seq[Q] = Seq(q254)
 }

@@ -117,7 +117,8 @@ object HllSetOps {
       |       ea.hll_a, eb.hll_b, eu.hll_union,
       |       ea.hll_a + eb.hll_b - eu.hll_union AS hll_overlap
       |FROM ea CROSS JOIN eb CROSS JOIN eu""".stripMargin),
-    doc = "sketch: HLL set algebra — register-max union + inclusion-exclusion overlap vs exact (fixed-memory audience overlap)")
+    doc = "sketch: HLL set algebra — register-max union + inclusion-exclusion overlap vs exact (fixed-memory audience overlap). " +
+      "HLL registers built per side behind Barriers (map-side-combinable max-rho), set algebra via a full-outer join on the 2^p-bounded bucket frame — union/intersection cardinalities without re-scanning either corpus.")
 
   val all: Seq[Q] = Seq(q151)
 }

@@ -79,7 +79,8 @@ object HodgesLehmann {
       |FROM cum, tot
       |WHERE cum * 2 >= t + 1
       |ORDER BY walsh2 LIMIT 1""".stripMargin),
-    doc = "stats: Hodges-Lehmann pseudo-median of quantity — type-1 weighted median of domain-collapsed Walsh averages, exact pair weights")
+    doc = "stats: Hodges-Lehmann pseudo-median of quantity — type-1 weighted median of domain-collapsed Walsh averages, exact pair weights. " +
+      "Hodges-Lehmann: O(N^2) Walsh pairs collapse onto the <=50-value domain (<=1275 cells, <=99 walsh2 groups); type-1 weighted median is integer selection; pair weights decimal/HUGEINT (N^2 > int64 at 100 TB).")
 
   val all: Seq[Q] = Seq(q223)
 }

@@ -83,7 +83,8 @@ object HoltTrend {
       |       rec.l + ${HorizonDays}e0 * rec.b AS forecast7_cents
       |FROM rec JOIN nd ON nd.grp = rec.grp AND rec.rn = nd.n_days
       |ORDER BY 1""".stripMargin),
-    doc = "timeseries: Holt linear-trend smoothing (alpha=1/2, beta=1/4) of daily revenue per priority via ordered left-fold — level + trend states and a 7-day-ahead forecast")
+    doc = "timeseries: Holt linear-trend smoothing (alpha=1/2, beta=1/4) of daily revenue per priority via ordered left-fold — level + trend states and a 7-day-ahead forecast. " +
+      "Holt: corpus collapses map-side to (priority, day) cells; the serial recurrence runs as ONE ordered left-fold per priority over a calendar-bounded array — no per-iteration shuffles; 5-row report.")
 
   val all: Seq[Q] = Seq(q232)
 }

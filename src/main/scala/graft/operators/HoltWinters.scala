@@ -117,7 +117,8 @@ object HoltWinters {
       |       fin.l + CAST(h AS DOUBLE) * fin.b + fin.s[CAST(h AS INT)] AS forecast_cents
       |FROM fin, meta, (SELECT UNNEST(range(1, 13)) AS h)
       |ORDER BY h""".stripMargin),
-    doc = "timeseries: Holt-Winters additive seasonal smoothing (alpha=1/2, beta=1/4, gamma=1/2, m=12) of monthly revenue on a zero-filled contiguous grid — rotated seasonal vector, 12-month forecast")
+    doc = "timeseries: Holt-Winters additive seasonal smoothing (alpha=1/2, beta=1/4, gamma=1/2, m=12) of monthly revenue on a zero-filled contiguous grid — rotated seasonal vector, 12-month forecast. " +
+      "HW: corpus collapses map-side to <=|months| cells; the zero-filled grid, the rotated-seasonal fold, and the 12-row forecast are calendar-bounded epilogue on a 1-row array frame.")
 
   val all: Seq[Q] = Seq(q256)
 }

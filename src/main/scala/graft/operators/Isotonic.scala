@@ -73,7 +73,8 @@ object Isotonic {
       |       fit.iso_mean_qty
       |FROM lv JOIN fit ON fit.lvl = lv.lvl
       |ORDER BY discount_pct""".stripMargin),
-    doc = "stats: isotonic (PAVA) monotone fit of mean quantity vs discount level via the closed minimax form on the 11-level domain — shape-constrained demand curve")
+    doc = "stats: isotonic (PAVA) monotone fit of mean quantity vs discount level via the closed minimax form on the 11-level domain — shape-constrained demand curve. " +
+      "Isotonic: ONE corpus aggregate to the 11-level frame; the minimax fit (ranges, nested min/max) is a constant-size epilogue — 66 range rows, no recursion, no corpus rescans.")
 
   val all: Seq[Q] = Seq(q234)
 }

@@ -93,7 +93,8 @@ object JoinEstimate {
       |SELECT exact_pairs, cms_estimate,
       |       (cms_estimate - exact_pairs) * 1000000 // exact_pairs AS overestimate_ppm
       |FROM ex CROSS JOIN est""".stripMargin),
-    doc = "sketch: CMS inner-product join-size estimate vs exact (one-sided planner cardinality primitive)")
+    doc = "sketch: CMS inner-product join-size estimate vs exact (one-sided planner cardinality primitive). " +
+      "CMS join-size estimate: each side compresses to per-key counts (map-side combinable) then to <= d*w sketch cells; the inner product joins two <= 4096-row cell grids; exact audit joins the two key-count frames — the sketch path alone never moves more than d*w rows regardless of input volume.")
 
   val all: Seq[Q] = Seq(q140)
 }

@@ -82,7 +82,8 @@ object Jonckheere {
       |SELECT k, n, jt, mean_null,
       |       (jt - mean_null) / sqrt(var_null) AS z_score
       |FROM parts""".stripMargin),
-    doc = "stats: Jonckheere-Terpstra ordered trend test of quantity across discount levels — exact contingency-table pair sums, closed-form null moments")
+    doc = "stats: Jonckheere-Terpstra ordered trend test of quantity across discount levels — exact contingency-table pair sums, closed-form null moments. " +
+      "Jonckheere: one map-side aggregate to the <=550-cell contingency table; ordered-pair cell join ~3e5 pairs corpus-independent; null moments are closed-form decimal/HUGEINT integers.")
 
   val all: Seq[Q] = Seq(q219)
 }

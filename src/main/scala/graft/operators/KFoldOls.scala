@@ -86,7 +86,8 @@ object KFoldOls {
       |          - CAST(ox AS DOUBLE) * CAST(ox AS DOUBLE))
       |         AS oof_slope_cents_per_day
       |FROM oof ORDER BY fold""".stripMargin),
-    doc = s"stats: $Folds-fold out-of-fold OLS slope stability — one moment pass, leave-fold-out fits by total-minus-fold subtraction")
+    doc = s"stats: $Folds-fold out-of-fold OLS slope stability — one moment pass, leave-fold-out fits by total-minus-fold subtraction. " +
+      "k-fold OLS: ONE moment pass to the 5-row fold frame; out-of-fold fits by total-minus-fold subtraction (no per-fold rescans); 5-row epilogue.")
 
   val all: Seq[Q] = Seq(q229)
 }

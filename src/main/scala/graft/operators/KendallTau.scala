@@ -87,7 +87,8 @@ object KendallTau {
       |             * CAST(CAST(n AS HUGEINT) * (n - 1) // 2 - ty AS DOUBLE))
       |         AS tau_b
       |FROM cd, tot, row_ties, col_ties""".stripMargin),
-    doc = "stats: exact tie-corrected Kendall tau-b of quantity vs discount via the bounded contingency table (O(cells^2), corpus-size-independent)")
+    doc = "stats: exact tie-corrected Kendall tau-b of quantity vs discount via the bounded contingency table (O(cells^2), corpus-size-independent). " +
+      "Kendall tau-b: one map-side aggregate onto the <=550-cell contingency table; C/D are a cells^2 self-join (~3e5 pairs, corpus-size-independent); every pair count rides decimal/HUGEINT (N^2 > int64 at 100 TB).")
 
   val all: Seq[Q] = Seq(q205)
 }

@@ -64,7 +64,8 @@ object KmvSketch {
       |SELECT k, exact_ndv, est_ndv,
       |       100e0 * (est_ndv - CAST(exact_ndv AS DOUBLE)) / CAST(exact_ndv AS DOUBLE) AS err_pct
       |FROM est""".stripMargin),
-    doc = "sketch: KMV k-minimum-values distinct-count estimate vs exact NDV — 60-bit shared md5 hash, (k-1)*2^60/h_k order-statistics estimator, hash-exact signed error")
+    doc = "sketch: KMV k-minimum-values distinct-count estimate vs exact NDV — 60-bit shared md5 hash, (k-1)*2^60/h_k order-statistics estimator, hash-exact signed error. " +
+      "Audit-scale exact side (count_distinct + distinct TakeOrdered(k)) is the NDV-sized baseline the sketch replaces — the q212 stance; the certified estimator algebra serves a bounded associative min-k aggregate in production.")
 
   val all: Seq[Q] = Seq(q275)
 }

@@ -103,7 +103,8 @@ object KruskalWallis {
       |       (12e0 * sterms / (nd * (nd + 1e0)) - 3e0 * (nd + 1e0))
       |         / NULLIF(1e0 - CAST(tie3 AS DOUBLE) / (nd * nd * nd - nd), 0e0) AS h_adj
       |FROM fin""".stripMargin),
-    doc = "stats: tie-corrected Kruskal-Wallis H of quantity across the five order priorities — 2x-rank integers on the 50-value domain frame, ordered cross-group fold, one IEEE epilogue")
+    doc = "stats: tie-corrected Kruskal-Wallis H of quantity across the five order priorities — 2x-rank integers on the 50-value domain frame, ordered cross-group fold, one IEEE epilogue. " +
+      "Key join then ONE (group, value) map-side-combinable aggregate to a <=250-row frame; rank window, tie sums and the ordered cross-group fold all run on value-domain-bounded frames — the corpus never sorts.")
 
   val all: Seq[Q] = Seq(q268)
 }

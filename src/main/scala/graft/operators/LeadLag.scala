@@ -94,7 +94,8 @@ object LeadLag {
       |          * (CAST(n_hours AS DOUBLE) * CAST(syy AS DOUBLE)
       |            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS xcorr
       |FROM m ORDER BY lag""".stripMargin),
-    doc = s"timeseries: hourly lead-lag cross-correlation (lags -$MaxLag..+$MaxLag h) between click and purchase event series on the shared epoch-hour axis")
+    doc = s"timeseries: hourly lead-lag cross-correlation (lags -$MaxLag..+$MaxLag h) between click and purchase event series on the shared epoch-hour axis. " +
+      "Lead-lag: one map-side hourly aggregate onto the calendar-bounded frame; 25-lag scan is a constant fanout of that frame joined hour-to-hour; final frame is 25 rows with exact decimal moments.")
 
   val all: Seq[Q] = Seq(q208)
 }

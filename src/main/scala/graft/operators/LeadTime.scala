@@ -82,7 +82,8 @@ object LeadTime {
       |       MIN(CASE WHEN cum * 100 >= n * 99 THEN days END) AS p99_days,
       |       (MAX(w7) * 1000000) // MAX(n) AS sla_7d_ppm
       |FROM cum GROUP BY pri ORDER BY o_orderpriority""".stripMargin),
-    doc = "ops: order-to-ship lead-time SLA — exact type-1 percentiles from the calendar-bounded histogram + 7-day share")
+    doc = "ops: order-to-ship lead-time SLA — exact type-1 percentiles from the calendar-bounded histogram + 7-day share. " +
+      "Lead times collapse map-side to the calendar-bounded (<= max-lead-days) per-priority histogram; the cumulative window and percentile selection run on that frame, never on line rows.")
 
   val all: Seq[Q] = Seq(q183)
 }

@@ -116,7 +116,8 @@ object LjungBox {
       |SELECT n, rho1, rho2, rho3,
       |       CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2e0) * ssum AS lb_q7
       |FROM folded""".stripMargin),
-    doc = "timeseries: Ljung-Box Q over 7 lags of day-over-day revenue changes — N2-cleared exact autocorrelation cores, ordered 7-term fold, joint whiteness statistic")
+    doc = "timeseries: Ljung-Box Q over 7 lags of day-over-day revenue changes — N2-cleared exact autocorrelation cores, ordered 7-term fold, joint whiteness statistic. " +
+      "ONE day aggregate bounds everything after at |days| rows; the 7-lag stack compresses to a 7-row sufficient-statistic table; N2-cleared decimal cores make each rho one IEEE division; ordered 7-term fold.")
 
   val all: Seq[Q] = Seq(q274)
 }

@@ -133,7 +133,8 @@ object LogRank {
       |SELECT n_times, o1, e1, v,
       |       (CAST(o1 AS DOUBLE) - e1) / sqrt(v) AS z_score
       |FROM agg""".stripMargin),
-    doc = s"survival: two-group log-rank test ($GroupA vs $GroupB time-to-readmission) — hypergeometric O-E/V on the calendar-bounded event-time frame")
+    doc = s"survival: two-group log-rank test ($GroupA vs $GroupB time-to-readmission) — hypergeometric O-E/V on the calendar-bounded event-time frame. " +
+      "Log-rank: q153's two subject-keyed aggregates, then everything on the calendar-bounded duration frame; E/V rational terms sum via ordered LEFT-FOLD (DuckDB windowed SUM is segment-tree associated — the drift this round's hash gate caught at ~1600 event times).")
 
   val all: Seq[Q] = Seq(q222)
 }

@@ -78,7 +78,8 @@ object MannKendall {
       |              THEN CAST(s_stat + 1 AS DOUBLE) / sqrt(var_s)
       |            ELSE 0e0 END AS z
       |FROM v""".stripMargin),
-    doc = "stats: Mann-Kendall monotone-trend test on daily revenue — exact pairwise sign counts, tie-corrected variance, continuity-corrected IEEE z")
+    doc = "stats: Mann-Kendall monotone-trend test on daily revenue — exact pairwise sign counts, tie-corrected variance, continuity-corrected IEEE z. " +
+      "MK: corpus collapses map-side to calendar-bounded daily cells; the pairwise self-join is bounded by the CALENDAR squared (~3M pairs at any corpus size); tie groups a second tiny aggregate; 1 row out.")
 
   val all: Seq[Q] = Seq(q244)
 }

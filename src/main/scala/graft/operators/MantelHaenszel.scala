@@ -93,7 +93,8 @@ object MantelHaenszel {
       |       CAST(CAST(ta AS HUGEINT) * td AS DOUBLE)
       |         / CAST(CAST(tb AS HUGEINT) * tc AS DOUBLE) AS or_crude
       |FROM agg""".stripMargin),
-    doc = "stats: Cochran-Mantel-Haenszel segment-stratified odds ratio of urgent-priority vs high-value orders, with the crude OR for the confounding gap")
+    doc = "stats: Cochran-Mantel-Haenszel segment-stratified odds ratio of urgent-priority vs high-value orders, with the crude OR for the confounding gap. " +
+      "CMH: one broadcast dim join + one map-side-combinable aggregate to the |strata| frame; cross-stratum double sums are ordered LEFT-FOLDS over the collected 5-row frame (windowed SUM would inherit DuckDB's segment-tree association).")
 
   val all: Seq[Q] = Seq(q217)
 }

@@ -79,7 +79,8 @@ object McNemar {
       |         / CAST(NULLIF(n_y1_only + n_y2_only, 0) AS DOUBLE) AS chi2_cc,
       |       CAST(n_y1_only AS DOUBLE) / CAST(NULLIF(n_y2_only, 0) AS DOUBLE) AS discordant_odds
       |FROM tab""".stripMargin),
-    doc = "stats: McNemar continuity-corrected test of paired 1996-vs-1997 order activity per customer — exact 2x2 paired table, discordant-pair statistic in one IEEE expression")
+    doc = "stats: McNemar continuity-corrected test of paired 1996-vs-1997 order activity per customer — exact 2x2 paired table, discordant-pair statistic in one IEEE expression. " +
+      "McNemar: orders collapse map-side to per-customer year flags (one natural-key groupBy); the customer join is key-local; the paired 2x2 table is a 1-row aggregate with an IEEE epilogue.")
 
   val all: Seq[Q] = Seq(q250)
 }

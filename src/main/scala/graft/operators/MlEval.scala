@@ -85,7 +85,8 @@ object MlEval {
       |           / (2e0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) AS auc
       |  FROM agg)
       |SELECT n_pos, n_neg, auc, 2e0 * auc - 1e0 AS gini FROM scored""".stripMargin),
-    doc = "ml-eval: exact tie-corrected ROC AUC (rank-sum identity) + Gini of discount level predicting returns — 11-row value-domain frame, one corpus aggregate")
+    doc = "ml-eval: exact tie-corrected ROC AUC (rank-sum identity) + Gini of discount level predicting returns — 11-row value-domain frame, one corpus aggregate. " +
+      "Exact tie-corrected AUC via the rank-sum identity: ONE map-side-combinable aggregate to the 11-level discount frame, rank window + epilogue on 11 rows — the corpus never sorts, ranks never shuffle.")
 
   /** q265 — out-of-time Brier score with the Murphy decomposition:
     * per-level return probabilities fit on 1995 shipments, scored on
@@ -199,7 +200,8 @@ object MlEval {
       |       rel_sum / CAST(n_eval AS DOUBLE) - res_sum / CAST(n_eval AS DOUBLE)
       |         + obar * (1e0 - obar) AS brier
       |FROM fin CROSS JOIN dropped""".stripMargin),
-    doc = "ml-eval: out-of-time Brier score with Murphy reliability/resolution/uncertainty decomposition — 1995-fit level probabilities scored on 1996, ordered 11-term fold; k_dropped/n_eval_dropped audit the eval rows excluded for lacking 1995 training data")
+    doc = "ml-eval: out-of-time Brier score with Murphy reliability/resolution/uncertainty decomposition — 1995-fit level probabilities scored on 1996, ordered 11-term fold; k_dropped/n_eval_dropped audit the eval rows excluded for lacking 1995 training data. " +
+      "Train/eval level counts fall out of ONE conditional aggregate pass; the 1-row eval total broadcasts back to the 11-row level frame; Murphy terms fold in explicit level order (collect_list + sorted aggregate) — shuffle-order-immune, no corpus-side join.")
 
   val all: Seq[Q] = Seq(q264, q265)
 }

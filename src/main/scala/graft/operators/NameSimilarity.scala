@@ -55,7 +55,8 @@ object NameSimilarity {
       |SELECT name_a, name_b, parts_a, parts_b, sim,
       |       CAST(ROW_NUMBER() OVER (ORDER BY sim DESC, name_a, name_b) AS INT) AS pos
       |FROM top ORDER BY pos""".stripMargin),
-    doc = "linkage: native Jaro-Winkler expression over the deduped name dictionary — namespace confusability audit")
+    doc = "linkage: native Jaro-Winkler expression over the deduped name dictionary — namespace confusability audit. " +
+      "Quadratic Jaro-Winkler pass runs on the deduped NAME DICTIONARY (vocabulary-bounded), never the catalog; the kernel is a codegen'd Catalyst expression — no UDF serialization boundary in the pair loop.")
 
   val all: Seq[Q] = Seq(q155)
 }

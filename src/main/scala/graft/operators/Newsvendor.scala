@@ -73,7 +73,8 @@ object Newsvendor {
       |FROM ranked
       |WHERE rn = (9 * n_days + 9) // 10
       |ORDER BY p_brand""".stripMargin),
-    doc = "inventory: newsvendor CF=0.9 safety stock per brand — exact type-1 quantile of integer daily demand at position ceil(0.9n), brand-partitioned calendar-bounded rank windows")
+    doc = "inventory: newsvendor CF=0.9 safety stock per brand — exact type-1 quantile of integer daily demand at position ceil(0.9n), brand-partitioned calendar-bounded rank windows. " +
+      "Part dim broadcast; ONE (brand, day) map-side-combinable aggregate; rank windows PARTITIONED BY BRAND over calendar-bounded frames — no global sort, no single-task window; quantile position is integer arithmetic.")
 
   val all: Seq[Q] = Seq(q272)
 }

@@ -93,7 +93,8 @@ object Normality {
       |       skew AS skewness, exkurt AS excess_kurtosis,
       |       nd / 6e0 * (skew * skew + exkurt * exkurt / 4e0) AS jb_stat
       |FROM sk ORDER BY priority""".stripMargin),
-    doc = "stats: Jarque-Bera normality audit of ship-delay days per priority — four exact decimal power sums, binomial central-moment chain, one sqrt")
+    doc = "stats: Jarque-Bera normality audit of ship-delay days per priority — four exact decimal power sums, binomial central-moment chain, one sqrt. " +
+      "One key join + one map-side-combinable aggregate of four exact power sums to a 5-row priority frame; central moments and JB are a closed-form double chain — no second corpus pass for the mean.")
 
   val all: Seq[Q] = Seq(q269)
 }

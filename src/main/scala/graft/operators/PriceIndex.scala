@@ -97,7 +97,8 @@ object PriceIndex {
       |       s_ptqt / s_p0qt AS paasche,
       |       SQRT((s_ptq0 / s_p0q0) * (s_ptqt / s_p0qt)) AS fisher
       |FROM folded ORDER BY year""".stripMargin),
-    doc = "economics: Laspeyres/Paasche/Fisher matched-part price indexes per ship year vs the 1995 base — exact cent/centi-unit cells, ordered-fold double sums, one IEEE sqrt")
+    doc = "economics: Laspeyres/Paasche/Fisher matched-part price indexes per ship year vs the 1995 base — exact cent/centi-unit cells, ordered-fold double sums, one IEEE sqrt. " +
+      "PriceIndex: ONE corpus shuffle to (part, year) cells behind a Barrier; base-vs-year matched join and the four ordered folds run on dimension-sized frames; 6 rows out.")
 
   val all: Seq[Q] = Seq(q251)
 }

@@ -74,7 +74,8 @@ object QqShift {
       |       MIN(CASE WHEN f1 * 10 >= k * n1 THEN d END)
       |         - MIN(CASE WHEN f2 * 10 >= k * n2 THEN d END) AS shift_days
       |FROM cum, tot, ks GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "stats: per-decile QQ shift of ship delays, urgent vs low priority — type-1 integer deciles on the bounded delay domain, 9-row profile")
+    doc = "stats: per-decile QQ shift of ship delays, urgent vs low priority — type-1 integer deciles on the bounded delay domain, 9-row profile. " +
+      "QQ shift: q201's delay-domain collapse; per-group CDFs via two bounded-frame windows; decile election is a 9-way constant fanout + min-aggregate — integer cross-multiplied type-1 quantiles, 9 rows out.")
 
   val all: Seq[Q] = Seq(q227)
 }

@@ -116,7 +116,8 @@ object Rmst {
       |       last.s AS s_tau,
       |       last.area + last.s * (CAST($TauDays AS DOUBLE) - last.tp) AS rmst_days
       |FROM last, meta""".stripMargin),
-    doc = "survival: restricted mean survival time to 365 days (area under the KM reorder curve) — exact integer event ledger, two-state serial fold (Spark aggregate / DuckDB recursive CTE)")
+    doc = "survival: restricted mean survival time to 365 days (area under the KM reorder curve) — exact integer event ledger, two-state serial fold (Spark aggregate / DuckDB recursive CTE). " +
+      "Cohort collapses to the calendar-bounded event ledger; the KM-product/area two-state recurrence folds over that bounded frame (Spark ordered aggregate / DuckDB recursive CTE — list_reduce multi-field aliasing ruled out by the q232 finding); 1 row out.")
 
   val all: Seq[Q] = Seq(q277)
 }

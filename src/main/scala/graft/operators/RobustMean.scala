@@ -85,7 +85,8 @@ object RobustMean {
       |            + CAST(k AS HUGEINT) * hi_bound AS DOUBLE)
       |         / CAST(n AS DOUBLE) / 100.0 AS winsorized_mean_dollars
       |FROM agg ORDER BY seg""".stripMargin),
-    doc = s"stats: exact $TrimPct%-trimmed and winsorized mean order value per segment with tail boundaries (one per-group rank pass)")
+    doc = s"stats: exact $TrimPct%-trimmed and winsorized mean order value per segment with tail boundaries (one per-group rank pass). " +
+      "Trimmed/winsorized: exact order statistics = one per-segment rank window (the q21 exactness-baseline stance; q92's histogram is the 100 TB swap); everything after the rank pass is map-side-combinable with exact decimal tail sums.")
 
   val all: Seq[Q] = Seq(q210)
 }

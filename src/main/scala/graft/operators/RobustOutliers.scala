@@ -75,7 +75,8 @@ object RobustOutliers {
       |       CAST(COUNT(CASE WHEN z_ppm > 3500000 THEN 1 END) AS BIGINT) AS n_outliers,
       |       MAX(z_ppm) AS max_z_ppm
       |FROM z GROUP BY 1 ORDER BY o_orderpriority""".stripMargin),
-    doc = "audit: MAD modified-z robust outliers per group, integer-exact via doubled-percentile grids")
+    doc = "audit: MAD modified-z robust outliers per group, integer-exact via doubled-percentile grids. " +
+      "Median and MAD from exact integer cents per group (type-1 selection on the group frame); the outlier rescan is one additional filtered pass with the 1-row-per-group stats broadcast back.")
 
   val all: Seq[Q] = Seq(q158)
 }

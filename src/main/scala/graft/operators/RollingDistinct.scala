@@ -51,7 +51,8 @@ object RollingDistinct {
       |FROM du u JOIN days d
       |  ON u.day BETWEEN d.report_day - ${WindowDays - 1} AND d.report_day
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "window: exact trailing-7-day distinct active users (broadcast day fan-out — the COUNT DISTINCT no window frame can express)")
+    doc = "window: exact trailing-7-day distinct active users (broadcast day fan-out — the COUNT DISTINCT no window frame can express). " +
+      "Rolling 7-day distinct: corpus collapses to distinct (user, day) map-side; the |days|-row report frame broadcasts into a <=7x fan-out theta join; one exact count-distinct per report day (q63's HLL is the sketch variant).")
 
   val all: Seq[Q] = Seq(q190)
 }

@@ -112,7 +112,8 @@ object RunsTest {
       |       (CAST(runs AS DOUBLE) - mu)
       |         / sqrt((mu - 1e0) * (mu - 2e0) / CAST(n_days - 1 AS DOUBLE)) AS z
       |FROM mu""".stripMargin),
-    doc = "stats: Wald-Wolfowitz runs test on daily-revenue OLS residual signs — distribution-free clustering/alternation diagnostic, exact run counts, one mirrored IEEE z")
+    doc = "stats: Wald-Wolfowitz runs test on daily-revenue OLS residual signs — distribution-free clustering/alternation diagnostic, exact run counts, one mirrored IEEE z. " +
+      "Runs test: daily cells map-side; 1-row exact-moment fit broadcasts back; one lag window + one count aggregate on the span-days frame; 1 row out.")
 
   val all: Seq[Q] = Seq(q238)
 }

@@ -175,7 +175,8 @@ object Search {
       |  FROM base)
       |GROUP BY dim, val
       |ORDER BY dim, val""".stripMargin),
-    doc = "E2: parameterized patient-search builder (range + IN-list semi-join → demographics)")
+    doc = "E2: parameterized patient-search builder (range + IN-list semi-join → demographics). " +
+      "Composable search: broadcast nation dim, pushed range filters, LEFT SEMI for the IN-list — the query-builder compiles to the same plan hand-written predicates would.")
 
   private val q80Params = MetricsParams(
     startDate = "1996-01-01", endDate = "1997-01-01",
@@ -196,7 +197,8 @@ object Search {
       |  AND o_orderstatus = 'F'
       |GROUP BY period
       |ORDER BY period""".stripMargin),
-    doc = "E2: parameterized encounter-metrics builder (date range + status + date_trunc period)")
+    doc = "E2: parameterized encounter-metrics builder (date range + status + date_trunc period). " +
+      "Parameterized builder compiles to the same pushed-filter + broadcast-dim physical plan as hand-written predicates — composability costs nothing at runtime.")
 
   val all: Seq[Q] = Seq(q79, q80)
 }

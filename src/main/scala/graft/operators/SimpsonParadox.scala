@@ -98,7 +98,8 @@ object SimpsonParadox {
       |JOIN nation ON n_nationkey = m.nk
       |CROSS JOIN pooled p
       |ORDER BY n_name""".stripMargin),
-    doc = "stats: Simpson's-paradox scan — pooled vs per-supplier-nation OLS slope of quantity on discount from exact decimal/HUGEINT moments; flags sign reversals")
+    doc = "stats: Simpson's-paradox scan — pooled vs per-supplier-nation OLS slope of quantity on discount from exact decimal/HUGEINT moments; flags sign reversals. " +
+      "Simpson: ONE map-side-combinable moment aggregate over lineitem (broadcast supplier hop) to 25 rows behind a Barrier; pooled moments are an exact decimal re-aggregate; slopes/flags are epilogue.")
 
   val all: Seq[Q] = Seq(q255)
 }

@@ -55,7 +55,8 @@ object SkewAudit {
       |       cnt * n_keys * 1000000 // total AS vs_avg_ppm,
       |       p50_cnt, p99_cnt
       |FROM top CROSS JOIN st ORDER BY rank""".stripMargin),
-    doc = "diagnostics: join-key skew audit — heavy-key shares, multiple-of-average, per-key cardinality percentiles")
+    doc = "diagnostics: join-key skew audit — heavy-key shares, multiple-of-average, per-key cardinality percentiles. " +
+      "One map-side-combinable per-key count behind a Barrier; stats ride a 1-row broadcast; the percentile aggregate runs on the per-KEY (vocabulary-sized) frame; top-5 via TakeOrdered.")
 
   val all: Seq[Q] = Seq(q147)
 }

@@ -85,7 +85,8 @@ object Skyline {
       |  WHERE b.p_retailprice <= a.p_retailprice AND b.p_size >= a.p_size
       |    AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size))
       |ORDER BY p_partkey""".stripMargin),
-    doc = "skyline: grid-pruned Pareto frontier (min price, max size) — lossless prune + exact survivor pass")
+    doc = "skyline: grid-pruned Pareto frontier (min price, max size) — lossless prune + exact survivor pass. " +
+      "Skyline: grid bucketing off a 1-row stats broadcast; cell-level domination prune via <= B^2-row broadcast anti-join; point prune a broadcast semi-join on cell id; the exact quadratic pass (BroadcastNestedLoopJoin) runs only on the surviving staircase band (~2n/B rows).")
 
   val all: Seq[Q] = Seq(q143)
 }

@@ -74,7 +74,8 @@ object Spearman {
       |       1.0 - 6.0 * CAST(sd2 AS DOUBLE) /
       |         (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - 1.0)) AS spearman_rho
       |FROM m""".stripMargin),
-    doc = "stats: Spearman volume-vs-value rank agreement — DistributedRank passes, exact integer d2 core")
+    doc = "stats: Spearman volume-vs-value rank agreement — DistributedRank passes, exact integer d2 core. " +
+      "Per-part aggregate built ONCE behind a Barrier (the count_distinct expand is the expensive pass), then two CHAINED DistributedRank range-sort passes — the second ranks the first's output so both ranks ride one row and the former part-key sort-merge join (2 exchanges + sorts) is gone (r13); no one-task windows.")
 
   val all: Seq[Q] = Seq(q170)
 }

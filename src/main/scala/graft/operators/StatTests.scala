@@ -106,7 +106,8 @@ object StatTests {
       |       (syd - (num / denx) * sxd) / CAST(n AS DOUBLE) AS intercept_cents,
       |       num * num / (denx * deny) AS r2
       |FROM parts ORDER BY c_mktsegment""".stripMargin),
-    doc = "stats: per-segment OLS revenue trend (slope/intercept/R² from exact decimal moment sums, mirrored IEEE epilogue)")
+    doc = "stats: per-segment OLS revenue trend (slope/intercept/R² from exact decimal moment sums, mirrored IEEE epilogue). " +
+      "OLS trend: one broadcast dim join + ONE map-side-combinable five-moment aggregate (exact decimal sums); slope/intercept/R^2 are a 5-row epilogue. No second pass, no window.")
 
   /** q200 — Mann-Whitney U on l_quantity between returned ('R') and
     * accepted ('A') line items, tie-corrected normal approximation.
@@ -173,7 +174,8 @@ object StatTests {
       |         / sqrt(n1d * n2d / 12.0
       |             * ((nd + 1.0) - td / (nd * (nd - 1.0)))) AS z_score
       |FROM mid""".stripMargin),
-    doc = "stats: tie-corrected Mann-Whitney U rank-sum test on quantity between returned vs accepted lines (2x-rank integers, domain-bounded rank window)")
+    doc = "stats: tie-corrected Mann-Whitney U rank-sum test on quantity between returned vs accepted lines (2x-rank integers, domain-bounded rank window). " +
+      "Mann-Whitney: corpus collapses to the <=50-row quantity-domain frame map-side; the rank window runs on that bounded frame (2x-rank integers keep tied half-ranks exact); one 1-row epilogue.")
 
   /** q201 — two-sample KS distance between ship-delay distributions of
     * urgent vs low-priority orders, with the witness delay (smallest
@@ -234,7 +236,8 @@ object StatTests {
       |         / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)) AS ks_d,
       |       at_delay_days
       |FROM best WHERE rn = 1""".stripMargin),
-    doc = "stats: two-sample Kolmogorov-Smirnov distance on ship delays, urgent vs low priority, with the exact-integer witness argmax")
+    doc = "stats: two-sample Kolmogorov-Smirnov distance on ship delays, urgent vs low priority, with the exact-integer witness argmax. " +
+      "KS: fact-fact equi-join collapses to the delay-domain frame in the same aggregate; CDFs via one bounded-frame window; the max-gap election is a struct-max on exact integer numerators.")
 
   /** q202 — one-way ANOVA F across the five market segments on order
     * cents. The only cross-group double sum (Σ S_g²/n_g) runs as an
@@ -300,7 +303,8 @@ object StatTests {
       |       / ((CAST(q AS DOUBLE) - sterms) / CAST(n - k AS DOUBLE))
       |         AS f_stat
       |FROM agg""".stripMargin),
-    doc = "stats: one-way ANOVA F across market segments on order cents (exact group moments, ordered-prefix cross-group epilogue)")
+    doc = "stats: one-way ANOVA F across market segments on order cents (exact group moments, ordered-prefix cross-group epilogue). " +
+      "ANOVA: one broadcast dim join + one map-side-combinable group-moment aggregate (5 rows); the only cross-group double sum runs as an ordered LEFT-FOLD over the collected group frame (windowed SUM would inherit DuckDB's segment-tree association).")
 
   val all: Seq[Q] = Seq(q199, q200, q201, q202)
 }

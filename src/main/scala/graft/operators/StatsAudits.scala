@@ -67,7 +67,8 @@ object StatsAudits {
       |  FROM cells JOIN ma USING (a) JOIN mb USING (b), n)
       |SELECT n, s AS mi_sum_log2q, ((s + n * $Off) // n) - $Off AS mi_q
       |FROM agg""".stripMargin),
-    doc = "profile: quantized-log2 mutual information between two categorical columns (dependency discovery)")
+    doc = "profile: quantized-log2 mutual information between two categorical columns (dependency discovery). " +
+      "Contingency cells from one groupBy (|a|x|b| bounded); marginals are re-aggregates of the cell frame; MI sums in quantized log arithmetic on the tiny frame.")
 
   /** Poisson(1) CDF thresholds ⌊F(k)·2²⁰⌋, k = 0..9 (tail mass past
     * k = 9 is ~10⁻⁷ — the 20-bit uniform can land there; it maps to 9).
@@ -111,7 +112,8 @@ object StatsAudits {
       |       CAST(SUM(k * cents) AS BIGINT) AS sum_cents,
       |       CAST(SUM(k * cents) AS BIGINT) // CAST(SUM(k) AS BIGINT) AS mean_cents
       |FROM drawn GROUP BY b ORDER BY b""".stripMargin),
-    doc = "stats: one-pass Poisson bootstrap — B=16 deterministic replicate means of order value, no sampling shuffle")
+    doc = "stats: one-pass Poisson bootstrap — B=16 deterministic replicate means of order value, no sampling shuffle. " +
+      "Replicate weights are a deterministic per-(row, b) hash — the B-way explode is a bounded fanout combined map-side; no resampling shuffle, no RNG state.")
 
   /** q180 — Pearson's χ² independence statistic for the q163 column
     * pair, with per-cell integer-ppm terms: χ²_ppm(cell) =
@@ -166,7 +168,8 @@ object StatsAudits {
       |SELECT MAX(n) AS n, MAX(dof) AS dof,
       |       CAST(SUM((dev * dev * 1000000) // (CAST(n AS HUGEINT) * ca * cb)) AS BIGINT) AS chi2_ppm
       |FROM terms""".stripMargin),
-    doc = "stats: Pearson chi-square independence — decimal-exact per-cell ppm terms, order-insensitive sum")
+    doc = "stats: Pearson chi-square independence — decimal-exact per-cell ppm terms, order-insensitive sum. " +
+      "Contingency cells from one groupBy; expected counts from broadcast marginals of the cell frame; the statistic is an exact-integer cross-product sum until one final division.")
 
   val all: Seq[Q] = Seq(q163, q164, q180)
 }

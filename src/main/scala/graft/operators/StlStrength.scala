@@ -134,7 +134,8 @@ object StlStrength {
       |       GREATEST(0e0, 1e0 - var_r / NULLIF(var_tr, 0e0)) AS f_trend,
       |       GREATEST(0e0, 1e0 - var_r / NULLIF(var_sr, 0e0)) AS f_seasonal
       |FROM vars""".stripMargin),
-    doc = "timeseries: Wang-Smith-Hyndman trend/seasonal strength from the q273 decomposition — F_T and F_S in [0,1], six ordered month folds, exact MA-12 core")
+    doc = "timeseries: Wang-Smith-Hyndman trend/seasonal strength from the q273 decomposition — F_T and F_S in [0,1], six ordered month folds, exact MA-12 core. " +
+      "q273's bounded shape: one corpus aggregate to the |months| frame, calendar-bounded MA/lag windows, then six <=72-term ordered folds and a 1-row variance epilogue.")
 
   val all: Seq[Q] = Seq(q283)
 }

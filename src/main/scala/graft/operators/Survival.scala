@@ -121,7 +121,8 @@ object Survival {
       |            ELSE CAST(SUM(term) OVER (ORDER BY dur
       |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) END AS km_log2q
       |FROM ev ORDER BY dur_days""".stripMargin),
-    doc = "survival: Kaplan-Meier time-to-readmission curve, censoring-aware, log2 fixed-point exact")
+    doc = "survival: Kaplan-Meier time-to-readmission curve, censoring-aware, log2 fixed-point exact. " +
+      "Corpus collapses to per-duration (events, total) in one map-side-combinable aggregate; the at-risk reverse-cumsum and KM prefix windows run on a CALENDAR-bounded frame (<= max follow-up days) the corpus cannot grow; study end rides a 1-row broadcast.")
 
   /** q246 — Nelson–Aalen cumulative hazard (Nelson 1972; Aalen 1978)
     * of the SAME time-to-readmission cohort as q153, reported at the
@@ -200,7 +201,8 @@ object Survival {
       |                        ORDER BY dur), (a, b) -> a + b) AS var_hazard
       |FROM grid JOIN ev ON ev.dur <= grid.horizon_days
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "survival: Nelson-Aalen cumulative hazard + Klein variance of time-to-readmission at 30/60/90/180/365-day horizons — exact event ledger, ordered-fold hazard sums")
+    doc = "survival: Nelson-Aalen cumulative hazard + Klein variance of time-to-readmission at 30/60/90/180/365-day horizons — exact event ledger, ordered-fold hazard sums. " +
+      "NA: q153's calendar-bounded event ledger; five horizon folds (ordered by duration) on that bounded frame; corpus-sized work is only the first/next-encounter groupBys; 5 rows out.")
 
   val all: Seq[Q] = Seq(q153, q246)
 }

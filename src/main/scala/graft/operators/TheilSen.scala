@@ -73,7 +73,8 @@ object TheilSen {
       |       r.slope AS ts_slope_cents_per_day,
       |       r.da AS witness_day_a, r.db AS witness_day_b
       |FROM ranked r, n WHERE r.rn = (n.n_pairs + 1) // 2""".stripMargin),
-    doc = "stats: Theil-Sen robust daily-revenue trend — type-1 median of all calendar-bounded pairwise slopes with the witness pair")
+    doc = "stats: Theil-Sen robust daily-revenue trend — type-1 median of all calendar-bounded pairwise slopes with the witness pair. " +
+      "Theil-Sen: corpus collapses to the daily frame map-side; the D(D-1)/2 pair frame (~2.9M at a 2400-day span) is CALENDAR-bounded, corpus-independent; type-1 median via one bounded single-partition rank window.")
 
   val all: Seq[Q] = Seq(q209)
 }

@@ -102,7 +102,8 @@ object ThetaForecast {
       |       0.5e0 * (a + b * CAST(n_months + $HorizonMonths AS DOUBLE)) + 0.5e0 * ses
       |         AS forecast6_cents
       |FROM folded ORDER BY o_orderpriority""".stripMargin),
-    doc = "timeseries: Theta-method forecast (M3 winner; SES alpha=1/2 on the theta=2 line averaged with the exact-moment regression line) of monthly revenue per priority, 6-month horizon")
+    doc = "timeseries: Theta-method forecast (M3 winner; SES alpha=1/2 on the theta=2 line averaged with the exact-moment regression line) of monthly revenue per priority, 6-month horizon. " +
+      "Corpus collapses map-side to (priority, month) cells; rank window, exact decimal regression moments and the SES left-fold all run on the calendar-bounded per-priority month frame (~84 rows).")
 
   val all: Seq[Q] = Seq(q276)
 }

@@ -60,7 +60,8 @@ object WeightedMedian {
       |       CAST(MAX(total) AS BIGINT) AS total_weight
       |FROM walk WHERE cumw * 2 >= total + 1
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "aggregate: exact type-1 weighted median (quantity-weighted price) via collapsed cumulative-weight walk")
+    doc = "aggregate: exact type-1 weighted median (quantity-weighted price) via collapsed cumulative-weight walk. " +
+      "Weighted median: per-(group, value) weight collapse FIRST (map-side combinable), cumulative-weight window on the collapsed frame, min-value election per group — integer arithmetic, no percentile_approx.")
 
   val all: Seq[Q] = Seq(q193)
 }

@@ -94,7 +94,8 @@ object WelchT {
       |         + (v2 / CAST(n2 AS DOUBLE)) * (v2 / CAST(n2 AS DOUBLE))
       |           / CAST(NULLIF(n2 - 1, 0) AS DOUBLE)) AS welch_df
       |FROM se""".stripMargin),
-    doc = "stats: Welch unequal-variance t-test of returned-vs-accepted price cents with Welch-Satterthwaite df — six exact decimal sufficient statistics, one mirrored IEEE+sqrt epilogue")
+    doc = "stats: Welch unequal-variance t-test of returned-vs-accepted price cents with Welch-Satterthwaite df — six exact decimal sufficient statistics, one mirrored IEEE+sqrt epilogue. " +
+      "Six exact decimal sufficient statistics in ONE map-side-combinable conditional aggregate (no per-group shuffle at all); t and Welch-Satterthwaite df are a 1-row IEEE+sqrt epilogue.")
 
   val all: Seq[Q] = Seq(q267)
 }

@@ -101,7 +101,8 @@ object ZoneMap {
       |         AS scan_pct
       |FROM totals t JOIN probes p USING (layout)
       |ORDER BY t.layout""".stripMargin),
-    doc = "layout: zone-map (min/max) pruning audit — insertion-order vs ship-month layouts probed with twelve month-range predicates; skip and scan fractions from exact file stats")
+    doc = "layout: zone-map (min/max) pruning audit — insertion-order vs ship-month layouts probed with twelve month-range predicates; skip and scan fractions from exact file stats. " +
+      "Zone-map: both layouts collapse map-side to file-granularity (fid, n, min, max) stats; the 12-predicate probe is a broadcast cross join on that metadata frame — at 100 TB a metadata-only query after one stats pass.")
 
   val all: Seq[Q] = Seq(q242)
 }

@@ -52,7 +52,8 @@ object DpSensitivity {
       |       CAST(MAX(n_orders) AS BIGINT) AS count_sensitivity,
       |       CAST(MAX(rev_cents) AS DOUBLE) / 100.0 AS revenue_sensitivity
       |FROM per_user GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "privacy: DP L1-sensitivity calibration (max per-customer contribution to each released cell) — the noise-scale table")
+    doc = "privacy: DP L1-sensitivity calibration (max per-customer contribution to each released cell) — the noise-scale table. " +
+      "DP sensitivity: customer dim broadcasts; two nested map-side-combinable aggregates (per-(cell, customer) then per-segment max) — nothing wider than the class frame shuffles; maxima are exact longs.")
 
   val all: Seq[Q] = Seq(q197)
 }

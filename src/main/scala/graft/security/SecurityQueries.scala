@@ -81,7 +81,8 @@ object SecurityQueries {
       |SELECT access_flag, COUNT(*) AS n_events,
       |       COUNT(DISTINCT user_id) AS n_users
       |FROM f GROUP BY access_flag ORDER BY access_flag""".stripMargin),
-    doc = "F12: access-audit surveillance (after-hours / high-volume / no-relationship)")
+    doc = "F12: access-audit surveillance (after-hours / high-volume / no-relationship). " +
+      "Audit join broadcasts while the policy side is small and falls back to a (user, patient) shuffle when not; flag logic is per-row codegen.")
 
   /** q132 — k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
     * et al. 2007): the release-safety check that belongs next to the
@@ -132,7 +133,8 @@ object SecurityQueries {
       |       CAST(SUM(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT) AS rows_at_risk,
       |       CAST(MIN(l) AS BIGINT) AS min_l_diversity
       |FROM cls GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "privacy: k-anonymity class sizes + l-diversity floor over quasi-identifiers (nation, segment, order year)")
+    doc = "privacy: k-anonymity class sizes + l-diversity floor over quasi-identifiers (nation, segment, order year). " +
+      "Quasi-identifier class sizes from one groupBy; k-anonymity stats are pure integers over the |classes|-sized frame.")
 
   /** q189 — t-closeness audit (Li, Li & Venkatasubramanian 2007), the
     * third rung of the release-safety ladder after q132's k-anonymity
@@ -209,7 +211,8 @@ object SecurityQueries {
       |       CAST(COUNT(CASE WHEN t > 0.2 THEN 1 END) AS BIGINT) AS n_divergent_classes,
       |       CAST(SUM(CASE WHEN t > 0.2 THEN n ELSE 0 END) AS BIGINT) AS rows_at_risk
       |FROM scored GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "privacy: t-closeness — integer-exact ordinal EMD between each quasi-identifier class's sensitive distribution and the global one")
+    doc = "privacy: t-closeness — integer-exact ordinal EMD between each quasi-identifier class's sensitive distribution and the global one. " +
+      "t-closeness: one broadcast equi-join, one map-side-combinable class aggregate (cumulative counts as conditional counts — no window), global totals re-broadcast from the class frame; integer EMD numerators, ONE IEEE division per class.")
 
   val all: Seq[Q] = Seq(q82, q132, q189)
 }

@@ -77,7 +77,8 @@ object CentroidShift {
       |         / (SQRT(list_reduce(list(aa ORDER BY d), (x, y) -> x + y))
       |            * SQRT(list_reduce(list(bb ORDER BY d), (x, y) -> x + y))) AS cosine
       |FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "similarity: pairwise label-centroid cosine matrix — quantized exact per-dimension sums, ordered-fold dot/norm reductions, 45-pair separability report")
+    doc = "similarity: pairwise label-centroid cosine matrix — quantized exact per-dimension sums, ordered-fold dot/norm reductions, 45-pair separability report. " +
+      "ONE explode -> (label, dim) aggregate compresses the corpus to a 10x64 frame behind a Barrier; the label x label cosine matrix is epilogue on 100 cells with quantized-exact sums.")
 
   val all: Seq[Q] = Seq(q261)
 }

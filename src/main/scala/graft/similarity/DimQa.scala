@@ -102,7 +102,8 @@ object DimQa {
       |  FROM pairs p JOIN dims da ON da.d = p.d1 JOIN dims db ON db.d = p.d2)
       |SELECT CAST(d1 AS INT) AS d1, CAST(d2 AS INT) AS d2, corr
       |FROM scored ORDER BY abs(corr) DESC, d1, d2 LIMIT $TopK""".stripMargin),
-    doc = "similarity: embedding dimension-correlation QA — top-10 |Pearson r| coordinate pairs from exact quantized moments (2016-group in-row pair pass)")
+    doc = "similarity: embedding dimension-correlation QA — top-10 |Pearson r| coordinate pairs from exact quantized moments (2016-group in-row pair pass). " +
+      "Dim QA: constant 2016-fanout in-row pair array compressed map-side to 2016 groups; 64-row marginal frame broadcasts back; top-10 is a TakeOrdered over 2016 rows. Nothing corpus-sized shuffles.")
 
   val all: Seq[Q] = Seq(q204)
 }

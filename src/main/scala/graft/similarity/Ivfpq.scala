@@ -161,7 +161,8 @@ object Ivfpq {
          |WHERE rank <= $TopK
          |ORDER BY query_id, rank""".stripMargin
     },
-    doc = "similarity: IVF-PQ ANN — coarse cells bound the scan (nprobe=2), PQ codes bound the bytes (4/vector), exact top-5 rerank")
+    doc = "similarity: IVF-PQ ANN — coarse cells bound the scan (nprobe=2), PQ codes bound the bytes (4/vector), exact top-5 rerank. " +
+      "IVF-PQ: one broadcast crossJoin serves both centroid roles (cells + codebooks); the ADC scan is an equi-join on cell id over (vec_id, cell, 4 codes) rows — nprobe/ncells of the corpus, 4 bytes per vector; exact rerank fetches 10/query by key.")
 
   val all: Seq[Q] = Seq(q194)
 }

@@ -100,7 +100,8 @@ object KnnAudit {
       |       CAST(COUNT(CASE WHEN pred_label = true_label THEN 1 END) AS DOUBLE)
       |         / COUNT(*) AS knn_accuracy
       |FROM pred GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "similarity: kNN majority-vote label audit (per-class accuracy of the embedding space, broadcast-probe scan)",
+    doc = "similarity: kNN majority-vote label audit (per-class accuracy of the embedding space, broadcast-probe scan). " +
+      "kNN audit: q47's broadcast-probe contract — probes broadcast, corpus streams once past codegen'd cosine, per-probe top-5 via the rank window's per-partition WindowGroupLimit heaps; vote + accuracy rollup act on 5*|probes| rows.",
     // the pre-bounding correlated-UNNEST formulation, kept for the
     // check_oracle_equiv.py equivalence proof
     oracleReference = Some(s"""WITH probes AS (

@@ -77,7 +77,8 @@ object Medoids {
       |       CAST(tot AS DOUBLE) / CAST((n_members - 1) * 10000 AS DOUBLE)
       |         AS mean_peer_sim
       |FROM elect WHERE rn = 1 ORDER BY label""".stripMargin),
-    doc = "similarity: exact PAM medoid per label cluster (label-blocked quantized-cosine totals, struct-max election)",
+    doc = "similarity: exact PAM medoid per label cluster (label-blocked quantized-cosine totals, struct-max election). " +
+      "Medoids: label-BLOCKED pair join (O(sum block^2), never corpus^2); pair sims quantize to longs BEFORE the sum so totals are shuffle-order-proof; election is a map-side-combinable struct-max.",
     oracleReference = Some("""WITH pairs AS (
       |  SELECT a.label, a.vec_id,
       |         CAST(ROUND((SELECT SUM(CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))

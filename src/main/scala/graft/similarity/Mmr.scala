@@ -115,7 +115,8 @@ object Mmr {
       |FROM sel_$K s JOIN cands c ON s.vec_id = c.vec_id
       |ORDER BY pos""".stripMargin
     },
-    doc = "similarity: MMR diversified top-5 (relevance minus redundancy, greedy over a bounded candidate cut)")
+    doc = "similarity: MMR diversified top-5 (relevance minus redundancy, greedy over a bounded candidate cut). " +
+      "MMR's sequential greedy loop runs K=5 bounded rounds; each round scores candidates against the selected set via broadcast (selected set is <=K rows) — corpus side streams map-side.")
 
   val all: Seq[Q] = Seq(q144)
 }

@@ -166,7 +166,8 @@ object Pq {
          |WHERE rank <= $TopK
          |ORDER BY query_id, rank""".stripMargin
     },
-    doc = "similarity: product-quantization ANN — 4×16-dim codebooks, 4-byte codes, ADC lookup-table scan, exact top-5 rerank")
+    doc = "similarity: product-quantization ANN — 4×16-dim codebooks, 4-byte codes, ADC lookup-table scan, exact top-5 rerank. " +
+      "PQ ANN: codebooks + per-query LUT arrays broadcast; encoding is one streaming crossJoin + map-side struct-max argmax; the ADC scan shuffles (vec_id, 4 codes) only — 4 lookups + 3 adds per vector, no float vectors; raw vectors move only for the 20-per-query rerank fetch by key.")
 
   val all: Seq[Q] = Seq(q188)
 }

@@ -89,7 +89,8 @@ object VectorIndexQueries {
       |SELECT query_id, neighbor_id, score, CAST(rank AS INT) AS rank
       |FROM ranked WHERE rank <= $TopK
       |ORDER BY query_id, rank""".stripMargin),
-    doc = s"similarity: ANN served from the persisted IVF index (partition-pruned nprobe=$NProbe scan, bounded top-$TopK aggregate; build/append/remove lifecycle in etl/VectorIndex)")
+    doc = s"similarity: ANN served from the persisted IVF index (partition-pruned nprobe=$NProbe scan, bounded top-$TopK aggregate; build/append/remove lifecycle in etl/VectorIndex). " +
+      "Search served from the PERSISTED IVF index: partition-pruned postings scan (plan-asserted zero corpus-side Exchange), broadcast probe batch, single bounded top-k exchange — build cost amortized across queries.")
 
   val all: Seq[Q] = Seq(q262)
 }

@@ -73,7 +73,8 @@ object VectorQueries {
       |SELECT query_id, neighbor_id, score, CAST(rank AS INT) AS rank
       |FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin),
-    doc = "similarity: brute-force cosine top-k via codegen'd expression")
+    doc = "similarity: brute-force cosine top-k via codegen'd expression. " +
+      "Probes broadcast; codegen'd CosineSimilarity scores map-side; the only exchange is the final per-probe top-k (8x5 rows).")
 
   /** Sign-random-projection hyperplane weights, derived from MD5 parity
     * (`md5(p + "_" + d)` first hex char odd → +1) — a derivation both
@@ -160,7 +161,8 @@ object VectorQueries {
       |SELECT query_id, neighbor_id, score, CAST(rank AS INT) AS rank
       |FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin),
-    doc = "similarity: sign-LSH bucketed ANN (md5-derived hyperplanes)")
+    doc = "similarity: sign-LSH bucketed ANN (md5-derived hyperplanes). " +
+      "8-bit sign-LSH bucket turns scoring into an equi-join on the bucket key — ~1/256 of brute-force candidates, same TakeOrdered tail.")
 
   /** q49 — embedding-cosine near-duplicate pairs, label-blocked and
     * cell-pruned. r1 ran an all-pairs join within each label — with 10
@@ -315,7 +317,8 @@ object VectorQueries {
       |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
       |SELECT vec_a, vec_b, label, score FROM s WHERE score >= 0.4
       |ORDER BY vec_a, vec_b""".stripMargin),
-    doc = "similarity: label-blocked cosine near-dup pairs",
+    doc = "similarity: label-blocked cosine near-dup pairs. " +
+      "Cell-blocked exact near-dup: broadcast centroid assignment, triangle-inequality cell-pair grid, candidate join keyed by (label, cell pair) — no label-wide cartesian.",
     oracleReference =
       Some(s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
         |       ROUND(${oCos("a.embedding", "b.embedding")}, 4) AS score
@@ -431,7 +434,8 @@ object VectorQueries {
       |SELECT query_id, neighbor_id, score, CAST(rank AS INT) AS rank
       |FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin),
-    doc = "similarity: IVF coarse-quantization ANN (nprobe=2, broadcast centroids)")
+    doc = "similarity: IVF coarse-quantization ANN (nprobe=2, broadcast centroids). " +
+      "Centroids broadcast for assignment; nprobe cells bound the candidate scan; the candidate join is an equi-join on cell id.")
 
   /** q106 — semantic dedup with survivor election (the SemDeDup shape,
     * Abbas et al. 2023): embedding-space near-dup CLUSTERS (q49's exact
@@ -596,7 +600,8 @@ object VectorQueries {
       |       CAST(COALESCE(SUM(CASE WHEN l.vec_id = k.keep_vec THEN l.simq END), 0) AS BIGINT) AS kept_simq_sum
       |FROM labs l JOIN keep k ON l.lab = k.lab
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "similarity: SemDeDup-style semantic dedup — near-dup clusters elect the farthest-from-centroid survivor, per-label accounting")
+    doc = "similarity: SemDeDup-style semantic dedup — near-dup clusters elect the farthest-from-centroid survivor, per-label accounting. " +
+      "SemDeDup: ONE corpus×centroid scoring pass (celledOf, r13 — the q49 cell assignment AND the election similarity off the same cached crossJoin+groupBy; it used to run twice); near-dup pairs bucketed by (label, cell) — no label-wide cartesian; survivor election is a struct-max per cluster, map-side combinable.")
 
   /** q108 — contrastive-pair mining for embedding-model training: for
     * each anchor (a deterministic 1-in-25 sample), the best POSITIVE
@@ -651,7 +656,8 @@ object VectorQueries {
       |SELECT query_id, pair_type, neighbor_id, score
       |FROM ranked WHERE rn = 1
       |ORDER BY query_id, pair_type""".stripMargin),
-    doc = "similarity: contrastive positive + hard-negative mining per anchor — broadcast anchors, one corpus pass, struct-max argmax")
+    doc = "similarity: contrastive positive + hard-negative mining per anchor — broadcast anchors, one corpus pass, struct-max argmax. " +
+      "Contrastive mining: bounded anchor set broadcast, corpus streams ONCE past the codegen'd cosine; per-(anchor,pair_type) argmax is a struct-max aggregate — map-side combinable, output 2·|anchors| rows, no corpus shuffle, no window.")
 
   /** q126 — measured IVF recall curve: recall@5 of the q52 coarse-
     * quantization ANN against the q47 brute-force ground truth, for
@@ -764,7 +770,8 @@ object VectorQueries {
       |       COALESCE(h.n_hits, 0) * 1000000 // (SELECT n_exact FROM ne) AS recall_q
       |FROM grid g LEFT JOIN hits h USING (nprobe)
       |ORDER BY g.nprobe""".stripMargin),
-    doc = "similarity: measured IVF recall@5 vs brute force by nprobe — the ANN-family S-curve audit")
+    doc = "similarity: measured IVF recall@5 vs brute force by nprobe — the ANN-family S-curve audit. " +
+      "IVF recall audit: ONE corpus-sized scoring pass serves ground truth and all four nprobe levels — every (cell, probe-rank) pair scored once behind a barrier, each level a probe_r filter (the nested-candidates contract), the exact top-5 the unfiltered ranking of the same scores.")
 
   /** The corpus in symmetric per-vector int8 form: `q[i] =
     * round(x[i] · 127 / max|x|)` ∈ [−127, 127], plus the integer
@@ -886,7 +893,8 @@ object VectorQueries {
       |JOIN embeddings qe ON qe.vec_id = r.query_id
       |WHERE r.rank <= 5
       |ORDER BY r.query_id, r.rank""".stripMargin),
-    doc = "similarity: symmetric int8 quantization, exact integer dot-product coarse rank, float rerank on the k winners only")
+    doc = "similarity: symmetric int8 quantization, exact integer dot-product coarse rank, float rerank on the k winners only. " +
+      "Int8-quantized ANN: quantization materialized behind two Barriers (CollapseProject would otherwise inline the scale aggregate per COMPONENT and the quantized arrays per PAIR); coarse scoring is integer zip_with dot products against a broadcast 8-probe frame; the float cosine rerank touches only the 40 winners.")
 
   /** q142 — simplified-silhouette clustering audit over the `label`
     * assignment (Rousseeuw 1987's silhouette with the per-point "a"/"b"
@@ -976,7 +984,8 @@ object VectorQueries {
       |       CAST(SUM(sil_q) AS BIGINT) AS sum_sil_q,
       |       CAST(COUNT(CASE WHEN sil_q < 0 THEN 1 END) AS BIGINT) AS n_negative
       |FROM sil GROUP BY label ORDER BY label""".stripMargin),
-    doc = "similarity: simplified-silhouette audit of the label clustering (integer-exact, centroid-based)")
+    doc = "similarity: simplified-silhouette audit of the label clustering (integer-exact, centroid-based). " +
+      "Simplified silhouette from centroid algebra: per-dimension explode -> two narrow aggregates (per vector, per label) with quantized-exact integers — nothing larger than rows x k shuffles; no all-pairs distances.")
 
   val all: Seq[Q] = Seq(q47, q48, q49, q52, q106, q108, q126, q131, q142)
 }

@@ -63,7 +63,8 @@ object Attribution {
       |       ${Q.oSum("value")} AS revenue
       |FROM carried WHERE event_type = 'purchase'
       |GROUP BY channel ORDER BY channel""".stripMargin),
-    doc = "events: last-touch revenue attribution as a single ordered window pass (join-free as-of credit assignment)")
+    doc = "events: last-touch revenue attribution as a single ordered window pass (join-free as-of credit assignment). " +
+      "Last-touch attribution: NO as-of join — one user-keyed Exchange, one ordered window pass carrying last(ignoreNulls) forward, map-side final aggregate; total (ts, event_id) order kills same-timestamp nondeterminism.")
 
   val all: Seq[Q] = Seq(q192)
 }

@@ -73,7 +73,8 @@ object Burstiness {
       |            (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
       |        + CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)) AS burstiness
       |FROM m ORDER BY event_type""".stripMargin),
-    doc = "events: Goh-Barabasi inter-arrival burstiness per type — per-user gap streams, decimal-exact moments")
+    doc = "events: Goh-Barabasi inter-arrival burstiness per type — per-user gap streams, decimal-exact moments. " +
+      "Inter-arrival gaps from a per-(type, user) lag window; sums and sum-of-squares accumulate in DECIMAL(38,0) (exact, associative); B is one IEEE expression over the exact sums — per-type frame out.")
 
   val all: Seq[Q] = Seq(q173)
 }

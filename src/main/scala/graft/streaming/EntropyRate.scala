@@ -80,7 +80,8 @@ object EntropyRate {
       |SELECT from_type, out_n, n_branches, cond_entropy_q,
       |       entropy_rate_q, n_transitions
       |FROM hf, g ORDER BY from_type""".stripMargin),
-    doc = "events: Markov entropy rate + per-state conditional entropy of the event-type chain in quantized-log2 micro-bits — the predictability bound over q160's matrix")
+    doc = "events: Markov entropy rate + per-state conditional entropy of the event-type chain in quantized-log2 micro-bits — the predictability bound over q160's matrix. " +
+      "EntropyRate: q160's per-user lead window compressed map-side to the kxk transition matrix behind a Barrier; entropy sums in quantized log2 run on that k^2 frame; global rate is a 1-row broadcast.")
 
   val all: Seq[Q] = Seq(q249)
 }

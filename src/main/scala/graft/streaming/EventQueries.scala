@@ -71,7 +71,8 @@ object EventQueries {
       |       COUNT(t_purchase) * 100.0 / COUNT(*) AS view_to_purchase_pct
       |FROM v LEFT JOIN c ON v.user_id = c.user_id
       |       LEFT JOIN p ON v.user_id = p.user_id""".stripMargin),
-    doc = "ordered funnel view→click→purchase (stage-min aggregates, one event scan)")
+    doc = "ordered funnel view→click→purchase (stage-min aggregates, one event scan). " +
+      "Funnel via min-timestamp-per-stage in one aggregate + ordered recheck — events scanned once, shuffled once on user_id; no 3-way self-join.")
 
   /** q36 — tumbling-window aggregation (1 hour). Spark `window()` starts
     * align to the epoch hour grid = date_trunc('hour') for a 1h tumble.
@@ -98,7 +99,8 @@ object EventQueries {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY hour_start, event_type""".stripMargin),
-    doc = "streaming batch-equivalent: tumbling 1h window")
+    doc = "streaming batch-equivalent: tumbling 1h window. " +
+      "Tumbling window() is a per-row bucket projection + map-side-combinable aggregate — one narrow shuffle on (bucket, type).")
 
   /** q37 — sliding-window aggregation (1 hour window, 15 min slide).
     * Each event belongs to 4 overlapping windows; Spark's window()
@@ -128,7 +130,8 @@ object EventQueries {
       |FROM slid
       |GROUP BY window_start, event_type
       |ORDER BY window_start, event_type""".stripMargin),
-    doc = "streaming batch-equivalent: sliding 1h/15min window")
+    doc = "streaming batch-equivalent: sliding 1h/15min window. " +
+      "Sliding window expands each event to its 4 overlapping buckets BEFORE the map-side combine — a bounded x4 fanout, not a join.")
 
   /** q38 — semi-structured JSON extraction from the props column
     * (events.props is a JSON string — FIXTURES.md §2; the reference has
@@ -160,7 +163,8 @@ object EventQueries {
       |WHERE k > 50
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin),
-    doc = "JSON payload extraction (regexp; typed from_json in streaming job)")
+    doc = "JSON payload extraction (regexp; typed from_json in streaming job). " +
+      "regexp_extract runs inside the scan stage; the k>50 filter prunes before the aggregate shuffle.")
 
   /** q39 — threshold surveillance (the reference's "real-time clinical
     * surveillance" Q5, healthcare-sql-analytics.sql:442-518: flag
@@ -189,7 +193,8 @@ object EventQueries {
       |GROUP BY 1, 2
       |HAVING COUNT(*) >= 2
       |ORDER BY user_id, hour_start""".stripMargin),
-    doc = "surveillance thresholds (streaming-alert batch equivalent)")
+    doc = "surveillance thresholds (streaming-alert batch equivalent). " +
+      "event_type filter in PushedFilters; per-(user, hour) aggregate with a post-agg alert floor — alert frame is already tiny when it shuffles.")
 
   /** q54 — event sessionization (gaps-and-islands): consecutive events
     * of a user belong to one session while the inter-event gap is
@@ -249,7 +254,8 @@ object EventQueries {
       |FROM islands
       |GROUP BY user_id, sess
       |ORDER BY user_id, session_start""".stripMargin),
-    doc = "sessionization: 120-min-gap islands (window batch; stateful streaming twin)")
+    doc = "sessionization: 120-min-gap islands (window batch; stateful streaming twin). " +
+      "Gap sessionization in ONE per-user window pass (lag -> gap flag -> cumulative session id); the mapGroupsWithState streaming twin is spec-asserted equal.")
 
   /** q76 — time-weighted average (the clinical-vitals aggregation the
     * plain AVG gets wrong: a reading standing for 6 hours must weigh 6×
@@ -298,7 +304,8 @@ object EventQueries {
       |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
       |         / COUNT(*) AS plain_avg
       |FROM spans WHERE dur_ms IS NOT NULL""".stripMargin),
-    doc = "time-weighted average vs plain average (decimal-exact weighted sums)")
+    doc = "time-weighted average vs plain average (decimal-exact weighted sums). " +
+      "LAG-to-next-event per-user window gives exact microsecond durations; the weighted sum accumulates in DECIMAL so shuffle order cannot perturb it.")
 
   /** q77 — event path analysis: each user's first three events in time
     * order form a path string; paths are ranked by user count. The
@@ -334,7 +341,8 @@ object EventQueries {
       |SELECT path, COUNT(*) AS n_users
       |FROM paths GROUP BY path
       |ORDER BY n_users DESC, path LIMIT 10""".stripMargin),
-    doc = "event path analysis: first-3-event sequences ranked by user count")
+    doc = "event path analysis: first-3-event sequences ranked by user count. " +
+      "Paths via sort_array(collect_list(struct)) — built inside the aggregate, no full-table window sort; collect_list's arrival nondeterminism neutralized by the struct sort.")
 
   /** q93 — key-less interval join via bucketing: every `error` event
     * opens a 10-minute incident window; count, per event type, the
@@ -384,7 +392,8 @@ object EventQueries {
       |       COUNT(DISTINCT i.inc_id) AS n_incidents
       |FROM inc i JOIN e ON e.us >= i.w0 AND e.us < i.w1
       |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin),
-    doc = "J-family scale path: key-less interval join via one-window-length time buckets (no BroadcastNestedLoopJoin)")
+    doc = "J-family scale path: key-less interval join via one-window-length time buckets (no BroadcastNestedLoopJoin). " +
+      "Key-less interval join: windows exploded onto one-window-length time buckets, shuffled equi-join on the bucket + residual range filter — no BroadcastNestedLoopJoin (plan-asserted).")
 
   /** q130 — sessionization via Spark's NATIVE `session_window`
     * (SPARK-10816 merging-interval aggregation): the same
@@ -445,7 +454,8 @@ object EventQueries {
       |FROM islands
       |GROUP BY user_id, sess
       |ORDER BY user_id, session_start""".stripMargin),
-    doc = "sessionization: native session_window merging-interval aggregation (strict-gap convention), the streaming-capable operator form")
+    doc = "sessionization: native session_window merging-interval aggregation (strict-gap convention), the streaming-capable operator form. " +
+      "Native session windows: UpdatingSessions + MergingSessions over ONE user-keyed Exchange — state proportional to OPEN sessions, no LAG/running-sum window cascade; the identical expression runs under readStream + watermark.")
 
   /** q134 — time-grid resample + forward fill (LOCF): align each
     * user's event series to a daily grid between their first and last
@@ -519,7 +529,8 @@ object EventQueries {
       |       COUNT(v_fill) - COUNT(v_day) AS n_carried,
       |       ${graft.Q.oSum("v_fill")} AS filled_sum
       |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin),
-    doc = "time series: daily-grid resample + last-observation-carried-forward per user, exact decimal checksum of the filled series")
+    doc = "time series: daily-grid resample + last-observation-carried-forward per user, exact decimal checksum of the filled series. " +
+      "Resample + LOCF: one user-keyed Exchange serves the per-day max-struct election, the span aggregate, the grid explode, the last(ignoreNulls) fill window and the final rollup; the users x days grid exists only between explode and rollup, never on the driver.")
 
   /** q135 — overlapping-interval merge (treatment episodes): each
     * event opens a 30-minute interval; overlapping/touching intervals
@@ -585,7 +596,8 @@ object EventQueries {
       |       CAST(MAX(ep_end - ep_start) AS BIGINT) AS longest_us,
       |       CAST(MAX(n_ev) AS BIGINT) AS busiest_episode_events
       |FROM eps GROUP BY user_id ORDER BY user_id""".stripMargin),
-    doc = "intervals: overlapping 30-min windows merge to episodes per user (linear sweep, no self-join); coverage + longest-episode ledger")
+    doc = "intervals: overlapping 30-min windows merge to episodes per user (linear sweep, no self-join); coverage + longest-episode ledger. " +
+      "Interval merge: linear per-user sweep (running max of prior ends -> island sum -> two-level rollup) on ONE user-keyed Exchange; no interval self-join at any width. Same operator as sessionize(gap = interval length) - spec-pinned.")
 
   val all: Seq[Q] =
     Seq(q36, q37, q38, q39, q54, q73, q76, q77, q93, q130, q134, q135)

@@ -112,7 +112,8 @@ object LittlesLaw {
       |         AS l_timeavg,
       |       CAST(l_peak AS BIGINT) AS l_peak, peak_minute
       |FROM base, span, peak""".stripMargin),
-    doc = "ops: Little's law concurrency audit over 120-min-gap sessions — independent lambda/W/time-average-L plus peak concurrency on the minute grid")
+    doc = "ops: Little's law concurrency audit over 120-min-gap sessions — independent lambda/W/time-average-L plus peak concurrency on the minute grid. " +
+      "Little's law: one user-keyed window pass to session rows; the occupancy sweep compresses map-side onto the CALENDAR-bounded minute grid; report is 1 row with three independently-measured ratios.")
 
   val all: Seq[Q] = Seq(q231)
 }

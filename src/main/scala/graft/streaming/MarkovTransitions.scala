@@ -78,7 +78,8 @@ object MarkovTransitions {
       |SELECT from_type, to_type, n, p_ppm,
       |       CAST(ROW_NUMBER() OVER (ORDER BY n DESC, from_type, to_type) AS INT) AS pos
       |FROM top ORDER BY pos""".stripMargin),
-    doc = "events: first-order Markov directly-follows matrix with integer-ppm outflow shares")
+    doc = "events: first-order Markov directly-follows matrix with integer-ppm outflow shares. " +
+      "Directly-follows pairs from a per-user lead window (one shuffle on user_id) compressed map-side to the |types|^2 transition frame; outflow shares ride a broadcast join.")
 
   val all: Seq[Q] = Seq(q160)
 }

@@ -88,7 +88,8 @@ object Seasonal {
       |FROM scored s JOIN worst w
       |  ON s.event_type = w.event_type AND w.rn = 1
       |GROUP BY s.event_type ORDER BY s.event_type""".stripMargin),
-    doc = "time series: day-of-week seasonal baseline + cross-multiplied deviation flags per event type")
+    doc = "time series: day-of-week seasonal baseline + cross-multiplied deviation flags per event type. " +
+      "Seasonal anomaly: one map-side day projection + one (type, day) count aggregate; span is a 1-row broadcast; baseline join is |types*7| rows; deviation flags and ppm ratios are in-row integer cross-products; worst-day election is max(struct).")
 
   val all: Seq[Q] = Seq(q146)
 }

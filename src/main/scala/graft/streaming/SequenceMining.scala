@@ -83,7 +83,8 @@ object SequenceMining {
       |JOIN marg m3 ON m3.t = p.t3
       |CROSS JOIN nu CROSS JOIN n3
       |ORDER BY lift DESC, p.t1, p.t2, p.t3 LIMIT $TopK""".stripMargin),
-    doc = s"sequence: top-$TopK contiguous 3-event patterns by independence lift (|types|^3-bounded pattern frame, one windowed pass)")
+    doc = s"sequence: top-$TopK contiguous 3-event patterns by independence lift (|types|^3-bounded pattern frame, one windowed pass). " +
+      "Trigram mining: one user-keyed window pass, map-side compression to the |types|^3-bounded pattern frame (<=125 rows); marginals broadcast back; lift ranks on bit-identical doubles.")
 
   val all: Seq[Q] = Seq(q218)
 }

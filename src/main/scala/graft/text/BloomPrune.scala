@@ -201,7 +201,8 @@ object BloomPrune {
       |       CAST(SUM(COALESCE(h.n_hit, 0)) AS BIGINT) AS n_hit_shingles
       |FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
       |GROUP BY t.source ORDER BY t.source""".stripMargin),
-    doc = "decontamination with map-side Bloom pruning: codegen'd BloomFilterMightContain probe, exact join kills false positives — result ≡ unpruned")
+    doc = "decontamination with map-side Bloom pruning: codegen'd BloomFilterMightContain probe, exact join kills false positives — result ≡ unpruned. " +
+      "Bloom-pruned decontamination: BloomFilterAggregate builds the filter DISTRIBUTED over the benchmark shingles (map-side partials, one bitset to the driver); the probe side filters through codegen'd BloomFilterMightContain BEFORE its exchange, so only candidates (true hits + fp) shuffle into the exact join that kills the fp — result must be identical to the unpruned plan, the oracle proves it per round.")
 
   val all: Seq[Q] = Seq(q129)
 }

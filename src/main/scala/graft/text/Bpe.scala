@@ -193,7 +193,8 @@ object Bpe {
         .orderBy($"rank")
     },
     Some(oracleSql(K)),
-    doc = "tokenizer: applied BPE — train K merges on the vocab dict (pair argmax + greedy rewrite per round), corpus token counts under the learned vocab")
+    doc = "tokenizer: applied BPE — train K merges on the vocab dict (pair argmax + greedy rewrite per round), corpus token counts under the learned vocab. " +
+      "Applied BPE: all k trainer rounds iterate the |vocab| dict (localCheckpoint per round so round k+1 reads materialized symbols, not a k-deep expression tree); each round = one map-side-combinable pair aggregate + a 1-row argmax collect; the corpus is touched exactly once (the vocab groupBy).")
 
   /** The unrolled DuckDB twin of [[train]]. Static SQL generated once
     * at build time; k iterations of (pair-count, argmax, rewrite).
@@ -304,7 +305,8 @@ object Bpe {
       |       (token_chars * 1000000) // bpe_tokens AS fertility_ppm,
       |       (bpe_tokens * 1000000) // ws_tokens AS compression_ppm
       |FROM agg ORDER BY source""".stripMargin),
-    doc = "tokenizer: per-source fertility (chars/subword) and compression (subwords/word) under the K learned merges")
+    doc = "tokenizer: per-source fertility (chars/subword) and compression (subwords/word) under the K learned merges. " +
+      "Training is vocab-dict-bound (q127's loop); application joins exploded words against the encoded dict (broadcast at vocab scale) and folds per source map-side — corpus text never shuffles.")
 
   val all: Seq[Q] = Seq(q127, q162)
 }

@@ -68,7 +68,8 @@ object CaptureRecapture {
       |                 AS BIGINT) AS DOUBLE)
       |         / CAST(true_distinct AS DOUBLE) AS est_over_truth
       |FROM agg""".stripMargin),
-    doc = "text: Chapman capture-recapture estimate of the distinct-document population from two source captures, audited against the computable truth")
+    doc = "text: Chapman capture-recapture estimate of the distinct-document population from two source captures, audited against the computable truth. " +
+      "Capture-recapture: one distinct-hash aggregate per capture (hashes shuffle, never text), overlap via the same groupBy, 1-row report; Chapman estimate in decimal/HUGEINT.")
 
   val all: Seq[Q] = Seq(q224)
 }

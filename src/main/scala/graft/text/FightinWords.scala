@@ -82,7 +82,8 @@ object FightinWords {
       |       CAST(delta_log2q AS DOUBLE) / 1048576.0 / sqrt(variance)
       |         AS z_log2
       |FROM scored ORDER BY z_log2 DESC, w""".stripMargin),
-    doc = s"text: Monroe et al. fightin'-words log-odds z per token ($LangA vs $LangB, informative Dirichlet prior, quantized-log2 ladder)")
+    doc = s"text: Monroe et al. fightin'-words log-odds z per token ($LangA vs $LangB, informative Dirichlet prior, quantized-log2 ladder). " +
+      "Fightin' words: two map-side-combinable count aggregates onto the vocabulary-bounded frame; prior totals ride a 1-row broadcast; quantized-log2 ladder keeps deltas exact longs — output |V| rows.")
 
   val all: Seq[Q] = Seq(q213)
 }

@@ -83,7 +83,8 @@ object FleissKappa {
       |SELECT n_docs, keep1, keep2, keep3, p_bar, p_e,
       |       (p_bar - p_e) / NULLIF(1e0 - p_e, 0e0) AS fleiss_kappa
       |FROM pe""".stripMargin),
-    doc = "text-curation: Fleiss' kappa agreement among three deterministic quality gates (length/token/digit-density) — integer ratings, three exact sums, one IEEE epilogue")
+    doc = "text-curation: Fleiss' kappa agreement among three deterministic quality gates (length/token/digit-density) — integer ratings, three exact sums, one IEEE epilogue. " +
+      "Pure map over the documents scan (integer cross-mult rating predicates, per-row codegen) into ONE 1-row aggregate of three exact long sums — no explode, no join, no window.")
 
   val all: Seq[Q] = Seq(q270)
 }

@@ -109,7 +109,8 @@ object GTest {
       |         AS rank,
       |       w1, w2, o AS c_ab, CAST(g_log2q AS BIGINT) AS g_log2q
       |FROM scored ORDER BY g_log2q DESC, w1, w2 LIMIT 10""".stripMargin),
-    doc = "text: Dunning G-test collocations — top-10 adjacent bigrams by log-likelihood-ratio evidence (quantized-log2 ladder, bigram-stream margins, zero-cell-safe)")
+    doc = "text: Dunning G-test collocations — top-10 adjacent bigrams by log-likelihood-ratio evidence (quantized-log2 ladder, bigram-stream margins, zero-cell-safe). " +
+      "G-test: one bigram explode compressed map-side to bigram-vocabulary counts; margins are two vocabulary-shaped joins (AQE-skew-splittable); quantized-log2 G with a runtime ceilingGuard on N; top-10 TakeOrdered.")
 
   val all: Seq[Q] = Seq(q225)
 }

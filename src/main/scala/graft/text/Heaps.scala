@@ -94,7 +94,8 @@ object Heaps {
       |            ELSE ((${TextQueries.lqDuck("vocab")} - ${TextQueries.lqDuck("pv")}) * 1000000)
       |              // (${TextQueries.lqDuck("tokens")} - ${TextQueries.lqDuck("pt")}) END AS beta_ppm
       |FROM curve ORDER BY seg""".stripMargin),
-    doc = "text: Heaps-law vocabulary growth at crawl prefixes — quantized-log2 segment exponents")
+    doc = "text: Heaps-law vocabulary growth at crawl prefixes — quantized-log2 segment exponents. " +
+      "Vocabulary growth via per-token MIN-first-position (map-side combinable); the four crawl-order prefix ledgers are conditional aggregates against a broadcast threshold list — 4-row curve out.")
 
   val all: Seq[Q] = Seq(q177)
 }

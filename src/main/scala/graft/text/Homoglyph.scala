@@ -76,7 +76,8 @@ object Homoglyph {
       |FROM m JOIN mx ON m.source = mx.source JOIN wd ON m.source = wd.source
       |GROUP BY m.source, mx.m, wd.worst
       |ORDER BY m.source""".stripMargin),
-    doc = "text: mixed-script homoglyph audit (UTS #39 confusables) — plain-char-class regexes, struct-max worst doc")
+    doc = "text: mixed-script homoglyph audit (UTS #39 confusables) — plain-char-class regexes, struct-max worst doc. " +
+      "Mixed-script detection is per-row regex over tokens (map-side); the per-source ledger is one narrow combined aggregate.")
 
   val all: Seq[Q] = Seq(q181)
 }

@@ -115,7 +115,8 @@ object HybridSearch {
       |       COALESCE(r_bm25, 0) AS r_bm25, COALESCE(r_tfidf, 0) AS r_tfidf
       |FROM top ORDER BY pos""".stripMargin
     },
-    doc = "retrieval: reciprocal-rank fusion of BM25 and TF-IDF top-50 lists (integer-exact hybrid ranking)")
+    doc = "retrieval: reciprocal-rank fusion of BM25 and TF-IDF top-50 lists (integer-exact hybrid ranking). " +
+      "RRF hybrid search: BM25 and TF-IDF share ONE scored base pass (per-doc tf in-row via size(filter(..)), corpus stats a 1-row broadcast) behind a Barrier; each ranking is TakeOrdered(50); fusion is a 100-row full-outer join — nothing corpus-sized shuffles after the scoring map.")
 
   val all: Seq[Q] = Seq(q139)
 }

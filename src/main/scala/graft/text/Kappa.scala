@@ -86,7 +86,8 @@ object Kappa {
       |                 - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)) AS DOUBLE)
       |       END AS kappa
       |FROM ct ORDER BY lang""".stripMargin),
-    doc = "text: Cohen's kappa between structural and stopword-density keep/reject raters per language — chance-corrected filter agreement from exact 2x2 contingency integers")
+    doc = "text: Cohen's kappa between structural and stopword-density keep/reject raters per language — chance-corrected filter agreement from exact 2x2 contingency integers. " +
+      "Kappa: one map-side tokenize + integer-predicate pass, one map-side-combinable aggregate to |languages| rows; kappa is one IEEE division of exact contingency integers.")
 
   val all: Seq[Q] = Seq(q233)
 }

@@ -127,7 +127,8 @@ object KneserNey {
       |SELECT a.source, a.n_docs, a.n_bigrams, a.mean_kn_surprisal,
       |       t.top_doc, CAST(t.top_doc_mean_q AS BIGINT) AS top_doc_mean_q
       |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin),
-    doc = "quality: interpolated Kneser-Ney bigram LM scoring (D=3/4, exact integer rationals, quantized-log2 surprisal) per source + most-perplexing doc — the KenLM-style upgrade of q116")
+    doc = "quality: interpolated Kneser-Ney bigram LM scoring (D=3/4, exact integer rationals, quantized-log2 surprisal) per source + most-perplexing doc — the KenLM-style upgrade of q116. " +
+      "KN: q116's shape — one explode compressed immediately to per-(doc,v,w) counts behind a Barrier with two consumers; model/ctx/cont/type frames are type-bounded; scoring join shuffles on the (v,w) type key; top-doc via max(struct).")
 
   val all: Seq[Q] = Seq(q243)
 }

@@ -58,7 +58,8 @@ object LexicalStats {
       |       10000e0 * CAST(SUM(f * f) - SUM(f) AS DOUBLE)
       |         / (CAST(SUM(f) AS DOUBLE) * CAST(SUM(f) AS DOUBLE)) AS yule_k
       |FROM freqs GROUP BY source ORDER BY source""".stripMargin),
-    doc = "text: Yule's characteristic K per source — length-invariant vocabulary repetitiveness from exact frequency-spectrum integers")
+    doc = "text: Yule's characteristic K per source — length-invariant vocabulary repetitiveness from exact frequency-spectrum integers. " +
+      "Frequency spectrum from one tokenize -> (source, tok) count; Yule's K folds the |spectrum|-sized frame with exact integers — length-invariant, two narrow shuffles total.")
 
   val q259 = Q(
     "q259_flesch_reading_ease",
@@ -94,7 +95,8 @@ object LexicalStats {
       |         - 1.015e0 * (CAST(SUM(w) AS DOUBLE) / CAST(SUM(sent) AS DOUBLE))
       |         - 84.6e0 * (CAST(SUM(syl) AS DOUBLE) / CAST(SUM(w) AS DOUBLE)) AS flesch
       |FROM per_doc GROUP BY source ORDER BY source""".stripMargin),
-    doc = "quality: Flesch reading-ease per source — vowel-cluster syllable proxy, terminal-punctuation sentences, exact integer counts with one IEEE epilogue")
+    doc = "quality: Flesch reading-ease per source — vowel-cluster syllable proxy, terminal-punctuation sentences, exact integer counts with one IEEE epilogue. " +
+      "Word/sentence/syllable proxies are per-row codegen; per-source means divide exact integer sums — one map-side-combined aggregate.")
 
   val all: Seq[Q] = Seq(q258, q259)
 }

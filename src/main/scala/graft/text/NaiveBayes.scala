@@ -168,7 +168,8 @@ object NaiveBayes {
       |    FROM scored) WHERE rn = 1)
       |SELECT true_lang, pred_lang, COUNT(*) AS n_docs
       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "text: add-one multinomial Naive Bayes lang classifier, confusion matrix via quantized integer surprisal (no cross-engine ln)")
+    doc = "text: add-one multinomial Naive Bayes lang classifier, confusion matrix via quantized integer surprisal (no cross-engine ln). " +
+      "Naive Bayes, SPARSE (r11): the dense V*K grid never materializes — score = len*surp0(c) - observed-token corrections + prior (exact integer identity). docTok is cached partitioned by (doc_id, lang), which satisfies the len aggregate, the (doc,lang,cls) correction aggregate, the base-vs-correction merge join AND the argmin election — the K-fanout frame never crosses the network; quantized integer surprisal, no ln().")
 
   val all: Seq[Q] = Seq(q203)
 }

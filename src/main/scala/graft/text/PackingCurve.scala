@@ -88,7 +88,8 @@ object PackingCurve {
       |       ((pad_sequences * context_len - total_tokens) * 1000000)
       |         // (pad_sequences * context_len) AS pad_waste_ppm
       |FROM a ORDER BY context_len""".stripMargin),
-    doc = "training: packing ledger per candidate context length — padding waste vs straddle contamination")
+    doc = "training: packing ledger per candidate context length — padding waste vs straddle contamination. " +
+      "ONE DistributedRank prefix-sum pass (the q86 offset) reused by all four context lengths via a 4-row broadcast crossJoin — the curve costs a |L| factor on a map stage, not |L| corpus passes.")
 
   /** q172 — near-dup cluster-size distribution + singleton mass. */
   val q172 = Q(
@@ -134,7 +135,8 @@ object PackingCurve {
       |SELECT cluster_size, n_clusters, cluster_size * n_clusters AS docs_in_size
       |FROM (SELECT * FROM hist UNION ALL SELECT * FROM sing)
       |ORDER BY cluster_size""".stripMargin),
-    doc = "dedup: cluster-size distribution with derived singleton mass — the corpus duplication datasheet")
+    doc = "dedup: cluster-size distribution with derived singleton mass — the corpus duplication datasheet. " +
+      "q45's bucketed pair machinery + componentLabels; the histogram is one |clusters|-row aggregate and singleton mass is DERIVED from the corpus total — edge-less docs never enter the propagation.")
 
   val all: Seq[Q] = Seq(q171, q172)
 }

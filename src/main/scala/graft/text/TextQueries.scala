@@ -60,7 +60,8 @@ object TextQueries {
       |       CAST(SUM(copies) AS BIGINT) AS n_total,
       |       CAST(SUM(CASE WHEN copies > 1 THEN copies - 1 ELSE 0 END) AS BIGINT) AS n_removed
       |FROM uniq""".stripMargin),
-    doc = "dedup: exact, via text-hash groupBy (narrow shuffle key)")
+    doc = "dedup: exact, via text-hash groupBy (narrow shuffle key). " +
+      "Exact dedup shuffles the 32-byte sha2(text) key, never the text; keep = min(doc_id) makes the survivor deterministic; ONE shuffle total.")
 
   /** q41 — token counting (whitespace tokenizer) per language. */
   val q41 = Q(
@@ -87,7 +88,8 @@ object TextQueries {
       |       CAST(SUM(n_uniq) AS DOUBLE) / COUNT(*) AS avg_uniq_tokens,
       |       MAX(n_tokens) AS max_tokens
       |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
-    doc = "text: token counting per doc → per-lang stats")
+    doc = "text: token counting per doc → per-lang stats. " +
+      "Tokenize + size() are map-side per-row ops; the per-lang aggregate is map-side combined — token arrays never shuffle.")
 
   /** q42 — quality scoring (length / repetition / stopword-ratio
     * heuristics, the C4/Gopher-style filters). Buckets are CASE ladders
@@ -135,7 +137,8 @@ object TextQueries {
       |SELECT lang, quality, COUNT(*) AS n_docs,
       |       SUM(n_uniq) * 100.0 / SUM(n_tokens) AS uniq_pct
       |FROM b GROUP BY lang, quality ORDER BY lang, quality""".stripMargin),
-    doc = "text: quality-score buckets (length/repetition/stopword heuristics)")
+    doc = "text: quality-score buckets (length/repetition/stopword heuristics). " +
+      "All quality features are per-row codegen; bucket thresholds are exact rationals (no float boundary drift); one narrow groupBy.")
 
   /** q43 — language-ID heuristic (stopword-hit-ratio n-gram-free
     * variant) with a confusion matrix against the labeled lang column.
@@ -164,7 +167,8 @@ object TextQueries {
       |  FROM documents)
       |SELECT actual, predicted, COUNT(*) AS n
       |FROM t GROUP BY actual, predicted ORDER BY actual, predicted""".stripMargin),
-    doc = "text: language-ID heuristic + confusion matrix vs labels")
+    doc = "text: language-ID heuristic + confusion matrix vs labels. " +
+      "Stopword-hit language heuristic is per-row; the confusion matrix is a |langs|^2-bounded aggregate.")
 
   /** q44 — document fingerprinting: md5 over the sorted distinct token
     * set (order-invariant content fingerprint; catches the corpus's
@@ -194,7 +198,8 @@ object TextQueries {
       |       CAST(SUM(CASE WHEN copies > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_groups,
       |       CAST(SUM(CASE WHEN copies > 1 THEN copies - 1 ELSE 0 END) AS BIGINT) AS n_near_dups
       |FROM fp""".stripMargin),
-    doc = "text: order-invariant content fingerprint (md5 of sorted token set)")
+    doc = "text: order-invariant content fingerprint (md5 of sorted token set). " +
+      "Order-invariant fingerprint (md5 of sorted distinct tokens) computed map-side, then the q40 narrow-hash-key dedup shape.")
 
   /** Candidate pair generation with HOT-BUCKET SKEW SPLIT, shared by the
     * LSH dedup family. Input: one row per (doc_id, n, band_id, band_val);
@@ -475,7 +480,8 @@ object TextQueries {
       |FROM inter
       |WHERE i * 1.0 / (na + nb - i) >= 0.99
       |ORDER BY doc_a, doc_b""".stripMargin),
-    doc = "dedup: MinHash(8) + LSH(2 bands) + exact Jaccard verify")
+    doc = "dedup: MinHash(8) + LSH(2 bands) + exact Jaccard verify. " +
+      "Fingerprint collapse → map-side array signatures (no token-row shuffle) → skew-split band join → map-side array_intersect verify.")
 
   /** q46 — SimHash fingerprint (16-bit). Per-token pseudo-random bits
     * derive from md5 hex-char ASCII parity — a hash both engines
@@ -523,7 +529,8 @@ object TextQueries {
       |       COUNT(DISTINCT simhash16) AS n_distinct_hashes,
       |       MIN(simhash16) AS min_hash, MAX(simhash16) AS max_hash
       |FROM sim GROUP BY lang ORDER BY lang""".stripMargin),
-    doc = "dedup: 16-bit SimHash fingerprints (md5-parity bit votes)")
+    doc = "dedup: 16-bit SimHash fingerprints (md5-parity bit votes). " +
+      "All 32 simhash bit votes computed as COLUMNS of one aggregate — token rows shuffle once on doc_id, no x32 bit-position explode.")
 
   /** Exact n-gram (3-token shingle) Jaccard near-duplicate pairs at
     * threshold `t` — the inverted-index exact variant (vs q45's MinHash
@@ -628,7 +635,8 @@ object TextQueries {
       |SELECT doc_a, doc_b, ROUND(jaccard, 4) AS jaccard
       |FROM pairs
       |ORDER BY doc_a, doc_b""".stripMargin),
-    doc = "dedup: exact 3-gram shingle Jaccard via inverted-index join + length filter")
+    doc = "dedup: exact 3-gram shingle Jaccard via inverted-index join + length filter. " +
+      "Inverted gram index + length filter prune candidates; exact Jaccard computed only for surviving pairs — no doc x doc product.")
 
   /** q55 — BPE-ish token counting ([[TextFunctions.bpeTokens]]): piece
     * statistics per language over regex pre-tokenization classes
@@ -668,7 +676,8 @@ object TextQueries {
       |       SUM(n_alpha) * 100.0 / SUM(n_pieces) AS alpha_pct,
       |       MAX(n_pieces) AS max_pieces
       |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
-    doc = "text: BPE-ish regex pre-tokenization piece stats per lang")
+    doc = "text: BPE-ish regex pre-tokenization piece stats per lang. " +
+      "GPT-2-style regex pre-tokenizer is per-row codegen (identical RE2 pattern both engines); per-lang aggregate map-side combined.")
 
   /** q61 — deterministic train/val/test split (80/10/10): assignment by
     * md5 of the stable doc_id, never rand() — reproducible across runs,
@@ -704,7 +713,8 @@ object TextQueries {
       |       COUNT(*) AS n_docs,
       |       CAST(SUM(n_chars) AS BIGINT) AS total_chars
       |FROM t GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
-    doc = "sampling: deterministic md5 train/val/test split, stratified report")
+    doc = "sampling: deterministic md5 train/val/test split, stratified report. " +
+      "Split assignment is a pure hash of the stable doc id — no RNG, no shuffle, stable under corpus growth; strata report is one narrow aggregate.")
 
   /** q66 — SimHash near-duplicate PAIRS (closing the loop q46 opens:
     * fingerprints → actual duplicate detection). 32-bit simhash (one
@@ -802,7 +812,8 @@ object TextQueries {
       |       CAST(COUNT(CASE WHEN ham = 0 THEN 1 END) AS BIGINT) AS n_exact,
       |       CAST(SUM(ham) AS DOUBLE) / COUNT(*) AS avg_hamming
       |FROM pairs GROUP BY lang ORDER BY lang""".stripMargin),
-    doc = "dedup: 32-bit SimHash pairs, banded candidates vs all-pairs oracle")
+    doc = "dedup: 32-bit SimHash pairs, banded candidates vs all-pairs oracle. " +
+      "Bit votes as columns in one aggregate (no per-bit shuffle); banded fingerprint equi-join yields candidates; per-lang aggregate caps quadratic clique output.")
 
   /** q68 — deterministic source-mixture resampling: re-weight a corpus
     * to target per-source proportions (the dataset-mixing step of every
@@ -843,7 +854,8 @@ object TextQueries {
       |       CAST(SUM(CASE WHEN bucket < threshold THEN n_chars ELSE 0 END) AS BIGINT)
       |         AS kept_chars
       |FROM t GROUP BY source ORDER BY source""".stripMargin),
-    doc = "sampling: deterministic per-source mixture re-weighting (hash acceptance)")
+    doc = "sampling: deterministic per-source mixture re-weighting (hash acceptance). " +
+      "Mixture gate is a pure integer-ppm function of the stable doc id — reproducible across engines/runs, shuffle-free; only the ledger aggregate shuffles.")
 
   /** q69 — vocabulary coverage: global token frequencies, top-20 by
     * count, with cumulative corpus coverage — the vocab-build/coverage
@@ -887,7 +899,8 @@ object TextQueries {
       |  FROM freq)
       |SELECT tok, n, CAST(cum AS DOUBLE) / total AS coverage
       |FROM c ORDER BY n DESC, tok LIMIT 20""".stripMargin),
-    doc = "text: vocab build — top-20 token frequencies + cumulative coverage")
+    doc = "text: vocab build — top-20 token frequencies + cumulative coverage. " +
+      "TakeOrderedAndProject for the top-20 BEFORE the cumulative window — no full-vocab single-task sort.")
 
   /** q72 — duplicate-cluster assignment: connected components over the
     * near-dup pair graph (the step every dedup pipeline needs AFTER
@@ -1032,7 +1045,8 @@ object TextQueries {
       |SELECT cluster_root, COUNT(*) AS cluster_size
       |FROM roots GROUP BY cluster_root
       |ORDER BY cluster_root""".stripMargin),
-    doc = "dedup: connected-component cluster assignment (label propagation vs recursive-CTE oracle)")
+    doc = "dedup: connected-component cluster assignment (label propagation vs recursive-CTE oracle). " +
+      "Connected components by label propagation over the near-dup pair graph; every round is one shuffle join + min-aggregate with a per-round lineage cut.")
 
   /** q78 — split drift detection: do q61's train and test splits draw
     * from the same length distribution? (A biased split silently skews
@@ -1096,7 +1110,8 @@ object TextQueries {
       |       CAST(SUM(ABS(ct * nv - cv * nt)) AS DOUBLE)
       |         / (2 * MIN(nt) * MIN(nv)) AS tv_dist
       |FROM c""".stripMargin),
-    doc = "drift detection: KS + total-variation between hash splits, integer-exact")
+    doc = "drift detection: KS + total-variation between hash splits, integer-exact. " +
+      "Drift metric stays in integer cross-products until one final division; one scan, one narrow bin-id groupBy — no float accumulation ambiguity.")
 
   /** q83 — benchmark decontamination: the overlap check every training
     * corpus needs before an eval is trustworthy — which training docs
@@ -1187,7 +1202,8 @@ object TextQueries {
       |       CAST(SUM(COALESCE(h.n_hit, 0)) AS BIGINT) AS n_hit_shingles
       |FROM train t LEFT JOIN hits h ON t.doc_id = h.doc_id
       |GROUP BY t.source ORDER BY t.source""".stripMargin),
-    doc = "decontamination: 5-gram benchmark overlap per source (hash-split benchmark)")
+    doc = "decontamination: 5-gram benchmark overlap per source (hash-split benchmark). " +
+      "Benchmark shingles LEFT SEMI match (AQE broadcasts while small, shuffles when not); training side streams once — doc×benchmark-set, never doc×doc.")
 
   /** q84 — deterministic training-order shuffle: the global permutation
     * a training run reads in. Every doc gets a 60-bit md5 sort key
@@ -1228,7 +1244,8 @@ object TextQueries {
       |       MAX(key) AS max_key,
       |       CAST(SUM(key % 1000000007) AS BIGINT) AS key_checksum
       |FROM k GROUP BY 1 ORDER BY shard""".stripMargin),
-    doc = "training order: seeded hash permutation + 16-way sharding, checksum-verified")
+    doc = "training order: seeded hash permutation + 16-way sharding, checksum-verified. " +
+      "Shard/order assignment is a pure hash of the stable doc id — both engines agree on every (shard, key) without materializing the permutation; membership pinned by an order-insensitive checksum.")
 
   /** q85 — intra-document repetition scoring (the Gopher-style quality
     * signal: boilerplate and looping generations repeat their own
@@ -1282,7 +1299,8 @@ object TextQueries {
       |       CAST(SUM(m - u) AS BIGINT) AS n_dup_shingles,
       |       CAST(SUM(m - u) AS DOUBLE) / SUM(m) AS dup_rate
       |FROM scored GROUP BY source ORDER BY source""".stripMargin),
-    doc = "quality: Gopher-style intra-doc 3-gram repetition rate per source")
+    doc = "quality: Gopher-style intra-doc 3-gram repetition rate per source. " +
+      "Pure map-side per-doc integer arithmetic + one narrow groupBy — no joins at any corpus size.")
 
   /** q86 — sequence packing: the concatenate-and-split step every LLM
     * pretraining pipeline runs — lay all documents out in the
@@ -1353,7 +1371,8 @@ object TextQueries {
       |       CAST(SUM(nt) AS DOUBLE)
       |         / (((MAX(cum) + 4095) // 4096) * 4096) AS fill_rate
       |FROM p""".stripMargin),
-    doc = "training: sequence packing at 4096 tokens over the seeded order (distributed prefix sum)")
+    doc = "training: sequence packing at 4096 tokens over the seeded order (distributed prefix sum). " +
+      "Pack offsets from ONE DistributedRank prefix-sum pass (not an unpartitioned window); everything downstream is map-side arithmetic + a tiny aggregate.")
 
   /** q88 — incremental dedup: the every-crawl production pattern —
     * dedup an INCOMING batch against the EXISTING corpus without
@@ -1451,7 +1470,8 @@ object TextQueries {
         .orderBy($"source")
     },
     Some(graft.Q.materializeCtes(q88RefOracle)),
-    doc = "dedup: incremental — incoming batch vs existing corpus (exact fp semi-join + MinHash band index)",
+    doc = "dedup: incremental — incoming batch vs existing corpus (exact fp semi-join + MinHash band index). " +
+      "Asymmetric new-vs-old: exact-dup LEFT SEMI on the fingerprint; band join carries compact (doc_id, n, 64-bit band hash) keys ONLY — token arrays attach post-collision via narrow joins; map-side array_intersect verify on longs — batch-scaled cost.",
     oracleReference = Some(q88RefOracle))
 
   // CTEs pinned MATERIALIZED in the live oracle (VERDICT r9 item 2):
@@ -1586,7 +1606,8 @@ object TextQueries {
       |       CAST(SUM(doc_id) AS BIGINT) AS sel_checksum
       |FROM ranked WHERE rn <= target_n
       |GROUP BY source ORDER BY source""".stripMargin),
-    doc = "training: temperature (α=1/2) source-mixture resampling, hash-ordered deterministic subset")
+    doc = "training: temperature (α=1/2) source-mixture resampling, hash-ordered deterministic subset. " +
+      "Temperature mixture: tiny per-source target table broadcast; per-source ranking via DistributedRank.withRowNumberPerKey (range sort on (source,h) + per-source per-partition offsets) — no one-task-per-source window sort.")
 
   /** q90 — data selection under a global token budget: rank every doc
     * by a quality score (distinct-token ratio, the q42 family) and keep
@@ -1641,7 +1662,8 @@ object TextQueries {
       |       CAST(SUM(doc_id) AS BIGINT) AS sel_checksum,
       |       CAST(MIN(q) AS BIGINT) AS min_quality
       |FROM ranked WHERE cum <= budget""".stripMargin),
-    doc = "training: quality-ranked doc selection under a global token budget (distributed prefix sum)")
+    doc = "training: quality-ranked doc selection under a global token budget (distributed prefix sum). " +
+      "Quality-ranked budget selection: integer quality, DistributedRank.withPrefixSum (range sort + per-partition offsets) for the running token total — no single-task window.")
 
   /** q91 — rare-token (OOV-proxy) profiling: per-source rate of tokens
     * whose whole-corpus frequency is ≤ 2 (hapax/dis legomena) plus the
@@ -1692,7 +1714,8 @@ object TextQueries {
       |       CAST(SUM(m) AS BIGINT) AS n_tokens,
       |       CAST(SUM(nr) AS DOUBLE) / SUM(m) AS rare_rate
       |FROM per_doc GROUP BY source ORDER BY source""".stripMargin),
-    doc = "quality: corpus-tail rare-token rate per source (hapax/dis-legomena profile)")
+    doc = "quality: corpus-tail rare-token rate per source (hapax/dis-legomena profile). " +
+      "Vocabulary-tail profile: map-side-combined token frequencies, token⋈freq equi-join (AQE broadcasts small vocabularies), integer counts to one final division.")
 
   /** q94 — TF-IDF top terms per source: the standard distinctive-term
     * ranking (which words characterize each source against the whole
@@ -1774,7 +1797,8 @@ object TextQueries {
       |SELECT source, CAST(rank AS INT) AS rank, t AS term, tf, CAST(df AS BIGINT) AS df, score
       |FROM ranked WHERE rank <= 5
       |ORDER BY source, rank""".stripMargin),
-    doc = "text: TF-IDF distinctive-term top-5 per source (integer-quantized IDF, exact cross-engine ranking)")
+    doc = "text: TF-IDF distinctive-term top-5 per source (integer-quantized IDF, exact cross-engine ranking). " +
+      "TF-IDF: tf and df are two map-side-combinable aggregates off one token explode; term⋈df joins vocabulary-shaped; top-5 via bounded TopTermKAggregator — ≤5-row partial buffers, no per-source vocabulary window sort.")
 
   /** q95 — document-level PII scrub: the privacy pass every web-crawl
     * curation pipeline runs before training (emails / SSNs / phone
@@ -1859,7 +1883,8 @@ object TextQueries {
       |       CAST(SUM(n_phone) AS BIGINT) AS n_phones,
       |       CAST(SUM(len(t2) - len(clean)) AS BIGINT) AS chars_removed
       |FROM scrubbed GROUP BY source ORDER BY source""".stripMargin),
-    doc = "privacy: document PII scrub (email/SSN/phone) with per-source redaction accounting")
+    doc = "privacy: document PII scrub (email/SSN/phone) with per-source redaction accounting. " +
+      "PII scrub: seeding + regexp counts + replaces all codegen'd string expressions in ONE map pass over the scan; the only Exchange is the final per-source aggregate.")
 
   /** q96 — cross-document repeated-n-gram coverage: for every 8-token
     * gram position, is that gram shared with at least one OTHER
@@ -1968,7 +1993,8 @@ object TextQueries {
       |       CAST(SUM(m) AS BIGINT) AS n_grams,
       |       CAST(SUM(ndup) AS DOUBLE) / SUM(m) AS dup_rate
       |FROM per_doc GROUP BY source ORDER BY source""".stripMargin),
-    doc = "dedup: cross-doc repeated 8-gram coverage per source (exact-substring dedup signal)")
+    doc = "dedup: cross-doc repeated 8-gram coverage per source (exact-substring dedup signal). " +
+      "Substring-dup coverage: 8-gram positions hash to 60-bit longs BEFORE the explode output shuffles (never gram text); df aggregate map-side combines on the key; per-doc m needs no join (size(tk)-7) and ndup comes from a LEFT-SEMI join of the gram stream against the (small) df>=2 key set — broadcast here, skew-splittable shuffle at scale.")
 
   /** q97 — cross-source overlap matrix: for every pair of sources, how
     * many distinct 8-token grams do they share? The corpus-forensics
@@ -2026,7 +2052,8 @@ object TextQueries {
       |SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS shared_grams
       |FROM g a JOIN g b ON a.gh = b.gh AND a.source < b.source
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "forensics: cross-source shared-8-gram matrix (syndication / split-leak audit)")
+    doc = "forensics: cross-source shared-8-gram matrix (syndication / split-leak audit). " +
+      "Cross-source overlap: ONE gram-key exchange into a bounded collect_set (partial buffers ≤ |sources| — hot grams combine map-side, no skew), pairs exploded from the sorted set (≤ sources²/2 per gram), no join.")
 
   /** q98 — leakage-proof train/test split: assign splits by near-dup
     * CLUSTER, not by document, so no near-duplicate pair ever straddles
@@ -2120,7 +2147,8 @@ object TextQueries {
       |       MIN(c.crossing_edges) AS crossing_edges
       |FROM msplit m JOIN crossing c ON m.method = c.method
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-    doc = "training: leakage-proof split by near-dup cluster (crossing edges 0 vs doc-hash leak)")
+    doc = "training: leakage-proof split by near-dup cluster (crossing edges 0 vs doc-hash leak). " +
+      "Leakage-proof split: log-round min-label propagation with pointer-doubling shortcuts (node-keyed shuffles), map-side md5 split assignment of the cluster label, edge-cardinality crossing audit — by_cluster crossing_edges ≡ 0 by construction.")
 
   /** Gram-hash array off a tokenized column `tk`: one [[Md5Prefix]] key
     * per 8-token window (grams hash to longs BEFORE any shuffle;
@@ -2236,7 +2264,8 @@ object TextQueries {
       |SELECT a.source, a.n_docs, a.n_tokens, a.mean_surprisal,
       |       t.top_doc, CAST(t.top_doc_mean_q AS BIGINT) AS top_doc_mean_q
       |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin),
-    doc = "quality: quantized unigram surprisal per source + most-surprising doc (perplexity proxy)")
+    doc = "quality: quantized unigram surprisal per source + most-surprising doc (perplexity proxy). " +
+      "Surprisal proxy: one token explode compressed to per-(term,doc) partials; vocabulary-shaped term totals; scoring join shuffles doc-term pairs by term (AQE-skew-splittable on stop-words); integer-quantized weights, top-doc via map-side-combinable struct-max — no per-source sort, no libm log.")
 
   /** q100 — near-dup cluster CANONICAL selection: the survivor policy
     * that turns cluster labels (q72/q98) into an actual deduplicated
@@ -2318,7 +2347,8 @@ object TextQueries {
       |       CAST(COALESCE(SUM(CASE WHEN l.doc_id = c.canon_doc THEN l.n_chars END), 0) AS BIGINT) AS chars_kept
       |FROM labs l JOIN canon c ON l.lab = c.lab
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "dedup: per-cluster canonical survivor selection (longest doc wins) with per-source byte accounting")
+    doc = "dedup: per-cluster canonical survivor selection (longest doc wins) with per-source byte accounting. " +
+      "Canonical survivor selection: componentLabels' log-round propagate+shortcut, then ONE struct-max aggregate per cluster elects the survivor (O(1) map-side partials — a viral cluster never serializes a window sort); the election struct CARRIES the winner's source+n_chars, so the per-source ledger is an aggregate of the |clusters|-sized winners frame broadcast-joined to per-source totals — the former corpus-sized labs⋈canon join-back is gone (r13).")
 
   /** q101 — longest DUPLICATED-gram run per document: q96 says how much
     * of a doc is cross-doc duplicated; this says how CONTIGUOUS that
@@ -2390,7 +2420,8 @@ object TextQueries {
       |       CAST(COUNT(CASE WHEN max_run_tokens >= 16 THEN 1 END) AS BIGINT) AS n_docs_run_ge16,
       |       CAST(SUM(max_run_tokens) AS BIGINT) AS sum_max_run_tokens
       |FROM per_doc GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "dedup: longest contiguous duplicated-8-gram run per doc (exact-substring cut signal)")
+    doc = "dedup: longest contiguous duplicated-8-gram run per doc (exact-substring cut signal). " +
+      "Longest dup run: q96's hash-only gram stream + df>=2 semi filter, islands via pos - row_number in a PER-DOC window (task size bounded by one doc's grams), two integer aggregates — no text shuffles, no global sort.")
 
   /** q102 — boilerplate-gram extraction: the top-10 most-widespread
     * 8-token grams WITH their text — the actual strip-list a C4/CCNet
@@ -2460,7 +2491,8 @@ object TextQueries {
       |       top.df AS df
       |FROM top JOIN loc USING (gh) JOIN tok ON tok.doc_id = loc.doc_id
       |ORDER BY rank""".stripMargin),
-    doc = "text: top-10 boilerplate 8-gram strip-list (df-ranked, text recovered for winners only)")
+    doc = "text: top-10 boilerplate 8-gram strip-list (df-ranked, text recovered for winners only). " +
+      "Boilerplate strip-list: corpus-wide shuffles carry (doc_id,pos,60-bit hash) only; top-10 via TakeOrdered (per-partition heaps, no full sort); winner text recovered by broadcasting the 10-key set back and slicing ONE exemplar doc per winner — gram text crosses only single-partition 10-row tails (spec-asserted).")
 
   /** q103 — EXACT-N stratified sample (largest-remainder quotas): draw
     * exactly 30 docs, allocated across sources proportionally — the
@@ -2546,7 +2578,8 @@ object TextQueries {
       |       CAST(COALESCE(SUM(s.doc_id), 0) AS BIGINT) AS sel_checksum
       |FROM quota q LEFT JOIN sel s ON q.source = s.source
       |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin),
-    doc = "sampling: exact-N stratified draw via largest-remainder quotas (Hamilton apportionment)")
+    doc = "sampling: exact-N stratified draw via largest-remainder quotas (Hamilton apportionment). " +
+      "Exact-N stratified draw: quota arithmetic on the |sources|-row count frame (bounded window); corpus-side per-source rank via DistributedRank.withRowNumberPerKey (range sort + offsets — no one-task-per-source window); quotas broadcast back; Σquota ≡ N by construction.")
 
   /** q104 — PMI collocations: the top-20 adjacent-token pairs whose
     * co-occurrence most exceeds chance — the phrase-detection pass
@@ -2643,7 +2676,8 @@ object TextQueries {
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score DESC, w1, w2) AS INT) AS rank,
       |       w1, w2, c_ab, score
       |FROM scored ORDER BY score DESC, w1, w2 LIMIT 20""".stripMargin),
-    doc = "text: top-20 PMI collocations (exact-integer cores, one IEEE division — phrase detection)")
+    doc = "text: top-20 PMI collocations (exact-integer cores, one IEEE division — phrase detection). " +
+      "PMI collocations: bigram rows compress map-side to distinct-bigram counts; two vocabulary-keyed unigram joins (AQE-skew-splittable on stop-words); totals broadcast; exact-integer PMI cores with ONE IEEE division; top-20 via TakeOrdered.")
 
   /** Quantized log2 for exact-integer scoring: L(n) = e·2²⁰ +
     * (n − 2ᵉ)·2²⁰ div 2ᵉ with e = ⌊log2 n⌋ read off the binary-string
@@ -2766,7 +2800,8 @@ object TextQueries {
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score_q DESC, doc_id) AS INT) AS rank,
       |       doc_id, source, n_toks, score_q
       |FROM scored ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin),
-    doc = "sampling: DSIR importance resampling — hashed-unigram LLR promotion of raw docs toward a target domain (quantized-log2 exact)")
+    doc = "sampling: DSIR importance resampling — hashed-unigram LLR promotion of raw docs toward a target domain (quantized-log2 exact). " +
+      "DSIR resampling: hashed-unigram features (1024 buckets — weight table is fixed-size regardless of corpus vocabulary); LLR weights quantized to exact longs; scoring join broadcasts the 1024-row weight table; top-10 via TakeOrdered — no libm log, no vocabulary-wide shuffle.")
 
   /** q107 — the Gopher quality-rule battery (Rae et al. 2021 §A1.1,
     * adapted to the corpus's whitespace tokens): per source, how many
@@ -2858,7 +2893,8 @@ object TextQueries {
       |       CAST(COUNT(*) FILTER (WHERE NOT f_wc AND NOT f_wl AND NOT f_stop
       |            AND NOT f_rep AND NOT f_sym AND NOT f_alpha) AS BIGINT) AS n_pass
       |FROM fl GROUP BY source ORDER BY source""".stripMargin),
-    doc = "filtering: Gopher quality-rule battery — six integer-exact rules, per-source fail counts + all-pass tally")
+    doc = "filtering: Gopher quality-rule battery — six integer-exact rules, per-source fail counts + all-pass tally. " +
+      "Gopher rule battery: tokens compress to (doc,token,count) FIRST (the repetition rule's max-share falls out of max(c) on the same frame); two map-side-combinable hash aggregates then a |sources|-row rollup; all thresholds integer cross-multiplications — no float, no window, no join.")
 
   /** q109 — the first BPE merge step (Sennrich et al. 2016): count
     * adjacent character pairs across the corpus and rank the top-20
@@ -2907,7 +2943,8 @@ object TextQueries {
       |SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_pairs DESC, pair) AS INT) AS rank,
       |       pair, n_pairs
       |FROM agg ORDER BY n_pairs DESC, pair LIMIT 20""".stripMargin),
-    doc = "tokenizer: first BPE merge step — char-pair counts off the vocab-with-counts dict, top-20 merge candidates")
+    doc = "tokenizer: first BPE merge step — char-pair counts off the vocab-with-counts dict, top-20 merge candidates. " +
+      "BPE merge step: corpus compresses to the vocab-with-counts dict FIRST (the only corpus-sized shuffle carries words, map-side combined); char-pair explode runs on |vocab| rows weighted by count; top-20 via TakeOrdered; rank window post-limit on 20 rows.")
 
   /** q110 — context-window chunking (training-example construction):
     * slide a 64-token window with stride 48 over every doc; the last
@@ -2973,7 +3010,8 @@ object TextQueries {
       |       md5(array_to_string(tk[start_pos:start_pos + chunk_len - 1], ' ')) AS chunk_md5,
       |       source
       |FROM st ORDER BY doc_id, chunk_idx""".stripMargin),
-    doc = "chunking: 64-token windows at stride 48, last chunk right-aligned — chunk rows with content md5 (the q86 packing input)")
+    doc = "chunking: 64-token windows at stride 48, last chunk right-aligned — chunk rows with content md5 (the q86 packing input). " +
+      "Context chunking: per-doc window starts from a closed-form sequence — pure map (no join, no window); explode output is (corpus/stride)-sized; the only exchange is the deterministic output sort (at scale: write partitioned by source instead).")
 
   /** q111 — the epoch-allocation plan (the pretraining mixture table à
     * la the LLaMA/T5 data mixes): given a token budget equal to the
@@ -3027,7 +3065,8 @@ object TextQueries {
       |       (budget * w // sumw) * 1000 // n_tokens AS epochs_x1000,
       |       (budget * w // sumw) > n_tokens AS oversampled
       |FROM w CROSS JOIN tot ORDER BY source""".stripMargin),
-    doc = "mixture: epoch-allocation plan — temperature-√ token reallocation per source, exact-integer epochs ×1000")
+    doc = "mixture: epoch-allocation plan — temperature-√ token reallocation per source, exact-integer epochs ×1000. " +
+      "Epoch plan: ONE map pass (sum of size(split)) into a |sources|-row frame; the 1-row total broadcasts back; targets/epochs are integer floor divisions on that frame — nothing corpus-sized moves after the first aggregate.")
 
   /** q112 — lexicon blocklist gate (the C4 "bad words" filter,
     * Raffel et al. 2020: any page containing a blocklisted word is
@@ -3080,7 +3119,8 @@ object TextQueries {
       |       CAST(SUM(hits) AS BIGINT) AS hits_total,
       |       CAST(COUNT(CASE WHEN hits > 0 THEN 1 END) AS DOUBLE) / COUNT(*) AS gate_rate
       |FROM d GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "filtering: C4-style token-exact blocklist gate — per-source gated docs, occurrence hits, gate rate")
+    doc = "filtering: C4-style token-exact blocklist gate — per-source gated docs, occurrence hits, gate rate. " +
+      "Blocklist gate: the lexicon is a literal array IN THE PLAN — a pure map (no join, no explode) counts occurrences inside each row, then one |sources|-row aggregate; nothing corpus-sized shuffles.")
 
   /** q113 — winnowing fingerprint audit ([[Winnow]], Schleimer et al.
     * 2003): per-source fingerprint density and cross-doc sharing over
@@ -3167,7 +3207,8 @@ object TextQueries {
       |       CAST(COALESCE(MIN(b.docs_with_shared), 0) AS BIGINT) AS docs_with_shared
       |FROM perdoc p LEFT JOIN bysrc b ON p.source = b.source
       |GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "dedup: winnowing fingerprint audit (MOSS) — per-source density, compression vs the gram stream, cross-doc sharing")
+    doc = "dedup: winnowing fingerprint audit (MOSS) — per-source density, compression vs the gram stream, cross-doc sharing. " +
+      "Winnowing audit: fingerprint selection is a pure map (two higher-order array ops behind barriers); the only corpus-sized shuffle carries (fp, doc) longs — ~40% of the q96 gram stream at w=4; sharing is the q96 df>=2 left-semi shape; final frames are |sources|-row.")
 
   /** q114 — BM25 retrieval ([[Bm25]]): top-10 documents against a
     * fixed 4-term query, exact-long scores. The curation uses: rank
@@ -3218,7 +3259,8 @@ object TextQueries {
       |       doc_id, source, dl, score_q
       |FROM scored ORDER BY score_q DESC, doc_id LIMIT 10""".stripMargin
     },
-    doc = "retrieval: BM25 top-10 against a fixed query (exact-integer cores, fixed-point-log2 idf)")
+    doc = "retrieval: BM25 top-10 against a fixed query (exact-integer cores, fixed-point-log2 idf). " +
+      "BM25: pure map (per-doc tf via in-row array filter, no explode) + ONE 1-row stats aggregate broadcast back; exact-long scores via integer cross-multiplied cores and fixed-point-log2 idf; TakeOrdered(10); rank window post-limit on 10 rows.")
 
   /** q115 — exact-substring trim applied ([[SubstringTrim]], the Lee
     * et al. 2021 CUT that q101 only measures): per-source accounting of
@@ -3288,7 +3330,8 @@ object TextQueries {
       |       CAST(SUM(n_after) AS BIGINT) AS tokens_after,
       |       CAST(SUM(CAST(('0x' || substr(md5(txt), 1, 15)) AS BIGINT) % 1000000000) AS BIGINT) AS content_checksum
       |FROM perdoc GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "dedup: exact-substring trim applied (Lee et al. cut) — per-source before/after + trimmed-content checksum")
+    doc = "dedup: exact-substring trim applied (Lee et al. cut) — per-source before/after + trimmed-content checksum. " +
+      "Substring trim: gram df shuffles 60-bit longs only; islands in per-doc windows (task <= one doc); cut intervals compress to tiny per-doc structs; ONE text-moving equi-join (docs x intervals, AQE-skew-splittable); the cut is a pure array map; audit is |sources|-row.")
 
   /** The q116 bigram-position expression: each position i of a
     * tokenized column `tk` (size ≥ 2) becomes (w1, bg) — the context
@@ -3387,7 +3430,8 @@ object TextQueries {
       |SELECT a.source, a.n_docs, a.n_bigrams, a.mean_surprisal,
       |       t.top_doc, CAST(t.top_doc_mean_q AS BIGINT) AS top_doc_mean_q
       |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin),
-    doc = "quality: quantized bigram-LM perplexity per source + most-perplexing doc (the CCNet gate, order-sensitive unlike q99)")
+    doc = "quality: quantized bigram-LM perplexity per source + most-perplexing doc (the CCNet gate, order-sensitive unlike q99). " +
+      "Bigram perplexity: positions pre-hashed to longs, compressed to per-(doc,bigram) counts map-side behind a barrier (model + scoring consumers); model is bigram-type-bounded; scoring equi-join on the bigram long (AQE-skew-splittable); election max(struct) — no window, no sort.")
 
   /** q117 — per-source distribution drift vs the corpus (PSI, the
     * population-stability index every production data-quality monitor
@@ -3469,7 +3513,8 @@ object TextQueries {
       |       (CAST(a.psi_q AS DOUBLE) * 0.6931471805599453
       |         / (CAST(a.nsv AS DOUBLE) * CAST(a.nrv AS DOUBLE) * 1048576.0)) >= 0.2 AS drifted
       |FROM agg a JOIN top t USING (source) ORDER BY a.source""".stripMargin),
-    doc = "quality: per-source token-length drift vs corpus (quantized PSI, power-of-2 buckets) + worst bucket")
+    doc = "quality: per-source token-length drift vs corpus (quantized PSI, power-of-2 buckets) + worst bucket. " +
+      "PSI drift: one map pass computes per-doc power-of-2 length bucket (no explode), compressed by a (source,bucket) aggregate of cardinality |sources|*O(log max_len); everything downstream is broadcast algebra on sub-hundred-row frames; per-source argmax is max(struct).")
 
   /** q118 — gram novelty in crawl order: how much NEW 8-gram content
     * each document contributes when the corpus is read in crawl order
@@ -3565,7 +3610,8 @@ object TextQueries {
       |SELECT a.source, a.n_docs, a.novel_grams, a.distinct_grams,
       |       a.mean_novelty, s.stalest_doc, s.stalest_novelty_q
       |FROM agg a JOIN st s USING (source) ORDER BY a.source""".stripMargin),
-    doc = "curation: per-source novel-8-gram contribution in crawl order (crawl-exhaustion signal)")
+    doc = "curation: per-source novel-8-gram contribution in crawl order (crawl-exhaustion signal). " +
+      "Gram novelty: the serial seen-set crawl scan re-expressed as a min(doc_id) election per gram — shuffles carry (doc_id, 60-bit gram hash) only; distinct + election both combine map-side; downstream is doc-cardinality.")
 
   /** q119 — per-source quantile normalization: calibrate a quality
     * score ACROSS sources before a global cut. A raw global threshold
@@ -3641,7 +3687,8 @@ object TextQueries {
       |       CAST(MIN(CASE WHEN pct_q <= 100000 THEN score END) AS BIGINT) AS cal_cut_score,
       |       CAST(SUM(CASE WHEN pct_q <= 100000 THEN doc_id END) AS BIGINT) AS cal_doc_checksum
       |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
-    doc = "curation: per-source quantile normalization vs raw global cut (cross-source score calibration)")
+    doc = "curation: per-source quantile normalization vs raw global cut (cross-source score calibration). " +
+      "Quantile normalization: per-source and global ranks via DistributedRank (range sort + per-partition offsets, no one-task-per-source window); group sizes and corpus total broadcast back; exact-integer percentiles.")
 
   /** q120 — temperature-scaled source mixture (α = 0.5): allocate a
     * doc budget across sources with sampling probability ∝ n_s^α
@@ -3724,7 +3771,8 @@ object TextQueries {
       |       CAST(tfl + CASE WHEN trk <= (SELECT td FROM d) THEN 1 ELSE 0 END AS BIGINT) AS temp_quota,
       |       CAST((tfl + CASE WHEN trk <= (SELECT td FROM d) THEN 1 ELSE 0 END) * 1000000 // n_s AS BIGINT) AS epochs_q
       |FROM rk ORDER BY source""".stripMargin),
-    doc = "curation: temperature-scaled (α=0.5) source mixture vs proportional allocation, exact-N Hamilton quotas")
+    doc = "curation: temperature-scaled (α=0.5) source mixture vs proportional allocation, exact-N Hamilton quotas. " +
+      "Temperature mixture: ONE map-side-combinable count aggregate touches the corpus; every later frame is |sources|-row where the unpartitioned Hamilton remainder-rank windows are deliberate and bounded.")
 
   /** q121 — content-defined chunking (CDC) dedup: cut every document
     * into variable-length chunks at content-determined boundaries — a
@@ -3854,7 +3902,8 @@ object TextQueries {
       |       COALESCE(f.n_first_held, 0) AS n_first_held,
       |       COALESCE(f.n_first_held, 0) * 1000000 // t.n_chunks AS stored_ratio_q
       |FROM tot t LEFT JOIN fh f USING (source) ORDER BY t.source""".stripMargin),
-    doc = "dedup: content-defined chunking (gram-hash boundaries) with corpus-wide first-holder chunk dedup accounting")
+    doc = "dedup: content-defined chunking (gram-hash boundaries) with corpus-wide first-holder chunk dedup accounting. " +
+      "CDC chunk dedup: boundary detection, chunk assembly and hashing are pure in-row array maps (no position explode); totals derive from (n, cuts) without chunk rows; the one shuffle carries bare 60-bit chunk hashes; first-holder election is min(struct), map-side combinable.")
 
   /** q122 — n-gram CONTAINMENT pairs (Broder's asymmetric measure):
     * C(A→B) = |shingles(A) ∩ shingles(B)| ÷ |shingles(A)|. Jaccard
@@ -3945,7 +3994,8 @@ object TextQueries {
       |JOIN sz sb ON i.doc_b = sb.doc_id
       |WHERE 5 * i.i >= 4 * sa.n
       |ORDER BY doc_a, doc_b""".stripMargin),
-    doc = "dedup: directed n-gram containment pairs (quote/subset detection Jaccard misses), prefix-filtered probe")
+    doc = "dedup: directed n-gram containment pairs (quote/subset detection Jaccard misses), prefix-filtered probe. " +
+      "Containment: directed prefix-filtered probe (~(1-t) of each doc's sorted shingle hashes) against the full inverted index — the asymmetric analogue of the PPJoin length filter, which cannot apply; verify attaches compact hash arrays and intersects map-side; shuffles carry 60-bit longs, never shingle text.")
 
   /** q123 — measured LSH recall curve: the empirical S-curve of the
     * q45 MinHash banding (8 hashes / 2 bands, [[LshParams]] defaults)
@@ -4055,7 +4105,8 @@ object TextQueries {
       |FROM (SELECT UNNEST([5, 6, 7, 8, 9]) AS bucket) b
       |LEFT JOIN curve c USING (bucket)
       |ORDER BY j_lo""".stripMargin),
-    doc = "dedup: measured MinHash-LSH candidate recall by exact-Jaccard bucket over a bounded doc sample")
+    doc = "dedup: measured MinHash-LSH candidate recall by exact-Jaccard bucket over a bounded doc sample. " +
+      "LSH recall audit: bounded-sample all-pairs ground truth (O(s^2) BY DESIGN, s constant in corpus size) via BroadcastNestedLoopJoin; pair candidacy evaluated in-row from the two band strings — no corpus-wide candidate join at all.")
 
   /** q124 — count-min-sketch heavy hitters with an exact error audit:
     * build a (d = 4) × (w = 1024) CMS over the corpus token stream,
@@ -4122,7 +4173,8 @@ object TextQueries {
       |SELECT t AS token, cnt AS exact_count, est AS cms_estimate,
       |       (est - cnt) * 1000000 // cnt AS overestimate_q
       |FROM est ORDER BY exact_count DESC, token""".stripMargin),
-    doc = "sketch: count-min heavy hitters (d=4, w=1024) with exact top-20 error audit (one-sided overestimate)")
+    doc = "sketch: count-min heavy hitters (d=4, w=1024) with exact top-20 error audit (one-sided overestimate). " +
+      "CMS heavy hitters: token stream compresses to the vocab dict first; sketch construction is |vocab|*d narrow rows aggregated map-side into <= d*w cells; top-20 is TakeOrdered; estimation joins 20 rows against a <= 4096-row broadcast sketch.")
 
   /** [[q125]]'s pipeline over an in-memory frame, for spec fixtures
     * with injected noise (the driver corpus is clean ASCII, so the
@@ -4195,7 +4247,8 @@ object TextQueries {
       |FROM per p JOIN mx ON p.source = mx.source JOIN wd ON p.source = wd.source
       |GROUP BY p.source, mx.m, wd.worst
       |ORDER BY p.source""".stripMargin),
-    doc = "curation: encoding-noise audit (control junk, mojibake lead+trail pairs, U+FFFD) per source with worst-doc election")
+    doc = "curation: encoding-noise audit (control junk, mojibake lead+trail pairs, U+FFFD) per source with worst-doc election. " +
+      "Encoding noise: ONE codegen'd map pass (regexp_count + length) and one map-side-combinable aggregate to a |sources|-row frame (the q95 scrub shape); no text shuffles; worst-doc election is max(struct).")
 
   /** q136 — the corpus DATASHEET (Gebru et al. 2021, "Datasheets for
     * Datasets"): the per-source release card a dataset ships with —
@@ -4275,7 +4328,8 @@ object TextQueries {
       |JOIN dup du ON p.source = du.source
       |JOIN voc v ON p.source = v.source
       |ORDER BY p.source""".stripMargin),
-    doc = "release: per-source corpus datasheet — volume, languages, vocabulary, mean tokens/doc, exact-duplicate footprint, all exact integers")
+    doc = "release: per-source corpus datasheet — volume, languages, vocabulary, mean tokens/doc, exact-duplicate footprint, all exact integers. " +
+      "Datasheet stats from one tokenize pass feeding map-side-combinable per-source aggregates; vocabulary numbers ride the existing dict frames — no extra corpus scans.")
 
   val all: Seq[Q] =
     Seq(q40, q41, q42, q43, q44, q45, q46, q51, q55, q61, q66, q68, q69, q72,

@@ -85,7 +85,8 @@ object WeightedSample {
       |            ELSE 0 END AS BIGINT) AS avg_w_sel
       |FROM d LEFT JOIN sel USING (doc_id)
       |GROUP BY d.source ORDER BY d.source""".stripMargin),
-    doc = "sampling: Efraimidis-Spirakis weighted order sample (fixed-point ES key, deterministic hash uniforms)")
+    doc = "sampling: Efraimidis-Spirakis weighted order sample (fixed-point ES key, deterministic hash uniforms). " +
+      "Weight-proportional sampling via deterministic cost keys (exponential-race analog in pure id-hash arithmetic) — selection is orderBy+limit on the cost key, reproducible across engines.")
 
   val all: Seq[Q] = Seq(q149)
 }

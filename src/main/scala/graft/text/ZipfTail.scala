@@ -67,7 +67,8 @@ object ZipfTail {
       |SELECT k, f_top, f_k1, sum_log2q,
       |       (k * 1048576 * 1000000) // sum_log2q AS alpha_log2_x1e6
       |FROM agg""".stripMargin),
-    doc = "text: Hill tail-exponent (Zipf slope) of the vocabulary in quantized log2 — corpus-naturalness datasheet stat")
+    doc = "text: Hill tail-exponent (Zipf slope) of the vocabulary in quantized log2 — corpus-naturalness datasheet stat. " +
+      "Corpus → vocab dict in one aggregate; top-(k+1) via TakeOrdered (no global sort); Hill fold is a (k+1)-row aggregate against a 1-row broadcast.")
 
   val all: Seq[Q] = Seq(q161)
 }
